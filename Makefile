@@ -3,7 +3,7 @@
 SF ?= /root/testdata/sf0.001
 SF1_DIR ?= /tmp/shaha_sf1
 
-.PHONY: test oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench plans coverage window clean
+.PHONY: test oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench perfbench plans coverage window clean
 
 test:  ## default (driver) lane — slow tier excluded via pytest.ini addopts
 	python -m pytest tests/ -x -q
@@ -38,6 +38,10 @@ oracle-sf4: sf4  ## the same magnitude-sensitive family at 40x
 
 bench:
 	python bench.py
+
+perfbench:  ## the hash-database benchmark, both workloads (run A/Bs through this)
+	python3 perfbench/run.py --workload build --seed 1 --seconds 1 --trace 0
+	python3 perfbench/run.py --workload lifecycle --seed 1 --seconds 1 --trace 0
 
 plans:  ## regenerate PLANS.md from live sf0.01 plans
 	python scripts/gen_plans.py

@@ -55,11 +55,14 @@ def merge_rollup(existing: DataFrame, increment: DataFrame) -> DataFrame:
     add, and buckets present on only one side pass through unchanged
     (summing a single row is the identity).
 
-    This is the same fold the previous full-outer-join form computed —
-    SUM over the union equals COALESCE(a,0)+COALESCE(b,0) per bucket,
-    decimal addition at the widened state precision is associative, and
-    groupBy collapses NULL keys into one bucket exactly as the old
-    null-safe join condition matched them — but it plans as ONE
+    This is the single-pass aggregation's fold: SUM over the union
+    skips NULL partial sums, decimal addition at the widened state
+    precision is associative, and groupBy collapses NULL keys into one
+    bucket exactly as a null-safe join condition would match them. A
+    bucket whose every value is NULL keeps ``sv`` NULL, as the DuckDB
+    oracle's one-pass ``SUM`` gives (the previous full-outer-join form's
+    COALESCE(a,0)+COALESCE(b,0) gave 0 there, which disagreed with the
+    oracle); for every other bucket the two forms agree. It plans as ONE
     exchange with map-side partial aggregation instead of a
     two-exchange sort-merge full-outer join (guide §2.3/§2.4: aggregate
     before you shuffle; at most one state row per bucket per side

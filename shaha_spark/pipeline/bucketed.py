@@ -16,27 +16,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shaha_spark.pipeline.build import WRITE_OPTIONS
+
 
 def write_bucketed_hashdb(
     df: DataFrame,
     table: str,
     path: str,
     n_buckets: int = 64,
-    mode: str = "overwrite",
 ) -> None:
     """Write hash records as an external bucketed table.
 
     Bucketed by (hash, algorithm) — the append-merge join key — and
     sorted by hash within buckets so row-group pruning still applies.
     ``n_buckets`` should scale with expected data volume (buckets are
-    the unit of join parallelism; target ≤ ~1 GB per bucket).
+    the unit of join parallelism; target ≤ ~1 GB per bucket). The
+    Parquet options are :func:`~shaha_spark.pipeline.build.write_hashdb`'s.
     """
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
+        .options(**WRITE_OPTIONS)
         .option("path", path)
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#hash", "true")
-        .option("parquet.bloom.filter.adaptive.enabled", "true")
         .bucketBy(n_buckets, "hash", "algorithm")
         .sortBy("hash")
         .format("parquet")

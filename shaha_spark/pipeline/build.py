@@ -30,7 +30,6 @@ Scale notes (the parts that matter at 100 TB):
 from __future__ import annotations
 
 import json
-import math
 import time
 from typing import Any
 
@@ -40,10 +39,6 @@ from pyspark.sql import functions as F
 from shaha_spark import io_util
 from shaha_spark.functions.hashers import resolve_hashers
 from shaha_spark.schema import HASH_DB_SCHEMA, SIDECAR_NAME
-
-#: Target rows per output file — digests are ~47.5 B/record on disk
-#: (BASELINE.md), so 4M records ≈ 190 MB files, a healthy Parquet size.
-DEFAULT_ROWS_PER_FILE = 4_000_000
 
 
 def words_from_lines(lines: DataFrame, column: str = "value") -> DataFrame:
@@ -64,7 +59,6 @@ def hash_fanout(
     words: DataFrame,
     algorithms: list[str],
     source_name: str | None = None,
-    word_col: str = "word",
 ) -> DataFrame:
     """word × M hashers → M hash records (H17, ref build.rs:353-366).
 
@@ -83,14 +77,14 @@ def hash_fanout(
     entries = F.array(
         *[
             F.struct(
-                hash_expr(algo, F.col(word_col)).alias("hash"),
+                hash_expr(algo, F.col("word")).alias("hash"),
                 F.lit(algo).alias("algorithm"),
             )
             for algo in algorithms
         ]
     )
     out = words.select(
-        F.col(word_col).alias("preimage"),
+        F.col("word").alias("preimage"),
         F.explode(entries).alias("entry"),
     ).select(
         F.col("entry.hash").alias("hash"),
@@ -102,7 +96,7 @@ def hash_fanout(
     return out
 
 
-def dedup_records(records: DataFrame, strict: bool = False) -> DataFrame:
+def dedup_records(records: DataFrame) -> DataFrame:
     """Dedup on the (hash, algorithm) key (J2, ref build.rs:368-371).
 
     Standalone operator form. ``build()`` itself no longer calls this:
@@ -117,15 +111,13 @@ def dedup_records(records: DataFrame, strict: bool = False) -> DataFrame:
     Physical shape matters here: Spark's HashAggregateExec supports
     neither binary grouping keys nor string/binary aggregate buffers, so
     a naive ``dropDuplicates(["hash", "algorithm"])`` silently becomes a
-    SORT-based aggregate — a full sort of the fanned-out records. The
-    default path instead groups on (hex(hash), algorithm, preimage) with
-    no aggregate functions, which stays a hash aggregate; because the
-    preimage determines the digest, the result differs from first-wins
-    only if two distinct preimages truly collide (2^-128 territory).
-    ``strict=True`` restores exact first-wins at the sort-agg cost.
+    SORT-based aggregate — a full sort of the fanned-out records. This
+    instead groups on (hex(hash), algorithm, preimage) with no aggregate
+    functions, which stays a hash aggregate; because the preimage
+    determines the digest, the result differs from first-wins only if
+    two distinct preimages truly collide (2^-128 territory). For exact
+    first-wins, ``sort_for_write(dedup=True)`` is the strict form.
     """
-    if strict:
-        return records.dropDuplicates(["hash", "algorithm"])
     cols = records.columns
     return (
         records.withColumn("__hh", F.hex("hash"))
@@ -178,11 +170,41 @@ def sort_for_write(
     return parts.sortWithinPartitions("hash", "algorithm")
 
 
+#: The hash database's Parquet writer options, shared by
+#: :func:`write_hashdb` and the bucketed writer.
+#:
+#: * Bloom filter on `hash` with ADAPTIVE sizing (parquet-mr 1.13+): the
+#:   writer keeps the smallest of 5 candidate filters (halving from
+#:   parquet.bloom.filter.max.bytes, default 1 MB) meeting the fpp
+#:   target for the row group's actual ndv. The old fixed 1M-ndv
+#:   declaration (ref parquet.rs:28,47-48) wrote ~1.2 MB into every file
+#:   — half the bench database's bytes (61.5 -> 32.2 B/record, round 4)
+#:   — and undersized the filter 4x at 4M-row files. Declaring any ndv
+#:   disables adaptive mode; raising max.bytes raises the per-file
+#:   floor too (8 MB cap -> 512 KB floor), so the default cap stays.
+#: * Dictionary encoding off for `hash` and `preimage`: both are
+#:   (near-)unique, so the dictionary always overflows to plain and the
+#:   attempt is pure CPU. `algorithm` and `sources` keep theirs.
+#: * zstd level 2, not the default 3: the hash bytes are incompressible
+#:   at any level. With the dictionary change: write 1.09 -> 0.98 s
+#:   median, 31.93 -> 32.12 B/record (sf0.1, 541k records, interleaved
+#:   5 reps, scripts/ab_write_knobs.py). Level 1 was 6% faster but cost
+#:   +7.8% bytes; dictionary-skip at level 3 was slower (plain pages are
+#:   bigger, and zstd-3 pays proportionally).
+WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.compression.codec.zstd.level": "2",
+    "parquet.enable.dictionary#hash": "false",
+    "parquet.enable.dictionary#preimage": "false",
+    "parquet.bloom.filter.enabled#hash": "true",
+    "parquet.bloom.filter.adaptive.enabled": "true",
+}
+
+
 def write_hashdb(
     df: DataFrame,
     path: str,
     *,
-    mode: str = "overwrite",
     partition_by_algorithm: bool = False,
 ) -> None:
     """Sorted ZSTD Parquet write with a native bloom filter on `hash`.
@@ -198,54 +220,22 @@ def write_hashdb(
     filters row-by-row, parquet.rs:551-553). Files stay hash-sorted
     within each partition: the range-repartition is hash-major, and the
     per-task split by algorithm preserves row order.
+
+    One file is written per input partition; file-count sizing is the
+    caller's (``sort_for_write(num_files=)``).
     """
-    # ADAPTIVE bloom sizing (parquet-mr 1.13+): the writer tracks the
-    # actual per-row-group ndv and keeps the smallest of its candidate
-    # filters meeting the fpp target. The previous fixed 1M-ndv
-    # declaration (mirroring ref parquet.rs:28,47-48) wrote a ~1.2 MB
-    # bloom into EVERY file regardless of its rows — at bench scale
-    # that was HALF the database's bytes (61.5 -> 32.2 B/record,
-    # measured round 4), and at production scale (4M-row files) it
-    # UNDERsized the filter 4x. Two measured caveats encode the final
-    # shape: (1) an explicit expected.ndv declaration DISABLES adaptive
-    # mode (parquet-mr uses the ndv-derived fixed size when given one),
-    # so no ndv is set; (2) the candidate ladder is 5 sizes halving
-    # from parquet.bloom.filter.max.bytes, so RAISING max.bytes lifts
-    # the smallest candidate too (8 MB cap -> 512 KB floor per file) —
-    # the 1 MB default cap (64 KB floor, ~4 bits/key on a production
-    # 2M-hash row group) is the right trade: small files stay small,
-    # and at production row-group sizes the capped bloom still
-    # short-circuits absent keys while the sorted layout's min/max
-    # pruning carries the primary skip. (File-count sizing is the
-    # caller's job via estimate_num_files / sort_for_write.)
-    # Write-leg knobs (optimization round 12, guide §6; measured by
-    # scripts/ab_write_knobs.py, interleaved over 5 reps at sf0.1,
-    # 541k records):
-    #   * dictionary encoding OFF for `hash` and `preimage` — both are
-    #     (near-)unique per row, so the dictionary always overflows to
-    #     plain after buffering a page's worth of entries; the attempt
-    #     itself is pure CPU+memory per row group. `algorithm` and
-    #     `sources` keep their dictionaries (few distinct values).
-    #   * zstd level 2 instead of the parquet-mr default 3 — the hash
-    #     column (the bulk of the bytes) is incompressible at any
-    #     level, so level 3's extra effort buys nothing there.
-    #   Together: write 1.09 -> 0.98 s median, 31.93 -> 32.12
-    #   bytes/record (+0.6%; still 0.68x the reference's ~47.5).
-    #   Level 1 was 6% faster again but cost +7.8% bytes; dictionary-
-    #   skip WITHOUT lowering the level measured slower (plain pages
-    #   are bigger, and zstd-3 pays proportionally).
-    writer = (
-        df.write.mode(mode)
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "2")
-        .option("parquet.enable.dictionary#hash", "false")
-        .option("parquet.enable.dictionary#preimage", "false")
-        .option("parquet.bloom.filter.enabled#hash", "true")
-        .option("parquet.bloom.filter.adaptive.enabled", "true")
-    )
+    writer = df.write.mode("overwrite").options(**WRITE_OPTIONS)
     if partition_by_algorithm:
         writer = writer.partitionBy("algorithm")
     writer.parquet(path)
+
+
+def is_algorithm_partitioned(files: list[tuple[str, int]]) -> bool:
+    """Whether a database's ``(path, bytes)`` file listing uses the
+    ``algorithm=<name>/`` layout of ``write_hashdb(partition_by_algorithm=True)``.
+    A rewrite of the whole dataset must keep that layout: silently
+    flattening it would drop directory pruning for algorithm filters."""
+    return any("/algorithm=" in p for p, _ in files)
 
 
 def write_sidecar(
@@ -280,6 +270,24 @@ def read_sidecar(spark: SparkSession, path: str) -> dict[str, Any] | None:
     return json.loads(raw) if raw is not None else None
 
 
+def refresh_sidecar(spark: SparkSession, path: str, records_delta: int = 0) -> None:
+    """Rewrite the sidecar after maintenance replaced files: the logical
+    metadata (algorithms, sources, source hashes) carries over,
+    ``total_records`` moves by ``records_delta`` and the physical stats
+    are recomputed. No-op without a sidecar (stats then scan)."""
+    meta = read_sidecar(spark, path)
+    if meta is None:
+        return
+    write_sidecar(
+        spark,
+        path,
+        total_records=meta["total_records"] + records_delta,
+        algorithms=meta.get("algorithms", []),
+        sources=meta.get("sources", []),
+        source_hashes=meta.get("source_hashes", []),
+    )
+
+
 def read_hashdb(spark: SparkSession, path: str, validate: bool = False) -> DataFrame:
     """Schema-enforced read.
 
@@ -312,7 +320,6 @@ def build(
     dry_run: bool = False,
     force: bool = False,
     num_files: int | None = None,
-    word_col: str = "word",
     partition_by_algorithm: bool = False,
 ) -> dict[str, Any]:
     """End-to-end build (ref src/cli/build.rs:81-248). Returns the summary
@@ -351,7 +358,7 @@ def build(
     # the expensive work (hash fanout) runs on the reduce side of the
     # word-dedup shuffle, which already spreads it across the cluster;
     # measured: an extra upstream repartition only adds shuffle cost.
-    words = words.select(F.col(word_col).alias("word")).filter(F.length("word") > 0)
+    words = words_from_lines(words, "word")
     unique = dedup_words(words)
 
     if dry_run:
@@ -390,9 +397,8 @@ def build(
         # (compact_hashdb auto-detects the same way)
         from . import snapshot as _snapshot
 
-        partition_by_algorithm = any(
-            "/algorithm=" in p
-            for p, _ in _snapshot.live_files(spark, output_path)
+        partition_by_algorithm = is_algorithm_partitioned(
+            _snapshot.live_files(spark, output_path)
         )
     lock_path = None
     if swap:
@@ -457,10 +463,20 @@ def build(
             )
         sorted_records = sorted_records.observe(obs, F.count(F.lit(1)).alias("n"))
         write_hashdb(
-            sorted_records, target, mode="overwrite",
-            partition_by_algorithm=partition_by_algorithm,
+            sorted_records, target, partition_by_algorithm=partition_by_algorithm
         )
 
+        # the sidecar goes into the new tree, so an append's swap
+        # publishes data and sidecar together
+        total_records = int(obs.get["n"])
+        write_sidecar(
+            spark,
+            target,
+            total_records=total_records,
+            algorithms=merged_algos,
+            sources=merged_sources,
+            source_hashes=[h for h in merged_hashes if h],
+        )
         if swap:
             from . import snapshot
 
@@ -468,16 +484,6 @@ def build(
             snapshot.swap_live_tree(
                 spark, output_path, target, old_live, op="append"
             )
-
-        total_records = int(obs.get["n"])
-        write_sidecar(
-            spark,
-            output_path,
-            total_records=total_records,
-            algorithms=merged_algos,
-            sources=merged_sources,
-            source_hashes=[h for h in merged_hashes if h],
-        )
         return {
             "skipped": False,
             "total_records": total_records,
@@ -493,6 +499,3 @@ def build(
         if lock_path is not None:
             io_util.delete(spark, lock_path)
 
-
-def estimate_num_files(expected_records: int) -> int:
-    return max(1, math.ceil(expected_records / DEFAULT_ROWS_PER_FILE))

@@ -20,17 +20,18 @@ from __future__ import annotations
 
 import json
 import math
-from typing import Any
+import uuid
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from shaha_spark import io_util
 from shaha_spark.pipeline.build import (
+    is_algorithm_partitioned,
     read_hashdb,
-    read_sidecar,
+    refresh_sidecar,
     sort_for_write,
     write_hashdb,
-    write_sidecar,
 )
 
 #: default target size per output file (pre-compression bytes on disk)
@@ -81,34 +82,20 @@ def compact_hashdb(
     if not plan["needed"] and not force:
         return {**plan, "compacted": False}
 
-    meta = read_sidecar(spark, path)
     df = read_hashdb(spark, path)
-    # an algorithm-partitioned layout must stay partitioned — silently
-    # flattening it would drop directory pruning for algorithm filters
     from . import snapshot
 
     old_live = snapshot.live_files(spark, path)
-    partitioned = any("/algorithm=" in p for p, _ in old_live)
     tmp = path.rstrip("/") + ".__compact__"
     io_util.delete(spark, tmp)
     write_hashdb(
         sort_for_write(df, num_files=plan["target_files"]),
         tmp,
-        mode="overwrite",
-        partition_by_algorithm=partitioned,
+        partition_by_algorithm=is_algorithm_partitioned(old_live),
     )
 
     snapshot.swap_live_tree(spark, path, tmp, old_live, op="compaction")
-
-    if meta is not None:
-        write_sidecar(
-            spark,
-            path,
-            total_records=meta["total_records"],
-            algorithms=meta.get("algorithms", []),
-            sources=meta.get("sources", []),
-            source_hashes=meta.get("source_hashes", []),
-        )
+    refresh_sidecar(spark, path)
     after = plan_compaction(spark, path, target_file_bytes)
     return {
         **plan,
@@ -119,20 +106,45 @@ def compact_hashdb(
 
 # ------------------------------------------------------------ slices
 
-def _local(path: str) -> str | None:
-    """Local-filesystem form of a Hadoop path, or None if remote."""
+#: a file under this share of the target size is "small" and may merge
+SMALL_FILE_RATIO = 0.5
+
+
+def hash_range(path: str) -> tuple[bytes | None, bytes | None, int]:
+    """(min, max, num_rows) of one parquet file's ``hash`` column across
+    all row groups, from footer metadata only; (None, None, num_rows)
+    when a row group has no statistics.
+
+    Footers are read with pyarrow, so this needs a local filesystem; a
+    remote ``path`` raises ValueError (plan whole-dataset compaction
+    with :func:`plan_compaction` there instead)."""
+    import pyarrow.parquet as pq
+
     if path.startswith("file:"):
-        return path[len("file:"):]
-    if "://" not in path and not path.startswith("viewfs:"):
-        return path
-    return None
+        local = path[len("file:"):]
+    elif "://" not in path and not path.startswith("viewfs:"):
+        local = path
+    else:
+        raise ValueError(
+            f"footer planning needs local parquet footers, got {path}; "
+            "use plan_compaction/compact_hashdb for remote stores"
+        )
+    md = pq.ParquetFile(local).metadata
+    col_idx = md.schema.to_arrow_schema().names.index("hash")
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(col_idx).statistics
+        if st is None or st.min is None or st.max is None:
+            return None, None, md.num_rows
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi, md.num_rows
 
 
 def plan_slice_compaction(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    small_ratio: float = 0.5,
 ) -> dict[str, Any]:
     """Plan per-slice compaction: contiguous runs of undersized files.
 
@@ -140,24 +152,19 @@ def plan_slice_compaction(
     range, so any contiguous-in-range subset can be rewritten
     independently without touching (or re-sorting) the rest — at 100 TB
     this is the difference between rewriting gigabytes and rewriting
-    the dataset. Planning is driver-side footer metadata only: each
-    candidate file's min `hash` statistic orders the run; no data is
+    the dataset. Planning is driver-side footer metadata only
+    (:func:`hash_range`): each candidate file's min ``hash`` orders the
+    run, and a file without statistics never joins one; no data is
     read. Partitioned layouts are sliced per partition directory
     (ranges from different ``algorithm=`` partitions interleave and
     must never merge).
-
-    Requires a local filesystem (footers are read with pyarrow); on an
-    object store, plan whole-dataset compaction (:func:`plan_compaction`)
-    or per-partition-dir compaction instead.
     """
     import os
     from collections import defaultdict
 
-    import pyarrow.parquet as pq
-
     from . import snapshot
 
-    small = int(target_file_bytes * small_ratio)
+    small = int(target_file_bytes * SMALL_FILE_RATIO)
     by_dir: dict[str, list[tuple[str, int]]] = defaultdict(list)
     for p, sz in snapshot.live_files(spark, path):
         by_dir[os.path.dirname(p)].append((p, sz))
@@ -166,16 +173,9 @@ def plan_slice_compaction(
     for d, files in sorted(by_dir.items()):
         keyed = []
         for p, sz in files:
-            lp = _local(p)
-            if lp is None:
-                raise ValueError(
-                    f"slice planning needs local parquet footers, got {p}; "
-                    "use plan_compaction/compact_hashdb for remote stores"
-                )
-            md = pq.ParquetFile(lp).metadata
-            col_idx = md.schema.to_arrow_schema().names.index("hash")
-            lo = md.row_group(0).column(col_idx).statistics.min
-            keyed.append((lo, p, sz))
+            lo = hash_range(p)[0]
+            if lo is not None:
+                keyed.append((lo, p, sz))
         keyed.sort()
         run: list[tuple[str, int]] = []
         run_bytes = 0
@@ -202,27 +202,87 @@ def plan_slice_compaction(
     }
 
 
-#: sidecar manifest name per staged slice file: records the swap so a
-#: crash between "delete originals" and "rename visible" rolls forward
+#: sidecar manifest name per staged file: records the swap so a crash
+#: between "dispose of originals" and "rename visible" rolls forward
 MANIFEST_SUFFIX = ".manifest.json"
 
 
+def replace_files(
+    spark: SparkSession,
+    originals: list[str],
+    df: DataFrame,
+    stem_prefix: str,
+    dispose: Callable[[str], Any],
+    records_delta: int = 0,
+) -> str:
+    """Replace ``originals`` (files of one database directory) with ONE
+    file holding ``df``, crash-safely; returns the published path. The
+    one home of the per-file swap protocol that slice compaction and
+    forget share:
+
+    1. ``df`` is sorted by ``(hash[, algorithm])`` into one file in a
+       hidden temp dir, then renamed beside the originals under an
+       ``_incoming-`` name (underscore-prefixed files are invisible to
+       parquet readers);
+    2. commit point: a manifest records the originals, the final name
+       and ``records_delta`` (the live-row change the swap makes);
+    3. ``dispose`` removes each original (compaction may retain it for
+       snapshots; erasure must delete it);
+    4. the replacement is renamed visible, then the temp dir and the
+       manifest are dropped.
+
+    A crash before step 2 leaves the originals intact; after it,
+    :func:`recover_slices` rolls the swap forward, sidecar included.
+    """
+    d = originals[0].rsplit("/", 1)[0]
+    sort_cols = ["hash"] + (["algorithm"] if "algorithm" in df.columns else [])
+    tmp = f"{d}/.__{stem_prefix}_{uuid.uuid4().hex[:8]}__"
+    write_hashdb(df.coalesce(1).sortWithinPartitions(*sort_cols), tmp)
+    part = next(p for p, _ in io_util.list_files(spark, tmp))
+    stem = f"{stem_prefix}-{uuid.uuid4().hex[:12]}.zstd.parquet"
+    incoming = f"{d}/_incoming-{stem}"
+    final = f"{d}/{stem}"
+    if not io_util.rename(spark, part, incoming):
+        io_util.delete(spark, tmp)
+        raise IOError(f"{stem_prefix}: could not stage {incoming}")
+    io_util.write_text_atomic(
+        spark,
+        incoming + MANIFEST_SUFFIX,
+        json.dumps(
+            {"originals": originals, "final": final, "records_delta": records_delta}
+        ),
+    )
+    for p in originals:
+        dispose(p)
+    if not io_util.rename(spark, incoming, final):
+        raise IOError(
+            f"{stem_prefix}: staged file {incoming} could not be made "
+            "visible; its manifest rolls the swap forward on the next run"
+        )
+    io_util.delete(spark, tmp)
+    io_util.delete(spark, incoming + MANIFEST_SUFFIX)
+    return final
+
+
 def recover_slices(spark: SparkSession, path: str) -> dict[str, int]:
-    """Finish or undo slice swaps interrupted by a crash.
+    """Finish or undo per-file swaps (:func:`replace_files`) interrupted
+    by a crash.
 
     * staged ``_incoming`` file WITH a manifest: the swap committed —
       roll forward (delete any surviving originals, rename the
-      replacement visible, drop the manifest);
+      replacement visible, apply the manifest's ``records_delta`` to
+      the sidecar, drop the manifest);
     * staged file WITHOUT a manifest: the swap never committed — the
       originals are all still live, so the stage is redundant; drop it.
 
-    Idempotent; called automatically by :func:`compact_slices`.
+    Idempotent; called automatically by :func:`compact_slices` and
+    ``forget_digests``.
     """
     import os
 
     entries = io_util.list_files(spark, path, suffix=None)
     names = {p for p, _ in entries}
-    rolled = dropped = 0
+    rolled = dropped = records_delta = 0
     for p in sorted(names):
         base = os.path.basename(p)
         if base.startswith("_incoming-") and p.endswith(MANIFEST_SUFFIX):
@@ -248,11 +308,14 @@ def recover_slices(spark: SparkSession, path: str) -> dict[str, int]:
                         f"slice recovery: could not make {incoming} visible"
                     )
             io_util.delete(spark, p)
+            records_delta += manifest.get("records_delta", 0)
             rolled += 1
         elif base.startswith("_incoming-") and not p.endswith(MANIFEST_SUFFIX):
             if p + MANIFEST_SUFFIX not in names:
                 io_util.delete(spark, p)
                 dropped += 1
+    if rolled:
+        refresh_sidecar(spark, path, records_delta)
     return {"rolled_forward": rolled, "dropped_stages": dropped}
 
 
@@ -264,31 +327,30 @@ def compact_slices(
 ) -> dict[str, Any]:
     """Rewrite each fragmented hash-range slice into one sorted file.
 
-    Per-slice swap protocol (no directory swap — the rest of the
-    dataset keeps serving): the replacement file lands in the dataset
-    directory under an ``_incoming`` name (underscore-prefixed files
-    are invisible to parquet readers), a manifest records the swap
-    about to happen, the originals are deleted, the replacement is
-    renamed visible, the manifest is dropped. Any crash is recoverable
-    by :func:`recover_slices` (run automatically at the start of every
-    compaction): incoming WITHOUT manifest → originals are intact,
-    drop the stage; incoming WITH manifest → the swap was committed,
-    roll it FORWARD (finish the deletes, make the replacement
-    visible). A transactional table format would collapse the whole
-    protocol into one commit — noted in SCALE.md; this is the honest
-    ceiling of a directory-layout store.
+    Each slice is swapped in place by :func:`replace_files` (no
+    directory swap — the rest of the dataset keeps serving); replaced
+    originals a snapshot still references are retired, not deleted.
+    Any crash is recoverable by :func:`recover_slices`, run
+    automatically at the start of every compaction. A transactional
+    table format would collapse the whole protocol into one commit —
+    noted in SCALE.md; this is the honest ceiling of a directory-layout
+    store.
 
     ``max_slices`` bounds one maintenance run (schedule by
     fragmentation score at scale); slices are processed worst-first
     (most files first).
     """
-    import os
-    import uuid
+    from functools import partial
 
     from . import snapshot
 
     recovered = recover_slices(spark, path)
-    snap_refs = snapshot.referenced_rels(spark, path)
+    retire = partial(
+        snapshot.retire_or_delete,
+        spark,
+        path,
+        refs=snapshot.referenced_rels(spark, path),
+    )
     plan = plan_slice_compaction(spark, path, target_file_bytes)
     todo = sorted(plan["slices"], key=lambda s: -len(s["files"]))
     if max_slices is not None:
@@ -296,50 +358,8 @@ def compact_slices(
     if not todo:
         return {**plan, "compacted": 0, "recovered": recovered}
 
-    done = 0
     for s in todo:
         files = [p for p, _ in s["files"]]
-        df = spark.read.parquet(*files)
-        sort_cols = ["hash"] + (["algorithm"] if "algorithm" in df.columns else [])
-        tmp = s["dir"].rstrip("/") + f"/.__slice_{uuid.uuid4().hex[:8]}__"
-        # write_hashdb is the one home of the zstd/bloom writer options
-        write_hashdb(df.coalesce(1).sortWithinPartitions(*sort_cols), tmp)
-        part = next(
-            p for p, _ in io_util.list_files(spark, tmp) if p.endswith(".parquet")
-        )
-        stem = f"slice-{uuid.uuid4().hex[:12]}.zstd.parquet"
-        incoming = s["dir"].rstrip("/") + f"/_incoming-{stem}"
-        final = s["dir"].rstrip("/") + f"/{stem}"
-        if not io_util.rename(spark, part, incoming):
-            io_util.delete(spark, tmp)
-            raise IOError(f"slice compaction: could not stage {incoming}")
-        # commit point: once the manifest exists, recovery rolls this
-        # swap FORWARD (deletes finished, replacement made visible)
-        io_util.write_text_atomic(
-            spark,
-            incoming + MANIFEST_SUFFIX,
-            json.dumps({"originals": files, "final": final}),
-        )
-        for p in files:
-            snapshot.retire_or_delete(spark, path, p, refs=snap_refs)
-        if not io_util.rename(spark, incoming, final):
-            raise IOError(
-                f"slice compaction: staged file {incoming} could not be "
-                f"made visible; its manifest will roll the swap forward "
-                "on the next run"
-            )
-        io_util.delete(spark, incoming + MANIFEST_SUFFIX)
-        io_util.delete(spark, tmp)
-        done += 1
-
-    meta = read_sidecar(spark, path)
-    if meta is not None:
-        write_sidecar(
-            spark,
-            path,
-            total_records=meta["total_records"],
-            algorithms=meta.get("algorithms", []),
-            sources=meta.get("sources", []),
-            source_hashes=meta.get("source_hashes", []),
-        )
-    return {**plan, "compacted": done, "recovered": recovered}
+        replace_files(spark, files, spark.read.parquet(*files), "slice", retire)
+    refresh_sidecar(spark, path)
+    return {**plan, "compacted": len(todo), "recovered": recovered}

@@ -17,12 +17,14 @@ widen the range, so candidates are a superset); the rewrite then
 filters by EXACT digest equality, so over-selection costs a file scan,
 never a wrong delete.
 
-The per-file swap reuses the slice-compaction crash protocol
-(`_incoming` staging + manifest commit point; see
-:func:`shaha_spark.pipeline.compact.recover_slices`): a crash mid-swap
+The per-file swap is slice compaction's crash protocol
+(:func:`shaha_spark.pipeline.compact.replace_files`, recovered by
+:func:`~shaha_spark.pipeline.compact.recover_slices`): a crash mid-swap
 either leaves the original intact or rolls the replacement forward —
-never both, never neither. Files whose every row is forgotten are
-simply deleted (idempotent; a crash just re-deletes on re-run).
+never both, never neither. Unlike compaction, the original is always
+deleted, never retained: erased rows may not survive in history. Files
+whose every row is forgotten are simply deleted (idempotent; a crash
+just re-deletes on re-run).
 
 This is an extension beyond the reference CLI (which has no delete);
 a transactional table format would make the swap a metadata commit —
@@ -31,33 +33,15 @@ noted in SCALE.md as the production upgrade path.
 
 from __future__ import annotations
 
-import json
-import uuid
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shaha_spark import io_util
-from shaha_spark.pipeline.build import read_sidecar, write_sidecar
-from shaha_spark.pipeline.compact import MANIFEST_SUFFIX, _local, recover_slices
-
-
-def _footer_range(local_path: str) -> tuple[bytes | None, bytes | None, int]:
-    """(min, max, num_rows) of the ``hash`` column across all row
-    groups, from footer metadata only."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(local_path).metadata
-    col_idx = md.schema.to_arrow_schema().names.index("hash")
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(col_idx).statistics
-        if st is None or st.min is None or st.max is None:
-            return None, None, md.num_rows  # no stats: stay a candidate
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return lo, hi, md.num_rows
+from shaha_spark.pipeline.build import read_sidecar, refresh_sidecar
+from shaha_spark.pipeline.compact import hash_range, recover_slices, replace_files
 
 
 def plan_forget(
@@ -65,18 +49,14 @@ def plan_forget(
 ) -> dict[str, Any]:
     """Driver-side footer-only planning: which files can contain any
     of ``digests``. Requires a local filesystem for footer reads (the
-    same constraint as slice compaction)."""
+    same constraint as slice compaction); a file without statistics
+    stays a candidate."""
     targets = sorted(set(digests))
     candidates: list[dict[str, Any]] = []
     total_files = 0
     for p, _sz in io_util.list_files(spark, path):
         total_files += 1
-        lp = _local(p)
-        if lp is None:
-            raise ValueError(
-                f"forget planning needs local parquet footers, got {p}"
-            )
-        lo, hi, n_rows = _footer_range(lp)
+        lo, hi, n_rows = hash_range(p)
         if lo is None or any(lo <= d <= hi for d in targets):
             candidates.append({"file": p, "rows": n_rows})
     return {
@@ -118,100 +98,74 @@ def forget_digests(
     targets = [bytes(d) for d in sorted(set(digests))]
 
     rows_deleted = live_rows_deleted = rewritten = dropped = 0
-    for cand in plan["candidates"]:
-        p = cand["file"]
-        df: DataFrame = spark.read.parquet(p)
-        # lazy checkpoint: the survivor set is consumed twice (the count
-        # that decides drop-vs-rewrite, then the rewrite itself) — one
-        # filtered read of the candidate file instead of two
-        remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
-            eager=False
-        )
-        n_after = remaining.count()
-        n_delete = cand["rows"] - n_after
-        if n_delete == 0:
-            continue  # range false positive
-        rows_deleted += n_delete
-        # rows scrubbed from retained history copies under _snapshots/
-        # are not live rows: the sidecar's total_records counts the
-        # visible database only, so decrementing it by history-copy
-        # deletions would make info/stats drift permanently after any
-        # compaction+snapshot cycle
-        if not snapshot.in_retained(path, p):
-            live_rows_deleted += n_delete
-        d = p.rsplit("/", 1)[0]
-        if n_after == 0:
-            # every row was an erasure target: the file leaves history
-            # too (read_snapshot reports the hole) — erased data may
-            # not survive in retained copies
-            io_util.delete(spark, p)
-            if snapshot.in_retained(path, p):
-                snapshot.repoint_retained(
-                    spark, path, snapshot.retained_rel_of(path, p), None
-                )
-            dropped += 1
-            continue
-        tmp = d + f"/.__forget_{uuid.uuid4().hex[:8]}__"
-        from shaha_spark.pipeline.build import write_hashdb
-
-        # write_hashdb is the one home of the zstd/bloom writer options
-        write_hashdb(remaining.coalesce(1).sortWithinPartitions("hash"), tmp)
-        part = next(
-            q for q, _ in io_util.list_files(spark, tmp) if q.endswith(".parquet")
-        )
-        stem = f"forget-{uuid.uuid4().hex[:12]}.zstd.parquet"
-        incoming = d + f"/_incoming-{stem}"
-        final = d + f"/{stem}"
-        if not io_util.rename(spark, part, incoming):
-            io_util.delete(spark, tmp)
-            raise IOError(f"forget: could not stage {incoming}")
-        io_util.write_text_atomic(
-            spark,
-            incoming + MANIFEST_SUFFIX,
-            json.dumps({"originals": [p], "final": final}),
-        )
-        io_util.delete(spark, p)
-        if not io_util.rename(spark, incoming, final):
-            raise IOError(
-                f"forget: staged file {incoming} not made visible; the "
-                "manifest rolls the swap forward on the next run"
+    delete = partial(io_util.delete, spark)
+    try:
+        for cand in plan["candidates"]:
+            p = cand["file"]
+            df: DataFrame = spark.read.parquet(p)
+            # lazy checkpoint: the survivor set is consumed twice (the
+            # count that decides drop-vs-rewrite, then the rewrite
+            # itself) — one filtered read of the candidate file, not two
+            remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
+                eager=False
             )
-        io_util.delete(spark, incoming + MANIFEST_SUFFIX)
-        io_util.delete(spark, tmp)
-        # erasure reaches HISTORY: a rewritten retained file keeps
-        # serving its snapshots under the new stem; a snapshot-referenced
-        # visible original is aliased to its replacement, whose content
-        # is exactly the original minus the erased rows — the most
-        # history erasure law permits
-        if snapshot.in_retained(path, p):
-            old_rrel = snapshot.retained_rel_of(path, p)
-            new_rrel = (
-                old_rrel.rsplit("/", 1)[0] + "/" + stem
-                if "/" in old_rrel
-                else stem
-            )
-            snapshot.repoint_retained(spark, path, old_rrel, new_rrel)
-        else:
-            try:
-                rel_old = snapshot.rel_of(path, p)
-                if rel_old in snap_refs:
-                    snapshot.alias_rel(
-                        spark, path, rel_old, snapshot.rel_of(path, final)
+            n_after = remaining.count()
+            n_delete = cand["rows"] - n_after
+            if n_delete == 0:
+                continue  # range false positive
+            rows_deleted += n_delete
+            # rows scrubbed from retained history copies under
+            # _snapshots/ are not live rows: the sidecar's total_records
+            # counts the visible database only, so decrementing it by
+            # history-copy deletions would make info/stats drift
+            # permanently after any compaction+snapshot cycle
+            retained = snapshot.in_retained(path, p)
+            n_live = 0 if retained else n_delete
+            if n_after == 0:
+                # every row was an erasure target: the file leaves
+                # history too (read_snapshot reports the hole) — erased
+                # data may not survive in retained copies
+                delete(p)
+                if retained:
+                    snapshot.repoint_retained(
+                        spark, path, snapshot.retained_rel_of(path, p), None
                     )
-            except ValueError:
-                pass
-        rewritten += 1
-
-    meta = read_sidecar(spark, path)
-    if meta is not None and live_rows_deleted:
-        write_sidecar(
-            spark,
-            path,
-            total_records=meta["total_records"] - live_rows_deleted,
-            algorithms=meta.get("algorithms", []),
-            sources=meta.get("sources", []),
-            source_hashes=meta.get("source_hashes", []),
-        )
+                live_rows_deleted += n_live
+                dropped += 1
+                continue
+            final = replace_files(
+                spark, [p], remaining, "forget", delete, records_delta=-n_live
+            )
+            live_rows_deleted += n_live
+            # erasure reaches HISTORY: a rewritten retained file keeps
+            # serving its snapshots under the new stem; a
+            # snapshot-referenced visible original is aliased to its
+            # replacement, whose content is exactly the original minus
+            # the erased rows — the most history erasure law permits
+            if retained:
+                old_rrel = snapshot.retained_rel_of(path, p)
+                stem = final.rsplit("/", 1)[1]
+                new_rrel = (
+                    old_rrel.rsplit("/", 1)[0] + "/" + stem
+                    if "/" in old_rrel
+                    else stem
+                )
+                snapshot.repoint_retained(spark, path, old_rrel, new_rrel)
+            else:
+                try:
+                    rel_old = snapshot.rel_of(path, p)
+                    if rel_old in snap_refs:
+                        snapshot.alias_rel(
+                            spark, path, rel_old, snapshot.rel_of(path, final)
+                        )
+                except ValueError:
+                    pass
+            rewritten += 1
+    finally:
+        # the swaps that completed, even if a later one failed; a
+        # committed-but-unpublished swap's rows travel in its manifest
+        if live_rows_deleted:
+            refresh_sidecar(spark, path, -live_rows_deleted)
     return {
         **{k: plan[k] for k in ("n_digests", "total_files", "candidate_files")},
         "rows_deleted": rows_deleted,

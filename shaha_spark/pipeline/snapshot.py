@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark import StorageLevel
 
 from .. import io_util
+from ..schema import SIDECAR_NAME
 
 SNAP_DIR = "_snapshots"
 RETAIN_SUBDIR = "retained"
@@ -79,7 +80,8 @@ def _retain_dir(path: str) -> str:
     return _snap_root(path) + "/" + RETAIN_SUBDIR
 
 
-def _rel(db_path: str, abs_path: str) -> str:
+def rel_of(db_path: str, abs_path: str) -> str:
+    """Path of ``abs_path`` relative to the database at ``db_path``."""
     root = db_path.rstrip("/") + "/"
     # hadoop may return fully-qualified URIs (file:/...); compare on
     # the suffix after the scheme-independent root
@@ -89,11 +91,6 @@ def _rel(db_path: str, abs_path: str) -> str:
     if i >= 0:
         return abs_path[i + len(root.split("://")[-1]):]
     raise ValueError(f"{abs_path} is not under {db_path}")
-
-
-def rel_of(db_path: str, abs_path: str) -> str:
-    """Public alias of the db-relative path computation."""
-    return _rel(db_path, abs_path)
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -130,7 +127,7 @@ def live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     out = []
     for p, sz in io_util.list_files(spark, path):
         try:
-            rel = _rel(path, p)
+            rel = rel_of(path, p)
         except ValueError:
             continue
         if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
@@ -164,7 +161,7 @@ def snapshot_create(
     existing = snapshot_list(spark, path)
     version = (existing[-1]["version"] + 1) if existing else 1
     files = [
-        {"rel": _rel(path, p), "bytes": sz} for p, sz in live_files(spark, path)
+        {"rel": rel_of(path, p), "bytes": sz} for p, sz in live_files(spark, path)
     ]
     manifest = {
         "version": version,
@@ -318,7 +315,7 @@ def retire_or_delete(
     'deleted'. Pass a precomputed ``refs`` set when retiring in a loop
     so the manifests are parsed once per maintenance run."""
     try:
-        rel = _rel(db_path, abs_path)
+        rel = rel_of(db_path, abs_path)
     except ValueError:
         io_util.delete(spark, abs_path)
         return "deleted"
@@ -328,17 +325,29 @@ def retire_or_delete(
         io_util.delete(spark, abs_path)
         return "deleted"
     retained = _retained_map(spark, db_path)
-    # preserve the rel SUBPATH under retained/ so hive-style partition
-    # directories (algorithm=...) survive retirement and time-travel
-    # reads can recover the partition column with a basePath read
+    _retire(spark, db_path, abs_path, rel, retained)
+    _write_retained_map(spark, db_path, retained)
+    return "retained"
+
+
+def _retire(
+    spark: SparkSession,
+    db_path: str,
+    src: str,
+    rel: str,
+    retained: dict[str, str],
+) -> None:
+    """Rename ``src`` into the retained area as ``rel`` and record it in
+    ``retained`` (the caller writes the mapping). The rel SUBPATH is
+    preserved under retained/ so hive-style partition directories
+    (algorithm=...) survive retirement and time-travel reads can
+    recover the partition column with a basePath read."""
     dest = _retain_dir(db_path) + "/" + rel
     if "/" in rel:
         io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
-    if not io_util.rename(spark, abs_path, dest):
-        raise IOError(f"could not retire {abs_path} to {dest}")
+    if not io_util.rename(spark, src, dest):
+        raise IOError(f"could not retire {src} to {dest}")
     retained[rel] = rel
-    _write_retained_map(spark, db_path, retained)
-    return "retained"
 
 
 def retire_replaced_tree(
@@ -357,7 +366,7 @@ def retire_replaced_tree(
     moved = 0
     for p, _sz in old_files:
         try:
-            rel = _rel(db_path, p)
+            rel = rel_of(db_path, p)
         except ValueError:
             continue
         if rel not in refs or rel in retained:
@@ -365,12 +374,7 @@ def retire_replaced_tree(
         src = backup_path.rstrip("/") + "/" + rel
         if not io_util.exists(spark, src):
             continue
-        dest = _retain_dir(db_path) + "/" + rel
-        if "/" in rel:
-            io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
-        if not io_util.rename(spark, src, dest):
-            raise IOError(f"could not retire {src} to {dest}")
-        retained[rel] = rel
+        _retire(spark, db_path, src, rel, retained)
         moved += 1
     if moved:
         _write_retained_map(spark, db_path, retained)
@@ -406,7 +410,7 @@ def heal_stale_backup(spark: SparkSession, live_path: str) -> bool:
             f"left at {backup} for manual recovery"
         )
     pseudo_old = [
-        (live + "/" + _rel(backup, p), sz)
+        (live + "/" + rel_of(backup, p), sz)
         for p, sz in io_util.list_files(spark, backup)
     ]
     retire_replaced_tree(spark, live, backup, pseudo_old)
@@ -422,7 +426,8 @@ def swap_live_tree(
 ) -> None:
     """Checked whole-directory swap: move the live dataset aside, move
     ``tmp_path`` into place, restore the snapshot log the swap carried
-    aside, retire replaced-but-referenced files, drop the backup.
+    aside, retire replaced-but-referenced files, carry the sidecar over
+    when ``tmp_path`` brought none, drop the backup.
 
     The ONE home of the protocol (build's append path and
     compact_hashdb both call it). Every rename is checked —
@@ -461,6 +466,16 @@ def swap_live_tree(
                 f"{old_snaps}; backup left at {backup} for manual recovery"
             )
         retire_replaced_tree(spark, live, backup, old_live)
+    # a new tree written without a sidecar (compaction: same content)
+    # keeps the old one; the caller refreshes its physical stats
+    old_sidecar = backup + "/" + SIDECAR_NAME
+    new_sidecar = live + "/" + SIDECAR_NAME
+    if io_util.exists(spark, old_sidecar) and not io_util.exists(spark, new_sidecar):
+        if not io_util.rename(spark, old_sidecar, new_sidecar):
+            raise IOError(
+                f"{op} swap: could not restore the sidecar from "
+                f"{old_sidecar}; backup left at {backup}"
+            )
     io_util.delete(spark, backup)
 
 

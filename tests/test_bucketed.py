@@ -66,3 +66,31 @@ def test_bucketed_read_round_trip(spark, tmp_path):
     assert df.count() == 2
     assert sorted(df.columns) == ["algorithm", "hash", "preimage", "sources"]
     spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_bucketed_files_use_the_hashdb_writer_options(spark, tmp_path):
+    """The bucketed writer shares write_hashdb's Parquet options: `hash`
+    and `preimage` are ZSTD-compressed and never dictionary-encoded.
+    Each record repeats 100 times, because on unique values parquet-mr
+    falls back to plain pages by itself; with repeats only the disabled
+    dictionary keeps them plain."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    table = "hashdb_bucketed_opts"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    path = str(tmp_path / "bdb3")
+    repeated = _records(spark, ["a", "b", "c", "d"], "src").crossJoin(spark.range(100))
+    write_bucketed_hashdb(repeated.drop("id"), table, path, n_buckets=2)
+    files = glob.glob(f"{path}/*.parquet")
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        names = md.schema.to_arrow_schema().names
+        for name in ("hash", "preimage"):
+            for rg in range(md.num_row_groups):
+                col = md.row_group(rg).column(names.index(name))
+                assert col.compression == "ZSTD", (f, name, col.compression)
+                assert not col.has_dictionary_page, (f, name, col.encodings)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")

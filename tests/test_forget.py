@@ -194,3 +194,61 @@ def test_preimage_digests_scan_fallback_without_sidecar(spark, tmp_path):
     ds = preimage_digests(spark, out, ["word0003"])
     # both algorithms recovered from the scan: 2 digests for 1 word
     assert len(ds) == 2 and len({len(d) for d in ds}) == 2
+
+
+def test_forget_publish_crash_rolls_forward(spark, tmp_path, monkeypatch):
+    """A forget whose per-file swap fails at the publish rename, after
+    the manifest committed it and the original was deleted, is rolled
+    forward by the next run: erased digests gone, no original left, no
+    stage left, and the sidecar count matches the data — including the
+    rows of the swap that completed before the failing one."""
+    import os
+
+    from shaha_spark.pipeline.forget import preimage_digests
+
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    total0 = read_sidecar(spark, out)["total_records"]
+    digests = preimage_digests(spark, out, ["word0007", "word0123", "word0250"])
+    hits = [
+        c["file"]
+        for c in plan_forget(spark, out, digests)["candidates"]
+        if spark.read.parquet(c["file"]).where(F.col("hash").isin(digests)).count()
+    ]
+    assert len(hits) >= 2
+
+    real_rename = io_util.rename
+    publishes = []
+
+    def failing_rename(spark_, src, dst):
+        # the publish step: a staged forget file renamed visible
+        base = os.path.basename(src)
+        if base.startswith("_incoming-forget-") and base.endswith(".parquet"):
+            publishes.append(src)
+            if len(publishes) == 2:
+                return False
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(io_util, "rename", failing_rename)
+    with pytest.raises(IOError, match="rolls the swap forward"):
+        forget_digests(spark, out, digests)
+    monkeypatch.setattr(io_util, "rename", real_rename)
+    staged = [p for p in _files(spark, out) if "_incoming-forget-" in p]
+    assert len(staged) == 1
+
+    report = forget_digests(spark, out, digests)
+    assert report["recovered"]["rolled_forward"] == 1
+    live = _files(spark, out)
+    assert not any("_incoming" in p for p in live)
+    assert not set(hits) & set(live)
+    db = read_hashdb(spark, out)
+    assert db.where(F.col("hash").isin(digests)).count() == 0
+    assert read_sidecar(spark, out)["total_records"] == total0 - len(digests)
+    assert db.count() == total0 - len(digests)
+    # rewritten files keep the build's (hash, algorithm) order
+    for p in live:
+        if "forget-" in p:
+            rows = [
+                (bytes(r.hash), r.algorithm)
+                for r in spark.read.parquet(p).select("hash", "algorithm").collect()
+            ]
+            assert rows == sorted(rows)

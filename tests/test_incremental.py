@@ -122,3 +122,23 @@ def test_merged_totals_survive_past_18_digits(spark):
     assert dict(doubled.dtypes)["sv"] == dict(merged.dtypes)["sv"]
     out2 = finalize_rollup(doubled).collect()
     assert out2[0].sum_value == 40 * 9e15
+
+
+def test_all_null_value_bucket_merges_to_single_pass_null(spark):
+    """A bucket whose every value is NULL sums to NULL in the one-pass
+    aggregation (and in the DuckDB oracle's SUM); merging split
+    increments must give the same NULL, not 0. The bucket is NULL on
+    both sides of one merge and on one side only of another."""
+    schema = "event_type string, tus long, value double"
+    rows_a = [("nulls", 10, None), ("both", 20, None), ("buy", 30, 2.0)]
+    rows_b = [("nulls", 40, None), ("both", 50, 4.0), ("only_b", 60, None)]
+    a = rollup_increment(spark.createDataFrame(rows_a, schema))
+    b = rollup_increment(spark.createDataFrame(rows_b, schema))
+    merged = _as_map(finalize_rollup(merge_rollup(a, b)).collect())
+    single = _as_map(
+        _full(spark.createDataFrame(rows_a + rows_b, schema)).collect()
+    )
+    assert merged == single
+    assert merged[("nulls", "1970-01-01 00:00:00")] == (2, None)
+    assert merged[("only_b", "1970-01-01 00:00:00")] == (1, None)
+    assert merged[("both", "1970-01-01 00:00:00")] == (2, 4.0)
