@@ -10,11 +10,24 @@ Used as the UDF kernel for the ``blake3`` algorithm (ref
 /root/reference/src/hasher/mod.rs:37-47; known-answer vector ref
 tests/integration.rs:71-79) and for driver-side source content
 fingerprints (ref src/source/file.rs:43-56). No blake3 wheel is
-available in this environment, so the spec implementation lives here;
-wordlist inputs are short (single chunk), keeping the slow path cheap.
+available in this environment, so the spec implementation lives here.
+
+Every production path runs through one numpy lane compressor
+(:func:`_compress_lanes`): a lane is one independent compression, and
+the 7-round schedule runs once per call across all lanes. Chunks are
+independent until the tree merge (BLAKE3 paper §5.3), so a batch of
+words (one chunk each), the chunks of a multi-chunk row and the
+buffered chunks of a streamed file all compress as lanes, their blocks
+in lockstep, and tree levels merge as lanes of parent compressions.
+Batches of fewer than ``_MIN_LANES`` lanes run through the scalar
+:func:`_compress` instead, which is faster there. The scalar
+:func:`blake3` tree is the reference the tests compare the lane paths
+against.
 """
 
 from __future__ import annotations
+
+import numpy as np
 
 _MASK32 = 0xFFFFFFFF
 
@@ -27,6 +40,7 @@ _MSG_PERMUTATION = (2, 6, 3, 10, 7, 0, 4, 13, 1, 11, 12, 5, 9, 14, 15, 8)
 
 _CHUNK_LEN = 1024
 _BLOCK_LEN = 64
+_CHUNK_BLOCKS = _CHUNK_LEN // _BLOCK_LEN
 
 _CHUNK_START = 1
 _CHUNK_END = 2
@@ -79,6 +93,278 @@ def _compress(
     ]
 
 
+# --- lane compressor --------------------------------------------------
+
+# Message-word indices per round, shaped (round, step, 4): step 0/1 are
+# the x/y words of the four column G calls, step 2/3 of the four
+# diagonal ones. One fancy-index gather schedules a whole compression.
+def _schedule() -> np.ndarray:
+    idx = list(range(16))
+    rounds = []
+    for _ in range(7):
+        rounds.append([idx[0:8:2], idx[1:8:2], idx[8:16:2], idx[9:16:2]])
+        idx = [idx[p] for p in _MSG_PERMUTATION]
+    return np.array(rounds, dtype=np.intp)
+
+
+_SCHEDULE = _schedule()
+# The state is four (4, n) rows a, b, c, d (state words 0-3, 4-7, 8-11,
+# 12-15), so each G half-round is one set of numpy calls over all 4 x n
+# words. Rotating b, c, d by 1, 2, 3 lines the diagonals up as columns.
+_ROT1 = np.array([1, 2, 3, 0], dtype=np.intp)
+_ROT2 = np.array([2, 3, 0, 1], dtype=np.intp)
+_ROT3 = np.array([3, 0, 1, 2], dtype=np.intp)
+_IV_CV = np.array(_IV, dtype=np.uint32)[:, None]
+
+# Batches of fewer chunks or parents than this run through the scalar
+# compressor, one lane at a time: a numpy compression step costs the
+# same at any small lane count (~560 ufunc calls), about as much as 5-6
+# scalar compressions (0.45 vs 0.09 ms quiet, 0.8 vs 0.135 ms loaded).
+# Measured on a 4-core shared x86 host with numpy 1.26, medians of
+# 21-25 interleaved calls at 1..12 lanes, for parent lanes and for
+# whole-chunk lanes: the two cross between 5 and 6 lanes.
+_MIN_LANES = 6
+
+
+def _rotr_lanes(x: np.ndarray, shift: int, t: np.ndarray) -> None:
+    np.right_shift(x, shift, out=t)
+    np.left_shift(x, 32 - shift, out=x)
+    np.bitwise_or(x, t, out=x)
+
+
+def _g_lanes(a, b, c, d, mx, my, t) -> None:
+    a += b; a += mx
+    d ^= a; _rotr_lanes(d, 16, t)
+    c += d
+    b ^= c; _rotr_lanes(b, 12, t)
+    a += b; a += my
+    d ^= a; _rotr_lanes(d, 8, t)
+    c += d
+    b ^= c; _rotr_lanes(b, 7, t)
+
+
+def _compress_lanes(cv, words, counter, block_len, flags) -> np.ndarray:
+    """Compress n independent lanes; return their (8, n) chaining values.
+
+    ``cv`` is (8, n) and ``words`` (16, n) uint32; ``counter`` (uint64),
+    ``block_len`` and ``flags`` are per-lane (n,) arrays or scalars.
+    uint32 arithmetic wraps mod 2^32, which is the spec's arithmetic.
+    """
+    n = cv.shape[1]
+    msg = words[_SCHEDULE]  # (7, 4, 4, n)
+    a = cv[:4].copy()
+    b = cv[4:].copy()
+    c = np.repeat(_IV_CV[:4], n, axis=1)
+    d = np.empty((4, n), dtype=np.uint32)
+    counter = np.asarray(counter, dtype=np.uint64)
+    d[0] = counter & np.uint64(_MASK32)
+    d[1] = counter >> np.uint64(32)
+    d[2] = block_len
+    d[3] = flags
+    t = np.empty((4, n), dtype=np.uint32)
+    for mx, my, dx, dy in msg:
+        _g_lanes(a, b, c, d, mx, my, t)
+        b, c, d = b[_ROT1], c[_ROT2], d[_ROT3]
+        _g_lanes(a, b, c, d, dx, dy, t)
+        b, c, d = b[_ROT3], c[_ROT2], d[_ROT1]
+    a ^= c
+    b ^= d
+    return np.concatenate((a, b))
+
+
+def _parent_lanes(left: np.ndarray, right: np.ndarray, flags=_PARENT) -> np.ndarray:
+    """Parent-node compressions of (8, n) left and right child CVs."""
+    n = left.shape[1]
+    if n < _MIN_LANES:
+        fl = np.broadcast_to(flags, (n,)).tolist()
+        out = [
+            _compress(_IV, lw + rw, 0, _BLOCK_LEN, fl[i])[:8]
+            for i, (lw, rw) in enumerate(zip(left.T.tolist(), right.T.tolist()))
+        ]
+        return _lanes(out, n)
+    return _compress_lanes(
+        np.repeat(_IV_CV, n, axis=1), np.concatenate((left, right)), 0, _BLOCK_LEN, flags
+    )
+
+
+def _chunk_lanes(words, first_block, n_blocks, last_len, counter, end_flags) -> np.ndarray:
+    """Chaining values of k chunks compressed as lanes, blocks in lockstep.
+
+    ``words`` is (blocks, 16) uint32, and chunk j's blocks are rows
+    ``first_block[j]`` onwards. ``n_blocks`` must be non-increasing, so
+    the chunks still open at block b are a prefix of the lanes.
+    ``last_len`` is the byte length of each chunk's final block, and
+    ``end_flags`` its final-block flags (CHUNK_END, maybe with ROOT).
+    """
+    k = len(first_block)
+    if k < _MIN_LANES:
+        out = []
+        for j in range(k):
+            cv, last = _IV, int(n_blocks[j]) - 1
+            for b in range(last + 1):
+                cv = _compress(
+                    cv, words[first_block[j] + b].tolist(), int(counter[j]),
+                    int(last_len[j]) if b == last else _BLOCK_LEN,
+                    (_CHUNK_START if b == 0 else 0) | (int(end_flags[j]) if b == last else 0),
+                )[:8]
+            out.append(cv)
+        return _lanes(out, k)
+    cv = np.repeat(_IV_CV, k, axis=1)
+    for b in range(int(n_blocks[0])):
+        m = k if b == 0 else int(np.count_nonzero(n_blocks > b))
+        last = n_blocks[:m] == b + 1
+        flags = np.where(last, end_flags[:m], 0)
+        if b == 0:
+            flags |= _CHUNK_START
+        block_len = np.where(last, last_len[:m], _BLOCK_LEN)
+        cv[:, :m] = _compress_lanes(
+            cv[:, :m], words[first_block[:m] + b].T, counter[:m], block_len, flags
+        )
+    return cv
+
+
+def _lanes(cvs: list[list[int]], n: int) -> np.ndarray:
+    """n scalar chaining values → their (8, n) lane array."""
+    return np.array(cvs, dtype=np.uint32).reshape(n, 8).T
+
+
+def _cv_bytes(cv: np.ndarray) -> bytes:
+    """(8, n) chaining values → n concatenated 32-byte little-endian digests."""
+    return np.ascontiguousarray(cv.T, dtype="<u4").tobytes()
+
+
+def blake3_batch(datas: list[bytes]) -> list[bytes]:
+    """BLAKE3 of every input, all chunks of all inputs compressed as lanes.
+
+    Each input is split into chunks; a chunk is one lane, with its
+    input-relative chunk counter. Lanes are sorted by block count so the
+    chunks open at each block step form a prefix. Single-chunk inputs
+    (every realistic wordlist entry) finish with ROOT on their last
+    block; longer inputs then merge their chunk CVs level by level,
+    all inputs' pairs of a level in one parent-lane call.
+    """
+    n = len(datas)
+    if not n:
+        return []
+    lens = np.fromiter(map(len, datas), dtype=np.int64, count=n)
+    n_chunks = np.maximum(1, -(-lens // _CHUNK_LEN))
+    row_first = np.cumsum(n_chunks) - n_chunks
+    lane_row = np.repeat(np.arange(n), n_chunks)
+    lane_idx = np.arange(len(lane_row)) - row_first[lane_row]
+    lane_len = np.minimum(lens[lane_row] - lane_idx * _CHUNK_LEN, _CHUNK_LEN)
+    lane_blocks = np.maximum(1, -(-lane_len // _BLOCK_LEN))
+
+    order = np.argsort(-lane_blocks, kind="stable")
+    sorted_blocks = lane_blocks[order]
+    first_block = np.empty_like(lane_blocks)
+    first_block[order] = np.cumsum(sorted_blocks) - sorted_blocks
+    # scatter every input byte into its lane's zero-padded block slots
+    flat = np.frombuffer(b"".join(datas), dtype=np.uint8)
+    src_start = np.cumsum(lane_len) - lane_len
+    buf = np.zeros(int(sorted_blocks.sum()) * _BLOCK_LEN, dtype=np.uint8)
+    buf[np.arange(len(flat)) + np.repeat(first_block * _BLOCK_LEN - src_start, lane_len)] = flat
+    words = buf.view("<u4").reshape(-1, 16)
+
+    end_flags = np.where(n_chunks[lane_row] == 1, _CHUNK_END | _ROOT, _CHUNK_END)
+    last_len = lane_len - (lane_blocks - 1) * _BLOCK_LEN
+    cv = np.empty((8, len(order)), dtype=np.uint32)
+    cv[:, order] = _chunk_lanes(
+        words, first_block[order], sorted_blocks, last_len[order],
+        lane_idx[order].astype(np.uint64), end_flags[order],
+    )
+
+    # tree merge, one level per pass: within each row, node 2i pairs
+    # with 2i+1 and an odd last node rises unchanged — the left-heavy
+    # spec tree; the pair that leaves a row one node is its root
+    pos, row = lane_idx, lane_row
+    while len(pos) > n:
+        width = n_chunks[row]
+        keep = pos % 2 == 0
+        paired = keep & (pos + 1 < width)
+        left = np.flatnonzero(paired)
+        flags = np.where(width[left] == 2, _PARENT | _ROOT, _PARENT)
+        cv[:, left] = _parent_lanes(cv[:, left], cv[:, left + 1], flags)
+        cv, pos, row = cv[:, keep], pos[keep] // 2, row[keep]
+        n_chunks = (n_chunks + 1) // 2
+    digests = _cv_bytes(cv)
+    return [digests[i : i + 32] for i in range(0, 32 * n, 32)]
+
+
+class Blake3Hasher:
+    """Incremental BLAKE3 (update()/digest()), for streamed inputs that
+    must not be buffered whole — e.g. multi-GB file fingerprints.
+
+    ``update`` compresses every buffered full chunk but the last as
+    lanes of :func:`_chunk_lanes`, then merges them into the chunk
+    stack level by level with parent lanes: at each level a node at an
+    odd index first pairs with the stack top, pairs merge, and an odd
+    last node is pushed back. The stack thus holds one CV per set bit
+    of the compressed-chunk count, which is the spec's left-heavy tree.
+    The last chunk is held back because it compresses with the ROOT
+    flag when it ends the input, which is only known at ``digest()``.
+
+    ``digest()`` is non-destructive — more ``update()`` calls may
+    follow, matching hashlib semantics.
+    """
+
+    def __init__(self) -> None:
+        self._stack: list[np.ndarray] = []
+        self._chunks = 0
+        self._buf = bytearray()
+
+    def update(self, data: bytes) -> "Blake3Hasher":
+        self._buf += data
+        k = (len(self._buf) - 1) // _CHUNK_LEN
+        if k <= 0:
+            return self
+        body = bytes(self._buf[: k * _CHUNK_LEN])
+        del self._buf[: k * _CHUNK_LEN]
+        words = np.frombuffer(body, dtype="<u4").reshape(-1, 16)
+        cur = _chunk_lanes(
+            words,
+            np.arange(k) * _CHUNK_BLOCKS,
+            np.full(k, _CHUNK_BLOCKS),
+            np.full(k, _BLOCK_LEN),
+            np.arange(self._chunks, self._chunks + k, dtype=np.uint64),
+            np.full(k, _CHUNK_END),
+        )
+        start = self._chunks
+        self._chunks += k
+        rest = []
+        while cur.shape[1]:
+            if start & 1:
+                cur = np.concatenate((self._stack.pop(), cur), axis=1)
+                start -= 1
+            if cur.shape[1] & 1:
+                rest.append(cur[:, -1:])
+            cur = _parent_lanes(cur[:, 0:-1:2], cur[:, 1::2])
+            start >>= 1
+        self._stack.extend(reversed(rest))
+        return self
+
+    def digest(self) -> bytes:
+        tail = bytes(self._buf)
+        n_blocks = max(1, -(-len(tail) // _BLOCK_LEN))
+        words = np.frombuffer(tail.ljust(n_blocks * _BLOCK_LEN, b"\x00"), dtype="<u4")
+        cv = _chunk_lanes(
+            words.reshape(-1, 16),
+            np.zeros(1, dtype=np.int64),
+            np.array([n_blocks]),
+            np.array([len(tail) - (n_blocks - 1) * _BLOCK_LEN]),
+            np.array([self._chunks], dtype=np.uint64),
+            np.array([_CHUNK_END if self._stack else _CHUNK_END | _ROOT]),
+        )
+        for i in range(len(self._stack) - 1, -1, -1):
+            cv = _parent_lanes(self._stack[i], cv, _PARENT | (_ROOT if i == 0 else 0))
+        return _cv_bytes(cv)
+
+    def hexdigest(self) -> str:
+        return self.digest().hex()
+
+
+# --- scalar reference tree --------------------------------------------
+
+
 def _block_words(block: bytes) -> list[int]:
     block = block.ljust(_BLOCK_LEN, b"\x00")
     return [int.from_bytes(block[i : i + 4], "little") for i in range(0, _BLOCK_LEN, 4)]
@@ -116,171 +402,9 @@ def _subtree_cv(chunks: list[bytes], first_index: int) -> tuple[int, ...]:
     return tuple(_compress(_IV, words, 0, _BLOCK_LEN, _PARENT)[:8])
 
 
-def blake3_batch(datas: list[bytes]) -> list[bytes]:
-    """Vectorized BLAKE3 over a batch of single-chunk inputs.
-
-    Inputs ≤ 1024 bytes (one chunk — every realistic wordlist entry) are
-    grouped by block count and compressed with numpy: the 7-round G
-    schedule runs element-wise across all states in a group, so the
-    Python interpreter executes the round function once per GROUP
-    instead of once per input. Multi-chunk inputs (> 1024 B) fall back
-    to the scalar tree implementation.
-    """
-    import numpy as np
-
-    out: list[bytes | None] = [None] * len(datas)
-    groups: dict[int, list[int]] = {}
-    for i, d in enumerate(datas):
-        if len(d) <= _CHUNK_LEN:
-            n_blocks = max(1, -(-len(d) // _BLOCK_LEN))
-            groups.setdefault(n_blocks, []).append(i)
-        else:
-            out[i] = blake3(d)
-
-    u32 = np.uint32
-
-    # In-place round function over preallocated state/scratch rows:
-    # every +, ^, shift writes into an existing (n,)-buffer instead of
-    # allocating a temporary (uint32 arithmetic wraps mod 2^32, which
-    # is exactly the spec's arithmetic). rotr(v, s) is expressed as
-    # t = v >> s; v <<= (32-s); v |= t with one shared scratch row.
-    def make_compress(n):
-        st = np.empty((16, n), dtype=np.uint32)
-        t = np.empty(n, dtype=np.uint32)
-
-        def g(a, b, c, d, mx, my):
-            st[a] += st[b]; st[a] += mx
-            st[d] ^= st[a]
-            np.right_shift(st[d], 16, out=t); st[d] <<= u32(16); st[d] |= t
-            st[c] += st[d]
-            st[b] ^= st[c]
-            np.right_shift(st[b], 12, out=t); st[b] <<= u32(20); st[b] |= t
-            st[a] += st[b]; st[a] += my
-            st[d] ^= st[a]
-            np.right_shift(st[d], 8, out=t); st[d] <<= u32(24); st[d] |= t
-            st[c] += st[d]
-            st[b] ^= st[c]
-            np.right_shift(st[b], 7, out=t); st[b] <<= u32(25); st[b] |= t
-
-        def compress_batch(cv, words, block_len, flags):
-            """cv: (8, n); words: (16, n); block_len: (n,); flags: scalar."""
-            st[:8] = cv
-            st[8] = _IV[0]; st[9] = _IV[1]; st[10] = _IV[2]; st[11] = _IV[3]
-            st[12] = 0; st[13] = 0
-            st[14] = block_len
-            st[15] = u32(flags)
-            m = [words[i] for i in range(16)]
-            for round_idx in range(7):
-                g(0, 4, 8, 12, m[0], m[1]); g(1, 5, 9, 13, m[2], m[3])
-                g(2, 6, 10, 14, m[4], m[5]); g(3, 7, 11, 15, m[6], m[7])
-                g(0, 5, 10, 15, m[8], m[9]); g(1, 6, 11, 12, m[10], m[11])
-                g(2, 7, 8, 13, m[12], m[13]); g(3, 4, 9, 14, m[14], m[15])
-                if round_idx < 6:
-                    m = [m[p] for p in _MSG_PERMUTATION]
-            return st[:8] ^ st[8:]
-
-        return compress_batch
-
-    for n_blocks, idxs in groups.items():
-        n = len(idxs)
-        compress_batch = make_compress(n)
-        # vectorized packing (same fix as keccak256_batch r6): the
-        # per-row copy loop costs on the order of the compression
-        # itself for word-sized inputs — join once, scatter with one
-        # fancy-index assignment
-        buf = np.zeros((n, n_blocks * _BLOCK_LEN), dtype=np.uint8)
-        lens = np.fromiter((len(datas[i]) for i in idxs), dtype=np.int64, count=n)
-        flat = np.frombuffer(b"".join(datas[i] for i in idxs), dtype=np.uint8)
-        starts = np.cumsum(lens) - lens
-        row_idx = np.repeat(np.arange(n), lens)
-        col_idx = np.arange(len(flat), dtype=np.int64) - np.repeat(starts, lens)
-        buf[row_idx, col_idx] = flat
-        # words for block b: (16, n)
-        cv = np.empty((8, n), dtype=np.uint32)
-        for j in range(8):
-            cv[j] = _IV[j]
-        last_len = (lens - (n_blocks - 1) * _BLOCK_LEN).astype(np.uint32)
-        for blk in range(n_blocks):
-            words = np.ascontiguousarray(
-                buf[:, blk * _BLOCK_LEN : (blk + 1) * _BLOCK_LEN]
-            ).view("<u4").T
-            flags = (_CHUNK_START if blk == 0 else 0)
-            if blk == n_blocks - 1:
-                flags |= _CHUNK_END | _ROOT
-                block_len = last_len
-            else:
-                block_len = np.full(n, _BLOCK_LEN, dtype=np.uint32)
-            res = compress_batch(cv, words, block_len, flags)
-            cv = res[:8]
-        digests = np.ascontiguousarray(cv.T.astype("<u4")).view(np.uint8).reshape(n, 32)
-        for row, i in enumerate(idxs):
-            out[i] = digests[row].tobytes()
-    return out  # type: ignore[return-value]
-
-
-def _parent_cv(left: tuple[int, ...], right: tuple[int, ...], flags: int = 0):
-    return _compress(_IV, list(left) + list(right), 0, _BLOCK_LEN, _PARENT | flags)
-
-
-class Blake3Hasher:
-    """Incremental BLAKE3 (update()/digest()), for streamed inputs that
-    must not be buffered whole — e.g. multi-GB file fingerprints.
-
-    The standard chunk-stack construction: each completed 1024-byte
-    chunk's CV is pushed onto a stack, merging two equal-size subtrees
-    whenever the completed-chunk count gains a trailing zero bit; this
-    reproduces exactly the spec's left-heavy tree (left subtree =
-    largest power of two < total), verified differentially against the
-    one-shot :func:`blake3` across chunk-boundary sizes. A chunk is
-    only finalized once a further byte arrives, because the last chunk
-    compresses with the ROOT flag and cannot be known early.
-
-    ``digest()`` is non-destructive — more ``update()`` calls may
-    follow, matching hashlib semantics.
-    """
-
-    def __init__(self) -> None:
-        self._stack: list[tuple[int, ...]] = []
-        self._chunks = 0
-        self._buf = bytearray()
-
-    def update(self, data: bytes) -> "Blake3Hasher":
-        self._buf += data
-        while len(self._buf) > _CHUNK_LEN:
-            chunk = bytes(self._buf[:_CHUNK_LEN])
-            del self._buf[:_CHUNK_LEN]
-            cv, words, counter, block_len, flags = _chunk_output(
-                chunk, self._chunks
-            )
-            cv8 = tuple(_compress(cv, words, counter, block_len, flags)[:8])
-            self._chunks += 1
-            total = self._chunks
-            while total & 1 == 0:
-                cv8 = tuple(_parent_cv(self._stack.pop(), cv8)[:8])
-                total >>= 1
-            self._stack.append(cv8)
-        return self
-
-    def digest(self) -> bytes:
-        cv, words, counter, block_len, flags = _chunk_output(
-            bytes(self._buf), self._chunks
-        )
-        if not self._stack:
-            out = _compress(cv, words, counter, block_len, flags | _ROOT)
-            return b"".join(w.to_bytes(4, "little") for w in out[:8])
-        current = tuple(_compress(cv, words, counter, block_len, flags)[:8])
-        stack = list(self._stack)
-        while len(stack) > 1:
-            current = tuple(_parent_cv(stack.pop(), current)[:8])
-        out = _parent_cv(stack.pop(), current, _ROOT)
-        return b"".join(w.to_bytes(4, "little") for w in out[:8])
-
-    def hexdigest(self) -> str:
-        return self.digest().hex()
-
-
 def blake3(data: bytes) -> bytes:
-    """BLAKE3 digest, default (unkeyed) mode, 32 bytes."""
+    """BLAKE3 digest, default (unkeyed) mode, 32 bytes: the scalar spec
+    tree, one compression at a time — the reference for the lane paths."""
     chunks = [data[i : i + _CHUNK_LEN] for i in range(0, len(data), _CHUNK_LEN)] or [b""]
     if len(chunks) == 1:
         cv, words, counter, block_len, flags = _chunk_output(chunks[0], 0)

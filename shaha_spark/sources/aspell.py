@@ -13,7 +13,7 @@ import subprocess
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
-from shaha_spark.functions.blake3_pure import blake3
+from shaha_spark.functions.blake3_pure import Blake3Hasher
 
 _WORD_SCHEMA = StructType([StructField("word", StringType(), False)])
 
@@ -43,5 +43,6 @@ def aspell_source(spark: SparkSession, lang: str):
     rows = [(ln,) for ln in text.splitlines() if ln]
     words = spark.createDataFrame(rows, _WORD_SCHEMA)
     return SourceResult(
-        words=words, name=f"aspell:{lang}", content_hash=blake3(out.stdout).hex()
+        words=words, name=f"aspell:{lang}",
+        content_hash=Blake3Hasher().update(out.stdout).hexdigest(),
     )

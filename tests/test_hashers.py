@@ -8,6 +8,8 @@ built-ins return hex strings while the engine stores raw bytes.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -159,41 +161,101 @@ def test_keccak_native_fast_path_selection(monkeypatch):
     )
 
 
-def test_blake3_incremental_matches_one_shot():
-    """Blake3Hasher (the streamed chunk-stack construction) must agree
+_MIB = 1024 * 1024
+# one buffer whose prefixes the BLAKE3 lane tests hash; see blake3_ref
+_DATA = random.Random(3).randbytes(2 * _MIB + 1025)
+
+
+@pytest.fixture(scope="module")
+def blake3_ref():
+    """The scalar spec tree blake3(), with its subtree CVs memoized.
+
+    The lane tests hash many prefixes of ``_DATA``, which share their
+    full-chunk subtrees, so the reference (~0.7 MB/s) compresses each
+    chunk about once."""
+    from shaha_spark.functions import blake3_pure
+
+    subtree, memo = blake3_pure._subtree_cv, {}
+
+    def memo_subtree(chunks, first_index):
+        key = (first_index, tuple(chunks))
+        if key not in memo:
+            memo[key] = subtree(chunks, first_index)
+        return memo[key]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(blake3_pure, "_subtree_cv", memo_subtree)
+        yield blake3_pure.blake3
+
+
+def test_blake3_incremental_matches_one_shot(blake3_ref):
+    """Blake3Hasher (chunk lanes merged into the chunk stack) must agree
     with the one-shot spec tree at every chunk-boundary size and under
     arbitrary update() splits — including digest() mid-stream."""
-    import random
-
-    from shaha_spark.functions.blake3_pure import Blake3Hasher, blake3
+    from shaha_spark.functions.blake3_pure import _MIN_LANES, Blake3Hasher
 
     rng = random.Random(7)
     sizes = [0, 1, 63, 64, 65, 1023, 1024, 1025, 2048, 2049,
              3072, 4096, 5000, 8192, 31744, 102_400]
     for size in sizes:
-        data = bytes(rng.randrange(256) for _ in range(size))
+        data = _DATA[:size]
         h = Blake3Hasher()
         i = 0
         while i < len(data):
-            step = rng.choice([1, 7, 64, 1000, 1024, 4096])
+            step = rng.choice([1, 7, 64, 1000, 1024, 4096, 9000, 20_000])
             h.update(data[i : i + step])
             i += step
-        assert h.digest() == blake3(data), size
+            if rng.random() < 0.3:
+                assert h.digest() == blake3_ref(data[:i]), (size, i)
+        assert h.digest() == blake3_ref(data), size
         # digest() is non-destructive: updating afterwards still works
         h.update(b"tail")
-        assert h.digest() == blake3(data + b"tail"), size
+        assert h.digest() == blake3_ref(data + b"tail"), size
+
+    # each update() compresses a batch starting at the chunk count so
+    # far: 1, 3, 5 and 7 are odd, and 3 and 7 pop two and three stack
+    # entries; the batches lie on both sides of the scalar/lane crossover
+    data = _DATA[: 64 * 1024 + 17]
+    small, large = _MIN_LANES - 1, _MIN_LANES
+    for splits in (
+        [1025, large * 1024],
+        [1025, small * 1024],
+        [3 * 1024 + 1, 40 * 1024],
+        [7 * 1024 + 5, large * 1024, small * 1024, 1024],
+        [small * 1024 + 1, large * 1024 + 1],
+    ):
+        h = Blake3Hasher()
+        i = 0
+        for step in splits + [len(data)]:
+            h.update(data[i : i + step])
+            i = min(i + step, len(data))
+            assert h.digest() == blake3_ref(data[:i]), (splits, i)
 
 
-def test_content_hash_file_streams(tmp_path):
+def test_blake3_batch_multi_chunk_rows(blake3_ref):
+    """blake3_batch hashes rows longer than a chunk through the same
+    lanes, mixed with word-sized rows, alone and in a batch."""
+    from shaha_spark.functions.blake3_pure import blake3_batch
+
+    rows = [_DATA[:n] for n in (1025, 5000, 10_000, 3, 0, 64, 65)]
+    rows += [_DATA[o : o + n] for o in (1, 77) for n in (1025, 5000, 10_000)]
+    assert blake3_batch(rows) == [blake3_ref(r) for r in rows]
+    for row in rows[:3]:
+        assert blake3_batch([row]) == [blake3_ref(row)]
+
+
+def test_content_hash_file_streams(tmp_path, blake3_ref):
     """content_hash_file must produce the spec digest while reading in
-    bounded blocks (multi-chunk file, block size ≠ chunk size)."""
-    from shaha_spark.functions.blake3_pure import blake3
+    bounded blocks: a block size ≠ the chunk size, and sizes around
+    the default 1 MiB read block."""
     from shaha_spark.sources.file import content_hash_file
 
-    data = bytes((i * 37 + 11) % 256 for i in range(200_000))
     p = tmp_path / "w.txt"
-    p.write_bytes(data)
-    assert content_hash_file(str(p), block_size=4096) == blake3(data).hex()
+    p.write_bytes(_DATA[:200_000])
+    assert content_hash_file(str(p), block_size=4096) == blake3_ref(_DATA[:200_000]).hex()
+    for size in (_MIB - 1, _MIB, _MIB + 1, 2 * _MIB + 1025):
+        p.write_bytes(_DATA[:size])
+        assert content_hash_file(str(p)) == blake3_ref(_DATA[:size]).hex(), size
 
 
 def test_udf_algorithms_propagate_null(spark):

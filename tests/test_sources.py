@@ -44,6 +44,24 @@ def test_file_content_hash_stable(spark, tmp_path):
     assert h1 == h2
 
 
+def test_file_source_directory_builds_every_file(spark, tmp_path):
+    # spark.read.text reads a directory; only a regular file is
+    # fingerprinted, so a directory source gets no content hash and
+    # builds like stdin instead of failing in open()
+    from shaha_spark.pipeline.build import build, read_hashdb
+
+    d = tmp_path / "lists"
+    d.mkdir()
+    (d / "a.txt").write_text("red\ngreen\n")
+    (d / "b.txt").write_text("green\nblue\n")
+    res = file_source(spark, str(d))
+    assert res.content_hash is None
+    db = str(tmp_path / "db")
+    build(spark, res.words, ["md5"], db, source_name=res.name, source_hash=res.content_hash)
+    words = {r.preimage for r in read_hashdb(spark, db).collect()}
+    assert words == {"red", "green", "blue"}
+
+
 def test_stdin_source(spark):
     res = stdin_source(spark, io.StringIO("a\n\nb\n"))
     assert sorted(r.word for r in res.words.collect()) == ["a", "b"]
