@@ -3,13 +3,16 @@
 SF ?= /root/testdata/sf0.001
 SF1_DIR ?= /tmp/shaha_sf1
 
-.PHONY: test oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench perfbench plans coverage window clean
+.PHONY: test test-maint oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench perfbench plans coverage window clean
 
 test:  ## default (driver) lane — slow tier excluded via pytest.ini addopts
 	python -m pytest tests/ -x -q
 
 test-slow:  ## the heavy lifecycle/invariance tier (index build/append/compact, CLI e2e, partitioning invariance) — the builder runs this every round
 	python -m pytest tests/ -x -q -m slow
+
+test-maint:  ## the maintenance verbs (append, compact, forget, snapshot) with their slow-lane crash tests
+	python -m pytest -m "" tests/test_append.py tests/test_compact.py tests/test_forget.py tests/test_snapshot.py tests/test_swap_safety.py tests/test_object_store.py
 
 test-all:  ## both lanes in one run (pre-round green check)
 	python -m pytest tests/ -x -q -m ""

@@ -6323,7 +6323,7 @@ def q_snapshot_time_travel(spark, sf_dir):
     even-doc vocabulary, snapshot v1, append the odd-doc vocabulary,
     then TIME-TRAVEL back to v1 — the result must be exactly the
     even-doc build (pipeline/snapshot.py read_snapshot; the append's
-    directory swap retires v1's files by rename)."""
+    swap retires v1's files by rename)."""
     import tempfile
 
     from shaha_spark.pipeline import snapshot as snap

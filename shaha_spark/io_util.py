@@ -70,19 +70,9 @@ def tree_size(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
     only for time travel) are excluded — physical stats describe the
     LIVE dataset; `vacuum` reporting covers the retained side.
     """
-    fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return 0
-    total = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        if "/_snapshots/" in p.toString():
-            continue
-        if suffix is None or p.getName().endswith(suffix):
-            total += status.getLen()
-    return total
+    return sum(
+        sz for p, sz in list_files(spark, path, suffix) if "/_snapshots/" not in p
+    )
 
 
 def human_bytes(n: int) -> str:
@@ -102,6 +92,13 @@ def file_size(spark: SparkSession, path: str) -> int:
     if not fs.exists(jpath):
         return 0
     return fs.getFileStatus(jpath).getLen()
+
+
+def qualify(spark: SparkSession, path: str) -> str:
+    """``path`` fully qualified (scheme, absolute), as listings return
+    paths, so a relative path compares equal to its listed children."""
+    fs, jpath = _fs_and_path(spark, path)
+    return fs.makeQualified(jpath).toString()
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:

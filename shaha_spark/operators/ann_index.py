@@ -905,8 +905,7 @@ def compact_index(
 
     ``mode="snapshot"`` (VERDICT r11 #7) copies the sidecars into the
     compacted tree and swaps the WHOLE index in two top-level renames
-    (live → ``.__compact_old__``, compacted → live) — the hashdb
-    compactor's protocol (pipeline/snapshot.py swap_live_tree). The
+    (live → ``.__compact_old__``, compacted → live). The
     exposure shrinks from k per-bucket rename instants to one
     double-rename instant for the root; a probe that already listed
     its files keeps reading the renamed-aside tree on POSIX

@@ -170,8 +170,7 @@ def sort_for_write(
     return parts.sortWithinPartitions("hash", "algorithm")
 
 
-#: The hash database's Parquet writer options, shared by
-#: :func:`write_hashdb` and the bucketed writer.
+#: The hash database's Parquet writer options (:func:`write_hashdb`).
 #:
 #: * Bloom filter on `hash` with ADAPTIVE sizing (parquet-mr 1.13+): the
 #:   writer keeps the smallest of 5 candidate filters (halving from
@@ -238,54 +237,49 @@ def is_algorithm_partitioned(files: list[tuple[str, int]]) -> bool:
     return any("/algorithm=" in p for p, _ in files)
 
 
-def write_sidecar(
-    spark: SparkSession,
-    path: str,
+def sidecar_meta(
     *,
     total_records: int,
     algorithms: list[str],
     sources: list[str],
     source_hashes: list[str],
-) -> None:
-    """Sidecar stats JSON — stands in for the reference's Parquet footer
-    key-value metadata (ref parquet.rs:20-26), which the DataFrame
-    writer cannot emit. Written AFTER the data so a missing/stale
-    sidecar degrades to the scan fallback (ref parquet.rs:577-581).
-    """
-    meta = {
+    file_size_bytes: int,
+) -> dict[str, Any]:
+    """The sidecar stats JSON — stands in for the reference's Parquet
+    footer key-value metadata (ref parquet.rs:20-26), which the
+    DataFrame writer cannot emit."""
+    return {
         "total_records": total_records,
         "algorithms": sorted(set(algorithms)),
         "sources": sorted(set(sources)),
         "source_hashes": sorted(set(source_hashes)),
-        "file_size_bytes": io_util.tree_size(spark, path),
+        "file_size_bytes": file_size_bytes,
         "bloom": {"column": "hash", "kind": "parquet-native"},
-        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "format_version": 1,
     }
-    io_util.write_text(spark, f"{path.rstrip('/')}/{SIDECAR_NAME}", json.dumps(meta, indent=2))
+
+
+def put_sidecar(spark: SparkSession, path: str, meta: dict[str, Any]) -> None:
+    """Write ``meta`` as the sidecar of ``path``, stamped with the time."""
+    meta = {**meta, "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())}
+    io_util.write_text(
+        spark, f"{path.rstrip('/')}/{SIDECAR_NAME}", json.dumps(meta, indent=2)
+    )
+
+
+def write_sidecar(spark: SparkSession, path: str, **fields: Any) -> None:
+    """A fresh build's sidecar (the fields of :func:`sidecar_meta`), its
+    size from a listing of ``path``. Written AFTER the data so a
+    missing/stale sidecar degrades to the scan fallback (ref
+    parquet.rs:577-581). A rewrite writes its sidecar through its swap
+    (``compact.replace_files``)."""
+    size = io_util.tree_size(spark, path)
+    put_sidecar(spark, path, sidecar_meta(**fields, file_size_bytes=size))
 
 
 def read_sidecar(spark: SparkSession, path: str) -> dict[str, Any] | None:
     raw = io_util.read_text(spark, f"{path.rstrip('/')}/{SIDECAR_NAME}")
     return json.loads(raw) if raw is not None else None
-
-
-def refresh_sidecar(spark: SparkSession, path: str, records_delta: int = 0) -> None:
-    """Rewrite the sidecar after maintenance replaced files: the logical
-    metadata (algorithms, sources, source hashes) carries over,
-    ``total_records`` moves by ``records_delta`` and the physical stats
-    are recomputed. No-op without a sidecar (stats then scan)."""
-    meta = read_sidecar(spark, path)
-    if meta is None:
-        return
-    write_sidecar(
-        spark,
-        path,
-        total_records=meta["total_records"] + records_delta,
-        algorithms=meta.get("algorithms", []),
-        sources=meta.get("sources", []),
-        source_hashes=meta.get("source_hashes", []),
-    )
 
 
 def read_hashdb(spark: SparkSession, path: str, validate: bool = False) -> DataFrame:
@@ -323,83 +317,13 @@ def build(
     partition_by_algorithm: bool = False,
 ) -> dict[str, Any]:
     """End-to-end build (ref src/cli/build.rs:81-248). Returns the summary
-    stats the reference prints at build.rs:234-248."""
+    stats the reference prints at build.rs:234-248.
+
+    An append to an existing database merges against it and replaces
+    every live file through ``compact.replace_files``, after finishing
+    any swap an earlier run left committed."""
     resolve_hashers(algorithms)
-    existing_meta = read_sidecar(spark, output_path) if append else None
-    if append and existing_meta is None and io_util.exists(spark, output_path):
-        # Sidecar missing (deleted, or a crash between swap and sidecar
-        # write): recover algorithms/sources by scanning, otherwise the
-        # freshly written sidecar would confidently misreport the merged
-        # dataset's provenance through info()'s metadata fast path.
-        from shaha_spark.pipeline.stats import scan_stats
-
-        recovered = scan_stats(spark, output_path)
-        existing_meta = {
-            "algorithms": recovered["algorithms"],
-            "sources": recovered["sources"],
-            "source_hashes": [],  # unknowable without the sidecar
-        }
-
-    # Idempotence gate (P5, ref build.rs:113-125): skip if this exact
-    # source content was already ingested.
-    if (
-        not force
-        and source_hash is not None
-        and existing_meta is not None
-        and source_hash in existing_meta.get("source_hashes", [])
-    ):
-        return {
-            "skipped": True,
-            "reason": "source already in database (use force=True to re-add)",
-            "total_records": existing_meta["total_records"],
-        }
-
-    # NOTE: no forced repartition here — unlike the shingle operators,
-    # the expensive work (hash fanout) runs on the reduce side of the
-    # word-dedup shuffle, which already spreads it across the cluster;
-    # measured: an extra upstream repartition only adds shuffle cost.
-    words = words_from_lines(words, "word")
-    unique = dedup_words(words)
-
-    if dry_run:
-        # Ref build.rs:253-327: count-only pass, no write.
-        total, n_unique = words.select(
-            F.count(F.lit(1)).alias("t"),
-        ).head()[0], unique.count()
-        return {
-            "dry_run": True,
-            "total_words": total,
-            "unique_words": n_unique,
-            "duplicates": total - n_unique,
-            "records_to_generate": n_unique * len(algorithms),
-        }
-
-    # The (hash, algorithm) record dedup (J2) is NOT a separate pass:
-    # it rides the range shuffle inside sort_for_write(dedup=True)
-    # below, saving one full shuffle of the fanned-out records.
-    #
-    # The constant `sources` array is attached AFTER that shuffle on
-    # the fresh-build path (guide §2.3: shuffle fewer bytes): a
-    # fresh build's sources column is the same one-element literal on
-    # every row, so carrying it through the range sampling pass, the
-    # exchange, and the window dedup is pure serialization overhead —
-    # measured 1.76 s -> 1.40 s for the sort+write leg at sf0.1.
-    # Appends keep it on the shuffled rows: there the merged arrays
-    # are data-dependent.
-    records = hash_fanout(unique, algorithms)
-
-    swap = append and io_util.exists(spark, output_path)
-    if swap and not partition_by_algorithm:
-        # appending to an algorithm-partitioned database must keep the
-        # layout — the merged rewrite replaces the WHOLE dataset, so
-        # forgetting the flag here would silently flatten algorithm=
-        # directories and drop pruning for every later filtered query
-        # (compact_hashdb auto-detects the same way)
-        from . import snapshot as _snapshot
-
-        partition_by_algorithm = is_algorithm_partitioned(
-            _snapshot.live_files(spark, output_path)
-        )
+    swap = append and not dry_run and io_util.exists(spark, output_path)
     lock_path = None
     if swap:
         # Serialize concurrent appends to the same output: two builds
@@ -412,13 +336,89 @@ def build(
                 f"(lock file {lock_path} exists); if it is stale from a "
                 "crashed build, delete it and retry"
             )
+    records = None
     try:
+        if swap:
+            from shaha_spark.pipeline import compact, snapshot
+
+            # before the sidecar is read: a committed swap's sidecar
+            # is written by its recovery
+            db, entries, _ = compact.recover_and_list(spark, output_path)
+            live = snapshot.visible_files(db, entries)
+        existing_meta = read_sidecar(spark, output_path) if append else None
+        if append and existing_meta is None and io_util.exists(spark, output_path):
+            # Sidecar missing (deleted, or a crash between swap and sidecar
+            # write): recover algorithms/sources by scanning, otherwise the
+            # freshly written sidecar would confidently misreport the merged
+            # dataset's provenance through info()'s metadata fast path.
+            from shaha_spark.pipeline.stats import scan_stats
+
+            recovered = scan_stats(spark, output_path)
+            existing_meta = {
+                "algorithms": recovered["algorithms"],
+                "sources": recovered["sources"],
+                "source_hashes": [],  # unknowable without the sidecar
+            }
+
+        # Idempotence gate (P5, ref build.rs:113-125): skip if this exact
+        # source content was already ingested.
+        if (
+            not force
+            and source_hash is not None
+            and existing_meta is not None
+            and source_hash in existing_meta.get("source_hashes", [])
+        ):
+            return {
+                "skipped": True,
+                "reason": "source already in database (use force=True to re-add)",
+                "total_records": existing_meta["total_records"],
+            }
+
+        # NOTE: no forced repartition here — unlike the shingle operators,
+        # the expensive work (hash fanout) runs on the reduce side of the
+        # word-dedup shuffle, which already spreads it across the cluster;
+        # measured: an extra upstream repartition only adds shuffle cost.
+        words = words_from_lines(words, "word")
+        unique = dedup_words(words)
+
+        if dry_run:
+            # Ref build.rs:253-327: count-only pass, no write.
+            total, n_unique = words.select(
+                F.count(F.lit(1)).alias("t"),
+            ).head()[0], unique.count()
+            return {
+                "dry_run": True,
+                "total_words": total,
+                "unique_words": n_unique,
+                "duplicates": total - n_unique,
+                "records_to_generate": n_unique * len(algorithms),
+            }
+
+        # The (hash, algorithm) record dedup (J2) is NOT a separate pass:
+        # it rides the range shuffle inside sort_for_write(dedup=True)
+        # below, saving one full shuffle of the fanned-out records.
+        #
+        # The constant `sources` array is attached AFTER that shuffle on
+        # the fresh-build path (guide §2.3: shuffle fewer bytes): a
+        # fresh build's sources column is the same one-element literal on
+        # every row, so carrying it through the range sampling pass, the
+        # exchange, and the window dedup is pure serialization overhead —
+        # measured 1.76 s -> 1.40 s for the sort+write leg at sf0.1.
+        # Appends keep it on the shuffled rows: there the merged arrays
+        # are data-dependent.
+        records = hash_fanout(unique, algorithms)
+
         merged_sources = [source_name]
         merged_hashes = [source_hash] if source_hash else []
         merged_algos = list(algorithms)
         if swap:
             from shaha_spark.pipeline.append import append_merge
 
+            # appending to an algorithm-partitioned database must keep
+            # the layout: forgetting the flag here would silently flatten
+            # algorithm= directories and drop pruning for every later
+            # filtered query (compact_hashdb detects it the same way)
+            partition_by_algorithm |= is_algorithm_partitioned(live)
             existing = read_hashdb(spark, output_path)
             records = append_merge(
                 existing,
@@ -428,11 +428,6 @@ def build(
                 merged_sources += existing_meta.get("sources", [])
                 merged_hashes += existing_meta.get("source_hashes", [])
                 merged_algos += existing_meta.get("algorithms", [])
-
-        # Spark cannot rewrite its own input in place: write to a temp
-        # sibling, then swap (ref rewrites the single file atomically;
-        # this is the dataset-level equivalent).
-        target = output_path if not swap else output_path.rstrip("/") + ".__tmp_append__"
 
         # Persist the fanned-out records across the range shuffle
         # (optimization round 12, guide §2.4/§5): repartitionByRange
@@ -449,40 +444,50 @@ def build(
         # forensics found exactly this class of leak).
         records = records.persist()
         sorted_records = sort_for_write(records, num_files=num_files, dedup=True)
+        merged_hashes = [h for h in merged_hashes if h]
 
-        # total_records observed ON the write job itself (CollectMetrics
-        # above the final sort) — no post-write read-back pass.
-        from pyspark.sql import Observation
-
-        obs = Observation("build_total_records")
-        if not swap:
-            # fresh build: constant sources attached post-shuffle (a
-            # projection — per-partition order is preserved)
-            sorted_records = sorted_records.withColumn(
-                "sources", F.array(F.lit(source_name))
-            )
-        sorted_records = sorted_records.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_hashdb(
-            sorted_records, target, partition_by_algorithm=partition_by_algorithm
-        )
-
-        # the sidecar goes into the new tree, so an append's swap
-        # publishes data and sidecar together
-        total_records = int(obs.get["n"])
-        write_sidecar(
-            spark,
-            target,
-            total_records=total_records,
-            algorithms=merged_algos,
-            sources=merged_sources,
-            source_hashes=[h for h in merged_hashes if h],
-        )
         if swap:
-            from . import snapshot
+            # every live file is an original: the swap's sidecar starts
+            # from nothing and counts what it publishes
+            manifest = compact.replace_files(
+                spark,
+                db,
+                live,
+                sorted_records,
+                "append",
+                "retain",
+                sidecar_meta(
+                    total_records=0,
+                    algorithms=merged_algos,
+                    sources=merged_sources,
+                    source_hashes=merged_hashes,
+                    file_size_bytes=0,
+                ),
+                partition_by_algorithm=partition_by_algorithm,
+            )
+            total_records = manifest["sidecar"]["total_records"]
+        else:
+            # total_records observed ON the write job itself
+            # (CollectMetrics above the final sort) — no post-write
+            # read-back pass. The constant sources column is attached
+            # post-shuffle (a projection: per-partition order holds).
+            from pyspark.sql import Observation
 
-            old_live = snapshot.live_files(spark, output_path)
-            snapshot.swap_live_tree(
-                spark, output_path, target, old_live, op="append"
+            obs = Observation("build_total_records")
+            write_hashdb(
+                sorted_records.withColumn("sources", F.array(F.lit(source_name)))
+                .observe(obs, F.count(F.lit(1)).alias("n")),
+                output_path,
+                partition_by_algorithm=partition_by_algorithm,
+            )
+            total_records = int(obs.get["n"])
+            write_sidecar(
+                spark,
+                output_path,
+                total_records=total_records,
+                algorithms=merged_algos,
+                sources=merged_sources,
+                source_hashes=merged_hashes,
             )
         return {
             "skipped": False,
@@ -492,10 +497,10 @@ def build(
             "output_path": output_path,
         }
     finally:
-        try:
-            records.unpersist()
-        except Exception:
-            pass  # never let cleanup mask the build's own error
+        if records is not None:
+            try:
+                records.unpersist()
+            except Exception:
+                pass  # never let cleanup mask the build's own error
         if lock_path is not None:
             io_util.delete(spark, lock_path)
-

@@ -1,35 +1,38 @@
-"""Small-file compaction for long-lived hash databases.
+"""Compaction of a long-lived hash database, and the one swap protocol
+every rewrite goes through.
 
 Every streaming micro-batch or incremental append adds files; at 100 TB
-a database accumulating thousands of small parquet files pays for it on
-every query (task-per-file scheduling, footer reads, lost row-group
-locality). Compaction rewrites the dataset into size-targeted files
-while PRESERVING the global hash sort (the property point lookups and
-prefix scans rely on), then swaps it into place with the same
-checked-rename protocol as append.
+thousands of small parquet files cost every query (task-per-file
+scheduling, footer reads, lost row-group locality). Compaction rewrites
+the dataset, whole (:func:`compact_hashdb`, the build's own range sort)
+or one hash-range slice at a time (:func:`compact_slices`), into
+size-targeted files that keep the global hash sort lookups rely on.
 
-The rewrite is one range-repartition + per-partition sort + write —
-identical machinery to the original build, so a compacted database is
-indistinguishable from a freshly built one (same layout, same blooms,
-same sidecar schema). The planner is pure metadata: it reads file
-listings, never data, and skips when the layout is already within
-target, so a no-op compaction costs one directory listing.
+:func:`replace_files` is the only way a database's Parquet files change
+after a fresh build; :func:`recover_and_list` runs first in append, both
+compactions and forget, finishes a swap an earlier run committed, and
+lists the database once for the verb's planning. The planners read
+listings and footers, never data.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import re
 import uuid
-from typing import Any, Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from shaha_spark import io_util
+from shaha_spark.pipeline import snapshot
 from shaha_spark.pipeline.build import (
     is_algorithm_partitioned,
+    put_sidecar,
     read_hashdb,
-    refresh_sidecar,
+    read_sidecar,
     sort_for_write,
     write_hashdb,
 )
@@ -49,9 +52,10 @@ def plan_compaction(
     justifies at ``target_file_bytes`` — i.e. the dataset is fragmented,
     not merely large.
     """
-    from . import snapshot
+    return _plan_whole(snapshot.live_files(spark, path), target_file_bytes)
 
-    files = snapshot.live_files(spark, path)
+
+def _plan_whole(files: list[tuple[str, int]], target_file_bytes: int) -> dict[str, Any]:
     total = sum(sz for _, sz in files)
     target_files = max(1, math.ceil(total / target_file_bytes))
     return {
@@ -71,36 +75,35 @@ def compact_hashdb(
     """Rewrite ``path`` into ``target_files`` hash-sorted files.
 
     No-op (returns the plan with ``compacted=False``) unless the plan
-    says fragmentation exists or ``force`` is set. The swap follows the
-    build/append protocol: write to a temp dir, checked-rename the live
-    dataset aside, checked-rename the compacted one into place, drop
-    the backup only after both renames succeeded. The sidecar's logical
-    metadata (algorithms, sources, total_records) is carried over
-    unchanged; its physical stats are recomputed.
+    says fragmentation exists or ``force`` is set. The rewrite replaces
+    every live file in one :func:`replace_files` swap: originals a
+    snapshot references are retained, the sidecar's logical metadata
+    (algorithms, sources) carries over, and its ``total_records`` and
+    ``file_size_bytes`` are those of the files written. An
+    ``algorithm=`` layout is kept.
     """
-    plan = plan_compaction(spark, path, target_file_bytes)
+    path, entries, recovered = recover_and_list(spark, path)
+    live = snapshot.visible_files(path, entries)
+    plan = _plan_whole(live, target_file_bytes)
     if not plan["needed"] and not force:
-        return {**plan, "compacted": False}
+        return {**plan, "compacted": False, "recovered": recovered}
 
-    df = read_hashdb(spark, path)
-    from . import snapshot
-
-    old_live = snapshot.live_files(spark, path)
-    tmp = path.rstrip("/") + ".__compact__"
-    io_util.delete(spark, tmp)
-    write_hashdb(
-        sort_for_write(df, num_files=plan["target_files"]),
-        tmp,
-        partition_by_algorithm=is_algorithm_partitioned(old_live),
+    meta = read_sidecar(spark, path)
+    manifest = replace_files(
+        spark,
+        path,
+        live,
+        sort_for_write(read_hashdb(spark, path), num_files=plan["target_files"]),
+        "compact",
+        "retain",
+        meta and {**meta, "total_records": 0, "file_size_bytes": 0},
+        partition_by_algorithm=is_algorithm_partitioned(live),
     )
-
-    snapshot.swap_live_tree(spark, path, tmp, old_live, op="compaction")
-    refresh_sidecar(spark, path)
-    after = plan_compaction(spark, path, target_file_bytes)
     return {
         **plan,
         "compacted": True,
-        "files_after": after["n_files"],
+        "files_after": len(manifest["staged"]),
+        "recovered": recovered,
     }
 
 
@@ -159,39 +162,46 @@ def plan_slice_compaction(
     (ranges from different ``algorithm=`` partitions interleave and
     must never merge).
     """
+    return _plan_slices(snapshot.live_files(spark, path), target_file_bytes)
+
+
+def _plan_slices(
+    live: list[tuple[str, int]], target_file_bytes: int
+) -> dict[str, Any]:
     import os
     from collections import defaultdict
 
-    from . import snapshot
-
     small = int(target_file_bytes * SMALL_FILE_RATIO)
     by_dir: dict[str, list[tuple[str, int]]] = defaultdict(list)
-    for p, sz in snapshot.live_files(spark, path):
+    for p, sz in live:
         by_dir[os.path.dirname(p)].append((p, sz))
 
     slices: list[dict[str, Any]] = []
     for d, files in sorted(by_dir.items()):
         keyed = []
         for p, sz in files:
-            lo = hash_range(p)[0]
+            lo, _, rows = hash_range(p)
             if lo is not None:
-                keyed.append((lo, p, sz))
+                keyed.append((lo, p, sz, rows))
         keyed.sort()
         run: list[tuple[str, int]] = []
-        run_bytes = 0
+        run_bytes = run_rows = 0
 
         def flush():
-            nonlocal run, run_bytes
+            nonlocal run, run_bytes, run_rows
             if len(run) >= 2:
-                slices.append({"dir": d, "files": run, "bytes": run_bytes})
-            run, run_bytes = [], 0
+                slices.append(
+                    {"dir": d, "files": run, "bytes": run_bytes, "rows": run_rows}
+                )
+            run, run_bytes, run_rows = [], 0, 0
 
-        for _, p, sz in keyed:
+        for _, p, sz, rows in keyed:
             if sz >= small or run_bytes + sz > int(target_file_bytes * 1.5):
                 flush()
             if sz < small:
                 run.append((p, sz))
                 run_bytes += sz
+                run_rows += rows
         flush()
     return {
         "n_slices": len(slices),
@@ -202,121 +212,230 @@ def plan_slice_compaction(
     }
 
 
-#: sidecar manifest name per staged file: records the swap so a crash
-#: between "dispose of originals" and "rename visible" rolls forward
+# ------------------------------------------------------------ the swap
+
+#: the prefix that hides a staged file (and a swap's manifest) from
+#: parquet readers until the swap publishes it
+STAGE_PREFIX = "_incoming-"
+#: suffix of a swap's manifest, the commit record of :func:`replace_files`
 MANIFEST_SUFFIX = ".manifest.json"
+
+
+def one_sorted_file(df: DataFrame) -> DataFrame:
+    """``df`` as one partition in the build's ``(hash, algorithm)``
+    order, with no shuffle: the frame of a per-file replacement."""
+    sort_cols = ["hash"] + (["algorithm"] if "algorithm" in df.columns else [])
+    return df.coalesce(1).sortWithinPartitions(*sort_cols)
+
+
+def adjusted(
+    meta: dict[str, Any] | None, rows: int, nbytes: int
+) -> dict[str, Any] | None:
+    """Sidecar ``meta`` with ``rows`` records and ``nbytes`` bytes added
+    (negative: removed); None (no sidecar) stays None."""
+    return meta and {
+        **meta,
+        "total_records": meta["total_records"] + rows,
+        "file_size_bytes": meta["file_size_bytes"] + nbytes,
+    }
+
+
+def live_sidecar(
+    spark: SparkSession, path: str, live: list[tuple[str, int]]
+) -> dict[str, Any] | None:
+    """The sidecar, with ``file_size_bytes`` taken from the verb's own
+    ``(path, bytes)`` listing of the live files."""
+    meta = read_sidecar(spark, path)
+    return meta and {**meta, "file_size_bytes": sum(sz for _, sz in live)}
 
 
 def replace_files(
     spark: SparkSession,
-    originals: list[str],
-    df: DataFrame,
+    path: str,
+    originals: list[tuple[str, int]],
+    df: DataFrame | None,
     stem_prefix: str,
-    dispose: Callable[[str], Any],
-    records_delta: int = 0,
-) -> str:
-    """Replace ``originals`` (files of one database directory) with ONE
-    file holding ``df``, crash-safely; returns the published path. The
-    one home of the per-file swap protocol that slice compaction and
-    forget share:
+    dispose: str,
+    sidecar: dict[str, Any] | None,
+    *,
+    rows: int | None = None,
+    partition_by_algorithm: bool = False,
+) -> dict[str, Any]:
+    """Replace ``originals``, ``(path, bytes)`` files of the database at
+    ``path``, with the files of ``df``, crash-safely; returns the
+    committed manifest. The one swap protocol of every rewrite after a
+    fresh build (append, whole and slice compaction, forget):
 
-    1. ``df`` is sorted by ``(hash[, algorithm])`` into one file in a
-       hidden temp dir, then renamed beside the originals under an
-       ``_incoming-`` name (underscore-prefixed files are invisible to
-       parquet readers);
-    2. commit point: a manifest records the originals, the final name
-       and ``records_delta`` (the live-row change the swap makes);
-    3. ``dispose`` removes each original (compaction may retain it for
-       snapshots; erasure must delete it);
-    4. the replacement is renamed visible, then the temp dir and the
-       manifest are dropped.
+    1. ``df`` is written to a hidden temp dir, one file per partition
+       (:func:`one_sorted_file` for a per-file replacement,
+       :func:`sort_for_write` for a whole rewrite, which may keep the
+       ``algorithm=`` layout). Each file is renamed to an ``_incoming-``
+       name beside the originals, or in its ``algorithm=`` directory;
+       the partition index ends the stem, so names sort in hash order.
+       ``df=None`` publishes nothing.
+    2. Commit point: one manifest records the originals, the staged
+       files, how the originals are disposed of (``dispose``, see
+       :func:`snapshot.dispose`) and the sidecar after the swap:
+       ``sidecar`` describes the database without the originals, and
+       the swap adds the rows and bytes it publishes (None: no sidecar).
+       ``rows`` is the row count of ``df`` when the caller knows it;
+       otherwise the write job counts it.
+    3. :func:`_finish` disposes of the originals, publishes the staged
+       files and writes the sidecar; the temp dir and manifest go last.
 
-    A crash before step 2 leaves the originals intact; after it,
-    :func:`recover_slices` rolls the swap forward, sidecar included.
+    A crash before step 2 leaves the originals intact, and recovery
+    drops the stage; after it, :func:`recover_and_list` replays step 3.
     """
-    d = originals[0].rsplit("/", 1)[0]
-    sort_cols = ["hash"] + (["algorithm"] if "algorithm" in df.columns else [])
-    tmp = f"{d}/.__{stem_prefix}_{uuid.uuid4().hex[:8]}__"
-    write_hashdb(df.coalesce(1).sortWithinPartitions(*sort_cols), tmp)
-    part = next(p for p, _ in io_util.list_files(spark, tmp))
-    stem = f"{stem_prefix}-{uuid.uuid4().hex[:12]}.zstd.parquet"
-    incoming = f"{d}/_incoming-{stem}"
-    final = f"{d}/{stem}"
-    if not io_util.rename(spark, part, incoming):
-        io_util.delete(spark, tmp)
-        raise IOError(f"{stem_prefix}: could not stage {incoming}")
-    io_util.write_text_atomic(
-        spark,
-        incoming + MANIFEST_SUFFIX,
-        json.dumps(
-            {"originals": originals, "final": final, "records_delta": records_delta}
-        ),
-    )
-    for p in originals:
-        dispose(p)
-    if not io_util.rename(spark, incoming, final):
-        raise IOError(
-            f"{stem_prefix}: staged file {incoming} could not be made "
-            "visible; its manifest rolls the swap forward on the next run"
-        )
+    root = path.rstrip("/")
+    uid = uuid.uuid4().hex[:12]
+    d = root
+    if originals and not partition_by_algorithm:
+        d = originals[0][0].rsplit("/", 1)[0]  # beside the originals
+    tmp = f"{d}/.__{stem_prefix}_{uid}__"
+    staged: list[list[str]] = []
+    added = 0
+    obs = Observation(f"{stem_prefix}_{uid}")
+    if df is not None:
+        if rows is None:
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        write_hashdb(df, tmp, partition_by_algorithm=partition_by_algorithm)
+        for i, (part, size) in enumerate(sorted(io_util.list_files(spark, tmp))):
+            sub = snapshot.rel_of(tmp, part).rpartition("/")[0]
+            where = f"{d}/{sub}" if sub else d
+            name = f"{stem_prefix}-{uid}-{i:05d}.zstd.parquet"
+            incoming = f"{where}/{STAGE_PREFIX}{name}"
+            if sub:
+                io_util.mkdirs(spark, where)
+            if not io_util.rename(spark, part, incoming):
+                raise IOError(f"{stem_prefix}: could not stage {incoming}")
+            final = snapshot.rel_of(root, f"{where}/{name}")
+            staged.append([snapshot.rel_of(root, incoming), final])
+            if snapshot.is_visible(final):
+                added += size
+    # a rewritten history copy adds no live rows
+    if not (staged and snapshot.is_visible(staged[0][1])):
+        rows = 0
+    elif rows is None:
+        rows = int(obs.get["n"])
+    manifest = {
+        "originals": [snapshot.rel_of(root, p) for p, _ in originals],
+        "staged": staged,
+        "dispose": dispose,
+        "sidecar": adjusted(sidecar, rows, added),
+    }
+    manifest_path = f"{root}/{STAGE_PREFIX}{stem_prefix}-{uid}{MANIFEST_SUFFIX}"
+    io_util.write_text_atomic(spark, manifest_path, json.dumps(manifest))
+    _finish(spark, root, manifest)
     io_util.delete(spark, tmp)
-    io_util.delete(spark, incoming + MANIFEST_SUFFIX)
-    return final
+    io_util.delete(spark, manifest_path)
+    return manifest
+
+
+def _finish(spark: SparkSession, root: str, manifest: dict[str, Any]) -> None:
+    """Step 3 of :func:`replace_files`, for the live run and for
+    recovery: a staged file already published before a crash is done."""
+    staged = manifest["staged"]
+    snapshot.dispose(
+        spark,
+        root,
+        manifest["originals"],
+        manifest.get("dispose"),
+        staged[0][1] if len(staged) == 1 else None,
+    )
+    for incoming, final in staged:
+        src, dst = f"{root}/{incoming}", f"{root}/{final}"
+        if not io_util.rename(spark, src, dst) and not io_util.exists(spark, dst):
+            raise IOError(
+                f"staged file {src} could not be made visible; "
+                "its manifest rolls the swap forward on the next run"
+            )
+    if manifest.get("sidecar") is not None:
+        put_sidecar(spark, root, manifest["sidecar"])
 
 
 def recover_slices(spark: SparkSession, path: str) -> dict[str, int]:
-    """Finish or undo per-file swaps (:func:`replace_files`) interrupted
-    by a crash.
+    """Finish or undo interrupted swaps; see :func:`recover_and_list`."""
+    return recover_and_list(spark, path)[2]
 
-    * staged ``_incoming`` file WITH a manifest: the swap committed —
-      roll forward (delete any surviving originals, rename the
-      replacement visible, apply the manifest's ``records_delta`` to
-      the sidecar, drop the manifest);
-    * staged file WITHOUT a manifest: the swap never committed — the
-      originals are all still live, so the stage is redundant; drop it.
 
-    Idempotent; called automatically by :func:`compact_slices` and
-    ``forget_digests``.
+#: a swap's hidden temp dir (``.__<verb>_<id>__``), as a db-relative prefix
+_TEMP_DIR = re.compile(r"(?:[^/]+/)*?\.__[^/]+__(?=/)")
+
+
+def recover_and_list(
+    spark: SparkSession, path: str
+) -> tuple[str, list[tuple[str, int]], dict[str, int]]:
+    """Finish or undo swaps (:func:`replace_files`) interrupted by a
+    crash; return the database's qualified path (the one a verb passes
+    on), its listing (every file) and the report. A verb lists its
+    database once: this listing is reused unless recovery changed the
+    visible files.
+
+    * a manifest commits its swap: :func:`_finish` replays it and the
+      manifest is dropped. A manifest in the older one-file form
+      (``final``, optional ``records_delta``) deletes its originals and
+      moves the sidecar count by the delta;
+    * a staged file no manifest names, or a torn manifest: the swap
+      never committed and the originals are all live, so drop it;
+    * a leftover temp dir is dropped.
+
+    Idempotent; runs first in append, both compactions and forget.
     """
-    import os
-
-    entries = io_util.list_files(spark, path, suffix=None)
-    names = {p for p, _ in entries}
-    rolled = dropped = records_delta = 0
-    for p in sorted(names):
-        base = os.path.basename(p)
-        if base.startswith("_incoming-") and p.endswith(MANIFEST_SUFFIX):
-            incoming = p[: -len(MANIFEST_SUFFIX)]
-            try:
-                manifest = json.loads(io_util.read_text(spark, p) or "")
+    root = io_util.qualify(spark, path).rstrip("/")
+    entries = io_util.list_files(spark, root, suffix=None)
+    present: dict[str, str] = {}
+    for p, _ in entries:
+        try:
+            present[snapshot.rel_of(root, p)] = p
+        except ValueError:
+            continue
+    rolled = dropped = delta = legacy = 0
+    covered: set[str] = set()
+    for rel in sorted(present):
+        base = rel.rpartition("/")[2]
+        if not (base.startswith(STAGE_PREFIX) and base.endswith(MANIFEST_SUFFIX)):
+            continue
+        try:
+            manifest = json.loads(io_util.read_text(spark, present[rel]) or "")
+            old_form = "staged" not in manifest
+            if old_form:
                 manifest["final"]
-            except (ValueError, KeyError, TypeError):
-                # torn manifest (crash mid-write, pre-atomic-write
-                # legacy): the commit point was never reached, so the
-                # originals are all intact — drop the stage and the
-                # torn marker instead of crashing recovery forever
-                io_util.delete(spark, p)
-                if incoming in names:
-                    io_util.delete(spark, incoming)
-                    dropped += 1
-                continue
-            for orig in manifest.get("originals", []):
-                io_util.delete(spark, orig)
-            if incoming in names:
-                if not io_util.rename(spark, incoming, manifest["final"]):
-                    raise IOError(
-                        f"slice recovery: could not make {incoming} visible"
-                    )
-            io_util.delete(spark, p)
-            records_delta += manifest.get("records_delta", 0)
-            rolled += 1
-        elif base.startswith("_incoming-") and not p.endswith(MANIFEST_SUFFIX):
-            if p + MANIFEST_SUFFIX not in names:
-                io_util.delete(spark, p)
-                dropped += 1
-    if rolled:
-        refresh_sidecar(spark, path, records_delta)
-    return {"rolled_forward": rolled, "dropped_stages": dropped}
+        except (ValueError, KeyError, TypeError):
+            # torn manifest (crash mid-write, pre-atomic-write legacy):
+            # the commit point was never reached — drop the marker, and
+            # its stage below
+            io_util.delete(spark, present[rel])
+            continue
+        if old_form:
+            legacy += 1
+            delta += manifest.get("records_delta", 0)
+            stage = rel[: -len(MANIFEST_SUFFIX)]
+            manifest = {
+                "originals": [snapshot.rel_of(root, o) for o in manifest["originals"]],
+                "staged": [[stage, snapshot.rel_of(root, manifest["final"])]],
+            }
+        _finish(spark, root, manifest)
+        io_util.delete(spark, present[rel])
+        covered.update(incoming for incoming, _ in manifest["staged"])
+        rolled += 1
+    temp_dirs = set()
+    for rel in present:
+        base = rel.rpartition("/")[2]
+        staged = base.startswith(STAGE_PREFIX) and base.endswith(".parquet")
+        if staged and rel not in covered:
+            io_util.delete(spark, f"{root}/{rel}")
+            dropped += 1
+        if m := _TEMP_DIR.match(rel):
+            temp_dirs.add(m.group(0))
+    for t in temp_dirs:
+        io_util.delete(spark, f"{root}/{t}")
+    meta = read_sidecar(spark, root) if legacy else None
+    if meta is not None:
+        meta["file_size_bytes"] = io_util.tree_size(spark, root)
+        put_sidecar(spark, root, adjusted(meta, delta, 0))
+    if rolled or dropped:
+        entries = io_util.list_files(spark, root, suffix=None)
+    return root, entries, {"rolled_forward": rolled, "dropped_stages": dropped}
 
 
 def compact_slices(
@@ -327,39 +446,37 @@ def compact_slices(
 ) -> dict[str, Any]:
     """Rewrite each fragmented hash-range slice into one sorted file.
 
-    Each slice is swapped in place by :func:`replace_files` (no
-    directory swap — the rest of the dataset keeps serving); replaced
-    originals a snapshot still references are retired, not deleted.
-    Any crash is recoverable by :func:`recover_slices`, run
-    automatically at the start of every compaction. A transactional
-    table format would collapse the whole protocol into one commit —
-    noted in SCALE.md; this is the honest ceiling of a directory-layout
-    store.
+    Each slice is swapped in place by :func:`replace_files`, so the rest
+    of the dataset keeps serving; replaced originals a snapshot still
+    references are retained, not deleted, also when recovery finishes
+    the swap. A transactional table format would collapse the protocol
+    into one commit — noted in SCALE.md; this is the honest ceiling of a
+    directory-layout store.
 
     ``max_slices`` bounds one maintenance run (schedule by
     fragmentation score at scale); slices are processed worst-first
     (most files first).
     """
-    from functools import partial
-
-    from . import snapshot
-
-    recovered = recover_slices(spark, path)
-    retire = partial(
-        snapshot.retire_or_delete,
-        spark,
-        path,
-        refs=snapshot.referenced_rels(spark, path),
-    )
-    plan = plan_slice_compaction(spark, path, target_file_bytes)
+    path, entries, recovered = recover_and_list(spark, path)
+    live = snapshot.visible_files(path, entries)
+    plan = _plan_slices(live, target_file_bytes)
     todo = sorted(plan["slices"], key=lambda s: -len(s["files"]))
     if max_slices is not None:
         todo = todo[:max_slices]
     if not todo:
         return {**plan, "compacted": 0, "recovered": recovered}
 
+    meta = live_sidecar(spark, path, live)
     for s in todo:
-        files = [p for p, _ in s["files"]]
-        replace_files(spark, files, spark.read.parquet(*files), "slice", retire)
-    refresh_sidecar(spark, path)
+        files = s["files"]
+        meta = replace_files(
+            spark,
+            path,
+            files,
+            one_sorted_file(spark.read.parquet(*[p for p, _ in files])),
+            "slice",
+            "retain",
+            adjusted(meta, -s["rows"], -s["bytes"]),
+            rows=s["rows"],
+        )["sidecar"]
     return {**plan, "compacted": len(todo), "recovered": recovered}

@@ -17,14 +17,15 @@ widen the range, so candidates are a superset); the rewrite then
 filters by EXACT digest equality, so over-selection costs a file scan,
 never a wrong delete.
 
-The per-file swap is slice compaction's crash protocol
+Each file is swapped by the protocol every rewrite shares
 (:func:`shaha_spark.pipeline.compact.replace_files`, recovered by
 :func:`~shaha_spark.pipeline.compact.recover_slices`): a crash mid-swap
 either leaves the original intact or rolls the replacement forward —
-never both, never neither. Unlike compaction, the original is always
-deleted, never retained: erased rows may not survive in history. Files
-whose every row is forgotten are simply deleted (idempotent; a crash
-just re-deletes on re-run).
+never both, never neither — and the roll-forward also points history at
+the replacement and writes the sidecar. Unlike compaction, the original
+is always deleted ("erase"), never retained: erased rows may not
+survive in history. A file whose every row is forgotten is replaced by
+nothing.
 
 This is an extension beyond the reference CLI (which has no delete);
 a transactional table format would make the swap a metadata commit —
@@ -33,32 +34,51 @@ noted in SCALE.md as the production upgrade path.
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shaha_spark import io_util
-from shaha_spark.pipeline.build import read_sidecar, refresh_sidecar
-from shaha_spark.pipeline.compact import hash_range, recover_slices, replace_files
+from shaha_spark.pipeline import snapshot
+from shaha_spark.pipeline.build import read_sidecar
+from shaha_spark.pipeline.compact import (
+    adjusted,
+    hash_range,
+    live_sidecar,
+    one_sorted_file,
+    recover_and_list,
+    replace_files,
+)
 
 
 def plan_forget(
     spark: SparkSession, path: str, digests: list[bytes]
 ) -> dict[str, Any]:
     """Driver-side footer-only planning: which files can contain any
-    of ``digests``. Requires a local filesystem for footer reads (the
-    same constraint as slice compaction); a file without statistics
-    stays a candidate."""
+    of ``digests`` — live files and the history copies retained for
+    snapshots. Requires a local filesystem for footer reads (the same
+    constraint as slice compaction); a file without statistics stays a
+    candidate."""
+    root = io_util.qualify(spark, path)
+    return _plan_forget(root, io_util.list_files(spark, root), digests)
+
+
+def _plan_forget(
+    path: str, entries: list[tuple[str, int]], digests: list[bytes]
+) -> dict[str, Any]:
     targets = sorted(set(digests))
     candidates: list[dict[str, Any]] = []
     total_files = 0
-    for p, _sz in io_util.list_files(spark, path):
+    for p, sz in entries:
+        # erasure reaches live files and the history copies retained
+        rel = snapshot.rel_of(path, p).removeprefix(snapshot.RETAINED_PREFIX)
+        if not p.endswith(".parquet") or not snapshot.is_visible(rel):
+            continue
         total_files += 1
         lo, hi, n_rows = hash_range(p)
         if lo is None or any(lo <= d <= hi for d in targets):
-            candidates.append({"file": p, "rows": n_rows})
+            candidates.append({"file": p, "rows": n_rows, "bytes": sz})
     return {
         "n_digests": len(targets),
         "total_files": total_files,
@@ -90,82 +110,50 @@ def forget_digests(
     (a second run deletes nothing)."""
     if not digests:
         return _empty_forget_report()
-    from . import snapshot
-
-    recovered = recover_slices(spark, path)
-    snap_refs = snapshot.referenced_rels(spark, path)
-    plan = plan_forget(spark, path, digests)
+    path, entries, recovered = recover_and_list(spark, path)
+    plan = _plan_forget(path, entries, digests)
+    meta = live_sidecar(spark, path, snapshot.visible_files(path, entries))
     targets = [bytes(d) for d in sorted(set(digests))]
 
     rows_deleted = live_rows_deleted = rewritten = dropped = 0
-    delete = partial(io_util.delete, spark)
-    try:
-        for cand in plan["candidates"]:
-            p = cand["file"]
-            df: DataFrame = spark.read.parquet(p)
-            # lazy checkpoint: the survivor set is consumed twice (the
-            # count that decides drop-vs-rewrite, then the rewrite
-            # itself) — one filtered read of the candidate file, not two
-            remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
-                eager=False
-            )
-            n_after = remaining.count()
-            n_delete = cand["rows"] - n_after
-            if n_delete == 0:
-                continue  # range false positive
-            rows_deleted += n_delete
-            # rows scrubbed from retained history copies under
-            # _snapshots/ are not live rows: the sidecar's total_records
-            # counts the visible database only, so decrementing it by
-            # history-copy deletions would make info/stats drift
-            # permanently after any compaction+snapshot cycle
-            retained = snapshot.in_retained(path, p)
-            n_live = 0 if retained else n_delete
-            if n_after == 0:
-                # every row was an erasure target: the file leaves
-                # history too (read_snapshot reports the hole) — erased
-                # data may not survive in retained copies
-                delete(p)
-                if retained:
-                    snapshot.repoint_retained(
-                        spark, path, snapshot.retained_rel_of(path, p), None
-                    )
-                live_rows_deleted += n_live
-                dropped += 1
-                continue
-            final = replace_files(
-                spark, [p], remaining, "forget", delete, records_delta=-n_live
-            )
-            live_rows_deleted += n_live
-            # erasure reaches HISTORY: a rewritten retained file keeps
-            # serving its snapshots under the new stem; a
-            # snapshot-referenced visible original is aliased to its
-            # replacement, whose content is exactly the original minus
-            # the erased rows — the most history erasure law permits
-            if retained:
-                old_rrel = snapshot.retained_rel_of(path, p)
-                stem = final.rsplit("/", 1)[1]
-                new_rrel = (
-                    old_rrel.rsplit("/", 1)[0] + "/" + stem
-                    if "/" in old_rrel
-                    else stem
-                )
-                snapshot.repoint_retained(spark, path, old_rrel, new_rrel)
-            else:
-                try:
-                    rel_old = snapshot.rel_of(path, p)
-                    if rel_old in snap_refs:
-                        snapshot.alias_rel(
-                            spark, path, rel_old, snapshot.rel_of(path, final)
-                        )
-                except ValueError:
-                    pass
+    for cand in plan["candidates"]:
+        p = cand["file"]
+        df: DataFrame = spark.read.parquet(p)
+        # lazy checkpoint: the survivor set is consumed twice (the
+        # count that decides drop-vs-rewrite, then the rewrite
+        # itself) — one filtered read of the candidate file, not two
+        remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
+            eager=False
+        )
+        n_after = remaining.count()
+        n_delete = cand["rows"] - n_after
+        if n_delete == 0:
+            continue  # range false positive
+        rows_deleted += n_delete
+        # rows scrubbed from retained history copies under _snapshots/
+        # are not live rows: the sidecar's total_records counts the
+        # visible database only, so decrementing it by history-copy
+        # deletions would make info/stats drift permanently after any
+        # compaction+snapshot cycle
+        live = snapshot.is_visible(snapshot.rel_of(path, p))
+        # a file whose every row was an erasure target is replaced by
+        # nothing: it leaves history too (read_snapshot reports the hole)
+        meta = replace_files(
+            spark,
+            path,
+            [(p, cand["bytes"])],
+            one_sorted_file(remaining) if n_after else None,
+            "forget",
+            "erase",
+            adjusted(meta, -cand["rows"], -cand["bytes"]) if live else meta,
+            rows=n_after,
+        )["sidecar"]
+        if live:
+            live_rows_deleted += n_delete
+        if n_after:
             rewritten += 1
-    finally:
-        # the swaps that completed, even if a later one failed; a
-        # committed-but-unpublished swap's rows travel in its manifest
-        if live_rows_deleted:
-            refresh_sidecar(spark, path, -live_rows_deleted)
+        else:
+            dropped += 1
     return {
         **{k: plan[k] for k in ("n_digests", "total_files", "candidate_files")},
         "rows_deleted": rows_deleted,

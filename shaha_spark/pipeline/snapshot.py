@@ -25,16 +25,19 @@ relocated wholesale. Underscore-prefixed paths are invisible to
 Spark's parquet reader, so retained history never leaks into normal
 queries.
 
-Interaction with maintenance (the whole point):
+Interaction with maintenance (the whole point): every verb that
+replaces files (append, whole and slice compaction, forget) goes
+through ``compact.replace_files``, whose manifest records how the
+originals are disposed of; :func:`dispose` carries that out, live or
+replayed by recovery, so a crash never costs retention.
 
-* ``compact_slices`` / ``compact_hashdb`` retire replaced originals
-  via :func:`retire_or_delete` — a RENAME into ``retained/`` when any
-  snapshot references them (O(1) metadata, no data movement, exactly
-  how Iceberg keeps superseded files for time travel), a plain delete
-  otherwise.
-* ``forget`` (GDPR erasure) must reach HISTORY, not just the current
-  state: retained files are rewritten in place with the erased rows
-  removed (the mapping is repointed at the rewritten stem), and a
+* compaction and append ("retain") RENAME a replaced original into
+  ``retained/`` when any snapshot references it (O(1) metadata, no data
+  movement, exactly how Iceberg keeps superseded files for time
+  travel), and delete it otherwise.
+* ``forget`` ("erase", GDPR erasure) must reach HISTORY, not just the
+  current state: retained files are rewritten in place with the erased
+  rows removed (the mapping is repointed at the rewritten stem), and a
   replaced visible original is aliased to its own replacement — whose
   content is exactly the original minus the erased rows, the best
   content erasure law permits history to keep. A file whose every row
@@ -49,11 +52,7 @@ listings, renames, small JSON) — nothing scans data. Manifests list
 one entry per file; at the ~1 GB target file size that is ~10^5
 entries per 100 TB snapshot, trivially a few MB of JSON. The single
 maintenance-runner assumption of build/compact/forget (their lock and
-swap protocols) extends to snapshot creation and vacuum. A crash
-inside a slice swap recovers forward by DELETING originals (see
-compact.recover_slices) — current-state correctness is unaffected, but
-retention for that slice's originals is lost; a transactional table
-format is the ceiling, as documented in SCALE.md.
+swap protocol) extends to snapshot creation and vacuum.
 """
 
 from __future__ import annotations
@@ -66,10 +65,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark import StorageLevel
 
 from .. import io_util
-from ..schema import SIDECAR_NAME
 
 SNAP_DIR = "_snapshots"
 RETAIN_SUBDIR = "retained"
+#: db-relative prefix of every retained file
+RETAINED_PREFIX = f"{SNAP_DIR}/{RETAIN_SUBDIR}/"
 
 
 def _snap_root(path: str) -> str:
@@ -116,24 +116,39 @@ def _write_retained_map(
     _write_json(spark, _snap_root(path) + "/retained.json", m)
 
 
-def live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """The CURRENT dataset's parquet files: everything maintenance and
-    stats should see — snapshot internals excluded, and so is anything
-    the parquet reader itself cannot see (any path segment starting
-    with ``_`` or ``.``): staged ``_incoming-*`` swap files and
-    crash-leftover ``.__slice_*__`` temp dirs are NOT live data, and
-    pinning one into a snapshot manifest would break the snapshot as
-    soon as recovery renames it."""
+def is_visible(rel: str) -> bool:
+    """Whether Spark's parquet reader sees the db-relative path ``rel``:
+    no path segment starts with ``_`` or ``.``."""
+    return not any(seg.startswith(("_", ".")) for seg in rel.split("/"))
+
+
+def visible_files(
+    path: str, entries: list[tuple[str, int]]
+) -> list[tuple[str, int]]:
+    """The live parquet files among ``entries``, a ``(path, bytes)``
+    listing of the database at ``path`` (see :func:`live_files`)."""
     out = []
-    for p, sz in io_util.list_files(spark, path):
+    for p, sz in entries:
+        if not p.endswith(".parquet"):
+            continue
         try:
             rel = rel_of(path, p)
         except ValueError:
             continue
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
-            continue
-        out.append((p, sz))
+        if is_visible(rel):
+            out.append((p, sz))
     return out
+
+
+def live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """The CURRENT dataset's parquet files: everything maintenance and
+    stats should see — snapshot internals excluded, and so is anything
+    the parquet reader itself cannot see: staged ``_incoming-*`` swap
+    files and crash-leftover ``.__slice_*__`` temp dirs are NOT live
+    data, and pinning one into a snapshot manifest would break the
+    snapshot as soon as recovery renames it."""
+    root = io_util.qualify(spark, path)
+    return visible_files(root, io_util.list_files(spark, root))
 
 
 def snapshot_list(spark: SparkSession, path: str) -> list[dict[str, Any]]:
@@ -158,6 +173,7 @@ def snapshot_create(
 ) -> dict[str, Any]:
     """Record the current visible file set as the next snapshot
     version. Metadata-only; returns the manifest."""
+    path = io_util.qualify(spark, path)  # rels as the maintenance verbs see them
     existing = snapshot_list(spark, path)
     version = (existing[-1]["version"] + 1) if existing else 1
     files = [
@@ -303,213 +319,54 @@ def snapshot_diff(
     }
 
 
-def retire_or_delete(
+def dispose(
     spark: SparkSession,
     db_path: str,
-    abs_path: str,
-    refs: set[str] | None = None,
-) -> str:
-    """Dispose of a visible file maintenance is replacing: RENAME it
-    into the retained area when a snapshot still references it (no
-    data movement), delete it otherwise. Returns 'retained' or
-    'deleted'. Pass a precomputed ``refs`` set when retiring in a loop
-    so the manifests are parsed once per maintenance run."""
-    try:
-        rel = rel_of(db_path, abs_path)
-    except ValueError:
-        io_util.delete(spark, abs_path)
-        return "deleted"
-    if refs is None:
-        refs = referenced_rels(spark, db_path)
-    if rel not in refs:
-        io_util.delete(spark, abs_path)
-        return "deleted"
-    retained = _retained_map(spark, db_path)
-    _retire(spark, db_path, abs_path, rel, retained)
-    _write_retained_map(spark, db_path, retained)
-    return "retained"
-
-
-def _retire(
-    spark: SparkSession,
-    db_path: str,
-    src: str,
-    rel: str,
-    retained: dict[str, str],
+    rels: list[str],
+    mode: str | None,
+    replacement: str | None = None,
 ) -> None:
-    """Rename ``src`` into the retained area as ``rel`` and record it in
-    ``retained`` (the caller writes the mapping). The rel SUBPATH is
-    preserved under retained/ so hive-style partition directories
-    (algorithm=...) survive retirement and time-travel reads can
-    recover the partition column with a basePath read."""
-    dest = _retain_dir(db_path) + "/" + rel
-    if "/" in rel:
-        io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
-    if not io_util.rename(spark, src, dest):
-        raise IOError(f"could not retire {src} to {dest}")
-    retained[rel] = rel
-
-
-def retire_replaced_tree(
-    spark: SparkSession,
-    db_path: str,
-    backup_path: str,
-    old_files: list[tuple[str, int]],
-) -> int:
-    """After a whole-directory swap (compact_hashdb): the previous
-    dataset sits at ``backup_path`` about to be dropped; rename every
-    file a snapshot still references into the retained area. One
-    batched mapping write, renames only. ``old_files`` is the
-    pre-swap visible listing (absolute paths under ``db_path``)."""
-    refs = referenced_rels(spark, db_path)
-    retained = _retained_map(spark, db_path)
-    moved = 0
-    for p, _sz in old_files:
-        try:
-            rel = rel_of(db_path, p)
-        except ValueError:
+    """Dispose of the db-relative files ``rels`` a swap replaced, as its
+    manifest records (see the module docstring): ``"retain"`` renames a
+    snapshot-referenced file into ``retained/`` and deletes the rest;
+    ``"erase"`` deletes every file and points history at ``replacement``
+    (a retained copy's mapping is repointed, a referenced visible file
+    aliased; with no replacement the file leaves history); ``None``, a
+    manifest from before dispositions were recorded, only deletes.
+    Idempotent, so recovery can replay it after a crash at any point."""
+    root = db_path.rstrip("/")
+    history = bool(mode) and io_util.exists(spark, _snap_root(root))
+    refs = referenced_rels(spark, root) if history else set()
+    retained = _retained_map(spark, root) if history else {}
+    before = dict(retained)
+    for rel in rels:
+        src = f"{root}/{rel}"
+        if mode == "retain" and rel in refs:
+            # the rel SUBPATH is kept under retained/, so hive partition
+            # dirs (algorithm=...) survive and a basePath read of the
+            # retained tree recovers the partition column
+            dest = f"{_retain_dir(root)}/{rel}"
+            io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
+            if not io_util.rename(spark, src, dest) and not io_util.exists(spark, dest):
+                raise IOError(f"could not retire {src} to {dest}")
+            retained[rel] = rel
             continue
-        if rel not in refs or rel in retained:
+        io_util.delete(spark, src)
+        if mode != "erase":
             continue
-        src = backup_path.rstrip("/") + "/" + rel
-        if not io_util.exists(spark, src):
-            continue
-        _retire(spark, db_path, src, rel, retained)
-        moved += 1
-    if moved:
-        _write_retained_map(spark, db_path, retained)
-    return moved
-
-
-def heal_stale_backup(spark: SparkSession, live_path: str) -> bool:
-    """Finish the interrupted tail of a previous directory swap whose
-    ``.__old__`` backup still exists.
-
-    If the backup holds a snapshot log that never made it back into the
-    live tree (the swap raised at the restore step), restore it and
-    retire every still-referenced file out of the backup — only then is
-    the backup safe to drop. Returns True if healing ran. Raises, with
-    the backup preserved, when the situation is ambiguous (both trees
-    hold a snapshot log) or the restore fails again.
-    """
-    live = live_path.rstrip("/")
-    backup = live + ".__old__"
-    b_snaps = backup + "/" + SNAP_DIR
-    if not io_util.exists(spark, b_snaps):
-        return False
-    live_snaps = live + "/" + SNAP_DIR
-    if io_util.exists(spark, live_snaps):
-        raise IOError(
-            f"stale swap backup {backup} holds a snapshot log but the "
-            "live dataset has one too — resolve manually before retrying "
-            "(deleting the backup could destroy retained history)"
-        )
-    if not io_util.rename(spark, b_snaps, live_snaps):
-        raise IOError(
-            f"could not restore snapshot log from {b_snaps}; backup "
-            f"left at {backup} for manual recovery"
-        )
-    pseudo_old = [
-        (live + "/" + rel_of(backup, p), sz)
-        for p, sz in io_util.list_files(spark, backup)
-    ]
-    retire_replaced_tree(spark, live, backup, pseudo_old)
-    return True
-
-
-def swap_live_tree(
-    spark: SparkSession,
-    live_path: str,
-    tmp_path: str,
-    old_live: list[tuple[str, int]],
-    op: str,
-) -> None:
-    """Checked whole-directory swap: move the live dataset aside, move
-    ``tmp_path`` into place, restore the snapshot log the swap carried
-    aside, retire replaced-but-referenced files, carry the sidecar over
-    when ``tmp_path`` brought none, drop the backup.
-
-    The ONE home of the protocol (build's append path and
-    compact_hashdb both call it). Every rename is checked —
-    FileSystem.rename reports failure by returning False, and on some
-    filesystems moves src INTO an existing destination dir — so a
-    failed swap can never silently nest the temp dataset or leave the
-    DB absent-but-"built". A pre-existing backup from a PREVIOUS failed
-    swap is healed (snapshot log + referenced files recovered) before
-    anything is deleted — a retry must never destroy the history the
-    earlier failure deliberately preserved.
-    """
-    live = live_path.rstrip("/")
-    backup = live + ".__old__"
-    heal_stale_backup(spark, live)
-    io_util.delete(spark, backup)
-    if not io_util.rename(spark, live, backup):
-        raise IOError(
-            f"{op} swap failed: could not move {live} aside to {backup}; "
-            f"new data left at {tmp_path}"
-        )
-    if not io_util.rename(spark, tmp_path, live):
-        restored = io_util.rename(spark, backup, live)
-        raise IOError(
-            f"{op} swap failed: could not move {tmp_path} into place"
-            + ("" if restored else f"; MANUAL RESTORE NEEDED from {backup}")
-        )
-    old_snaps = backup + "/" + SNAP_DIR
-    if io_util.exists(spark, old_snaps):
-        if not io_util.rename(spark, old_snaps, live + "/" + SNAP_DIR):
-            # deleting the backup now would destroy the entire snapshot
-            # log and all retained history — leave it for manual recovery
-            # (the next attempt's heal_stale_backup also finishes the
-            # job automatically if the filesystem has recovered)
-            raise IOError(
-                f"{op} swap: could not restore snapshot log from "
-                f"{old_snaps}; backup left at {backup} for manual recovery"
-            )
-        retire_replaced_tree(spark, live, backup, old_live)
-    # a new tree written without a sidecar (compaction: same content)
-    # keeps the old one; the caller refreshes its physical stats
-    old_sidecar = backup + "/" + SIDECAR_NAME
-    new_sidecar = live + "/" + SIDECAR_NAME
-    if io_util.exists(spark, old_sidecar) and not io_util.exists(spark, new_sidecar):
-        if not io_util.rename(spark, old_sidecar, new_sidecar):
-            raise IOError(
-                f"{op} swap: could not restore the sidecar from "
-                f"{old_sidecar}; backup left at {backup}"
-            )
-    io_util.delete(spark, backup)
-
-
-def alias_rel(
-    spark: SparkSession, db_path: str, rel_old: str, rel_new: str
-) -> None:
-    """Point history's view of ``rel_old`` at ``rel_new`` — used by
-    forget when a snapshot-referenced original is replaced by a
-    rewrite whose content is the original minus the erased rows."""
-    retained = _retained_map(spark, db_path)
-    retained[rel_old] = "@" + rel_new
-    _write_retained_map(spark, db_path, retained)
-
-
-def repoint_retained(
-    spark: SparkSession, db_path: str, old_name: str, new_name: str | None
-) -> None:
-    """After forget rewrote (or fully erased: ``new_name=None``) a file
-    inside the retained area, fix every mapping entry pointing at it."""
-    retained = _retained_map(spark, db_path)
-    changed = False
-    for rel, disp in list(retained.items()):
-        if disp == old_name:
-            if new_name is None:
-                del retained[rel]
-            else:
-                retained[rel] = new_name
-            changed = True
-    if changed:
-        _write_retained_map(spark, db_path, retained)
-
-
-def in_retained(db_path: str, abs_path: str) -> bool:
-    return ("/" + SNAP_DIR + "/" + RETAIN_SUBDIR + "/") in abs_path
+        if rel.startswith(RETAINED_PREFIX):
+            old = rel[len(RETAINED_PREFIX):]
+            new = replacement[len(RETAINED_PREFIX):] if replacement else None
+            for k, disp in list(retained.items()):
+                if disp == old:
+                    if new is None:
+                        del retained[k]
+                    else:
+                        retained[k] = new
+        elif rel in refs and replacement is not None:
+            retained[rel] = "@" + replacement
+    if retained != before:
+        _write_retained_map(spark, root, retained)
 
 
 def snapshot_drop(spark: SparkSession, path: str, version: int) -> None:
@@ -589,13 +446,3 @@ def snapshot_row_diff(
     from shaha_spark.caching import registers
 
     return registers(added.unionByName(removed), ok, nk)
-
-
-def retained_rel_of(db_path: str, abs_path: str) -> str:
-    """Path of a file RELATIVE to the retained area (valid only when
-    :func:`in_retained` is true for it)."""
-    marker = "/" + SNAP_DIR + "/" + RETAIN_SUBDIR + "/"
-    i = abs_path.find(marker)
-    if i < 0:
-        raise ValueError(f"{abs_path} is not under the retained area")
-    return abs_path[i + len(marker):]

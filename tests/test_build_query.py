@@ -246,3 +246,33 @@ def test_on_disk_density_guard(spark, tmp_path):
     )
     bpr = total / 10_000
     assert bpr < 100, f"{bpr:.1f} B/record — bloom filters oversized again?"
+
+
+def test_hashdb_files_use_the_writer_options(spark, tmp_path):
+    """`hash` and `preimage` are ZSTD-compressed and never
+    dictionary-encoded (build.WRITE_OPTIONS). Each record repeats 100
+    times, because on unique values parquet-mr falls back to plain
+    pages by itself; with repeats only the disabled dictionary keeps
+    them plain."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from shaha_spark.pipeline.build import dedup_records, hash_fanout, write_hashdb
+
+    words = spark.createDataFrame([(w,) for w in "abcd"], "word string")
+    records = dedup_records(hash_fanout(words, ["sha256"])).withColumn(
+        "sources", F.array(F.lit("src"))
+    )
+    path = str(tmp_path / "opts")
+    write_hashdb(records.crossJoin(spark.range(100)).drop("id").repartition(2), path)
+    files = glob.glob(f"{path}/*.parquet")
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        names = md.schema.to_arrow_schema().names
+        for name in ("hash", "preimage"):
+            for rg in range(md.num_row_groups):
+                col = md.row_group(rg).column(names.index(name))
+                assert col.compression == "ZSTD", (f, name, col.compression)
+                assert not col.has_dictionary_page, (f, name, col.encodings)

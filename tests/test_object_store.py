@@ -87,7 +87,7 @@ def test_build_query_append_round_trip_on_non_default_fs(spark, viewfs):
     rows = query(spark, db, digest).collect()
     assert len(rows) == 1 and rows[0].preimage == "hello"
 
-    # append exercises the temp-write + checked-rename swap cross-scheme
+    # append exercises the manifest swap's checked renames cross-scheme
     w2 = spark.createDataFrame([("test",)], "word string")
     res = build(spark, w2, ["sha256"], db, source_name="v2", source_hash="h2", append=True)
     assert res["total_records"] == 3

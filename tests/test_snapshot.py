@@ -1,7 +1,7 @@
 """Snapshot log + time travel + vacuum (pipeline/snapshot.py):
 
-- a snapshot pins the exact row set across appends (whole-dataset
-  swap) and slice compaction (per-slice swap) with RENAMES only;
+- a snapshot pins the exact row set across appends, whole compaction
+  and slice compaction (all one manifest swap) with RENAMES only;
 - GDPR forget reaches history: erased rows leave every snapshot, the
   rest of the snapshot keeps reading; a fully-erased file becomes an
   explicit hole;
@@ -174,10 +174,11 @@ def test_sidecar_total_survives_snapshot_flow(spark, tmp_path):
 
 
 def test_recovery_rollforward_loses_retention_not_correctness(spark, tmp_path):
-    """Crash AFTER a slice-swap manifest commit: recovery rolls the swap
-    forward by DELETING the originals (documented residual) — the
+    """A manifest in the older one-file form records no disposal, so
+    recovery rolls its swap forward by DELETING the originals — the
     current dataset stays byte-correct, and the snapshot reports an
-    explicit hole rather than silently serving partial data."""
+    explicit hole rather than silently serving partial data. (Manifests
+    written now record "retain"; see test_swap_safety.)"""
     import json
     import os
 
@@ -333,30 +334,3 @@ def test_whole_compaction_preserves_alias_target(spark, tmp_path):
     compact_hashdb(spark, out)
     old = snap.read_snapshot(spark, out, 1)
     assert old.count() == 149
-
-
-def test_failed_snapshot_restore_keeps_backup(spark, tmp_path, monkeypatch):
-    """ADVICE r3: if restoring _snapshots out of the swap backup fails,
-    the backup must survive (raise) — deleting it would destroy the
-    snapshot log and all retained history."""
-    from shaha_spark.pipeline import compact as compact_mod
-
-    out = _db(spark, tmp_path, words=100, num_files=3)
-    snap.snapshot_create(spark, out)
-
-    real_rename = io_util.rename
-
-    def failing_rename(spark_, src, dst):
-        if dst.rstrip("/").endswith(snap.SNAP_DIR) and "__old__" in src:
-            return False
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(compact_mod.io_util, "rename", failing_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(IOError, match="manual recovery"):
-        compact_hashdb(spark, out)
-    backup = out.rstrip("/") + ".__old__"
-    assert io_util.exists(spark, backup + "/" + snap.SNAP_DIR), (
-        "backup with the snapshot log must be left for manual recovery"
-    )

@@ -1,13 +1,15 @@
-"""Crash-safety of the directory-swap and slice-swap protocols —
-round-4 review regressions: a retried swap must heal (never destroy)
-the history a previous failure preserved, recovery must survive torn
-manifests, snapshots must never pin Spark-invisible staging files, and
-append must not flatten a partitioned layout.
+"""Crash-safety of the one swap protocol (compact.replace_files) that
+append, whole and slice compaction and forget share: a swap committed
+by one verb and interrupted is finished by the next verb, whichever it
+is, with its data, sidecar and snapshot history intact; recovery
+survives torn manifests; snapshots never pin Spark-invisible staging
+files; append does not flatten a partitioned layout.
 """
 
 from __future__ import annotations
 
-import json
+import hashlib
+import os
 
 import pytest
 
@@ -15,12 +17,13 @@ from pyspark.sql import functions as F
 
 from shaha_spark import io_util
 from shaha_spark.pipeline import snapshot as snap
-from shaha_spark.pipeline.build import build, read_hashdb
+from shaha_spark.pipeline.build import build, read_hashdb, read_sidecar
 from shaha_spark.pipeline.compact import (
     MANIFEST_SUFFIX,
     compact_hashdb,
     recover_slices,
 )
+from shaha_spark.pipeline.forget import forget_digests
 
 
 def _db(spark, tmp_path, words, num_files=3, name="db"):
@@ -30,44 +33,6 @@ def _db(spark, tmp_path, words, num_files=3, name="db"):
     )
     build(spark, df, ["sha256"], out, source_name="t", num_files=num_files)
     return out
-
-
-def test_retried_swap_heals_instead_of_destroying_history(
-    spark, tmp_path, monkeypatch
-):
-    """After a failed snapshot-log restore leaves the backup behind, a
-    RETRY (with the filesystem healthy again) must recover the log and
-    the referenced files — not delete the backup wholesale."""
-    out = _db(spark, tmp_path, words=120, num_files=3)
-    snap.snapshot_create(spark, out)
-    n_v1 = snap.read_snapshot(spark, out, 1).count()
-
-    real_rename = io_util.rename
-    fail = {"on": True}
-
-    def failing_rename(spark_, src, dst):
-        if (
-            fail["on"]
-            and dst.rstrip("/").endswith(snap.SNAP_DIR)
-            and "__old__" in src
-        ):
-            return False
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(io_util, "rename", failing_rename)
-    with pytest.raises(IOError, match="manual recovery"):
-        compact_hashdb(spark, out, force=True)
-    backup = out.rstrip("/") + ".__old__"
-    assert io_util.exists(spark, backup + "/" + snap.SNAP_DIR)
-
-    # filesystem recovers; the retry must heal, then compact cleanly
-    fail["on"] = False
-    report = compact_hashdb(spark, out, force=True)
-    assert report["compacted"] is True
-    assert not io_util.exists(spark, backup)
-    # the snapshot survived the failed attempt + retry
-    assert snap.read_snapshot(spark, out, 1).count() == n_v1
-    assert read_hashdb(spark, out).count() == 120
 
 
 def test_recover_slices_tolerates_torn_manifest(spark, tmp_path):
@@ -139,3 +104,152 @@ def test_append_preserves_partitioned_layout(spark, tmp_path):
         .collect()
     }
     assert got == {"alpha", "beta", "gamma"}
+
+
+def _fail_renames(monkeypatch, fails):
+    """Make ``io_util.rename`` return False (as FileSystem.rename
+    reports failure) whenever ``fails(src, dst)`` says so."""
+    real = io_util.rename
+
+    def rename(spark_, src, dst):
+        return False if fails(src, dst) else real(spark_, src, dst)
+
+    monkeypatch.setattr(io_util, "rename", rename)
+    return lambda: monkeypatch.setattr(io_util, "rename", real)
+
+
+def _publish_of(verb):
+    """Matches the publish rename of a ``verb`` swap: a staged file
+    renamed visible."""
+    def fails(src, dst):
+        base = os.path.basename(src)
+        return base.startswith(f"_incoming-{verb}-") and base.endswith(".parquet")
+
+    return fails
+
+
+def _nth_retire(n):
+    """Matches the ``n``-th rename of an original into retained/."""
+    seen = []
+
+    def fails(src, dst):
+        if "/_snapshots/retained/" in dst:
+            seen.append(dst)
+            return len(seen) == n
+        return False
+
+    return fails
+
+
+def _rows(df):
+    return sorted(
+        (bytes(r.hash).hex(), r.preimage, r.algorithm, tuple(sorted(r.sources)))
+        for r in df.collect()
+    )
+
+
+def _assert_sidecar_matches_data(spark, out):
+    meta = read_sidecar(spark, out)
+    assert meta["total_records"] == read_hashdb(spark, out).count()
+    assert meta["file_size_bytes"] == io_util.tree_size(spark, out)
+
+
+@pytest.mark.parametrize("verb", ["compact", "append"])
+def test_committed_stage_survives_a_whole_rewrite(spark, tmp_path, monkeypatch, verb):
+    """A forget whose publish rename fails leaves its committed
+    replacement staged; the next whole rewrite must finish that swap
+    first, not rewrite the database without the staged rows."""
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    gone = hashlib.sha256(b"word0123").digest()
+    restore = _fail_renames(monkeypatch, _publish_of("forget"))
+    with pytest.raises(IOError, match="rolls the swap forward"):
+        forget_digests(spark, out, [gone])
+    restore()
+
+    if verb == "compact":
+        compact_hashdb(spark, out, force=True)
+        expected = 299
+    else:
+        more = spark.createDataFrame([("extra",)], "word string")
+        build(spark, more, ["sha256"], out, source_name="more", append=True)
+        expected = 300
+    db = read_hashdb(spark, out)
+    assert db.count() == expected
+    assert db.where(F.col("hash") == gone).count() == 0
+    assert read_sidecar(spark, out)["total_records"] == expected
+    _assert_sidecar_matches_data(spark, out)
+
+
+@pytest.mark.parametrize(
+    "verb,fails",
+    [
+        ("append", _publish_of("append")),
+        ("compact", _publish_of("compact")),
+        # a crash in the middle of the disposal, replayed by recovery
+        ("compact", _nth_retire(2)),
+    ],
+    ids=["append-publish", "compact-publish", "compact-retire"],
+)
+def test_whole_rewrite_crash_rolls_forward_with_history(
+    spark, tmp_path, monkeypatch, verb, fails
+):
+    """An append or whole compaction that fails after its manifest
+    committed is finished by the next verb: the data and sidecar equal
+    those of a run that did not crash, and the snapshot taken before it
+    still reads in full — the replaced originals were retained."""
+
+    def run(out):
+        if verb == "append":
+            more = spark.createDataFrame([("extra01",), ("word0001",)], "word string")
+            build(
+                spark, more, ["sha256"], out,
+                source_name="more", source_hash="h-more", append=True,
+            )
+        else:
+            compact_hashdb(spark, out, force=True)
+
+    clean = _db(spark, tmp_path, words=120, num_files=4, name="clean")
+    crashed = _db(spark, tmp_path, words=120, num_files=4, name="crashed")
+    v1 = _rows(read_hashdb(spark, crashed))
+    for out in (clean, crashed):
+        snap.snapshot_create(spark, out)
+    run(clean)
+    restore = _fail_renames(monkeypatch, fails)
+    with pytest.raises(IOError):
+        run(crashed)
+    restore()
+
+    report = forget_digests(spark, crashed, [bytes(32)])  # erases nothing
+    assert report["recovered"] == {"rolled_forward": 1, "dropped_stages": 0}
+    assert _rows(read_hashdb(spark, crashed)) == _rows(read_hashdb(spark, clean))
+    keys = ("total_records", "algorithms", "sources", "source_hashes")
+    want = {k: read_sidecar(spark, clean)[k] for k in keys}
+    assert {k: read_sidecar(spark, crashed)[k] for k in keys} == want
+    if verb == "append":
+        assert want["sources"] == ["more", "t"] and want["source_hashes"] == ["h-more"]
+    _assert_sidecar_matches_data(spark, crashed)
+    assert _rows(snap.read_snapshot(spark, crashed, 1)) == v1
+    assert not any(
+        os.path.basename(p).startswith(("_incoming-", ".__"))
+        or "/.__" in p
+        for p, _ in io_util.list_files(spark, crashed, suffix=None)
+    )
+
+
+def test_forget_crash_recovery_keeps_history(spark, tmp_path, monkeypatch):
+    """A forget rolled forward by recovery points the snapshot at the
+    replacement, as a forget that did not crash does: the snapshot
+    reads with no hole and without the erased row."""
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    snap.snapshot_create(spark, out)
+    gone = hashlib.sha256(b"word0123").digest()
+    restore = _fail_renames(monkeypatch, _publish_of("forget"))
+    with pytest.raises(IOError, match="rolls the swap forward"):
+        forget_digests(spark, out, [gone])
+    restore()
+
+    assert recover_slices(spark, out)["rolled_forward"] == 1
+    old = snap.read_snapshot(spark, out, 1)  # no allow_missing: holes raise
+    assert old.count() == 299
+    assert old.where(F.col("hash") == gone).count() == 0
+    _assert_sidecar_matches_data(spark, out)
