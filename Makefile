@@ -3,7 +3,7 @@
 SF ?= /root/testdata/sf0.001
 SF1_DIR ?= /tmp/shaha_sf1
 
-.PHONY: test test-maint oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench perfbench plans coverage window clean
+.PHONY: test test-maint perfbench-ab oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench perfbench plans coverage window clean
 
 test:  ## default (driver) lane — slow tier excluded via pytest.ini addopts
 	python -m pytest tests/ -x -q
@@ -45,6 +45,12 @@ bench:
 perfbench:  ## the hash-database benchmark, both workloads (run A/Bs through this)
 	python3 perfbench/run.py --workload build --seed 1 --seconds 1 --trace 0
 	python3 perfbench/run.py --workload lifecycle --seed 1 --seconds 1 --trace 0
+
+BASE ?= HEAD
+SEEDS ?= 1-10
+
+perfbench-ab:  ## the hash-database benchmark, BASE (a git revision) against the working tree, SEEDS alternating pairs
+	python3 scripts/perfbench_ab.py --base $(BASE) --seeds $(SEEDS)
 
 plans:  ## regenerate PLANS.md from live sf0.01 plans
 	python scripts/gen_plans.py

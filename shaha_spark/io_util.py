@@ -7,6 +7,8 @@ FileSystem API instead of Python's ``open``.
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -28,22 +30,41 @@ def write_text(spark: SparkSession, path: str, content: str) -> None:
 
 def write_text_atomic(spark: SparkSession, path: str, content: str) -> None:
     """Write-then-rename so readers never observe a torn file — for
-    commit markers (slice/forget manifests) whose PRESENCE means
-    "committed": a crash mid-write must leave either nothing or the
-    complete content, never partial JSON."""
+    commit markers (swap manifests) whose PRESENCE means "committed",
+    and for the sidecar, which readers load while a verb replaces it: a
+    crash or a concurrent read sees the old content, the new content,
+    or no file, never partial JSON.
+
+    The new content goes to ``<path>.tmp`` first. Where the file system
+    will not rename over an existing file (Hadoop's local and HDFS file
+    systems), the old file is deleted first; in that gap a reader finds
+    no file."""
     tmp = path + ".tmp"
     write_text(spark, tmp, content)
     if not rename(spark, tmp, path):
-        delete(spark, tmp)
-        raise IOError(f"atomic write: could not move {tmp} to {path}")
+        delete(spark, path)
+        if not rename(spark, tmp, path):
+            delete(spark, tmp)
+            raise IOError(f"atomic write: could not move {tmp} to {path}")
 
 
 def read_text(spark: SparkSession, path: str) -> str | None:
-    """File contents, or None if the path does not exist."""
+    """File contents, or None if the path does not exist.
+
+    On a file system with client-side checksum files (Hadoop's local
+    one) the read bypasses them: a file replaced by
+    :func:`write_text_atomic` moves apart from its ``.crc`` file, and a
+    reader pairing one with the other would fail verification."""
     fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
+    gateway = spark.sparkContext._gateway
+    if is_instance_of(gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        fs = fs.getRawFileSystem()
+    try:
+        stream = fs.open(jpath)
+    except Py4JJavaError as e:
+        if is_instance_of(gateway, e.java_exception, "java.io.FileNotFoundException"):
+            return None
+        raise
     try:
         jvm = spark._jvm
         return jvm.org.apache.commons.io.IOUtils.toString(

@@ -77,8 +77,10 @@ def referential_check(
 
     ``relations`` is [(name, child_df, child_key, parent_df,
     parent_key)]. Relations sharing the SAME child table (detected via
-    the analyzed plans' ``sameResult`` — exact, not a hash) are checked
-    in ONE pass over that child: the shared scan chains a LEFT join per
+    the analyzed plans' ``sameResult`` — exact, not a hash; a child
+    without the classic JVM handle, as under Spark Connect, matches
+    only the same DataFrame object) are checked in ONE pass over that
+    child: the shared scan chains a LEFT join per
     parent against that parent's DISTINCT key projection (no fan-out —
     every build side is distinct, so the chained joins never duplicate
     child rows; column-pruned at the scan, broadcast by Catalyst when
@@ -91,16 +93,27 @@ def referential_check(
     child twice per relation. Results union into one report; each
     child group's subtree stays independent, so Spark runs the groups
     as parallel stages of one job.
+
+    Row order: report rows come grouped by child — groups in the order
+    each child first appears in ``relations``, relations within a group
+    in input order. Where relations of different children interleave,
+    this is not the input order.
     """
     if not relations:
         raise ValueError("referential_check requires at least one relation")
     # group by shared child: [(child, analyzed_plan, [(name, ckey,
-    # parent, pkey), ...])], preserving first-appearance order
+    # parent, pkey), ...])], preserving first-appearance order; the plan
+    # is None without a JVM handle (Spark Connect)
     groups: list[tuple[DataFrame, object, list]] = []
     for name, child, ckey, parent, pkey in relations:
-        plan = child._jdf.queryExecution().analyzed()
-        for _, gplan, rels in groups:
-            if gplan.sameResult(plan):
+        jdf = getattr(child, "_jdf", None)
+        plan = None if jdf is None else jdf.queryExecution().analyzed()
+        for gchild, gplan, rels in groups:
+            if plan is None or gplan is None:
+                same = gchild is child
+            else:
+                same = gplan.sameResult(plan)
+            if same:
                 rels.append((name, ckey, parent, pkey))
                 break
         else:

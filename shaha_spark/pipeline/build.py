@@ -244,37 +244,76 @@ def sidecar_meta(
     sources: list[str],
     source_hashes: list[str],
     file_size_bytes: int,
+    files: list[dict[str, Any]] | None = None,
 ) -> dict[str, Any]:
     """The sidecar stats JSON — stands in for the reference's Parquet
     footer key-value metadata (ref parquet.rs:20-26), which the
-    DataFrame writer cannot emit."""
-    return {
-        "total_records": total_records,
-        "algorithms": sorted(set(algorithms)),
-        "sources": sorted(set(sources)),
-        "source_hashes": sorted(set(source_hashes)),
-        "file_size_bytes": file_size_bytes,
-        "bloom": {"column": "hash", "kind": "parquet-native"},
-        "format_version": 1,
-    }
+    DataFrame writer cannot emit.
+
+    ``files`` is the per-file index (see :func:`with_index`); None
+    leaves it out."""
+    return with_index(
+        {
+            "total_records": total_records,
+            "algorithms": sorted(set(algorithms)),
+            "sources": sorted(set(sources)),
+            "source_hashes": sorted(set(source_hashes)),
+            "file_size_bytes": file_size_bytes,
+            "bloom": {"column": "hash", "kind": "parquet-native"},
+            "format_version": 1,
+        },
+        files,
+    )
+
+
+def with_index(
+    meta: dict[str, Any], files: list[dict[str, Any]] | None
+) -> dict[str, Any]:
+    """Sidecar ``meta`` with its per-file index ``files``, or without
+    one when ``files`` is None.
+
+    The index has one entry per live Parquet file, sorted by path:
+    ``{"path", "rows", "bytes", "min", "max"}`` — the db-relative path,
+    its row count and size, and the min and max of ``hash`` as hex
+    (null for a file without rows). ``query`` reads only the files
+    whose range meets its predicate. Every writer keeps it exact; where
+    footers cannot be read (a remote store) there is none."""
+    out = {k: v for k, v in meta.items() if k != "files"}
+    if files is not None:
+        out["files"] = files
+    return out
 
 
 def put_sidecar(spark: SparkSession, path: str, meta: dict[str, Any]) -> None:
-    """Write ``meta`` as the sidecar of ``path``, stamped with the time."""
+    """Write ``meta`` as the sidecar of ``path``, stamped with the time.
+    The old sidecar is replaced whole (``io_util.write_text_atomic``): a
+    concurrent reader never loads a truncated file."""
     meta = {**meta, "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())}
-    io_util.write_text(
+    io_util.write_text_atomic(
         spark, f"{path.rstrip('/')}/{SIDECAR_NAME}", json.dumps(meta, indent=2)
     )
 
 
 def write_sidecar(spark: SparkSession, path: str, **fields: Any) -> None:
     """A fresh build's sidecar (the fields of :func:`sidecar_meta`), its
-    size from a listing of ``path``. Written AFTER the data so a
-    missing/stale sidecar degrades to the scan fallback (ref
+    size and file index from one listing of ``path``. Written AFTER the
+    data so a missing/stale sidecar degrades to the scan fallback (ref
     parquet.rs:577-581). A rewrite writes its sidecar through its swap
     (``compact.replace_files``)."""
-    size = io_util.tree_size(spark, path)
-    put_sidecar(spark, path, sidecar_meta(**fields, file_size_bytes=size))
+    from shaha_spark.pipeline.compact import file_index
+    from shaha_spark.pipeline.snapshot import visible_files
+
+    root = io_util.qualify(spark, path)
+    live = visible_files(root, io_util.list_files(spark, root))
+    put_sidecar(
+        spark,
+        path,
+        sidecar_meta(
+            **fields,
+            file_size_bytes=sum(sz for _, sz in live),
+            files=file_index(root, live),
+        ),
+    )
 
 
 def read_sidecar(spark: SparkSession, path: str) -> dict[str, Any] | None:
@@ -462,6 +501,7 @@ def build(
                     sources=merged_sources,
                     source_hashes=merged_hashes,
                     file_size_bytes=0,
+                    files=[],
                 ),
                 partition_by_algorithm=partition_by_algorithm,
             )

@@ -34,8 +34,10 @@ from shaha_spark.pipeline.build import (
     read_hashdb,
     read_sidecar,
     sort_for_write,
+    with_index,
     write_hashdb,
 )
+from shaha_spark.schema import SIDECAR_NAME
 
 #: default target size per output file (pre-compression bytes on disk)
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -96,7 +98,7 @@ def compact_hashdb(
         sort_for_write(read_hashdb(spark, path), num_files=plan["target_files"]),
         "compact",
         "retain",
-        meta and {**meta, "total_records": 0, "file_size_bytes": 0},
+        meta and {**meta, "total_records": 0, "file_size_bytes": 0, "files": []},
         partition_by_algorithm=is_algorithm_partitioned(live),
     )
     return {
@@ -142,6 +144,41 @@ def hash_range(path: str) -> tuple[bytes | None, bytes | None, int]:
         lo = st.min if lo is None else min(lo, st.min)
         hi = st.max if hi is None else max(hi, st.max)
     return lo, hi, md.num_rows
+
+
+def index_entry(path: str, rel: str, nbytes: int) -> dict[str, Any] | None:
+    """The sidecar index entry (``build.with_index``) of the ``nbytes``
+    parquet file at ``path``, listed under the db-relative ``rel``;
+    None where :func:`hash_range` cannot give its range (a remote
+    store, a file without statistics)."""
+    try:
+        lo, hi, rows = hash_range(path)
+    except ValueError:
+        return None
+    if rows and lo is None:
+        return None
+    return {
+        "path": rel,
+        "rows": rows,
+        "bytes": nbytes,
+        "min": lo.hex() if rows else None,
+        "max": hi.hex() if rows else None,
+    }
+
+
+def file_index(
+    root: str, files: list[tuple[str, int]]
+) -> list[dict[str, Any]] | None:
+    """The sidecar index of ``files``, ``(path, bytes)`` of the
+    database at ``root``, sorted by path; None if one file has no
+    entry."""
+    out = []
+    for p, sz in files:
+        entry = index_entry(p, snapshot.rel_of(root, p), sz)
+        if entry is None:
+            return None
+        out.append(entry)
+    return sorted(out, key=lambda e: e["path"])
 
 
 def plan_slice_compaction(
@@ -244,9 +281,17 @@ def live_sidecar(
     spark: SparkSession, path: str, live: list[tuple[str, int]]
 ) -> dict[str, Any] | None:
     """The sidecar, with ``file_size_bytes`` taken from the verb's own
-    ``(path, bytes)`` listing of the live files."""
+    ``(path, bytes)`` listing of the live files, and its file index
+    rebuilt from that listing when it does not name exactly those files
+    (written by a checkout without the index, or missing)."""
     meta = read_sidecar(spark, path)
-    return meta and {**meta, "file_size_bytes": sum(sz for _, sz in live)}
+    if meta is None:
+        return None
+    files = meta.get("files")
+    listed = {(snapshot.rel_of(path, p), sz) for p, sz in live}
+    if files is None or {(e["path"], e["bytes"]) for e in files} != listed:
+        files = file_index(path, live)
+    return with_index({**meta, "file_size_bytes": sum(sz for _, sz in live)}, files)
 
 
 def replace_files(
@@ -279,7 +324,9 @@ def replace_files(
        ``sidecar`` describes the database without the originals, and
        the swap adds the rows and bytes it publishes (None: no sidecar).
        ``rows`` is the row count of ``df`` when the caller knows it;
-       otherwise the write job counts it.
+       otherwise the write job counts it. The sidecar's file index, if
+       it has one, loses the originals and gains each published file's
+       entry, read from the staged file's footer.
     3. :func:`_finish` disposes of the originals, publishes the staged
        files and writes the sidecar; the temp dir and manifest go last.
 
@@ -294,6 +341,7 @@ def replace_files(
     tmp = f"{d}/.__{stem_prefix}_{uid}__"
     staged: list[list[str]] = []
     added = 0
+    entries: list[dict[str, Any] | None] = []  # of the published files
     obs = Observation(f"{stem_prefix}_{uid}")
     if df is not None:
         if rows is None:
@@ -312,16 +360,25 @@ def replace_files(
             staged.append([snapshot.rel_of(root, incoming), final])
             if snapshot.is_visible(final):
                 added += size
+                entries.append(index_entry(incoming, final, size))
     # a rewritten history copy adds no live rows
     if not (staged and snapshot.is_visible(staged[0][1])):
         rows = 0
     elif rows is None:
         rows = int(obs.get["n"])
+    gone = [snapshot.rel_of(root, p) for p, _ in originals]
+    after = adjusted(sidecar, rows, added)
+    if after is not None and after.get("files") is not None:
+        kept = [e for e in after["files"] if e["path"] not in gone]
+        after = with_index(
+            after,
+            None if None in entries else sorted(kept + entries, key=lambda e: e["path"]),
+        )
     manifest = {
-        "originals": [snapshot.rel_of(root, p) for p, _ in originals],
+        "originals": gone,
         "staged": staged,
         "dispose": dispose,
-        "sidecar": adjusted(sidecar, rows, added),
+        "sidecar": after,
     }
     manifest_path = f"{root}/{STAGE_PREFIX}{stem_prefix}-{uid}{MANIFEST_SUFFIX}"
     io_util.write_text_atomic(spark, manifest_path, json.dumps(manifest))
@@ -353,6 +410,21 @@ def _finish(spark: SparkSession, root: str, manifest: dict[str, Any]) -> None:
         put_sidecar(spark, root, manifest["sidecar"])
 
 
+def _settle_sidecar_write(spark: SparkSession, root: str, old_present: bool) -> None:
+    """Finish or drop a sidecar write (``io_util.write_text_atomic``)
+    cut short: once the old sidecar is gone the temporary one was
+    complete, so it moves into place; otherwise it is dropped."""
+    tmp = f"{root}/{SIDECAR_NAME}.tmp"
+    if not old_present:
+        try:
+            json.loads(io_util.read_text(spark, tmp) or "")
+            io_util.rename(spark, tmp, f"{root}/{SIDECAR_NAME}")
+            return
+        except ValueError:
+            pass  # the first sidecar's write itself was cut short
+    io_util.delete(spark, tmp)
+
+
 def recover_slices(spark: SparkSession, path: str) -> dict[str, int]:
     """Finish or undo interrupted swaps; see :func:`recover_and_list`."""
     return recover_and_list(spark, path)[2]
@@ -374,10 +446,12 @@ def recover_and_list(
     * a manifest commits its swap: :func:`_finish` replays it and the
       manifest is dropped. A manifest in the older one-file form
       (``final``, optional ``records_delta``) deletes its originals and
-      moves the sidecar count by the delta;
+      moves the sidecar count by the delta; the sidecar's size and file
+      index are then taken from a listing;
     * a staged file no manifest names, or a torn manifest: the swap
       never committed and the originals are all live, so drop it;
-    * a leftover temp dir is dropped.
+    * a leftover temp dir is dropped, and a sidecar write cut short is
+      finished or dropped (:func:`_settle_sidecar_write`).
 
     Idempotent; runs first in append, both compactions and forget.
     """
@@ -389,6 +463,8 @@ def recover_and_list(
             present[snapshot.rel_of(root, p)] = p
         except ValueError:
             continue
+    if f"{SIDECAR_NAME}.tmp" in present:
+        _settle_sidecar_write(spark, root, SIDECAR_NAME in present)
     rolled = dropped = delta = legacy = 0
     covered: set[str] = set()
     for rel in sorted(present):
@@ -429,12 +505,17 @@ def recover_and_list(
             temp_dirs.add(m.group(0))
     for t in temp_dirs:
         io_util.delete(spark, f"{root}/{t}")
-    meta = read_sidecar(spark, root) if legacy else None
-    if meta is not None:
-        meta["file_size_bytes"] = io_util.tree_size(spark, root)
-        put_sidecar(spark, root, adjusted(meta, delta, 0))
     if rolled or dropped:
         entries = io_util.list_files(spark, root, suffix=None)
+    meta = read_sidecar(spark, root) if legacy else None
+    if meta is not None:
+        # the older form carries no sidecar: size and index come from
+        # the listing of what recovery left
+        live = snapshot.visible_files(root, entries)
+        meta["file_size_bytes"] = sum(sz for _, sz in live)
+        put_sidecar(
+            spark, root, with_index(adjusted(meta, delta, 0), file_index(root, live))
+        )
     return root, entries, {"rolled_forward": rolled, "dropped_stages": dropped}
 
 

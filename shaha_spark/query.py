@@ -18,15 +18,40 @@ as a single filtered DataFrame whose predicates are all pushdown-friendly:
     hex-decoded, ref query.rs:69-70).
   * optional algorithm equality (F3) and LIMIT with early termination
     (O2 → CollectLimitExec).
+
+Which files are read: the reference prunes by the stats in its single
+file's footer; this store writes many files, so the sidecar carries a
+per-file index (``files``: path, rows, bytes, min and max ``hash``,
+see ``build.with_index``) and the scan names only the files whose
+[min, max] meets the predicate — a point lookup reads one file, not
+all of them. The directory is read instead when the index cannot be
+trusted:
+
+  1. the sidecar has no ``files`` (an older writer, a remote store);
+  2. its row and byte sums differ from the sidecar's ``total_records``
+     and ``file_size_bytes`` (an index a writer left stale);
+  3. a file it names is gone (``PATH_NOT_FOUND`` when the read is
+     built: a crashed swap before recovery ran).
+
+It is also read when the index selects every file: that is the same
+scan. No crash state gives a worse answer than the directory read.
 """
 
 from __future__ import annotations
 
+from typing import Any
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shaha_spark.pipeline.build import read_hashdb, read_sidecar
-from shaha_spark.schema import DIGEST_LENGTHS, FULL_HASH_LENGTHS, hex_to_bytes
+from shaha_spark.schema import (
+    DIGEST_LENGTHS,
+    FULL_HASH_LENGTHS,
+    HASH_DB_SCHEMA,
+    hex_to_bytes,
+)
 
 #: Applied by the CLI when the user gives no -n and the format must
 #: materialize every row driver-side (json/table). Plain format streams
@@ -85,6 +110,57 @@ def prefix_predicate(
     return pred
 
 
+def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str] | None:
+    """Db-relative paths of the files whose ``hash`` range meets
+    ``prefix`` (the half-open range of :func:`prefix_predicate`; an
+    equality is inside it), from the sidecar ``meta``'s file index.
+    None when there is no index or its sums disagree with the sidecar
+    (rules 1 and 2 of the module docstring). When no file matches, one
+    file is named anyway: the predicate empties it, at the cost of a
+    read that finds nothing, and the frame keeps its schema."""
+    files = meta.get("files")
+    if (
+        not files
+        or sum(e["rows"] for e in files) != meta.get("total_records")
+        or sum(e["bytes"] for e in files) != meta.get("file_size_bytes")
+    ):
+        return None
+    upper = prefix_successor(prefix) if prefix else None
+    hit = [
+        e["path"]
+        for e in files
+        if e["rows"]
+        and bytes.fromhex(e["max"]) >= prefix
+        and (upper is None or bytes.fromhex(e["min"]) < upper)
+    ]
+    return hit or [files[0]["path"]]
+
+
+def _index_read(
+    spark: SparkSession, db_path: str, meta: dict[str, Any], prefix: bytes
+) -> DataFrame | None:
+    """A read of the files :func:`indexed_files` selects for ``prefix``;
+    None where the directory read is due (module docstring). Spark
+    checks that explicit paths exist when it builds the read, so rule 3
+    costs no extra call."""
+    rels = indexed_files(meta, prefix)
+    if rels is None:
+        return None
+    if len(rels) >= sum(1 for e in meta["files"] if e["rows"]):
+        return None  # every file: the directory read is the same scan
+    root = db_path.rstrip("/")
+    try:
+        return (
+            spark.read.schema(HASH_DB_SCHEMA)
+            .option("basePath", root)
+            .parquet(*[f"{root}/{r}" for r in rels])
+        )
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 def query(
     spark: SparkSession,
     db_path: str,
@@ -100,13 +176,17 @@ def query(
     caller side (the reference's plain/json/table renderers are
     driver-side presentation, ref query.rs:132-179).
 
-    ``at_version`` time-travels: the scan runs over the file set pinned
-    by that snapshot (pipeline/snapshot.py) instead of the live
-    dataset. The pruning predicates are identical — snapshot reads are
-    plain parquet scans, so min/max + bloom skipping applies to history
-    too.
+    The live read names only the files the sidecar's index selects
+    (module docstring). ``at_version`` time-travels: the scan runs over
+    the file set pinned by that snapshot (pipeline/snapshot.py) instead
+    of the live dataset. The pruning predicates are identical — snapshot
+    reads are plain parquet scans, so min/max + bloom skipping applies
+    to history too.
     """
     prefix = hex_to_bytes(prefix_hex)
+    meta = None
+    if algorithm is None or at_version is None:
+        meta = read_sidecar(spark, db_path) or {}
     # Longest digest the scan can contain: from the explicit algorithm
     # filter, else the sidecar's algorithm list. Lets prefix_predicate
     # use the bloom-eligible equality form when it is provably exact.
@@ -123,7 +203,6 @@ def query(
             )
         max_len = DIGEST_LENGTHS.get(algorithm)
     else:
-        meta = read_sidecar(spark, db_path) or {}
         algos = meta.get("algorithms") or []
         lengths = [DIGEST_LENGTHS[a] for a in algos if a in DIGEST_LENGTHS]
         max_len = max(lengths) if lengths and len(lengths) == len(algos) else None
@@ -132,7 +211,9 @@ def query(
 
         base = read_snapshot(spark, db_path, at_version)
     else:
-        base = read_hashdb(spark, db_path)
+        base = _index_read(spark, db_path, meta, prefix)
+        if base is None:
+            base = read_hashdb(spark, db_path)
     df = base.filter(prefix_predicate(prefix, max_digest_len=max_len))
     if algorithm is not None:
         df = df.filter(F.col("algorithm") == F.lit(algorithm))

@@ -140,3 +140,16 @@ def test_concurrent_append_lock(spark, tmp_path):
     res = build_mod.build(spark, w2, ["sha256"], path, source_name="other", append=True)
     assert res["total_records"] == 2
     assert not io_util.exists(spark, lock)
+
+
+def test_append_keeps_the_file_index(spark, tmp_path):
+    """The append's swap writes the index of the files it publishes."""
+    from _hashdb_index import assert_index_exact, assert_lookups_match_directory
+
+    path = str(tmp_path / "db")
+    w1 = spark.createDataFrame([(f"a{i:03d}",) for i in range(200)], "word string")
+    build_mod.build(spark, w1, ["md5", "sha256"], path, source_name="w1", num_files=4)
+    w2 = spark.createDataFrame([(f"a{i:03d}",) for i in range(150, 260)], "word string")
+    build_mod.build(spark, w2, ["md5", "sha256"], path, source_name="w2", append=True)
+    assert_index_exact(spark, path)
+    assert_lookups_match_directory(spark, path)

@@ -9,6 +9,7 @@ filter (:154-190), limit incl. over-limit (:371-406), negative lookup
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -276,3 +277,116 @@ def test_hashdb_files_use_the_writer_options(spark, tmp_path):
                 col = md.row_group(rg).column(names.index(name))
                 assert col.compression == "ZSTD", (f, name, col.compression)
                 assert not col.has_dictionary_page, (f, name, col.encodings)
+
+
+# ------------------------------------------------- the sidecar's file index
+
+from _hashdb_index import assert_index_exact, assert_lookups_match_directory  # noqa: E402
+
+
+def _sixteen_file_db(spark, path, partition_by_algorithm=False):
+    words = spark.createDataFrame([(f"w{i:04d}",) for i in range(400)], "word string")
+    build_mod.build(
+        spark, words, ["md5", "sha256"], path, source_name="s",
+        num_files=16, partition_by_algorithm=partition_by_algorithm,
+    )
+    return path
+
+
+@pytest.fixture(scope="module")
+def db16(spark, tmp_path_factory):
+    return _sixteen_file_db(spark, str(tmp_path_factory.mktemp("db16") / "db"))
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "by-algorithm"])
+def test_fresh_build_indexes_every_file(spark, tmp_path, db16, partitioned):
+    db = _sixteen_file_db(spark, str(tmp_path / "db"), True) if partitioned else db16
+    assert_index_exact(spark, db)
+    assert_lookups_match_directory(spark, db)
+
+
+def test_point_hit_reads_one_file(spark, db16):
+    digest = hashlib.sha256(b"w0123").hexdigest()
+    df = query(spark, db16, digest)
+    assert len(df.inputFiles()) == 1
+    assert [r.preimage for r in df.collect()] == ["w0123"]
+
+
+def test_digest_below_every_file_reads_nothing(spark, db16):
+    df = query(spark, db16, "00" * 32)
+    assert df.collect() == []
+    assert df.schema == build_mod.read_hashdb(spark, db16).schema
+
+
+def _drop_files_key(meta):
+    return {k: v for k, v in meta.items() if k != "files"}
+
+
+def _stale_by_one_row(meta):
+    files = [dict(e) for e in meta["files"]]
+    files[0]["rows"] += 1
+    return {**meta, "files": files}
+
+
+@pytest.mark.parametrize(
+    "spoil", [_drop_files_key, _stale_by_one_row, "delete-file"],
+    ids=["no-index", "stale-index", "file-deleted"],
+)
+def test_untrusted_index_reads_every_file(spark, tmp_path, db16, spoil):
+    """No index, an index whose sums are off, or an index naming a file
+    that is gone: the lookup reads the whole directory, and answers as a
+    directory read does."""
+    import shutil
+
+    db = str(tmp_path / "db")
+    shutil.copytree(db16, db)
+    digest = hashlib.sha256(b"w0123").digest()
+    meta = build_mod.read_sidecar(spark, db)
+    if spoil == "delete-file":
+        holder = next(
+            e["path"] for e in meta["files"]
+            if bytes.fromhex(e["min"]) <= digest <= bytes.fromhex(e["max"])
+        )
+        os.remove(f"{db}/{holder}")
+    else:
+        build_mod.put_sidecar(spark, db, spoil(meta))
+    live = build_mod.read_hashdb(spark, db)
+    df = query(spark, db, digest.hex())
+    assert sorted(df.inputFiles()) == sorted(live.inputFiles())
+    assert len(df.inputFiles()) == (15 if spoil == "delete-file" else 16)
+    want = live.where(F.col("hash") == digest).count()
+    assert df.count() == want == (0 if spoil == "delete-file" else 1)
+
+
+def test_sidecar_rewrite_never_shows_a_reader_a_torn_file(spark, tmp_path):
+    """One thread rewrites the sidecar while another reads it: every
+    read returns a complete sidecar, or None in the instant the old one
+    is gone; an in-place rewrite let readers parse a truncated file."""
+    import threading
+
+    db = str(tmp_path / "db")
+    os.makedirs(db)
+    meta = {"total_records": 1, "pad": "x" * 4000}
+    build_mod.put_sidecar(spark, db, meta)
+    stop = threading.Event()
+    writes, errors = [], []
+
+    def rewrite():
+        try:
+            while not stop.is_set():
+                writes.append(len(writes))
+                build_mod.put_sidecar(spark, db, {**meta, "n": len(writes)})
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    writer = threading.Thread(target=rewrite)
+    writer.start()
+    try:
+        reads = [build_mod.read_sidecar(spark, db) for _ in range(400)]
+    finally:
+        stop.set()
+        writer.join(timeout=60)
+    assert not writer.is_alive() and not errors
+    assert len(writes) > 10
+    complete = [r for r in reads if r is not None]
+    assert complete and all(r["pad"] == meta["pad"] for r in complete)

@@ -289,3 +289,17 @@ def test_recover_rolls_forward_committed_swap(spark, tmp_path):
     names = [p for p, _ in io_util.list_files(spark, out)]
     assert any(p.endswith("slice-cafebabe.zstd.parquet") for p in names)
     assert not any("_incoming" in p for p in names)
+
+
+@pytest.mark.parametrize("how", ["slices", "whole"])
+def test_compaction_keeps_the_file_index(spark, tmp_path, how):
+    from _hashdb_index import assert_index_exact, assert_lookups_match_directory
+    from shaha_spark.pipeline.compact import compact_slices
+
+    out = _fragmented_db(spark, tmp_path)
+    if how == "slices":
+        assert compact_slices(spark, out, target_file_bytes=64 << 20)["compacted"] >= 1
+    else:
+        assert compact_hashdb(spark, out, force=True)["files_after"] == 1
+    assert_index_exact(spark, out)
+    assert_lookups_match_directory(spark, out)

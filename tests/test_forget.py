@@ -252,3 +252,24 @@ def test_forget_publish_crash_rolls_forward(spark, tmp_path, monkeypatch):
                 for r in spark.read.parquet(p).select("hash", "algorithm").collect()
             ]
             assert rows == sorted(rows)
+
+
+@pytest.mark.parametrize("index", ["kept", "rebuilt"])
+def test_forget_keeps_the_file_index(spark, tmp_path, index):
+    """Each per-file swap of a forget replaces its file's index entry,
+    and a file whose every row is erased leaves the index. A sidecar
+    without an index (an older writer) gets one from the listing."""
+    from _hashdb_index import assert_index_exact, assert_lookups_match_directory
+    from shaha_spark.pipeline.build import put_sidecar
+
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    if index == "rebuilt":
+        meta = read_sidecar(spark, out)
+        put_sidecar(spark, out, {k: v for k, v in meta.items() if k != "files"})
+    whole = sorted(_files(spark, out))[3]
+    digests = [bytes(r.hash) for r in spark.read.parquet(whole).select("hash").collect()]
+    digests += [hashlib.sha256(b"word0007").digest(), hashlib.md5(b"word0250").digest()]
+    report = forget_digests(spark, out, digests)
+    assert report["files_dropped"] == 1 and report["files_rewritten"] >= 1
+    assert_index_exact(spark, out)
+    assert_lookups_match_directory(spark, out)

@@ -82,6 +82,8 @@ def test_build_query_append_round_trip_on_non_default_fs(spark, viewfs):
     # sidecar written and readable through the non-default scheme
     meta = read_sidecar(spark, db)
     assert meta["total_records"] == 2 and meta["sources"] == ["v1"]
+    # footers are read with pyarrow on local paths only: no file index
+    assert "files" not in meta
 
     digest = hashlib.sha256(b"hello").hexdigest()
     rows = query(spark, db, digest).collect()

@@ -219,3 +219,55 @@ def test_referential_check_empty_child_and_null_keys(spark):
     }
     assert report["child->parent"] == (3, 2, False)  # null + 3 are orphans
     assert report["empty->parent"] == (0, 0, True)
+
+
+def _three_relations(spark, first_child):
+    parent = spark.createDataFrame([(1,), (2,)], "pk bigint")
+    child = spark.createDataFrame([(1,), (3,)], "fk bigint")
+    other = spark.createDataFrame([(2,), (2,), (5,)], "fk bigint")
+    a = first_child(child)
+    return [
+        ("a->p", a, "fk", parent, "pk"),
+        ("b->p", other, "fk", parent, "pk"),
+        ("a->p2", a, "fk", parent.where("pk = 3"), "pk"),
+    ]
+
+
+def test_referential_check_rows_come_grouped_by_child(spark):
+    """The documented order: grouped by child in first-appearance
+    order, input order within a group — so an interleaved relation
+    list comes back regrouped."""
+    from shaha_spark.operators.checks import referential_check
+
+    rows = referential_check(_three_relations(spark, lambda df: df)).collect()
+    assert [tuple(r) for r in rows] == [
+        ("a->p", 2, 1, False),
+        ("a->p2", 2, 2, False),
+        ("b->p", 3, 1, False),
+    ]
+
+
+class _NoJvmHandle:
+    """A DataFrame without the classic ``_jdf`` handle, as under Spark
+    Connect; everything else delegates to a real DataFrame."""
+
+    def __init__(self, df):
+        self._df = df
+
+    def __getattr__(self, name):
+        if name == "_jdf":
+            raise AttributeError(name)
+        return getattr(self._df, name)
+
+
+def test_referential_check_without_the_jvm_handle(spark):
+    """Children without ``_jdf`` group by object identity instead of
+    raising: the same report, in the same order."""
+    from shaha_spark.operators.checks import referential_check
+
+    rows = referential_check(_three_relations(spark, _NoJvmHandle)).collect()
+    assert [tuple(r) for r in rows] == [
+        ("a->p", 2, 1, False),
+        ("a->p2", 2, 2, False),
+        ("b->p", 3, 1, False),
+    ]

@@ -253,3 +253,53 @@ def test_forget_crash_recovery_keeps_history(spark, tmp_path, monkeypatch):
     assert old.count() == 299
     assert old.where(F.col("hash") == gone).count() == 0
     _assert_sidecar_matches_data(spark, out)
+
+
+@pytest.mark.parametrize("form", ["manifest", "final"])
+def test_recovered_swap_keeps_the_file_index(spark, tmp_path, monkeypatch, form):
+    """A crashed swap finished by recovery leaves the index exact: the
+    manifest form writes the sidecar it carries, the older ``final``
+    form rebuilds the index from its listing."""
+    import json
+
+    from _hashdb_index import assert_index_exact, assert_lookups_match_directory
+
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    if form == "manifest":
+        restore = _fail_renames(monkeypatch, _publish_of("forget"))
+        with pytest.raises(IOError, match="rolls the swap forward"):
+            forget_digests(spark, out, [hashlib.sha256(b"word0123").digest()])
+        restore()
+    else:
+        victim = sorted(p for p, _ in io_util.list_files(spark, out))[0]
+        d = os.path.dirname(victim)
+        incoming = f"{d}/_incoming-slice-cafebabe.zstd.parquet"
+        assert io_util.rename(spark, victim, incoming)
+        io_util.write_text(
+            spark, incoming + MANIFEST_SUFFIX,
+            json.dumps({"originals": [victim], "final": f"{d}/slice-cafebabe.zstd.parquet"}),
+        )
+    assert recover_slices(spark, out)["rolled_forward"] == 1
+    assert_index_exact(spark, out)
+    assert_lookups_match_directory(spark, out)
+
+
+def test_recovery_settles_a_cut_short_sidecar_write(spark, tmp_path):
+    """A sidecar write cut short leaves ``_shaha_meta.json.tmp``: beside
+    the old sidecar it is dropped; once the old one was deleted it is
+    complete, and recovery moves it into place."""
+    import json
+
+    out = _db(spark, tmp_path, words=30, num_files=1)
+    side = f"{out}/_shaha_meta.json"
+    meta = read_sidecar(spark, out)
+    io_util.write_text(spark, side + ".tmp", '{"total_records": ')
+    recover_slices(spark, out)
+    assert not io_util.exists(spark, side + ".tmp")
+    assert read_sidecar(spark, out) == meta
+
+    io_util.write_text(spark, side + ".tmp", json.dumps({**meta, "sources": ["new"]}))
+    io_util.delete(spark, side)
+    recover_slices(spark, out)
+    assert not io_util.exists(spark, side + ".tmp")
+    assert read_sidecar(spark, out)["sources"] == ["new"]
