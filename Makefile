@@ -11,8 +11,8 @@ test:  ## default (driver) lane — slow tier excluded via pytest.ini addopts
 test-slow:  ## the heavy lifecycle/invariance tier (index build/append/compact, CLI e2e, partitioning invariance) — the builder runs this every round
 	python -m pytest tests/ -x -q -m slow
 
-test-maint:  ## the maintenance verbs (append, compact, forget, snapshot) with their slow-lane crash tests
-	python -m pytest -m "" tests/test_append.py tests/test_compact.py tests/test_forget.py tests/test_snapshot.py tests/test_swap_safety.py tests/test_object_store.py
+test-maint:  ## the maintenance verbs (append, compact, forget, snapshot; the ANN index's append and compaction) with their slow-lane crash tests
+	python -m pytest -m "" tests/test_append.py tests/test_compact.py tests/test_forget.py tests/test_snapshot.py tests/test_swap_safety.py tests/test_object_store.py tests/test_ann_index.py
 
 test-all:  ## both lanes in one run (pre-round green check)
 	python -m pytest tests/ -x -q -m ""

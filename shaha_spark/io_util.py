@@ -28,19 +28,38 @@ def write_text(spark: SparkSession, path: str, content: str) -> None:
         out.close()
 
 
+def _checksummed(spark: SparkSession, fs) -> bool:
+    """Whether ``fs`` keeps client-side ``.crc`` checksum files beside
+    its files (Hadoop's local file system does)."""
+    return is_instance_of(
+        spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+    )
+
+
 def write_text_atomic(spark: SparkSession, path: str, content: str) -> None:
     """Write-then-rename so readers never observe a torn file — for
     commit markers (swap manifests) whose PRESENCE means "committed",
     and for the sidecar, which readers load while a verb replaces it: a
-    crash or a concurrent read sees the old content, the new content,
-    or no file, never partial JSON.
+    crash or a concurrent read sees the old content or the new, never
+    partial JSON.
 
-    The new content goes to ``<path>.tmp`` first. Where the file system
-    will not rename over an existing file (Hadoop's local and HDFS file
-    systems), the old file is deleted first; in that gap a reader finds
-    no file."""
+    The new content goes to ``<path>.tmp`` first. A file system with
+    checksum files will not rename over an existing file, so the rename
+    goes through its raw file system, which replaces the file in one
+    step; both checksum files are dropped first, so none disagrees with
+    its file (:func:`read_text` does not use them). Where even that
+    rename refuses to overwrite (HDFS), the old file is deleted first;
+    in that gap a reader finds no file."""
     tmp = path + ".tmp"
     write_text(spark, tmp, content)
+    fs, jpath = _fs_and_path(spark, path)
+    if _checksummed(spark, fs):
+        raw = fs.getRawFileSystem()
+        jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
+        raw.delete(fs.getChecksumFile(jtmp), False)
+        raw.delete(fs.getChecksumFile(jpath), False)
+        if raw.rename(jtmp, jpath):
+            return
     if not rename(spark, tmp, path):
         delete(spark, path)
         if not rename(spark, tmp, path):
@@ -52,12 +71,11 @@ def read_text(spark: SparkSession, path: str) -> str | None:
     """File contents, or None if the path does not exist.
 
     On a file system with client-side checksum files (Hadoop's local
-    one) the read bypasses them: a file replaced by
-    :func:`write_text_atomic` moves apart from its ``.crc`` file, and a
-    reader pairing one with the other would fail verification."""
+    one) the read bypasses them: :func:`write_text_atomic` drops the
+    checksum of the file it replaces."""
     fs, jpath = _fs_and_path(spark, path)
     gateway = spark.sparkContext._gateway
-    if is_instance_of(gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+    if _checksummed(spark, fs):
         fs = fs.getRawFileSystem()
     try:
         stream = fs.open(jpath)

@@ -21,6 +21,13 @@ not as a post-read filter. This module is that write path:
   (``PartitionFilters`` in the plan; asserted in tests). Candidates
   then join the (query → bucket) probe table so each query scores
   only ITS buckets, and exact cosine re-ranks.
+* :func:`append_to_ivf_index`, :func:`append_to_ivf_pq_index` and
+  :func:`compact_index` change the files after the build through
+  ``compact.replace_files``, the swap every hash-database rewrite uses,
+  recovered by ``compact.recover_and_list``. The index's state (row and
+  byte totals, staleness counters, the replay ledger) lives in the same
+  sidecar as the hash database's, ``_shaha_meta.json``, which the
+  swap's manifest carries: files and ledger commit together.
 
 Same determinism recipe as the rest of the ANN family: deterministic
 k-means, (sim DESC, id ASC) tiebreaks everywhere, cosine rounded to 6
@@ -32,22 +39,32 @@ tests assert.
 from __future__ import annotations
 
 import json
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io_util
+from ..pipeline import compact, snapshot
+from ..pipeline.build import put_sidecar, read_sidecar
 from .kmeans import kmeans_fit
 from .similarity import cosine_sim, cosine_sim_hoisted, dot, ivf_assign, norm2
 
 CENTROID_SIDECAR = "_ivf_centroids.json"
+#: where indexes written before the sidecar carried their state kept it
+#: (``.v{N}`` versions, or one unversioned file); read, never written
 APPEND_STATE_SIDECAR = "_append_state.json"
 #: appended/trained ratio at which a retrain is recommended: past this
 #: the coarse partition no longer reflects the corpus distribution and
 #: probe recall degrades (the sidecar records the drift; the caller
 #: owns the rebuild schedule, exactly like compaction)
 RETRAIN_RATIO = 0.5
+#: crash leftovers of the write protocols of older releases: sibling
+#: backup directories of compaction, and ledgered-append manifests in
+#: the root. Writers refuse to start on them (README, "Recovering an ANN
+#: index an older release left mid-write").
+_OLD_CRASH_SIBLINGS = (".__compact_bak__", ".__compact_old__")
+_OLD_CRASH_PREFIX = "_ingest_batch_"
 
 
 def build_ivf_index(
@@ -78,9 +95,7 @@ def build_ivf_index(
         json.dumps(cent_rows, sort_keys=True),
     )
     n = spark.read.parquet(path).count()
-    _write_append_state(
-        spark, path, {"trained_rows": n, "appended_rows": 0, "appends": 0}
-    )
+    _put_built_sidecar(spark, path, n)
     return {
         "path": path,
         "k": len(cent_rows),
@@ -88,64 +103,55 @@ def build_ivf_index(
     }
 
 
-def _write_append_state(
-    spark: SparkSession, path: str, state: dict[str, int]
-) -> None:
-    # versioned state files, monotone on the `appends` counter: write
-    # the NEW version (write-then-rename, never torn), then best-effort
-    # delete older versions. A crash between the two leaves several
-    # versions and readers take the max — there is no instant with NO
-    # committed state on disk, unlike the r10 delete-then-rename swap
-    # whose crash window zeroed trained_rows (r10 ADVICE). Concurrent
-    # appends are NOT serialized here — the caller owns serialization
-    # (the streaming ingest serializes by construction: one query,
-    # sequential micro-batches; batch callers must not overlap appends
-    # to one index).
-    base = path.rstrip("/") + "/" + APPEND_STATE_SIDECAR
-    version = int(state.get("appends", 0))
-    target = f"{base}.v{version}"
-    io_util.write_text_atomic(spark, target, json.dumps(state, sort_keys=True))
-    # listStatus returns scheme-qualified URIs — compare by VERSION,
-    # not by path string, so the just-written file is never deleted
-    for old, v in _state_versions(spark, path):
-        if v != version:
-            io_util.delete(spark, old)
-    # legacy single-file name from r10 indexes: superseded once a
-    # versioned file exists
-    if io_util.exists(spark, base):
-        io_util.delete(spark, base)
+def _put_built_sidecar(spark: SparkSession, path: str, n: int) -> None:
+    """A fresh build's sidecar: its ``n`` rows, all trained on, and the
+    bytes of its files."""
+    put_sidecar(
+        spark,
+        path,
+        {
+            "total_records": n,
+            "file_size_bytes": sum(sz for _, sz in snapshot.live_files(spark, path)),
+            "trained_rows": n,
+            "appends": 0,
+        },
+    )
 
 
-def _state_versions(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(file, version) of every committed ``_append_state.json.v{N}``
-    directly under the index root, unsorted."""
-    out: list[tuple[str, int]] = []
-    for p in io_util.list_children(spark, path.rstrip("/")):
-        # listStatus returns scheme-qualified URIs; match on basename
-        name = p.rsplit("/", 1)[-1]
-        if name.startswith(APPEND_STATE_SIDECAR + ".v"):
-            try:
-                out.append((p, int(name.rsplit(".v", 1)[1])))
-            except ValueError:
-                continue
-    return out
+def _state_of(meta: dict[str, Any]) -> dict[str, int]:
+    state = {
+        "trained_rows": meta["trained_rows"],
+        "appended_rows": meta["total_records"] - meta["trained_rows"],
+        "appends": meta["appends"],
+    }
+    if "last_batch_id" in meta:
+        state["last_batch_id"] = meta["last_batch_id"]
+    return state
 
 
 def load_append_state(spark: SparkSession, path: str) -> dict[str, int]:
-    """The staleness counter sidecar: rows the model artifacts were
-    trained on vs rows appended since. Reads the highest committed
-    version (crash during a state swap leaves the previous version
-    readable); falls back to the legacy unversioned r10 name, then to
-    never-appended for pre-r10 indexes."""
-    versions = _state_versions(spark, path)
-    if versions:
-        newest = max(versions, key=lambda pv: pv[1])[0]
-        txt = io_util.read_text(spark, newest)
-        if txt is not None:
-            return json.loads(txt)
-    txt = io_util.read_text(
-        spark, path.rstrip("/") + "/" + APPEND_STATE_SIDECAR
-    )
+    """The staleness counters: rows the model artifacts were trained on
+    vs rows appended since, the number of appends and, once an append
+    ran, the ``last_batch_id`` of the replay ledger. They live in the
+    index's sidecar (``_shaha_meta.json``), where ``appended_rows`` is
+    ``total_records - trained_rows``. An index written before the
+    sidecar carried them is read through its older state files."""
+    meta = read_sidecar(spark, path)
+    return _legacy_state(spark, path) if meta is None else _state_of(meta)
+
+
+def _legacy_state(spark: SparkSession, path: str) -> dict[str, int]:
+    """The highest ``_append_state.json.v{N}``, else the unversioned
+    file, else never-appended."""
+    root = path.rstrip("/")
+    prefix = APPEND_STATE_SIDECAR + ".v"
+    versions = {}
+    for child in io_util.list_children(spark, root):
+        name = child.rsplit("/", 1)[-1]
+        if name.startswith(prefix) and name[len(prefix):].isdigit():
+            versions[int(name[len(prefix):])] = child
+    newest = versions[max(versions)] if versions else f"{root}/{APPEND_STATE_SIDECAR}"
+    txt = io_util.read_text(spark, newest)
     if txt is None:
         return {"trained_rows": 0, "appended_rows": 0, "appends": 0}
     return json.loads(txt)
@@ -165,163 +171,82 @@ def _state_summary(path: str, state: dict, n_appended: int, skipped: bool) -> di
     }
 
 
-def _already_applied(state: dict, batch_id: int | None) -> bool:
-    """The replay ledger check: ``batch_id``s at or below the last one
-    whose state commit landed have already been folded in. ``None``
-    (no ledger — ad-hoc batch appends) never skips."""
-    if batch_id is None:
-        return False
-    return int(state.get("last_batch_id", -1)) >= int(batch_id)
+def _open_for_write(
+    spark: SparkSession, path: str
+) -> tuple[str, list[tuple[str, int]], dict[str, Any], dict[str, int]]:
+    """The entry of append and compaction: refuse a crash state an older
+    release left, finish or drop an interrupted swap
+    (``compact.recover_and_list``), and return the index's qualified
+    root, its live files, its sidecar and the recovery report.
+
+    An index from before the sidecar carried its state gets one made of
+    its older state files, a count and the listing; the first swap
+    writes it."""
+    base = path.rstrip("/")
+    leftovers = [base + s for s in _OLD_CRASH_SIBLINGS if io_util.exists(spark, base + s)]
+    leftovers += [
+        c for c in io_util.list_children(spark, base)
+        if c.rsplit("/", 1)[-1].startswith(_OLD_CRASH_PREFIX)
+    ]
+    if leftovers:
+        raise RuntimeError(
+            f"{path} was left mid-write by an older release ({leftovers}); "
+            "recover it by hand as the README describes (\"Recovering an "
+            "ANN index an older release left mid-write\"), then retry"
+        )
+    root, entries, recovered = compact.recover_and_list(spark, path)
+    live = snapshot.visible_files(root, entries)
+    meta = read_sidecar(spark, root)
+    if meta is None:
+        state = _legacy_state(spark, root)
+        n = spark.read.parquet(root).count()
+        meta = {
+            "total_records": n,
+            "file_size_bytes": sum(sz for _, sz in live),
+            "trained_rows": n - state["appended_rows"],
+            "appends": state["appends"],
+        }
+        if "last_batch_id" in state:
+            meta["last_batch_id"] = state["last_batch_id"]
+    return root, live, meta, recovered
 
 
-def _bump_append_state(
+def _append(
     spark: SparkSession,
     path: str,
-    state: dict,
-    n_batch: int,
+    encoded: Callable[[], DataFrame],
     batch_id: int | None,
-) -> dict[str, int]:
-    new_state = {
-        "trained_rows": int(state.get("trained_rows", 0)),
-        "appended_rows": int(state.get("appended_rows", 0)) + int(n_batch),
-        "appends": int(state.get("appends", 0)) + 1,
-        "last_batch_id": (
-            int(batch_id)
-            if batch_id is not None
-            else int(state.get("last_batch_id", -1))
-        ),
-    }
-    _write_append_state(spark, path, new_state)
-    return new_state
+) -> dict[str, Any]:
+    """The append of both index kinds: one ``compact.replace_files``
+    swap that adds the batch's files (``encoded()``, co-located per
+    bucket) and commits them together with the sidecar's counters and
+    ledger. A batch at or below the ledger's ``last_batch_id`` is
+    skipped whole.
 
-
-def _manifest_path(path: str, batch_id: int) -> str:
-    return path.rstrip("/") + f"/_ingest_batch_{int(batch_id)}.manifest.json"
-
-
-def _recover_ingest(spark: SparkSession, path: str, state: dict) -> int:
-    """Pre-commit-manifest recovery (VERDICT r11 #2): every ledgered
-    append stages its files and records the destination list in an
-    ``_ingest_batch_<id>.manifest.json`` sidecar BEFORE any file lands
-    in a live bucket. On entry to any append (or compaction), a
-    leftover manifest means a crash:
-
-    * ``batch_id`` ≤ the committed ``last_batch_id`` — the state
-      commit landed, only the manifest delete was lost: drop the
-      manifest, keep the files.
-    * ``batch_id`` > ``last_batch_id`` — the crash hit between
-      staging/moving and the state commit: delete every destination
-      file the manifest lists (whether or not the move reached it),
-      drop the staging tree, drop the manifest. The replay then
-      re-appends the batch cleanly — exactly-once, no residual window.
-
-    Runs ONLY on the serialized writer path (appends/compaction must
-    not overlap — the module's standing contract); a probe never
-    sweeps, so a live appender's in-flight manifest is never raced.
-    Returns the number of crashed batches swept (for tests/logs).
-    """
-    swept = 0
-    last = int(state.get("last_batch_id", -1))
-    for child in io_util.list_children(spark, path.rstrip("/")):
-        name = child.rsplit("/", 1)[-1]
-        if not (
-            name.startswith("_ingest_batch_")
-            and name.endswith(".manifest.json")
-        ):
-            continue
-        txt = io_util.read_text(spark, child)
-        manifest = json.loads(txt) if txt else {}
-        if int(manifest.get("batch_id", -1)) <= last:
-            io_util.delete(spark, child)  # committed; manifest is stale
-            continue
-        for dest in manifest.get("files", []):
-            io_util.delete(spark, dest)
-        if manifest.get("stage"):
-            io_util.delete(spark, manifest["stage"])
-        io_util.delete(spark, child)
-        swept += 1
-    return swept
-
-
-def _append_staged(
-    assigned: DataFrame, path: str, batch_id: int | None
-) -> None:
-    """Land an encoded/assigned batch in the live buckets.
-
-    ``batch_id is None`` (ad-hoc batch append, no replay possible):
-    plain ``mode("append")`` parquet write — Spark's commit protocol
-    already keeps partial task output invisible.
-
-    Ledgered appends write through a pre-commit manifest so a crash
-    anywhere before the state commit is swept by
-    :func:`_recover_ingest` and the replay lands exactly once:
-
-    1. stage the bucket-partitioned write into a SIBLING directory
-       (outside the index root — same reader-invisibility argument as
-       the compaction backups);
-    2. record the manifest: batch_id, staging dir, and the exact
-       destination path of every staged file (names are prefixed
-       ``b{batch_id}_`` so replays regenerate identical destinations);
-    3. move the files in (one rename per file — ≤ k files, the append
-       is bucket-co-located) and drop the staging tree.
-
-    The caller commits the state sidecar AFTER this returns, then
-    deletes the manifest — the state write is the single commit point.
-    """
-    spark = assigned.sparkSession
-    base = path.rstrip("/")
-    writer = (
-        assigned.repartition("centroid_id")
-        .write.option("compression", "zstd")
-        .partitionBy("centroid_id")
-    )
-    if batch_id is None:
-        writer.mode("append").parquet(path)
-        return
-    stage = base + f".__ingest_b{int(batch_id)}__"
-    io_util.delete(spark, stage)
-    manifest_file = _manifest_path(path, batch_id)
-    io_util.write_text_atomic(
+    Appends and compactions of one index must not overlap: the caller
+    serializes them (the streaming ingest does by construction, one
+    query of sequential micro-batches)."""
+    root, _, meta, _ = _open_for_write(spark, path)
+    last = meta.get("last_batch_id", -1)
+    if batch_id is not None and last >= batch_id:
+        return _state_summary(path, _state_of(meta), 0, True)
+    after = compact.replace_files(
         spark,
-        manifest_file,
-        json.dumps({"batch_id": int(batch_id), "stage": stage, "files": []}),
+        root,
+        [],
+        encoded().repartition("centroid_id"),
+        "append",
+        "retain",
+        {
+            **meta,
+            "appends": meta["appends"] + 1,
+            "last_batch_id": last if batch_id is None else int(batch_id),
+        },
+        partition_by="centroid_id",
+    )["sidecar"]
+    return _state_summary(
+        path, _state_of(after), after["total_records"] - meta["total_records"], False
     )
-    writer.mode("overwrite").parquet(stage)
-    moves: list[tuple[str, str]] = []
-    for bucket in io_util.list_children(spark, stage):
-        bname = bucket.rsplit("/", 1)[-1]
-        if not bname.startswith("centroid_id="):
-            continue
-        for f in io_util.list_children(spark, bucket):
-            fname = f.rsplit("/", 1)[-1]
-            if fname.endswith(".parquet"):
-                moves.append(
-                    (f, f"{base}/{bname}/b{int(batch_id)}_{fname}")
-                )
-    # replace v1 with the full file list; the delete→write gap is
-    # safe — nothing has moved yet, and a crash there just leaves the
-    # staging tree for this batch's own replay to overwrite
-    io_util.delete(spark, manifest_file)
-    io_util.write_text_atomic(
-        spark,
-        manifest_file,
-        json.dumps(
-            {
-                "batch_id": int(batch_id),
-                "stage": stage,
-                "files": sorted(d for _, d in moves),
-            }
-        ),
-    )
-    for src, dest in moves:
-        io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
-        if not io_util.rename(spark, src, dest):
-            raise IOError(
-                f"ingest move failed: {src} -> {dest}; manifest "
-                f"{manifest_file} will sweep the partial batch on the "
-                "next append"
-            )
-    io_util.delete(spark, stage)
 
 
 def load_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
@@ -433,51 +358,41 @@ def append_to_ivf_index(
     (shuffle-free over the batch), co-locate per bucket
     (``repartition(centroid_id)`` — the shuffle moves only the BATCH,
     and bounds the file growth to ≤ k files per append instead of
-    tasks × k), and ``mode("append")`` into the matching
-    ``centroid_id=`` partition directories. Readers are unaffected
-    mid-append at the semantic level probes rely on: a vector either
-    appears in its one correct bucket or not yet.
+    tasks × k), and add the files to the matching ``centroid_id=``
+    partition directories in one ``compact.replace_files`` swap, the
+    hash database's. A staged file is invisible to probes; the batch
+    becomes visible file by file as the swap publishes it.
 
-    Staleness: the append-state sidecar accumulates appended_rows /
-    trained_rows; past :data:`RETRAIN_RATIO` the summary flags
+    Staleness: the sidecar accumulates appended_rows / trained_rows;
+    past :data:`RETRAIN_RATIO` the summary flags
     ``retrain_recommended`` (the centroids no longer reflect the
     corpus — recall drifts; the caller owns the rebuild schedule).
     File-count growth across many appends is the normal small-file
-    problem — compact per partition on the same schedule
-    (pipeline/compact.py), independently of retraining.
+    problem — :func:`compact_index` on the same schedule,
+    independently of retraining.
 
     Correctness contract (driver-oracled, emb_ivf_index_append_topk):
     probing after build(base) + append(batch) is bit-identical to
     indexing base ∪ batch with centroids trained on base — append
     changes WHERE rows land and nothing about scoring.
 
-    Replay ledger (``batch_id``, r10 ADVICE): callers with a monotone
-    batch sequence — the streaming ingest's foreachBatch — pass the
-    batch id; a batch at or below the last committed ``last_batch_id``
-    is skipped whole (``skipped=True``, nothing written), so replaying
-    an already-committed batch is a no-op instead of a double append.
-    Ledgered appends are EXACTLY-once end to end (VERDICT r11 #2):
-    files land through a pre-commit manifest
-    (:func:`_append_staged`), so a crash anywhere between staging and
-    the state-sidecar commit is swept by :func:`_recover_ingest` on
-    the next append and the replay re-appends cleanly — no residual
-    duplication window. Until that next writer entry runs, a crashed
-    batch's already-moved files remain probe-visible (probes never
-    sweep — they must not race a live appender).
+    Replay ledger (``batch_id``): callers with a monotone batch
+    sequence — the streaming ingest's foreachBatch — pass the batch id;
+    a batch at or below the last committed ``last_batch_id`` is skipped
+    whole (``skipped=True``, nothing written), so replaying an
+    already-committed batch is a no-op instead of a double append. The
+    ledger rides the swap's manifest with the batch's files, so a
+    ledgered append is exactly-once: a crash before the manifest leaves
+    the index as it was and the replay appends once; a crash after it
+    is rolled forward by the next writer, and the replay is skipped.
     """
     spark = batch.sparkSession
-    state = load_append_state(spark, path)
-    _recover_ingest(spark, path, state)
-    if _already_applied(state, batch_id):
-        return _state_summary(path, state, 0, True)
-    cents = load_ivf_centroids(spark, path)
-    assigned = ivf_assign(batch, cents, vec_col=vec_col, id_col=id_col)
-    _append_staged(assigned, path, batch_id)
-    n_batch = batch.count()  # batch-sized scan, not an index rescan
-    state = _bump_append_state(spark, path, state, n_batch, batch_id)
-    if batch_id is not None:
-        io_util.delete(spark, _manifest_path(path, batch_id))
-    return _state_summary(path, state, n_batch, False)
+
+    def encoded() -> DataFrame:
+        cents = load_ivf_centroids(spark, path)
+        return ivf_assign(batch, cents, vec_col=vec_col, id_col=id_col)
+
+    return _append(spark, path, encoded, batch_id)
 
 
 PQ_CODEBOOK_SIDECAR = "_pq_codebooks.json"
@@ -561,9 +476,7 @@ def build_ivf_pq_index(
         json.dumps(book_rows, sort_keys=True),
     )
     n = spark.read.parquet(path).count()
-    _write_append_state(
-        spark, path, {"trained_rows": n, "appended_rows": 0, "appends": 0}
-    )
+    _put_built_sidecar(spark, path, n)
     # write-time quantization-quality signal (VERDICT r10 #6): flag
     # unclusterable corpora AT INGEST instead of at first bad query
     from .pq import pq_distortion
@@ -779,218 +692,76 @@ def append_to_ivf_pq_index(
     WITHOUT retraining: encode with the PERSISTED codebooks, assign
     with the PERSISTED coarse centroids (both sidecar round trips are
     exact — the same float32→JSON→float32 losslessness the probe path
-    relies on), co-locate per bucket and ``mode("append")`` into the
-    matching ``centroid_id=`` partitions. Neither kmeans nor PQ
-    training re-runs; the only data-proportional work is two
-    batch-sized scans (encode+assign, then the staleness count) and a
-    batch-sized narrow shuffle — at 100 TB corpus / 1 GB batch that is
-    the difference between an ingest tick and a full rebuild (measured
-    in bench.py: append ≪ rebuild at sf0.1).
+    relies on), co-locate per bucket and add the files to the matching
+    ``centroid_id=`` partitions in one swap. Neither kmeans nor PQ
+    training re-runs; the only data-proportional work is one
+    batch-sized scan (encode+assign, counted by the write itself) and
+    a batch-sized narrow shuffle — at 100 TB corpus / 1 GB batch that
+    is the difference between an ingest tick and a full rebuild
+    (measured in bench.py: append ≪ rebuild at sf0.1).
 
     Same staleness contract as :func:`append_to_ivf_index` — the
     sidecar accumulates drift, the summary flags
-    ``retrain_recommended`` past :data:`RETRAIN_RATIO`, and per-
-    partition compaction (pipeline/compact.py) owns the small-file
-    growth.
+    ``retrain_recommended`` past :data:`RETRAIN_RATIO`, and
+    :func:`compact_index` owns the small-file growth.
 
     Correctness contract (driver-oracled,
     emb_ivf_pq_index_append_topk): probing after build(base) +
     append(batch) is bit-identical to indexing base ∪ batch with
     centroids AND codebooks trained on base only.
 
-    Same replay ledger and exactly-once manifest protocol as
-    :func:`append_to_ivf_index` (VERDICT r11 #2): pass ``batch_id``
-    to make committed-batch replays a no-op AND crashed appends
-    sweepable — the pre-commit manifest closes the old
-    parquet-commit → state-commit duplication gap.
+    Same swap, replay ledger and exactly-once guarantee as
+    :func:`append_to_ivf_index`.
     """
     from .pq import pq_encode
 
     spark = batch.sparkSession
-    state = load_append_state(spark, path)
-    _recover_ingest(spark, path, state)
-    if _already_applied(state, batch_id):
-        return _state_summary(path, state, 0, True)
-    cents = load_ivf_centroids(spark, path)
-    books = load_pq_codebooks(spark, path)
-    assigned = ivf_assign(batch, cents, vec_col=vec_col, id_col=id_col)
-    coded = pq_encode(batch, books, vec_col=vec_col, id_col=id_col).join(
-        assigned.select(id_col, "centroid_id"), id_col
-    )
-    _append_staged(coded, path, batch_id)
-    n_batch = batch.count()  # batch-sized scan, not an index rescan
-    state = _bump_append_state(spark, path, state, n_batch, batch_id)
-    if batch_id is not None:
-        io_util.delete(spark, _manifest_path(path, batch_id))
-    return _state_summary(path, state, n_batch, False)
+
+    def encoded() -> DataFrame:
+        cents = load_ivf_centroids(spark, path)
+        books = load_pq_codebooks(spark, path)
+        assigned = ivf_assign(batch, cents, vec_col=vec_col, id_col=id_col)
+        return pq_encode(batch, books, vec_col=vec_col, id_col=id_col).join(
+            assigned.select(id_col, "centroid_id"), id_col
+        )
+
+    return _append(spark, path, encoded, batch_id)
 
 
-def _recover_compaction(spark: SparkSession, path: str) -> dict[str, int]:
-    """Entry-time crash recovery for :func:`compact_index` (r11
-    ADVICE, medium): a crash between the live→backup rename and the
-    compacted swap-in used to leave the live index silently missing a
-    bucket — and the old entry-time ``delete(bak_root)`` then
-    destroyed the only remaining copies before the row-count guard
-    could notice. Recovery now runs BEFORE any deletion:
-
-    * bucket mode: any ``.__compact_bak__/centroid_id=*`` whose live
-      counterpart is missing is renamed back into the index (the
-      backup IS the pre-compaction bucket — restoring it restores the
-      exact pre-crash data). Backups whose live bucket exists are
-      stale (crash after swap-in, before cleanup) and are dropped.
-    * snapshot mode: a whole-tree backup at ``.__compact_old__`` with
-      NO live index means the crash hit between the two top-level
-      renames — rename the backup back; with a live index present the
-      backup is post-swap leftover and is dropped.
-
-    Only after restoration are the backup root and the compacted temp
-    tree deleted. Returns counters for observability/tests.
-    """
-    base = path.rstrip("/")
-    restored = {"buckets_restored": 0, "tree_restored": 0}
-    old = base + ".__compact_old__"
-    if io_util.exists(spark, old):
-        if not io_util.exists(spark, base):
-            if not io_util.rename(spark, old, base):
-                raise IOError(
-                    f"compaction recovery: could not restore {base} from "
-                    f"{old} — manual restore needed, NOT proceeding"
-                )
-            restored["tree_restored"] = 1
-        else:
-            io_util.delete(spark, old)
-    bak_root = base + ".__compact_bak__"
-    if io_util.exists(spark, bak_root):
-        for child in io_util.list_children(spark, bak_root):
-            name = child.rsplit("/", 1)[-1]
-            if not name.startswith("centroid_id="):
-                continue
-            live = base + "/" + name
-            if not io_util.exists(spark, live):
-                if not io_util.rename(spark, child, live):
-                    raise IOError(
-                        f"compaction recovery: could not restore {live} "
-                        f"from {child} — manual restore needed"
-                    )
-                restored["buckets_restored"] += 1
-        io_util.delete(spark, bak_root)
-    io_util.delete(spark, base + ".__compact__")
-    return restored
-
-
-def compact_index(
-    spark: SparkSession, path: str, mode: str = "bucket"
-) -> dict[str, Any]:
-    """Per-partition file compaction for an appended index (VERDICT
-    r10 #7): every append adds ≤1 file per touched ``centroid_id=``
-    bucket, so a long append stream accumulates small files — the
-    normal small-file debt, owned by a compaction schedule independent
-    of retraining. Rewrites the corpus bucket-co-located (one file per
-    bucket), then swaps it under the live index; all sidecars
-    (centroids, codebooks, quality, append state) are untouched —
-    compaction is layout-only, and the probe result is bit-identical
+def compact_index(spark: SparkSession, path: str) -> dict[str, Any]:
+    """Per-partition file compaction for an appended index: every
+    append adds ≤1 file per touched ``centroid_id=`` bucket, so a long
+    append stream accumulates small files — the normal small-file debt,
+    owned by a compaction schedule independent of retraining. Rewrites
+    the corpus bucket-co-located (one file per bucket) and replaces
+    every live file with it in one ``compact.replace_files`` swap, the
+    one the appends use; a crash is finished or undone by the next
+    writer. The model sidecars and the staleness counters are untouched
+    — compaction is layout-only, and the probe result is bit-identical
     before/after (test-pinned).
 
-    Entry always runs :func:`_recover_compaction` FIRST (r11 ADVICE):
-    a previous crash's backups are restored before anything is
-    deleted, so no crash window can lose a bucket across a re-run.
-
-    ``mode="bucket"`` (default) swaps each bucket directory: rename
-    live bucket → sibling ``.__compact_bak__`` backup, rename
-    compacted in. The backup root is kept until EVERY bucket has
-    swapped, then dropped once — a crash at any point leaves each
-    bucket recoverable (live, backup, or compacted copy all exist).
-    Concurrent probes of the one bucket mid-swap can observe it
-    missing for the rename instant.
-
-    ``mode="snapshot"`` (VERDICT r11 #7) copies the sidecars into the
-    compacted tree and swaps the WHOLE index in two top-level renames
-    (live → ``.__compact_old__``, compacted → live). The
-    exposure shrinks from k per-bucket rename instants to one
-    double-rename instant for the root; a probe that already listed
-    its files keeps reading the renamed-aside tree on POSIX
-    filesystems. The crash window between the two renames leaves no
-    live root, which recovery restores from the whole-tree backup.
+    The rewrite must hold the sidecar's ``total_records`` rows, or the
+    swap is dropped before it commits. The report's ``recovered`` is
+    that of ``compact.recover_and_list``.
     """
-    if mode not in ("bucket", "snapshot"):
-        raise ValueError(f"mode must be 'bucket' or 'snapshot', got {mode!r}")
-    base = path.rstrip("/")
-    recovered = _recover_compaction(spark, path)
-    # a crashed ledgered append must be swept BEFORE the rewrite: its
-    # uncommitted rows would otherwise be compacted into the buckets,
-    # orphaning the manifest's file list and re-opening the replay-
-    # duplication hole (compaction shares the writers' serialization
-    # contract, so sweeping here never races a live appender)
-    _recover_ingest(spark, path, load_append_state(spark, path))
-    live_rows = spark.read.parquet(path).count()
-    files_before = len(io_util.list_files(spark, path, ".parquet"))
-    tmp = base + ".__compact__"
-    (
-        spark.read.parquet(path)
-        .repartition("centroid_id")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
+    root, live, meta, recovered = _open_for_write(spark, path)
+    manifest = compact.replace_files(
+        spark,
+        root,
+        live,
+        spark.read.parquet(root).repartition("centroid_id"),
+        "compact",
+        "retain",
+        {**meta, "total_records": 0, "file_size_bytes": 0},
+        partition_by="centroid_id",
+        expect_rows=meta["total_records"],
     )
-    new_rows = spark.read.parquet(tmp).count()
-    if new_rows != live_rows:
-        io_util.delete(spark, tmp)
-        raise RuntimeError(
-            f"compaction row mismatch: {live_rows} live vs {new_rows} "
-            "compacted — aborting before the swap"
-        )
-    # backups live OUTSIDE the index root: a crash-leftover backup
-    # inside it would join partition discovery (even underscore-
-    # prefixed directories with "=" in the name do, as
-    # CONFLICTING_PARTITION_COLUMN_NAMES) and break every probe; the
-    # sibling dir is invisible to readers and easy to sweep
-    if mode == "snapshot":
-        # carry every non-bucket sidecar into the compacted tree so the
-        # swapped-in root is self-complete (centroids, codebooks,
-        # quality, versioned append state, ingest manifests)
-        for child in io_util.list_children(spark, base):
-            name = child.rsplit("/", 1)[-1]
-            if name.startswith("centroid_id=") or name == "_SUCCESS":
-                continue
-            txt = io_util.read_text(spark, child)
-            if txt is not None:
-                io_util.write_text(spark, tmp + "/" + name, txt)
-        old = base + ".__compact_old__"
-        if not io_util.rename(spark, base, old):
-            io_util.delete(spark, tmp)
-            raise IOError(f"compaction: could not move {base} aside")
-        if not io_util.rename(spark, tmp, base):
-            restored = io_util.rename(spark, old, base)
-            raise IOError(
-                "compaction: could not swap compacted tree into place"
-                + ("" if restored else f"; MANUAL RESTORE NEEDED from {old}")
-            )
-        io_util.delete(spark, old)
-    else:
-        bak_root = base + ".__compact_bak__"
-        io_util.mkdirs(spark, bak_root)
-        for child in io_util.list_children(spark, tmp):
-            name = child.rsplit("/", 1)[-1]
-            if not name.startswith("centroid_id="):
-                continue
-            live = base + "/" + name
-            bak = bak_root + "/" + name
-            if io_util.exists(spark, live):
-                if not io_util.rename(spark, live, bak):
-                    raise IOError(f"compaction: could not back up {live}")
-            if not io_util.rename(spark, child, live):
-                raise IOError(f"compaction: could not swap in {live}")
-        # drop ALL backups only after EVERY bucket swapped in — until
-        # then each bucket exists in at least one of live/backup/tmp
-        io_util.delete(spark, bak_root)
-        io_util.delete(spark, tmp)
-    files_after = len(io_util.list_files(spark, path, ".parquet"))
+    files_after = len(manifest["staged"])
     return {
         "path": path,
-        "n_rows": int(live_rows),
-        "files_before": files_before,
+        "n_rows": manifest["sidecar"]["total_records"],
+        "files_before": len(live),
         "files_after": files_after,
-        "compacted": files_after < files_before,
-        **recovered,
+        "compacted": files_after < len(live),
+        "recovered": recovered,
     }

@@ -204,7 +204,7 @@ def write_hashdb(
     df: DataFrame,
     path: str,
     *,
-    partition_by_algorithm: bool = False,
+    partition_by: str | None = None,
 ) -> None:
     """Sorted ZSTD Parquet write with a native bloom filter on `hash`.
 
@@ -213,25 +213,26 @@ def write_hashdb(
     reader consults it for equality predicates on `hash`, giving the
     same point-lookup short-circuit without custom code (P1).
 
-    ``partition_by_algorithm=True`` lays the dataset out as Hive
+    ``partition_by="algorithm"`` lays the dataset out as Hive
     partitions ``algorithm=<name>/``, so algorithm-filtered queries
     prune whole directories (the reference keeps one mixed file and
     filters row-by-row, parquet.rs:551-553). Files stay hash-sorted
     within each partition: the range-repartition is hash-major, and the
-    per-task split by algorithm preserves row order.
+    per-task split by algorithm preserves row order. (The ANN index
+    writes its ``centroid_id=`` buckets through here too.)
 
-    One file is written per input partition; file-count sizing is the
-    caller's (``sort_for_write(num_files=)``).
+    One file is written per input partition and directory; file-count
+    sizing is the caller's (``sort_for_write(num_files=)``).
     """
     writer = df.write.mode("overwrite").options(**WRITE_OPTIONS)
-    if partition_by_algorithm:
-        writer = writer.partitionBy("algorithm")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
     writer.parquet(path)
 
 
 def is_algorithm_partitioned(files: list[tuple[str, int]]) -> bool:
     """Whether a database's ``(path, bytes)`` file listing uses the
-    ``algorithm=<name>/`` layout of ``write_hashdb(partition_by_algorithm=True)``.
+    ``algorithm=<name>/`` layout of ``write_hashdb(partition_by="algorithm")``.
     A rewrite of the whole dataset must keep that layout: silently
     flattening it would drop directory pruning for algorithm filters."""
     return any("/algorithm=" in p for p, _ in files)
@@ -484,6 +485,7 @@ def build(
         records = records.persist()
         sorted_records = sort_for_write(records, num_files=num_files, dedup=True)
         merged_hashes = [h for h in merged_hashes if h]
+        partition_by = "algorithm" if partition_by_algorithm else None
 
         if swap:
             # every live file is an original: the swap's sidecar starts
@@ -503,7 +505,7 @@ def build(
                     file_size_bytes=0,
                     files=[],
                 ),
-                partition_by_algorithm=partition_by_algorithm,
+                partition_by=partition_by,
             )
             total_records = manifest["sidecar"]["total_records"]
         else:
@@ -518,7 +520,7 @@ def build(
                 sorted_records.withColumn("sources", F.array(F.lit(source_name)))
                 .observe(obs, F.count(F.lit(1)).alias("n")),
                 output_path,
-                partition_by_algorithm=partition_by_algorithm,
+                partition_by=partition_by,
             )
             total_records = int(obs.get["n"])
             write_sidecar(

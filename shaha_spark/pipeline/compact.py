@@ -13,6 +13,11 @@ after a fresh build; :func:`recover_and_list` runs first in append, both
 compactions and forget, finishes a swap an earlier run committed, and
 lists the database once for the verb's planning. The planners read
 listings and footers, never data.
+
+The persistent ANN index (``operators/ann_index.py``), the repo's other
+on-disk store of Parquet files plus a sidecar, changes its files through
+the same swap and recovery: its appends add ``centroid_id=`` bucket
+files, and its compaction replaces them all.
 """
 
 from __future__ import annotations
@@ -99,7 +104,7 @@ def compact_hashdb(
         "compact",
         "retain",
         meta and {**meta, "total_records": 0, "file_size_bytes": 0, "files": []},
-        partition_by_algorithm=is_algorithm_partitioned(live),
+        partition_by="algorithm" if is_algorithm_partitioned(live) else None,
     )
     return {
         **plan,
@@ -304,29 +309,33 @@ def replace_files(
     sidecar: dict[str, Any] | None,
     *,
     rows: int | None = None,
-    partition_by_algorithm: bool = False,
+    partition_by: str | None = None,
+    expect_rows: int | None = None,
 ) -> dict[str, Any]:
-    """Replace ``originals``, ``(path, bytes)`` files of the database at
+    """Replace ``originals``, ``(path, bytes)`` files of the store at
     ``path``, with the files of ``df``, crash-safely; returns the
     committed manifest. The one swap protocol of every rewrite after a
-    fresh build (append, whole and slice compaction, forget):
+    fresh build, for the hash database (append, whole and slice
+    compaction, forget) and the ANN index (append, compaction):
 
     1. ``df`` is written to a hidden temp dir, one file per partition
-       (:func:`one_sorted_file` for a per-file replacement,
-       :func:`sort_for_write` for a whole rewrite, which may keep the
-       ``algorithm=`` layout). Each file is renamed to an ``_incoming-``
-       name beside the originals, or in its ``algorithm=`` directory;
-       the partition index ends the stem, so names sort in hash order.
-       ``df=None`` publishes nothing.
+       and ``partition_by`` directory (:func:`one_sorted_file` for a
+       per-file replacement, :func:`sort_for_write` for a whole
+       rewrite, which may keep the ``algorithm=`` layout). Each file is
+       renamed to an ``_incoming-`` name beside the originals, or in
+       its partition directory; the partition index ends the stem, so
+       names sort in hash order. ``df=None`` publishes nothing.
     2. Commit point: one manifest records the originals, the staged
        files, how the originals are disposed of (``dispose``, see
        :func:`snapshot.dispose`) and the sidecar after the swap:
-       ``sidecar`` describes the database without the originals, and
+       ``sidecar`` describes the store without the originals, and
        the swap adds the rows and bytes it publishes (None: no sidecar).
        ``rows`` is the row count of ``df`` when the caller knows it;
        otherwise the write job counts it. The sidecar's file index, if
        it has one, loses the originals and gains each published file's
-       entry, read from the staged file's footer.
+       entry, read from the staged file's footer. When ``expect_rows``
+       is given and the write counted other than that, the stage is
+       dropped and nothing commits.
     3. :func:`_finish` disposes of the originals, publishes the staged
        files and writes the sidecar; the temp dir and manifest go last.
 
@@ -336,9 +345,10 @@ def replace_files(
     root = path.rstrip("/")
     uid = uuid.uuid4().hex[:12]
     d = root
-    if originals and not partition_by_algorithm:
+    if originals and partition_by is None:
         d = originals[0][0].rsplit("/", 1)[0]  # beside the originals
     tmp = f"{d}/.__{stem_prefix}_{uid}__"
+    indexed = sidecar is not None and sidecar.get("files") is not None
     staged: list[list[str]] = []
     added = 0
     entries: list[dict[str, Any] | None] = []  # of the published files
@@ -346,7 +356,7 @@ def replace_files(
     if df is not None:
         if rows is None:
             df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_hashdb(df, tmp, partition_by_algorithm=partition_by_algorithm)
+        write_hashdb(df, tmp, partition_by=partition_by)
         for i, (part, size) in enumerate(sorted(io_util.list_files(spark, tmp))):
             sub = snapshot.rel_of(tmp, part).rpartition("/")[0]
             where = f"{d}/{sub}" if sub else d
@@ -360,15 +370,24 @@ def replace_files(
             staged.append([snapshot.rel_of(root, incoming), final])
             if snapshot.is_visible(final):
                 added += size
-                entries.append(index_entry(incoming, final, size))
+                if indexed:
+                    entries.append(index_entry(incoming, final, size))
     # a rewritten history copy adds no live rows
     if not (staged and snapshot.is_visible(staged[0][1])):
         rows = 0
     elif rows is None:
         rows = int(obs.get["n"])
+    if expect_rows is not None and rows != expect_rows:
+        for incoming, _ in staged:
+            io_util.delete(spark, f"{root}/{incoming}")
+        io_util.delete(spark, tmp)
+        raise RuntimeError(
+            f"{stem_prefix}: wrote {rows} rows where {expect_rows} were "
+            "expected; nothing was replaced"
+        )
     gone = [snapshot.rel_of(root, p) for p, _ in originals]
     after = adjusted(sidecar, rows, added)
-    if after is not None and after.get("files") is not None:
+    if indexed:
         kept = [e for e in after["files"] if e["path"] not in gone]
         after = with_index(
             after,

@@ -103,7 +103,8 @@ def _read_json(spark: SparkSession, p: str) -> Any | None:
 
 
 def _write_json(spark: SparkSession, p: str, obj: Any) -> None:
-    io_util.write_text(spark, p, json.dumps(obj, sort_keys=True))
+    # replaced whole: a crash mid-write must not leave the log unreadable
+    io_util.write_text_atomic(spark, p, json.dumps(obj, sort_keys=True))
 
 
 def _retained_map(spark: SparkSession, path: str) -> dict[str, str]:

@@ -39,6 +39,7 @@ scan. No crash state gives a worse answer than the directory read.
 
 from __future__ import annotations
 
+import math
 from typing import Any
 
 from pyspark.errors import AnalysisException
@@ -117,7 +118,9 @@ def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str] | None:
     None when there is no index or its sums disagree with the sidecar
     (rules 1 and 2 of the module docstring). When no file matches, one
     file is named anyway: the predicate empties it, at the cost of a
-    read that finds nothing, and the frame keeps its schema."""
+    read that finds nothing, and the frame keeps its schema. A file of
+    an ``algorithm=`` directory whose digests are shorter than
+    ``prefix`` is skipped: none of them starts with it."""
     files = meta.get("files")
     if (
         not files
@@ -130,10 +133,21 @@ def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str] | None:
         e["path"]
         for e in files
         if e["rows"]
+        and _digest_length(e["path"]) >= len(prefix)
         and bytes.fromhex(e["max"]) >= prefix
         and (upper is None or bytes.fromhex(e["min"]) < upper)
     ]
     return hit or [files[0]["path"]]
+
+
+def _digest_length(rel: str) -> float:
+    """Digest length of the rows of the db-relative file ``rel``: that of
+    its ``algorithm=<name>/`` directory, else unbounded."""
+    for seg in rel.split("/")[:-1]:
+        key, _, name = seg.partition("=")
+        if key == "algorithm" and name in DIGEST_LENGTHS:
+            return DIGEST_LENGTHS[name]
+    return math.inf
 
 
 def _index_read(

@@ -8,19 +8,19 @@ sidecar artifacts — no retrain ever on the ingest path.
 
 Delivery contract: foreachBatch is at-least-once, so the fold passes
 the micro-batch's ``batch_id`` into the append, which records the last
-committed id in the append-state sidecar and skips any replayed batch
-at or below it (``skipped=True`` in the summary). Since r12 the append
-itself is EXACTLY-once (VERDICT r11 #2): files land through a
-pre-commit manifest, so the old crash window — parquet committed,
-state sidecar not — is swept by the next append's recovery pass and
-the replay re-appends cleanly (see append_to_ivf_index /
-_recover_ingest in operators/ann_index.py; crash-injection tested for
-both index kinds).
+committed id in the index's sidecar and skips any replayed batch at or
+below it (``skipped=True`` in the summary). The append is EXACTLY-once:
+it adds the batch's files in one ``compact.replace_files`` swap whose
+manifest also carries that ledger entry, so the files and the entry
+commit together. A crash before the manifest leaves the index as it
+was and the replay appends once; a crash after it is rolled forward by
+the next writer, and the replay is skipped (see append_to_ivf_index in
+operators/ann_index.py; crash-injection tested for both index kinds).
 
 foreachBatch is the right tool (same rationale as
 streaming/build_stream.py): the append is an arbitrary batch
 transformation against persisted state (assign/encode through sidecar
-models + a partitioned parquet append + a sidecar state update), which
+models + one swap of the batch's files and the sidecar), which
 a plain streaming sink cannot express.
 
 Retraining stays OUT of the stream by design: the per-batch summary's

@@ -3,6 +3,9 @@ bucketed layout must (a) return bit-identical results to the in-plan
 ivf_topk under the same parameters, and (b) actually PRUNE — the
 probed read's plan carries a PartitionFilters predicate on
 centroid_id and unprobed bucket directories contribute no files.
+Appends and compaction change the files through the hash database's
+swap (compact.replace_files): a crash before or after its commit is
+replayed exactly once, and its leftovers are invisible to probes.
 """
 
 from __future__ import annotations
@@ -440,11 +443,15 @@ def test_append_ledger_skips_replayed_batch(spark, sf_dir, tmp_path):
         assert load_append_state(spark, path)["last_batch_id"] == 1
 
 
-def test_append_state_versioned_crash_safe(spark, sf_dir, tmp_path):
-    """State swaps are versioned (write new version, then delete old):
-    a crash between the two leaves several versions and the reader
-    takes the max — at no instant is there NO committed state, unlike
-    the r10 delete-then-rename whose gap zeroed trained_rows."""
+def test_append_state_rides_the_sidecar_and_reads_legacy_files(
+    spark, sf_dir, tmp_path
+):
+    """The staleness counters and the replay ledger live in the index's
+    sidecar, which the append's swap commits with the batch's files;
+    ``appended_rows`` is derived from its totals. An index written
+    before the sidecar carried them reads through its older versioned
+    (highest version wins) or unversioned state file, and its first
+    append writes the sidecar."""
     import json as _json
 
     from shaha_spark.operators.ann_index import (
@@ -452,28 +459,54 @@ def test_append_state_versioned_crash_safe(spark, sf_dir, tmp_path):
         append_to_ivf_index,
         load_append_state,
     )
+    from shaha_spark.pipeline.build import read_sidecar
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     base, batch = _split(emb)
+    n_base, n_batch = base.count(), batch.count()
     path = str(tmp_path / "ivf")
     build_ivf_index(base, path, k=4, iters=2)
     append_to_ivf_index(batch, path, batch_id=0)
 
-    versions = [
-        f for f in os.listdir(path)
-        if f.startswith(APPEND_STATE_SIDECAR + ".v")
-    ]
-    assert versions == [APPEND_STATE_SIDECAR + ".v1"]  # old v0 cleaned up
+    meta = read_sidecar(spark, path)
+    assert meta["total_records"] == n_base + n_batch
+    assert meta["trained_rows"] == n_base
+    assert (meta["appends"], meta["last_batch_id"]) == (1, 0)
+    assert meta["file_size_bytes"] == sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    assert load_append_state(spark, path) == {
+        "trained_rows": n_base,
+        "appended_rows": n_batch,
+        "appends": 1,
+        "last_batch_id": 0,
+    }
+    assert not [f for f in os.listdir(path) if f.startswith(APPEND_STATE_SIDECAR)]
 
-    # simulate the crash window: the superseded version survives next
-    # to the new one — load must take the max version
-    stale = dict(load_append_state(spark, path), appended_rows=0, appends=0)
-    with open(os.path.join(path, APPEND_STATE_SIDECAR + ".v0"), "w") as f:
-        f.write(_json.dumps(stale))
-    st = load_append_state(spark, path)
-    assert st["appends"] == 1 and st["appended_rows"] == batch.count()
+    # the same index as an older release left it: no sidecar, a stale
+    # and a current versioned state file
+    os.remove(os.path.join(path, "_shaha_meta.json"))
+    old = {"trained_rows": n_base, "appended_rows": n_batch, "appends": 1,
+           "last_batch_id": 0}
+    for v, state in ((0, {**old, "appended_rows": 0, "appends": 0}), (1, old)):
+        with open(os.path.join(path, f"{APPEND_STATE_SIDECAR}.v{v}"), "w") as f:
+            f.write(_json.dumps(state))
+    assert load_append_state(spark, path) == old
+    assert append_to_ivf_index(batch, path, batch_id=0)["skipped"]
+    s = append_to_ivf_index(batch, path, batch_id=1)
+    assert not s["skipped"] and s["n_appended"] == n_batch
+    assert load_append_state(spark, path) == {
+        "trained_rows": n_base,
+        "appended_rows": 2 * n_batch,
+        "appends": 2,
+        "last_batch_id": 1,
+    }
+    assert read_sidecar(spark, path)["total_records"] == n_base + 2 * n_batch
 
-    # legacy r10 single-file layout still reads (pre-versioning index)
+    # the unversioned file of the oldest indexes still reads
     legacy = str(tmp_path / "legacy")
     os.makedirs(legacy)
     with open(os.path.join(legacy, APPEND_STATE_SIDECAR), "w") as f:
@@ -630,149 +663,211 @@ def test_refine_reads_candidates_not_corpus(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" in plan
 
 
-def test_compaction_backup_leftover_is_reader_invisible(
-    spark, sf_dir, tmp_path
-):
-    """A crash between the per-bucket backup rename and its cleanup
-    leaves the bucket copy under the SIBLING `.__compact_bak__` dir —
-    outside the index root, so probes neither break on partition
-    discovery nor read the stale rows twice. (Planting it INSIDE the
-    root is not an option: even underscore-prefixed directories with
-    '=' in the name join partition discovery and raise
-    CONFLICTING_PARTITION_COLUMN_NAMES — measured, which is why the
-    backup lives outside.)"""
-    import shutil
+# ---- the swap: crash recovery of append and compaction --------------
 
-    from shaha_spark.operators.ann_index import (
-        build_ivf_pq_index,
-        ivf_pq_index_topk,
-    )
+
+def _fail_renames(monkeypatch, fails):
+    """Make ``io_util.rename`` report failure (return False, as
+    FileSystem.rename does) whenever ``fails(src, dst)`` says so."""
+    from shaha_spark import io_util
+
+    real = io_util.rename
+
+    def rename(spark_, src, dst):
+        return False if fails(src, dst) else real(spark_, src, dst)
+
+    monkeypatch.setattr(io_util, "rename", rename)
+    return lambda: monkeypatch.setattr(io_util, "rename", real)
+
+
+def _second_stage_of(verb):
+    """Matches the second rename of a written file to its ``_incoming-``
+    name: a crash before the manifest commits, one file already staged."""
+    seen = []
+
+    def fails(src, dst):
+        if os.path.basename(dst).startswith(f"_incoming-{verb}-"):
+            seen.append(dst)
+            return len(seen) == 2
+        return False
+
+    return fails
+
+
+def _publish_of(verb):
+    """Matches the rename that publishes a staged file: a crash after
+    the manifest committed."""
+    def fails(src, dst):
+        return os.path.basename(src).startswith(f"_incoming-{verb}-")
+
+    return fails
+
+
+def _probe(spark, path, qs, pq):
+    from shaha_spark.operators.ann_index import ivf_pq_index_topk
+
+    fn = ivf_pq_index_topk if pq else ivf_index_topk
+    return sorted(map(tuple, fn(spark, path, qs, nprobe=2, k_neighbors=5).collect()))
+
+
+def _leftovers(path):
+    return [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.startswith("_incoming-") or "/.__" in d
+    ]
+
+
+@pytest.mark.parametrize("pq", [False, True], ids=["ivf", "ivfpq"])
+def test_append_crash_replay_exactly_once(spark, sf_dir, tmp_path, monkeypatch, pq):
+    """A ledgered append killed before its swap commits (a stage rename
+    fails) or after (a publish rename fails), then replayed with the
+    same batch_id: the rows land exactly once, the probe equals a
+    never-crashed twin's, and a further replay is skipped. Before the
+    replay, the crashed append's staged files are invisible to probes."""
+    from shaha_spark.operators import ann_index as ai
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    path = str(tmp_path / "ivfpq")
-    build_ivf_pq_index(emb, path, k_coarse=4, m=4, k_sub=4, iters=2)
+    base = emb.filter(~(F.col("vec_id") % 10).isin(3, 7))
+    batches = [emb.filter(F.col("vec_id") % 10 == m) for m in (7, 3)]
+    build = ai.build_ivf_pq_index if pq else ai.build_ivf_index
+    append = ai.append_to_ivf_pq_index if pq else ai.append_to_ivf_index
+    kw = dict(k_coarse=4, m=4, k_sub=4, iters=2) if pq else dict(k=4, iters=2)
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    for p in (crashed, clean):
+        build(base, p, **kw)
+    for i, b in enumerate(batches):
+        append(b, clean, batch_id=i)
     qs = _queries(emb)
-    before = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
+    n = base.count()
 
-    # plant the crash artifact: a full bucket copy under the sibling
-    # backup root
-    bucket = next(
-        d for d in os.listdir(path) if d.startswith("centroid_id=")
-    )
-    bak_root = path + ".__compact_bak__"
-    os.makedirs(bak_root, exist_ok=True)
-    shutil.copytree(
-        os.path.join(path, bucket), os.path.join(bak_root, bucket)
-    )
-    after = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    assert after == before
+    for i, (b, fails) in enumerate(
+        zip(batches, (_second_stage_of("append"), _publish_of("append")))
+    ):
+        before = _probe(spark, crashed, qs, pq)
+        restore = _fail_renames(monkeypatch, fails)
+        with pytest.raises(IOError):
+            append(b, crashed, batch_id=i)
+        restore()
+        if i == 0:  # not committed: the index is as it was
+            assert _leftovers(crashed)
+            assert _probe(spark, crashed, qs, pq) == before
+            assert ai.load_append_state(spark, crashed).get("last_batch_id", -1) == -1
+        replay = append(b, crashed, batch_id=i)
+        # committed: the replay's recovery publishes the batch, the
+        # ledger then skips it
+        assert replay["skipped"] == (i == 1)
+        n += b.count()
+        assert spark.read.parquet(crashed).count() == n
+        assert spark.read.parquet(crashed).select("vec_id").distinct().count() == n
+        assert append(b, crashed, batch_id=i)["skipped"]
+        assert not _leftovers(crashed)
+
+    assert _probe(spark, crashed, qs, pq) == _probe(spark, clean, qs, pq)
+    assert ai.load_append_state(spark, crashed) == ai.load_append_state(spark, clean)
 
 
-def test_compact_crash_between_backup_and_swapin_recovers(
-    spark, sf_dir, tmp_path
+def test_compaction_crash_at_publish_rolls_forward(
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The r11 ADVICE data-loss window: a crash AFTER the live→backup
-    rename and BEFORE the compacted swap-in leaves the live index
-    missing that bucket, with the only copies in `.__compact_bak__`
-    and the compacted temp tree. Re-running compact_index must
-    RESTORE the bucket from the backup before deleting anything —
-    the old implementation deleted both siblings on entry and the
-    row-count guard then compared the degraded index to its own
-    rewrite, passing silently."""
-    import shutil
-
-    from shaha_spark.operators.ann_index import (
-        build_ivf_pq_index,
-        compact_index,
-        ivf_pq_index_topk,
-    )
-
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    path = str(tmp_path / "ivfpq")
-    build_ivf_pq_index(emb, path, k_coarse=4, m=4, k_sub=4, iters=2)
-    qs = _queries(emb)
-    before = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    rows_before = spark.read.parquet(path).count()
-
-    # simulate the crash state: one live bucket moved aside into the
-    # backup root (live missing it), a stale compacted temp tree left
-    bucket = next(
-        d for d in os.listdir(path) if d.startswith("centroid_id=")
-    )
-    bak_root = path + ".__compact_bak__"
-    os.makedirs(bak_root, exist_ok=True)
-    shutil.move(os.path.join(path, bucket), os.path.join(bak_root, bucket))
-    os.makedirs(path + ".__compact__", exist_ok=True)
-    assert spark.read.parquet(path).count() < rows_before  # degraded
-
-    summary = compact_index(spark, path)
-    assert summary["buckets_restored"] == 1
-    assert summary["n_rows"] == rows_before  # counted AFTER recovery
-    after = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    assert after == before
-    assert not os.path.exists(bak_root)
-    assert not os.path.exists(path + ".__compact__")
-
-
-def test_compact_snapshot_mode_roundtrip_and_crash_recovery(
-    spark, sf_dir, tmp_path
-):
-    """Snapshot-mode compaction (VERDICT r11 #7): whole-tree swap —
-    fewer files, bit-identical probes, sidecars and append state
-    carried into the swapped-in root; and the crash window between
-    the two top-level renames (no live root, whole-tree backup at
-    `.__compact_old__`) is restored on the next entry."""
-    import shutil
-
+    """A compaction whose publish rename fails has committed its swap:
+    the next compaction finishes it first, and the rows, the probe and
+    the staleness counters are those before the crash."""
     from shaha_spark.operators.ann_index import (
         append_to_ivf_pq_index,
         build_ivf_pq_index,
         compact_index,
-        ivf_pq_index_topk,
         load_append_state,
-        load_ivf_centroids,
-        load_pq_codebooks,
     )
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     base, batch = _split(emb)
     path = str(tmp_path / "ivfpq")
     build_ivf_pq_index(base, path, k_coarse=4, m=4, k_sub=4, iters=2)
-    for i, mod in enumerate((3, 5, 7)):
-        append_to_ivf_pq_index(
-            batch.filter(F.col("vec_id") % 11 == mod), path, batch_id=i
-        )
+    for i, mod in enumerate((3, 5)):
+        append_to_ivf_pq_index(batch.filter(F.col("vec_id") % 11 == mod), path, batch_id=i)
     qs = _queries(emb)
-    before = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    cents_before = sorted(map(tuple, load_ivf_centroids(spark, path).collect()))
-    state_before = load_append_state(spark, path)
+    before = _probe(spark, path, qs, True)
+    rows = spark.read.parquet(path).count()
+    state = load_append_state(spark, path)
 
-    summary = compact_index(spark, path, mode="snapshot")
-    assert summary["compacted"]
-    assert summary["files_after"] < summary["files_before"]
-    assert not os.path.exists(path + ".__compact_old__")
-    assert not os.path.exists(path + ".__compact__")
+    restore = _fail_renames(monkeypatch, _publish_of("compact"))
+    with pytest.raises(IOError, match="rolls the swap forward"):
+        compact_index(spark, path)
+    restore()
 
-    after = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    assert after == before
-    assert sorted(
-        map(tuple, load_ivf_centroids(spark, path).collect())
-    ) == cents_before
-    assert load_pq_codebooks(spark, path).count() > 0
-    assert load_append_state(spark, path) == state_before
+    summary = compact_index(spark, path)
+    assert summary["recovered"] == {"rolled_forward": 1, "dropped_stages": 0}
+    assert summary["n_rows"] == rows
+    assert spark.read.parquet(path).count() == rows
+    assert _probe(spark, path, qs, True) == before
+    assert load_append_state(spark, path) == state
+    assert not _leftovers(path)
 
-    # crash between the two top-level renames: live root gone, backup
-    # holds the whole tree — the next compaction entry restores it
-    shutil.move(path, path + ".__compact_old__")
-    assert not os.path.exists(path)
-    summary2 = compact_index(spark, path)
-    assert summary2["tree_restored"] == 1
-    restored = sorted(map(tuple, ivf_pq_index_topk(
-        spark, path, qs, nprobe=2, k_neighbors=5).collect()))
-    assert restored == before
+
+def test_swap_leftovers_are_probe_invisible(spark, sf_dir, tmp_path):
+    """What a crashed swap leaves inside the index root — a temp dir
+    ``.__compact_<id>__`` holding bucket directories, an ``_incoming-``
+    file staged in a bucket — joins neither partition discovery nor a
+    probe; the next writer drops both."""
+    import shutil
+
+    from shaha_spark.operators.ann_index import (
+        build_ivf_pq_index,
+        compact_index,
+    )
+
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    path = str(tmp_path / "ivfpq")
+    build_ivf_pq_index(emb, path, k_coarse=4, m=4, k_sub=4, iters=2)
+    qs = _queries(emb)
+    before = _probe(spark, path, qs, True)
+    rows = spark.read.parquet(path).count()
+
+    bucket = next(d for d in os.listdir(path) if d.startswith("centroid_id="))
+    part = next(
+        f for f in os.listdir(os.path.join(path, bucket)) if f.endswith(".parquet")
+    )
+    temp = os.path.join(path, ".__compact_0123456789ab__")
+    shutil.copytree(os.path.join(path, bucket), os.path.join(temp, bucket))
+    shutil.copy(
+        os.path.join(path, bucket, part),
+        os.path.join(path, bucket, "_incoming-compact-0123456789ab-00000.zstd.parquet"),
+    )
+    assert _probe(spark, path, qs, True) == before
+    assert spark.read.parquet(path).count() == rows
+
+    summary = compact_index(spark, path)
+    assert summary["recovered"] == {"rolled_forward": 0, "dropped_stages": 1}
+    assert summary["n_rows"] == rows
+    assert not _leftovers(path)
+    assert _probe(spark, path, qs, True) == before
+
+
+@pytest.mark.parametrize(
+    "leftover", ["_ingest_batch_3.manifest.json", ".__compact_bak__", ".__compact_old__"]
+)
+def test_an_older_release_crash_state_is_refused(spark, sf_dir, tmp_path, leftover):
+    """The crash states only older releases' write protocols left (an
+    ingest manifest in the root, a compaction backup beside it) are not
+    healed: append and compaction raise, naming the README's manual
+    recovery, and change nothing."""
+    from shaha_spark.operators.ann_index import append_to_ivf_index, compact_index
+
+    path = str(tmp_path / "ivf")
+    os.makedirs(path)
+    if leftover.startswith("_"):
+        marker = os.path.join(path, leftover)
+        with open(marker, "w") as f:
+            f.write('{"batch_id": 3, "stage": "", "files": []}')
+    else:
+        marker = path + leftover
+        os.makedirs(marker)
+    batch = _emb(spark, sf_dir).select("vec_id", "embedding")
+    with pytest.raises(RuntimeError, match="README"):
+        append_to_ivf_index(batch, path, batch_id=4)
+    with pytest.raises(RuntimeError, match="README"):
+        compact_index(spark, path)
+    assert os.path.exists(marker)
+    assert sorted(os.listdir(path)) == ([leftover] if leftover.startswith("_") else [])

@@ -298,9 +298,14 @@ def db16(spark, tmp_path_factory):
     return _sixteen_file_db(spark, str(tmp_path_factory.mktemp("db16") / "db"))
 
 
+@pytest.fixture(scope="module")
+def db16_by_algorithm(spark, tmp_path_factory):
+    return _sixteen_file_db(spark, str(tmp_path_factory.mktemp("db16a") / "db"), True)
+
+
 @pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "by-algorithm"])
-def test_fresh_build_indexes_every_file(spark, tmp_path, db16, partitioned):
-    db = _sixteen_file_db(spark, str(tmp_path / "db"), True) if partitioned else db16
+def test_fresh_build_indexes_every_file(spark, db16, db16_by_algorithm, partitioned):
+    db = db16_by_algorithm if partitioned else db16
     assert_index_exact(spark, db)
     assert_lookups_match_directory(spark, db)
 
@@ -310,6 +315,16 @@ def test_point_hit_reads_one_file(spark, db16):
     df = query(spark, db16, digest)
     assert len(df.inputFiles()) == 1
     assert [r.preimage for r in df.collect()] == ["w0123"]
+
+
+def test_partitioned_point_hit_reads_one_file(spark, db16_by_algorithm):
+    """On the ``algorithm=`` layout a sha256 hit skips the md5 files too,
+    although a 16-byte ``[min, max]`` can bracket the 32-byte digest: no
+    md5 digest starts with it."""
+    for word in (b"w0123", b"w0007", b"w0399"):
+        df = query(spark, db16_by_algorithm, hashlib.sha256(word).hexdigest())
+        assert len(df.inputFiles()) == 1
+        assert [r.preimage for r in df.collect()] == [word.decode()]
 
 
 def test_digest_below_every_file_reads_nothing(spark, db16):
@@ -360,8 +375,9 @@ def test_untrusted_index_reads_every_file(spark, tmp_path, db16, spoil):
 
 def test_sidecar_rewrite_never_shows_a_reader_a_torn_file(spark, tmp_path):
     """One thread rewrites the sidecar while another reads it: every
-    read returns a complete sidecar, or None in the instant the old one
-    is gone; an in-place rewrite let readers parse a truncated file."""
+    read returns a complete sidecar (an in-place rewrite would let
+    readers parse a truncated file; a delete-then-rename replace, find
+    none)."""
     import threading
 
     db = str(tmp_path / "db")
@@ -388,5 +404,4 @@ def test_sidecar_rewrite_never_shows_a_reader_a_torn_file(spark, tmp_path):
         writer.join(timeout=60)
     assert not writer.is_alive() and not errors
     assert len(writes) > 10
-    complete = [r for r in reads if r is not None]
-    assert complete and all(r["pad"] == meta["pad"] for r in complete)
+    assert all(r is not None and r["pad"] == meta["pad"] for r in reads)

@@ -126,131 +126,6 @@ def test_index_cache_staged_commit_race(sf_dir, tmp_path, monkeypatch):
     assert not os.path.exists(dead)
 
 
-# ------------------------------------ exactly-once ledgered appends
-
-
-def _crash_replay_scenario(spark, sf_dir, tmp_path, monkeypatch, pq):
-    """Kill the append between the file moves and the state commit,
-    then replay the same batch_id: row counts must be exactly-once
-    and the probe must match a never-crashed twin index."""
-    from shaha_spark.operators import ann_index as ai
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.filter(F.col("vec_id") % 10 != 7)
-    batch = emb.filter(F.col("vec_id") % 10 == 7)
-    build = ai.build_ivf_pq_index if pq else ai.build_ivf_index
-    append = ai.append_to_ivf_pq_index if pq else ai.append_to_ivf_index
-    probe = ai.ivf_pq_index_topk if pq else ai.ivf_index_topk
-    kw = dict(k_coarse=4, m=4, k_sub=4, iters=2) if pq else dict(k=4, iters=2)
-
-    crashed = str(tmp_path / "crashed")
-    clean = str(tmp_path / "clean")
-    build(base, crashed, **kw)
-    build(base, clean, **kw)
-    append(batch, clean, batch_id=0)
-
-    real_bump = ai._bump_append_state
-
-    def _crash(*a, **k):
-        raise RuntimeError("injected crash before state commit")
-
-    monkeypatch.setattr(ai, "_bump_append_state", _crash)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        append(batch, crashed, batch_id=0)
-    monkeypatch.setattr(ai, "_bump_append_state", real_bump)
-
-    # crash artifacts: manifest present, state NOT advanced
-    root_files = os.listdir(crashed)
-    assert any(f.startswith("_ingest_batch_0") for f in root_files)
-    assert ai.load_append_state(spark, crashed).get("last_batch_id", -1) == -1
-
-    summary = ai_replay = append(batch, crashed, batch_id=0)
-    assert not summary["skipped"]  # swept + re-appended, not skipped
-    n = spark.read.parquet(crashed).count()
-    n_ids = spark.read.parquet(crashed).select("vec_id").distinct().count()
-    assert n == base.count() + batch.count() == n_ids  # exactly once
-    assert not any(
-        f.startswith("_ingest_batch_") for f in os.listdir(crashed)
-    )
-
-    qs = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = sorted(map(tuple, probe(
-        spark, crashed, qs, nprobe=2, k_neighbors=5).collect()))
-    want = sorted(map(tuple, probe(
-        spark, clean, qs, nprobe=2, k_neighbors=5).collect()))
-    assert got == want
-
-    # a second replay of the committed batch is a pure no-op
-    again = append(batch, crashed, batch_id=0)
-    assert again["skipped"]
-    assert spark.read.parquet(crashed).count() == n
-
-
-@pytest.mark.slow  # heavy lifecycle tier -> `make test-slow` (VERDICT r12 #2)
-def test_ivf_append_crash_replay_exactly_once(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    _crash_replay_scenario(spark, sf_dir, tmp_path, monkeypatch, pq=False)
-
-
-@pytest.mark.slow  # heavy lifecycle tier -> `make test-slow` (VERDICT r12 #2)
-def test_ivf_pq_append_crash_replay_exactly_once(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    _crash_replay_scenario(spark, sf_dir, tmp_path, monkeypatch, pq=True)
-
-
-def test_ingest_recovery_sweeps_pre_move_crash(spark, sf_dir, tmp_path):
-    """A crash BEFORE any file move leaves only the v1 manifest and
-    the staging tree; recovery drops both and the replay appends
-    exactly once. A manifest for an already-committed batch (crash
-    after state commit, before manifest delete) is dropped WITHOUT
-    touching its files."""
-    import json as _json
-
-    from shaha_spark.operators import ann_index as ai
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.filter(F.col("vec_id") % 10 != 7)
-    batch = emb.filter(F.col("vec_id") % 10 == 7)
-    path = str(tmp_path / "ivf")
-    ai.build_ivf_index(base, path, k=4, iters=2)
-
-    # pre-move crash: v1 manifest + staging dir, nothing moved yet
-    stage = path + ".__ingest_b0__"
-    os.makedirs(stage)
-    with open(os.path.join(stage, "junk.txt"), "w") as f:
-        f.write("partial")
-    with open(os.path.join(path, "_ingest_batch_0.manifest.json"), "w") as f:
-        _json.dump({"batch_id": 0, "stage": stage, "files": []}, f)
-
-    summary = ai.append_to_ivf_index(batch, path, batch_id=0)
-    assert not summary["skipped"]
-    assert not os.path.exists(stage)
-    n = spark.read.parquet(path).count()
-    assert n == base.count() + batch.count()
-
-    # committed-batch manifest leftover: files must be kept
-    with open(os.path.join(path, "_ingest_batch_0.manifest.json"), "w") as f:
-        _json.dump(
-            {"batch_id": 0, "stage": stage, "files": ["/nonexistent"]}, f
-        )
-    swept = ai._recover_ingest(
-        spark, path, ai.load_append_state(spark, path)
-    )
-    assert swept == 0  # batch 0 is committed — manifest dropped, no sweep
-    assert spark.read.parquet(path).count() == n
-    assert not os.path.exists(
-        os.path.join(path, "_ingest_batch_0.manifest.json")
-    )
-
-
 # --------------------------------------------- public-suffix loader
 
 

@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from shaha_spark import io_util
 from shaha_spark.pipeline import snapshot as snap
 from shaha_spark.pipeline.build import build, read_hashdb, read_sidecar
-from shaha_spark.pipeline.compact import compact_hashdb, compact_slices
+from shaha_spark.pipeline.compact import compact_hashdb, compact_slices, recover_slices
 from shaha_spark.pipeline.forget import forget_preimages
 
 
@@ -225,6 +226,38 @@ def test_resolve_tolerates_corrupt_mapping(spark, tmp_path):
         raise AssertionError("expected FileNotFoundError")
     except FileNotFoundError:
         pass
+
+
+def test_torn_retained_map_write_keeps_history_readable(
+    spark, tmp_path, monkeypatch
+):
+    """A crash in the middle of writing ``retained.json`` leaves the
+    snapshot log readable: the map is replaced whole, so the old one
+    stands until the new one is complete (a torn map would make every
+    snapshot read raise ``JSONDecodeError``). Recovery then finishes
+    the interrupted swap."""
+    out = _db(spark, tmp_path, words=300, num_files=10)
+    before = _rows(read_hashdb(spark, out))
+    snap.snapshot_create(spark, out)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30, force=True)
+    snap.snapshot_create(spark, out)
+    real = io_util.write_text
+
+    def torn(spark_, path, content):
+        if "retained.json" in path:
+            real(spark_, path, content[: len(content) // 2])
+            raise IOError("crash mid-write")
+        real(spark_, path, content)
+
+    monkeypatch.setattr(io_util, "write_text", torn)
+    with pytest.raises(IOError, match="crash mid-write"):
+        compact_hashdb(spark, out, target_file_bytes=1 << 30, force=True)
+    monkeypatch.undo()
+
+    assert _rows(snap.read_snapshot(spark, out, 1)) == before
+    recover_slices(spark, out)
+    assert _rows(snap.read_snapshot(spark, out, 2)) == before
+    assert _rows(read_hashdb(spark, out)) == before
 
 
 def test_alias_cycle_reads_as_hole(spark, tmp_path):

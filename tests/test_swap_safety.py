@@ -303,3 +303,30 @@ def test_recovery_settles_a_cut_short_sidecar_write(spark, tmp_path):
     recover_slices(spark, out)
     assert not io_util.exists(spark, side + ".tmp")
     assert read_sidecar(spark, out)["sources"] == ["new"]
+
+
+def test_a_row_count_mismatch_commits_nothing(spark, tmp_path):
+    """``replace_files(expect_rows=)`` drops its stage and commits
+    nothing when the write counts other rows than expected (the ANN
+    index's compaction guard): data, sidecar and layout stay as they
+    were, with no staged file or temp dir left."""
+    from shaha_spark.pipeline.compact import replace_files
+
+    out = _db(spark, tmp_path, words=40, num_files=2)
+    root = io_util.qualify(spark, out)
+    before = _rows(read_hashdb(spark, out))
+    meta = read_sidecar(spark, out)
+    live = snap.live_files(spark, out)
+    with pytest.raises(RuntimeError, match="nothing was replaced"):
+        replace_files(
+            spark, root, live, read_hashdb(spark, out), "compact", "retain",
+            {**meta, "total_records": 0, "file_size_bytes": 0, "files": []},
+            expect_rows=41,
+        )
+    assert _rows(read_hashdb(spark, out)) == before
+    assert read_sidecar(spark, out) == meta
+    assert snap.live_files(spark, out) == live
+    assert not any(
+        os.path.basename(p).startswith("_incoming-") or "/.__" in p
+        for p, _ in io_util.list_files(spark, out, suffix=None)
+    )
