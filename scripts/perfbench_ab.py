@@ -9,7 +9,11 @@ seed list, the working tree on odd ones). Then, per workload and
 metric, it prints each side's median and quartiles and the number of
 pairs the working tree won; ties count for neither side. A gain holds
 when the working tree wins at least nine pairs in ten and its median
-beats the base's by more than the base's interquartile range.
+beats the base's by more than the base's interquartile range. For each
+end-to-end metric the last column says whether the working tree's
+median is within the metric's ``BENCHMARK.json`` bound of the base's:
+no worse, in the metric's ``better`` direction, than the bound times
+the base's median.
 
     python3 scripts/perfbench_ab.py --base HEAD~1 --seeds 1-10
     make perfbench-ab BASE=HEAD~1 SEEDS=1-10
@@ -75,31 +79,38 @@ def spread(values: list[float]) -> str:
     return f"{med:.4g} [{q1:.4g}, {q3:.4g}]"
 
 
-def better_is_lower() -> dict[str, bool]:
-    declared = json.loads((ROOT / "BENCHMARK.json").read_text())
+def declared() -> dict[str, tuple[bool, float | None]]:
+    """Per metric of ``BENCHMARK.json``: whether lower is better, and
+    the bound of an end-to-end metric (None for a per-layer one)."""
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     return {
-        m["name"]: m["better"] == "lower"
-        for m in declared["end_to_end"] + declared["per_layer"]
+        m["name"]: (m["better"] == "lower", m.get("bound"))
+        for m in spec["end_to_end"] + spec["per_layer"]
     }
 
 
 def report(workload: str, pairs: list[tuple[dict, dict]]) -> None:
-    lower = better_is_lower()
+    metrics = declared()
     failed = [sum(side["failed"] for side in sides) for sides in zip(*pairs)]
     print(f"\n== {workload}: {len(pairs)} pairs; failed base {failed[0]}, "
           f"change {failed[1]}")
     print(f"{'metric':40} {'base median [q1, q3]':>30} "
-          f"{'change median [q1, q3]':>30} {'ratio':>7} {'wins':>6}")
+          f"{'change median [q1, q3]':>30} {'ratio':>7} {'wins':>6} {'bound':>14}")
     names = sorted(set.intersection(*(set(r["metrics"]) for p in pairs for r in p)))
     for name in names:
         a = [p[0]["metrics"][name]["value"] for p in pairs]
         b = [p[1]["metrics"][name]["value"] for p in pairs]
-        sign = 1 if lower.get(name, True) else -1
+        lower, bound = metrics.get(name, (True, None))
+        sign = 1 if lower else -1
         wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
-        ma = statistics.median(a)
-        ratio = statistics.median(b) / ma if ma else float("nan")
+        ma, mb = statistics.median(a), statistics.median(b)
+        ratio = mb / ma if ma else float("nan")
+        held = ""
+        if bound is not None:  # how much worse the change is, against the bound
+            held = "within" if sign * (mb - ma) <= bound * abs(ma) else "OUTSIDE"
+            held = f"{held} {bound:g}"
         print(f"{name:40} {spread(a):>30} {spread(b):>30} {ratio:>7.3f} "
-              f"{wins:>3}/{len(pairs)}")
+              f"{wins:>3}/{len(pairs)} {held:>14}")
 
 
 def main() -> None:

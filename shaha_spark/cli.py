@@ -71,23 +71,18 @@ def _build_parser() -> argparse.ArgumentParser:
     spp.add_argument("provider")
 
     c = sub.add_parser(
-        "compact", help="merge small files, preserving the hash sort"
+        "compact", help="merge runs of small range-adjacent files in one swap"
     )
     c.add_argument("-d", "--database", required=True)
     c.add_argument(
         "--target-file-mb", type=int, default=128,
         help="target size per output file (default 128 MB)",
     )
-    c.add_argument("--force", action="store_true")
+    c.add_argument("--force", action="store_true", help="rewrite the whole database")
     c.add_argument("--dry-run", action="store_true", help="print the plan only")
     c.add_argument(
-        "--slices", action="store_true",
-        help="rewrite only fragmented hash-range slices instead of the "
-        "whole dataset (local filesystems; plans from footer metadata)",
-    )
-    c.add_argument(
         "--max-slices", type=int, default=None,
-        help="bound one maintenance run to the N worst slices",
+        help="bound one maintenance run to the N runs with the most files",
     )
 
     f = sub.add_parser(
@@ -345,41 +340,26 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         if args.command == "compact":
-            from shaha_spark.pipeline.compact import (
-                compact_hashdb,
-                compact_slices,
-                plan_compaction,
-                plan_slice_compaction,
-            )
+            from shaha_spark.pipeline.compact import compact_hashdb, plan_compaction
 
             target = args.target_file_mb * 1024 * 1024
             if args.dry_run:
-                if args.slices:
-                    plan = plan_slice_compaction(spark, args.database, target)
-                    plan["slices"] = [
-                        {"dir": s["dir"], "n_files": len(s["files"]), "bytes": s["bytes"]}
-                        for s in plan["slices"]
-                    ]
-                else:
-                    plan = plan_compaction(spark, args.database, target)
-                print(json.dumps(plan, indent=2))
-                return 0
-            if args.slices:
-                result = compact_slices(
-                    spark, args.database, target, max_slices=args.max_slices
-                )
-                result["slices"] = len(result.pop("slices", []))
+                out = plan_compaction(spark, args.database, target)
             else:
-                result = compact_hashdb(
-                    spark, args.database, target, force=args.force
+                out = compact_hashdb(
+                    spark, args.database, target,
+                    force=args.force, max_slices=args.max_slices,
                 )
-            print(json.dumps(result, indent=2))
+            out["slices"] = [
+                {"dir": s["dir"], "n_files": len(s["files"]), "bytes": s["bytes"]}
+                for s in out["slices"]
+            ]
+            print(json.dumps(out, indent=2))
             return 0
 
         if args.command == "forget":
             from shaha_spark.pipeline.forget import (
                 forget_digests,
-                forget_preimages,
                 plan_forget,
                 preimage_digests,
             )
@@ -403,29 +383,20 @@ def main(argv: list[str] | None = None) -> int:
             except ValueError as err:  # bad hex digest / unknown -a name
                 print(f"error: {err}", file=sys.stderr)
                 return 2
+            # one digest expansion (incl. the sidecar-missing scan
+            # fallback) for the plan and the run, and one forget of the
+            # union: a file both sets touch is rewritten once
+            if args.word:
+                digests += preimage_digests(
+                    spark, args.database, args.word,
+                    algorithms=args.algorithm,
+                )
             if args.dry_run:
-                # the SAME digest expansion as the real run (incl.
-                # the sidecar-missing scan fallback) — a dry-run
-                # must never claim a no-op for a run that deletes
-                if args.word:
-                    digests += preimage_digests(
-                        spark, args.database, args.word,
-                        algorithms=args.algorithm,
-                    )
                 plan = plan_forget(spark, args.database, digests)
                 plan.pop("candidates")
                 print(json.dumps(plan, indent=2))
                 return 0
-            report = {"rows_deleted": 0, "files_rewritten": 0, "files_dropped": 0}
-            if digests:
-                report = forget_digests(spark, args.database, digests)
-            if args.word:
-                r2 = forget_preimages(
-                    spark, args.database, args.word, algorithms=args.algorithm
-                )
-                for k in ("rows_deleted", "files_rewritten", "files_dropped"):
-                    report[k] = report.get(k, 0) + r2.get(k, 0)
-            print(json.dumps(report, indent=2))
+            print(json.dumps(forget_digests(spark, args.database, digests), indent=2))
             return 0
 
         if args.command == "sql":

@@ -24,10 +24,11 @@ not as a post-read filter. This module is that write path:
 * :func:`append_to_ivf_index`, :func:`append_to_ivf_pq_index` and
   :func:`compact_index` change the files after the build through
   ``compact.replace_files``, the swap every hash-database rewrite uses,
-  recovered by ``compact.recover_and_list``. The index's state (row and
-  byte totals, staleness counters, the replay ledger) lives in the same
-  sidecar as the hash database's, ``_shaha_meta.json``, which the
-  swap's manifest carries: files and ledger commit together.
+  under the same write lock and recovery (``compact.writing``). The
+  index's state (row and byte totals, staleness counters, the replay
+  ledger) lives in the same sidecar as the hash database's,
+  ``_shaha_meta.json``, which the swap's manifest carries: files and
+  ledger commit together.
 
 Same determinism recipe as the rest of the ANN family: deterministic
 k-means, (sim DESC, id ASC) tiebreaks everywhere, cosine rounded to 6
@@ -39,7 +40,8 @@ tests assert.
 from __future__ import annotations
 
 import json
-from typing import Any, Callable
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -171,13 +173,15 @@ def _state_summary(path: str, state: dict, n_appended: int, skipped: bool) -> di
     }
 
 
+@contextmanager
 def _open_for_write(
     spark: SparkSession, path: str
-) -> tuple[str, list[tuple[str, int]], dict[str, Any], dict[str, int]]:
+) -> Iterator[tuple[str, list[tuple[str, int]], dict[str, Any], dict[str, int]]]:
     """The entry of append and compaction: refuse a crash state an older
-    release left, finish or drop an interrupted swap
-    (``compact.recover_and_list``), and return the index's qualified
-    root, its live files, its sidecar and the recovery report.
+    release left, take the write lock and finish or drop an interrupted
+    swap (``compact.writing``), and yield the index's qualified root,
+    its live files, its sidecar and the recovery report; the lock is
+    released on exit.
 
     An index from before the sidecar carried its state gets one made of
     its older state files, a count and the listing; the first swap
@@ -194,21 +198,21 @@ def _open_for_write(
             "recover it by hand as the README describes (\"Recovering an "
             "ANN index an older release left mid-write\"), then retry"
         )
-    root, entries, recovered = compact.recover_and_list(spark, path)
-    live = snapshot.visible_files(root, entries)
-    meta = read_sidecar(spark, root)
-    if meta is None:
-        state = _legacy_state(spark, root)
-        n = spark.read.parquet(root).count()
-        meta = {
-            "total_records": n,
-            "file_size_bytes": sum(sz for _, sz in live),
-            "trained_rows": n - state["appended_rows"],
-            "appends": state["appends"],
-        }
-        if "last_batch_id" in state:
-            meta["last_batch_id"] = state["last_batch_id"]
-    return root, live, meta, recovered
+    with compact.writing(spark, path) as (root, entries, recovered):
+        live = snapshot.visible_files(root, entries)
+        meta = read_sidecar(spark, root)
+        if meta is None:
+            state = _legacy_state(spark, root)
+            n = spark.read.parquet(root).count()
+            meta = {
+                "total_records": n,
+                "file_size_bytes": sum(sz for _, sz in live),
+                "trained_rows": n - state["appended_rows"],
+                "appends": state["appends"],
+            }
+            if "last_batch_id" in state:
+                meta["last_batch_id"] = state["last_batch_id"]
+        yield root, live, meta, recovered
 
 
 def _append(
@@ -223,30 +227,29 @@ def _append(
     ledger. A batch at or below the ledger's ``last_batch_id`` is
     skipped whole.
 
-    Appends and compactions of one index must not overlap: the caller
-    serializes them (the streaming ingest does by construction, one
-    query of sequential micro-batches)."""
-    root, _, meta, _ = _open_for_write(spark, path)
-    last = meta.get("last_batch_id", -1)
-    if batch_id is not None and last >= batch_id:
-        return _state_summary(path, _state_of(meta), 0, True)
-    after = compact.replace_files(
-        spark,
-        root,
-        [],
-        encoded().repartition("centroid_id"),
-        "append",
-        "retain",
-        {
-            **meta,
-            "appends": meta["appends"] + 1,
-            "last_batch_id": last if batch_id is None else int(batch_id),
-        },
-        partition_by="centroid_id",
-    )["sidecar"]
-    return _state_summary(
-        path, _state_of(after), after["total_records"] - meta["total_records"], False
-    )
+    Appends and compactions of one index do not overlap: a second
+    writer finds the lock and raises."""
+    with _open_for_write(spark, path) as (root, _, meta, _):
+        last = meta.get("last_batch_id", -1)
+        if batch_id is not None and last >= batch_id:
+            return _state_summary(path, _state_of(meta), 0, True)
+        after = compact.replace_files(
+            spark,
+            root,
+            [],
+            encoded().repartition("centroid_id"),
+            "append",
+            "retain",
+            {
+                **meta,
+                "appends": meta["appends"] + 1,
+                "last_batch_id": last if batch_id is None else int(batch_id),
+            },
+            partition_by="centroid_id",
+        )["sidecar"]
+        return _state_summary(
+            path, _state_of(after), after["total_records"] - meta["total_records"], False
+        )
 
 
 def load_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
@@ -744,24 +747,24 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, Any]:
     swap is dropped before it commits. The report's ``recovered`` is
     that of ``compact.recover_and_list``.
     """
-    root, live, meta, recovered = _open_for_write(spark, path)
-    manifest = compact.replace_files(
-        spark,
-        root,
-        live,
-        spark.read.parquet(root).repartition("centroid_id"),
-        "compact",
-        "retain",
-        {**meta, "total_records": 0, "file_size_bytes": 0},
-        partition_by="centroid_id",
-        expect_rows=meta["total_records"],
-    )
-    files_after = len(manifest["staged"])
-    return {
-        "path": path,
-        "n_rows": manifest["sidecar"]["total_records"],
-        "files_before": len(live),
-        "files_after": files_after,
-        "compacted": files_after < len(live),
-        "recovered": recovered,
-    }
+    with _open_for_write(spark, path) as (root, live, meta, recovered):
+        manifest = compact.replace_files(
+            spark,
+            root,
+            live,
+            spark.read.parquet(root).repartition("centroid_id"),
+            "compact",
+            "retain",
+            {**meta, "total_records": 0, "file_size_bytes": 0},
+            partition_by="centroid_id",
+            expect_rows=meta["total_records"],
+        )
+        files_after = len(manifest["staged"])
+        return {
+            "path": path,
+            "n_rows": manifest["sidecar"]["total_records"],
+            "files_before": len(live),
+            "files_after": files_after,
+            "compacted": files_after < len(live),
+            "recovered": recovered,
+        }

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import time
+from contextlib import ExitStack
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -359,31 +360,21 @@ def build(
     """End-to-end build (ref src/cli/build.rs:81-248). Returns the summary
     stats the reference prints at build.rs:234-248.
 
-    An append to an existing database merges against it and replaces
-    every live file through ``compact.replace_files``, after finishing
-    any swap an earlier run left committed."""
+    Over an existing database the build holds its write lock
+    (``compact.writing``) and replaces every live file through
+    ``compact.replace_files``, after finishing any swap an earlier run
+    left committed: an append merges against the database, a build
+    without ``append`` replaces it. Either way its layout and snapshot
+    history are kept, and a write that fails leaves it as it was."""
     resolve_hashers(algorithms)
-    swap = append and not dry_run and io_util.exists(spark, output_path)
-    lock_path = None
-    if swap:
-        # Serialize concurrent appends to the same output: two builds
-        # interleaving their read-merge-swap sequences would each merge
-        # against the same base and silently drop the other's records.
-        lock_path = output_path.rstrip("/") + ".__append_lock__"
-        if not io_util.create_marker(spark, lock_path):
-            raise RuntimeError(
-                f"another append to {output_path} appears to be in progress "
-                f"(lock file {lock_path} exists); if it is stale from a "
-                "crashed build, delete it and retry"
-            )
-    records = None
-    try:
+    swap = not dry_run and io_util.exists(spark, output_path)
+    with ExitStack() as held:
         if swap:
             from shaha_spark.pipeline import compact, snapshot
 
             # before the sidecar is read: a committed swap's sidecar
             # is written by its recovery
-            db, entries, _ = compact.recover_and_list(spark, output_path)
+            db, entries, _ = held.enter_context(compact.writing(spark, output_path))
             live = snapshot.visible_files(db, entries)
         existing_meta = read_sidecar(spark, output_path) if append else None
         if append and existing_meta is None and io_util.exists(spark, output_path):
@@ -452,13 +443,14 @@ def build(
         merged_hashes = [source_hash] if source_hash else []
         merged_algos = list(algorithms)
         if swap:
-            from shaha_spark.pipeline.append import append_merge
-
-            # appending to an algorithm-partitioned database must keep
-            # the layout: forgetting the flag here would silently flatten
+            # rewriting an algorithm-partitioned database must keep the
+            # layout: forgetting the flag here would silently flatten
             # algorithm= directories and drop pruning for every later
             # filtered query (compact_hashdb detects it the same way)
             partition_by_algorithm |= is_algorithm_partitioned(live)
+        if swap and append:
+            from shaha_spark.pipeline.append import append_merge
+
             existing = read_hashdb(spark, output_path)
             records = append_merge(
                 existing,
@@ -479,11 +471,18 @@ def build(
         # sample pass and the shuffle both read stored blocks instead
         # of hashing every word twice. Measured sf0.1: full
         # dedup+fanout+sort+write 2.05 → 1.62 s; at scale this removes
-        # one full digest pass per build/append. Unpersisted in the
-        # finally below so no blocks outlive the build (the r11 bench
-        # forensics found exactly this class of leak).
+        # one full digest pass per build/append. Unpersisted when the
+        # build returns or raises, so no blocks outlive it (the r11
+        # bench forensics found exactly this class of leak).
         records = records.persist()
+        held.callback(_unpersist, records)
         sorted_records = sort_for_write(records, num_files=num_files, dedup=True)
+        if not (swap and append):
+            # the constant sources column, attached post-shuffle (a
+            # projection: per-partition order holds)
+            sorted_records = sorted_records.withColumn(
+                "sources", F.array(F.lit(source_name))
+            )
         merged_hashes = [h for h in merged_hashes if h]
         partition_by = "algorithm" if partition_by_algorithm else None
 
@@ -495,7 +494,7 @@ def build(
                 db,
                 live,
                 sorted_records,
-                "append",
+                "append" if append else "build",
                 "retain",
                 sidecar_meta(
                     total_records=0,
@@ -511,14 +510,12 @@ def build(
         else:
             # total_records observed ON the write job itself
             # (CollectMetrics above the final sort) — no post-write
-            # read-back pass. The constant sources column is attached
-            # post-shuffle (a projection: per-partition order holds).
+            # read-back pass
             from pyspark.sql import Observation
 
             obs = Observation("build_total_records")
             write_hashdb(
-                sorted_records.withColumn("sources", F.array(F.lit(source_name)))
-                .observe(obs, F.count(F.lit(1)).alias("n")),
+                sorted_records.observe(obs, F.count(F.lit(1)).alias("n")),
                 output_path,
                 partition_by=partition_by,
             )
@@ -538,11 +535,10 @@ def build(
             "sources": sorted(set(merged_sources)),
             "output_path": output_path,
         }
-    finally:
-        if records is not None:
-            try:
-                records.unpersist()
-            except Exception:
-                pass  # never let cleanup mask the build's own error
-        if lock_path is not None:
-            io_util.delete(spark, lock_path)
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # never let cleanup mask the build's own error

@@ -3,21 +3,22 @@ every rewrite goes through.
 
 Every streaming micro-batch or incremental append adds files; at 100 TB
 thousands of small parquet files cost every query (task-per-file
-scheduling, footer reads, lost row-group locality). Compaction rewrites
-the dataset, whole (:func:`compact_hashdb`, the build's own range sort)
-or one hash-range slice at a time (:func:`compact_slices`), into
-size-targeted files that keep the global hash sort lookups rely on.
+scheduling, footer reads, lost row-group locality). Compaction
+(:func:`compact_hashdb`) merges runs of small range-adjacent files, or
+with ``force`` rewrites the database whole, into size-targeted files
+that keep the global hash sort lookups rely on, and commits every run
+in one swap. Its planner reads the sidecar's file index, never data.
 
 :func:`replace_files` is the only way a database's Parquet files change
-after a fresh build; :func:`recover_and_list` runs first in append, both
-compactions and forget, finishes a swap an earlier run committed, and
-lists the database once for the verb's planning. The planners read
-listings and footers, never data.
+after a fresh build. :func:`writing` holds the database's write lock
+around every verb that changes it and runs :func:`recover_and_list`
+first, which finishes a swap an earlier run committed and lists the
+database once for the verb's planning.
 
 The persistent ANN index (``operators/ann_index.py``), the repo's other
 on-disk store of Parquet files plus a sidecar, changes its files through
-the same swap and recovery: its appends add ``centroid_id=`` bucket
-files, and its compaction replaces them all.
+the same lock, swap and recovery: its appends add ``centroid_id=``
+bucket files, and its compaction replaces them all.
 """
 
 from __future__ import annotations
@@ -26,7 +27,10 @@ import json
 import math
 import re
 import uuid
-from typing import Any
+from collections import defaultdict
+from contextlib import contextmanager
+from functools import reduce
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -36,13 +40,12 @@ from shaha_spark.pipeline import snapshot
 from shaha_spark.pipeline.build import (
     is_algorithm_partitioned,
     put_sidecar,
-    read_hashdb,
     read_sidecar,
     sort_for_write,
     with_index,
     write_hashdb,
 )
-from shaha_spark.schema import SIDECAR_NAME
+from shaha_spark.schema import HASH_DB_SCHEMA, SIDECAR_NAME
 
 #: default target size per output file (pre-compression bytes on disk)
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -53,23 +56,76 @@ def plan_compaction(
     path: str,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
 ) -> dict[str, Any]:
-    """Metadata-only compaction plan: current layout vs target.
+    """Metadata-only plan of :func:`compact_hashdb` without ``force``:
+    the layout (``n_files``, ``total_bytes``, ``target_files`` at
+    ``target_file_bytes``) and the runs (``slices``) it would rewrite;
+    ``needed`` when there is one."""
+    root = io_util.qualify(spark, path)
+    live = snapshot.live_files(spark, root)
+    return _plan(root, live, live_sidecar(spark, root, live), target_file_bytes, False)
 
-    ``needed`` is True when the file count exceeds what the total size
-    justifies at ``target_file_bytes`` — i.e. the dataset is fragmented,
-    not merely large.
-    """
-    return _plan_whole(snapshot.live_files(spark, path), target_file_bytes)
 
-
-def _plan_whole(files: list[tuple[str, int]], target_file_bytes: int) -> dict[str, Any]:
-    total = sum(sz for _, sz in files)
+def _plan(
+    root: str,
+    live: list[tuple[str, int]],
+    meta: dict[str, Any] | None,
+    target_file_bytes: int,
+    force: bool,
+) -> dict[str, Any]:
+    """The runs of one compaction of ``live``, the files of the database
+    at ``root`` with sidecar ``meta``, ranged by its index or the footers.
+    Per directory (``algorithm=`` partitions interleave in range), a run
+    is a maximal sequence of range-adjacent files, each under the target
+    and together at most 1.5 times it; runs of two or more merge into one
+    file. With ``force``, or with no ranges known and more files than
+    ``ceil(bytes / target)``, the whole database is one run, rewritten as
+    that many files (``rows`` None without an index)."""
+    index = meta.get("files") if meta else file_index(root, live)
+    entries = {e["path"]: e for e in index or []}
+    total = sum(sz for _, sz in live)
     target_files = max(1, math.ceil(total / target_file_bytes))
+    whole = force or index is None
+    if whole:
+        runs = [live] if live and (force or len(live) > target_files) else []
+    else:
+        runs = []
+        by_dir: dict[str, list[tuple[str, str, int]]] = defaultdict(list)
+        for p, sz in live:
+            lo = entries[snapshot.rel_of(root, p)]["min"]  # hex: orders as bytes
+            if lo is not None:
+                by_dir[p.rpartition("/")[0]].append((lo, p, sz))
+        for d in sorted(by_dir):
+            runs.append([])
+            run_bytes = 0
+            for _, p, sz in sorted(by_dir[d]):
+                if sz >= target_file_bytes or run_bytes + sz > target_file_bytes * 1.5:
+                    runs.append([])
+                    run_bytes = 0
+                if sz < target_file_bytes:
+                    runs[-1].append((p, sz))
+                    run_bytes += sz
+        runs = [r for r in runs if len(r) >= 2]
+    slices = [
+        {
+            "dir": root if whole else run[0][0].rpartition("/")[0],
+            "files": run,
+            "bytes": sum(sz for _, sz in run),
+            "rows": None if index is None else sum(
+                entries[snapshot.rel_of(root, p)]["rows"] for p, _ in run
+            ),
+            "whole": whole,
+        }
+        for run in runs
+    ]
     return {
-        "n_files": len(files),
+        "n_files": len(live),
         "total_bytes": total,
         "target_files": target_files,
-        "needed": len(files) > target_files,
+        "needed": bool(slices),
+        "n_slices": len(slices),
+        "slice_files": sum(len(s["files"]) for s in slices),
+        "slice_bytes": sum(s["bytes"] for s in slices),
+        "slices": slices,
     }
 
 
@@ -78,46 +134,64 @@ def compact_hashdb(
     path: str,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     force: bool = False,
+    max_slices: int | None = None,
 ) -> dict[str, Any]:
-    """Rewrite ``path`` into ``target_files`` hash-sorted files.
-
-    No-op (returns the plan with ``compacted=False``) unless the plan
-    says fragmentation exists or ``force`` is set. The rewrite replaces
-    every live file in one :func:`replace_files` swap: originals a
-    snapshot references are retained, the sidecar's logical metadata
-    (algorithms, sources) carries over, and its ``total_records`` and
-    ``file_size_bytes`` are those of the files written. An
-    ``algorithm=`` layout is kept.
-    """
-    path, entries, recovered = recover_and_list(spark, path)
-    live = snapshot.visible_files(path, entries)
-    plan = _plan_whole(live, target_file_bytes)
-    if not plan["needed"] and not force:
-        return {**plan, "compacted": False, "recovered": recovered}
-
-    meta = read_sidecar(spark, path)
-    manifest = replace_files(
-        spark,
-        path,
-        live,
-        sort_for_write(read_hashdb(spark, path), num_files=plan["target_files"]),
-        "compact",
-        "retain",
-        meta and {**meta, "total_records": 0, "file_size_bytes": 0, "files": []},
-        partition_by="algorithm" if is_algorithm_partitioned(live) else None,
-    )
+    """Merge the runs :func:`plan_compaction` plans for ``path`` or, with
+    ``force``, rewrite it whole by the build's range sort; ``max_slices``
+    bounds one call to the runs with the most files. Every run, read with
+    ``basePath`` (a partition column survives), replaces its files in one
+    :func:`replace_files` swap that retains what snapshots reference.
+    Returns the plan with ``compacted``, ``slices_compacted``,
+    ``files_after`` (live files after) and ``recovered``."""
+    with writing(spark, path) as (root, entries, recovered):
+        live = snapshot.visible_files(root, entries)
+        meta = live_sidecar(spark, root, live)
+        plan = _plan(root, live, meta, target_file_bytes, force)
+        slices = plan["slices"]
+        worst = sorted(range(len(slices)), key=lambda i: -len(slices[i]["files"]))
+        todo = [slices[i] for i in sorted(worst[:max_slices])]  # in range order
+        files_after = len(live)
+        if todo:
+            gone = [f for s in todo for f in s["files"]]
+            rows = None if todo[0]["rows"] is None else sum(s["rows"] for s in todo)
+            sidecar = adjusted(meta, -(rows or 0), -sum(s["bytes"] for s in todo))
+            if rows is None and sidecar:  # the whole database, counted by its write
+                sidecar["total_records"] = 0
+            df = reduce(
+                DataFrame.unionByName,
+                [_run_frame(spark, root, s, target_file_bytes) for s in todo],
+            )
+            layout = "algorithm" if is_algorithm_partitioned(live) else None
+            if layout:  # else the write re-sorts by its partition column alone
+                df = df.sortWithinPartitions(layout, "hash")
+            # a union of one-partition frames would otherwise run as one
+            # partition (spark.sql.unionOutputPartitioning), one file
+            zips = spark.conf.get("spark.sql.unionOutputPartitioning", "true")
+            spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+            try:
+                manifest = replace_files(
+                    spark, root, gone, df, "compact", "retain", sidecar,
+                    rows=rows, partition_by=layout,
+                )
+            finally:
+                spark.conf.set("spark.sql.unionOutputPartitioning", zips)
+            files_after += len(manifest["staged"]) - len(gone)
     return {
         **plan,
-        "compacted": True,
-        "files_after": len(manifest["staged"]),
+        "compacted": bool(todo),
+        "slices_compacted": len(todo),
+        "files_after": files_after,
         "recovered": recovered,
     }
 
 
-# ------------------------------------------------------------ slices
-
-#: a file under this share of the target size is "small" and may merge
-SMALL_FILE_RATIO = 0.5
+def _run_frame(
+    spark: SparkSession, root: str, run: dict[str, Any], target_file_bytes: int
+) -> DataFrame:
+    files = [p for p, _ in run["files"]]
+    df = spark.read.schema(HASH_DB_SCHEMA).option("basePath", root).parquet(*files)
+    n = max(1, math.ceil(run["bytes"] / target_file_bytes))
+    return sort_for_write(df, num_files=n) if run["whole"] else one_sorted_file(df)
 
 
 def hash_range(path: str) -> tuple[bytes | None, bytes | None, int]:
@@ -126,8 +200,7 @@ def hash_range(path: str) -> tuple[bytes | None, bytes | None, int]:
     when a row group has no statistics.
 
     Footers are read with pyarrow, so this needs a local filesystem; a
-    remote ``path`` raises ValueError (plan whole-dataset compaction
-    with :func:`plan_compaction` there instead)."""
+    remote ``path`` raises ValueError."""
     import pyarrow.parquet as pq
 
     if path.startswith("file:"):
@@ -135,10 +208,7 @@ def hash_range(path: str) -> tuple[bytes | None, bytes | None, int]:
     elif "://" not in path and not path.startswith("viewfs:"):
         local = path
     else:
-        raise ValueError(
-            f"footer planning needs local parquet footers, got {path}; "
-            "use plan_compaction/compact_hashdb for remote stores"
-        )
+        raise ValueError(f"footer planning needs local parquet footers, got {path}")
     md = pq.ParquetFile(local).metadata
     col_idx = md.schema.to_arrow_schema().names.index("hash")
     lo = hi = None
@@ -177,81 +247,8 @@ def file_index(
     """The sidecar index of ``files``, ``(path, bytes)`` of the
     database at ``root``, sorted by path; None if one file has no
     entry."""
-    out = []
-    for p, sz in files:
-        entry = index_entry(p, snapshot.rel_of(root, p), sz)
-        if entry is None:
-            return None
-        out.append(entry)
-    return sorted(out, key=lambda e: e["path"])
-
-
-def plan_slice_compaction(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-) -> dict[str, Any]:
-    """Plan per-slice compaction: contiguous runs of undersized files.
-
-    The global hash sort makes every file a disjoint [min, max] hash
-    range, so any contiguous-in-range subset can be rewritten
-    independently without touching (or re-sorting) the rest — at 100 TB
-    this is the difference between rewriting gigabytes and rewriting
-    the dataset. Planning is driver-side footer metadata only
-    (:func:`hash_range`): each candidate file's min ``hash`` orders the
-    run, and a file without statistics never joins one; no data is
-    read. Partitioned layouts are sliced per partition directory
-    (ranges from different ``algorithm=`` partitions interleave and
-    must never merge).
-    """
-    return _plan_slices(snapshot.live_files(spark, path), target_file_bytes)
-
-
-def _plan_slices(
-    live: list[tuple[str, int]], target_file_bytes: int
-) -> dict[str, Any]:
-    import os
-    from collections import defaultdict
-
-    small = int(target_file_bytes * SMALL_FILE_RATIO)
-    by_dir: dict[str, list[tuple[str, int]]] = defaultdict(list)
-    for p, sz in live:
-        by_dir[os.path.dirname(p)].append((p, sz))
-
-    slices: list[dict[str, Any]] = []
-    for d, files in sorted(by_dir.items()):
-        keyed = []
-        for p, sz in files:
-            lo, _, rows = hash_range(p)
-            if lo is not None:
-                keyed.append((lo, p, sz, rows))
-        keyed.sort()
-        run: list[tuple[str, int]] = []
-        run_bytes = run_rows = 0
-
-        def flush():
-            nonlocal run, run_bytes, run_rows
-            if len(run) >= 2:
-                slices.append(
-                    {"dir": d, "files": run, "bytes": run_bytes, "rows": run_rows}
-                )
-            run, run_bytes, run_rows = [], 0, 0
-
-        for _, p, sz, rows in keyed:
-            if sz >= small or run_bytes + sz > int(target_file_bytes * 1.5):
-                flush()
-            if sz < small:
-                run.append((p, sz))
-                run_bytes += sz
-                run_rows += rows
-        flush()
-    return {
-        "n_slices": len(slices),
-        "slice_files": sum(len(s["files"]) for s in slices),
-        "slice_bytes": sum(s["bytes"] for s in slices),
-        "slices": slices,
-        "needed": bool(slices),
-    }
+    out = [index_entry(p, snapshot.rel_of(root, p), sz) for p, sz in files]
+    return None if None in out else sorted(out, key=lambda e: e["path"])
 
 
 # ------------------------------------------------------------ the swap
@@ -315,8 +312,9 @@ def replace_files(
     """Replace ``originals``, ``(path, bytes)`` files of the store at
     ``path``, with the files of ``df``, crash-safely; returns the
     committed manifest. The one swap protocol of every rewrite after a
-    fresh build, for the hash database (append, whole and slice
-    compaction, forget) and the ANN index (append, compaction):
+    fresh build, for the hash database (build over an existing
+    database, append, compaction, forget) and the ANN index (append,
+    compaction); the caller holds the lock (:func:`writing`):
 
     1. ``df`` is written to a hidden temp dir, one file per partition
        and ``partition_by`` directory (:func:`one_sorted_file` for a
@@ -444,9 +442,33 @@ def _settle_sidecar_write(spark: SparkSession, root: str, old_present: bool) -> 
     io_util.delete(spark, tmp)
 
 
+@contextmanager
+def writing(
+    spark: SparkSession, path: str
+) -> Iterator[tuple[str, list[tuple[str, int]], dict[str, int]]]:
+    """Hold the write lock of the store at ``path``, a marker file beside
+    it, and yield :func:`recover_and_list`'s result. Every verb that
+    changes either store's files enters here: recovery drops every stage
+    no manifest names, so an unlocked verb could drop another's stage
+    between its write and its commit. The lock's name dates from when
+    only appends took it; a stale one is deleted by hand (README)."""
+    lock = io_util.qualify(spark, path).rstrip("/") + ".__append_lock__"
+    if not io_util.create_marker(spark, lock):
+        raise RuntimeError(
+            f"an append or another write to {path} appears to be in progress "
+            f"(lock file {lock} exists); if it is stale from a crashed run, "
+            "delete it and retry"
+        )
+    try:
+        yield recover_and_list(spark, path)
+    finally:
+        io_util.delete(spark, lock)
+
+
 def recover_slices(spark: SparkSession, path: str) -> dict[str, int]:
     """Finish or undo interrupted swaps; see :func:`recover_and_list`."""
-    return recover_and_list(spark, path)[2]
+    with writing(spark, path) as (_, _, report):
+        return report
 
 
 #: a swap's hidden temp dir (``.__<verb>_<id>__``), as a db-relative prefix
@@ -472,7 +494,8 @@ def recover_and_list(
     * a leftover temp dir is dropped, and a sidecar write cut short is
       finished or dropped (:func:`_settle_sidecar_write`).
 
-    Idempotent; runs first in append, both compactions and forget.
+    Idempotent; runs first in every writer, under its lock
+    (:func:`writing`).
     """
     root = io_util.qualify(spark, path).rstrip("/")
     entries = io_util.list_files(spark, root, suffix=None)
@@ -537,46 +560,3 @@ def recover_and_list(
         )
     return root, entries, {"rolled_forward": rolled, "dropped_stages": dropped}
 
-
-def compact_slices(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    max_slices: int | None = None,
-) -> dict[str, Any]:
-    """Rewrite each fragmented hash-range slice into one sorted file.
-
-    Each slice is swapped in place by :func:`replace_files`, so the rest
-    of the dataset keeps serving; replaced originals a snapshot still
-    references are retained, not deleted, also when recovery finishes
-    the swap. A transactional table format would collapse the protocol
-    into one commit — noted in SCALE.md; this is the honest ceiling of a
-    directory-layout store.
-
-    ``max_slices`` bounds one maintenance run (schedule by
-    fragmentation score at scale); slices are processed worst-first
-    (most files first).
-    """
-    path, entries, recovered = recover_and_list(spark, path)
-    live = snapshot.visible_files(path, entries)
-    plan = _plan_slices(live, target_file_bytes)
-    todo = sorted(plan["slices"], key=lambda s: -len(s["files"]))
-    if max_slices is not None:
-        todo = todo[:max_slices]
-    if not todo:
-        return {**plan, "compacted": 0, "recovered": recovered}
-
-    meta = live_sidecar(spark, path, live)
-    for s in todo:
-        files = s["files"]
-        meta = replace_files(
-            spark,
-            path,
-            files,
-            one_sorted_file(spark.read.parquet(*[p for p, _ in files])),
-            "slice",
-            "retain",
-            adjusted(meta, -s["rows"], -s["bytes"]),
-            rows=s["rows"],
-        )["sidecar"]
-    return {**plan, "compacted": len(todo), "recovered": recovered}

@@ -18,8 +18,9 @@ filters by EXACT digest equality, so over-selection costs a file scan,
 never a wrong delete.
 
 Each file is swapped by the protocol every rewrite shares
-(:func:`shaha_spark.pipeline.compact.replace_files`, recovered by
-:func:`~shaha_spark.pipeline.compact.recover_slices`): a crash mid-swap
+(:func:`shaha_spark.pipeline.compact.replace_files`, under the write
+lock and recovery of :func:`~shaha_spark.pipeline.compact.writing`): a
+crash mid-swap
 either leaves the original intact or rolls the replacement forward —
 never both, never neither — and the roll-forward also points history at
 the replacement and writes the sidecar. Unlike compaction, the original
@@ -47,8 +48,8 @@ from shaha_spark.pipeline.compact import (
     hash_range,
     live_sidecar,
     one_sorted_file,
-    recover_and_list,
     replace_files,
+    writing,
 )
 
 
@@ -58,7 +59,7 @@ def plan_forget(
     """Driver-side footer-only planning: which files can contain any
     of ``digests`` — live files and the history copies retained for
     snapshots. Requires a local filesystem for footer reads (the same
-    constraint as slice compaction); a file without statistics stays a
+    constraint as the file index); a file without statistics stays a
     candidate."""
     root = io_util.qualify(spark, path)
     return _plan_forget(root, io_util.list_files(spark, root), digests)
@@ -110,58 +111,58 @@ def forget_digests(
     (a second run deletes nothing)."""
     if not digests:
         return _empty_forget_report()
-    path, entries, recovered = recover_and_list(spark, path)
-    plan = _plan_forget(path, entries, digests)
-    meta = live_sidecar(spark, path, snapshot.visible_files(path, entries))
-    targets = [bytes(d) for d in sorted(set(digests))]
+    with writing(spark, path) as (path, entries, recovered):
+        plan = _plan_forget(path, entries, digests)
+        meta = live_sidecar(spark, path, snapshot.visible_files(path, entries))
+        targets = [bytes(d) for d in sorted(set(digests))]
 
-    rows_deleted = live_rows_deleted = rewritten = dropped = 0
-    for cand in plan["candidates"]:
-        p = cand["file"]
-        df: DataFrame = spark.read.parquet(p)
-        # lazy checkpoint: the survivor set is consumed twice (the
-        # count that decides drop-vs-rewrite, then the rewrite
-        # itself) — one filtered read of the candidate file, not two
-        remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
-            eager=False
-        )
-        n_after = remaining.count()
-        n_delete = cand["rows"] - n_after
-        if n_delete == 0:
-            continue  # range false positive
-        rows_deleted += n_delete
-        # rows scrubbed from retained history copies under _snapshots/
-        # are not live rows: the sidecar's total_records counts the
-        # visible database only, so decrementing it by history-copy
-        # deletions would make info/stats drift permanently after any
-        # compaction+snapshot cycle
-        live = snapshot.is_visible(snapshot.rel_of(path, p))
-        # a file whose every row was an erasure target is replaced by
-        # nothing: it leaves history too (read_snapshot reports the hole)
-        meta = replace_files(
-            spark,
-            path,
-            [(p, cand["bytes"])],
-            one_sorted_file(remaining) if n_after else None,
-            "forget",
-            "erase",
-            adjusted(meta, -cand["rows"], -cand["bytes"]) if live else meta,
-            rows=n_after,
-        )["sidecar"]
-        if live:
-            live_rows_deleted += n_delete
-        if n_after:
-            rewritten += 1
-        else:
-            dropped += 1
-    return {
-        **{k: plan[k] for k in ("n_digests", "total_files", "candidate_files")},
-        "rows_deleted": rows_deleted,
-        "live_rows_deleted": live_rows_deleted,
-        "files_rewritten": rewritten,
-        "files_dropped": dropped,
-        "recovered": recovered,
-    }
+        rows_deleted = live_rows_deleted = rewritten = dropped = 0
+        for cand in plan["candidates"]:
+            p = cand["file"]
+            df: DataFrame = spark.read.parquet(p)
+            # lazy checkpoint: the survivor set is consumed twice (the
+            # count that decides drop-vs-rewrite, then the rewrite
+            # itself) — one filtered read of the candidate file, not two
+            remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
+                eager=False
+            )
+            n_after = remaining.count()
+            n_delete = cand["rows"] - n_after
+            if n_delete == 0:
+                continue  # range false positive
+            rows_deleted += n_delete
+            # rows scrubbed from retained history copies under _snapshots/
+            # are not live rows: the sidecar's total_records counts the
+            # visible database only, so decrementing it by history-copy
+            # deletions would make info/stats drift permanently after any
+            # compaction+snapshot cycle
+            live = snapshot.is_visible(snapshot.rel_of(path, p))
+            # a file whose every row was an erasure target is replaced by
+            # nothing: it leaves history too (read_snapshot reports the hole)
+            meta = replace_files(
+                spark,
+                path,
+                [(p, cand["bytes"])],
+                one_sorted_file(remaining) if n_after else None,
+                "forget",
+                "erase",
+                adjusted(meta, -cand["rows"], -cand["bytes"]) if live else meta,
+                rows=n_after,
+            )["sidecar"]
+            if live:
+                live_rows_deleted += n_delete
+            if n_after:
+                rewritten += 1
+            else:
+                dropped += 1
+        return {
+            **{k: plan[k] for k in ("n_digests", "total_files", "candidate_files")},
+            "rows_deleted": rows_deleted,
+            "live_rows_deleted": live_rows_deleted,
+            "files_rewritten": rewritten,
+            "files_dropped": dropped,
+            "recovered": recovered,
+        }
 
 
 def preimage_digests(

@@ -26,7 +26,7 @@ Spark's parquet reader, so retained history never leaks into normal
 queries.
 
 Interaction with maintenance (the whole point): every verb that
-replaces files (append, whole and slice compaction, forget) goes
+replaces files (append, compaction, forget) goes
 through ``compact.replace_files``, whose manifest records how the
 originals are disposed of; :func:`dispose` carries that out, live or
 replayed by recovery, so a crash never costs retention.
@@ -50,9 +50,9 @@ replayed by recovery, so a crash never costs retention.
 100 TB notes: every operation here is driver-side metadata (file
 listings, renames, small JSON) — nothing scans data. Manifests list
 one entry per file; at the ~1 GB target file size that is ~10^5
-entries per 100 TB snapshot, trivially a few MB of JSON. The single
-maintenance-runner assumption of build/compact/forget (their lock and
-swap protocol) extends to snapshot creation and vacuum.
+entries per 100 TB snapshot, trivially a few MB of JSON. One writer at
+a time: build, append, compaction, forget, snapshot creation and
+vacuum all take the database's write lock (``compact.writing``).
 """
 
 from __future__ import annotations
@@ -173,21 +173,26 @@ def snapshot_create(
     spark: SparkSession, path: str, note: str = ""
 ) -> dict[str, Any]:
     """Record the current visible file set as the next snapshot
-    version. Metadata-only; returns the manifest."""
-    path = io_util.qualify(spark, path)  # rels as the maintenance verbs see them
-    existing = snapshot_list(spark, path)
-    version = (existing[-1]["version"] + 1) if existing else 1
-    files = [
-        {"rel": rel_of(path, p), "bytes": sz} for p, sz in live_files(spark, path)
-    ]
-    manifest = {
-        "version": version,
-        "note": note,
-        "created_unix": int(time.time()),
-        "files": sorted(files, key=lambda f: f["rel"]),
-    }
-    _write_json(spark, _manifest_path(path, version), manifest)
-    return manifest
+    version, under the database's write lock, after recovery (see
+    ``compact.writing``). Metadata-only; returns the manifest."""
+    from shaha_spark.pipeline import compact
+
+    # rels as the maintenance verbs see them
+    with compact.writing(spark, path) as (path, entries, _):
+        existing = snapshot_list(spark, path)
+        version = (existing[-1]["version"] + 1) if existing else 1
+        files = [
+            {"rel": rel_of(path, p), "bytes": sz}
+            for p, sz in visible_files(path, entries)
+        ]
+        manifest = {
+            "version": version,
+            "note": note,
+            "created_unix": int(time.time()),
+            "files": sorted(files, key=lambda f: f["rel"]),
+        }
+        _write_json(spark, _manifest_path(path, version), manifest)
+        return manifest
 
 
 def referenced_rels(spark: SparkSession, path: str) -> set[str]:
@@ -379,36 +384,40 @@ def vacuum(
 ) -> dict[str, Any]:
     """Expire old snapshots and reclaim their storage: drop all but the
     ``keep_latest`` newest manifests, then delete retained files (and
-    mapping entries) no surviving manifest references."""
+    mapping entries) no surviving manifest references. Runs under the
+    database's write lock (``compact.writing``)."""
     if keep_latest < 0:
         raise ValueError("keep_latest must be >= 0")
-    manifests = snapshot_list(spark, path)
-    drop = manifests[: max(0, len(manifests) - keep_latest)]
-    for m in drop:
-        snapshot_drop(spark, path, m["version"])
-    refs = referenced_rels(spark, path)
-    retained = _retained_map(spark, path)
-    freed_files = 0
-    freed_bytes = 0
-    for rel, disp in list(retained.items()):
-        if rel in refs:
-            continue
-        if not disp.startswith("@"):
-            abs_p = _retain_dir(path) + "/" + disp
-            # one getFileStatus on the exact path: re-listing the whole
-            # retained tree per entry was O(n^2) metadata calls, and a
-            # bare suffix match could attribute another file's size
-            freed_bytes += io_util.file_size(spark, abs_p)
-            io_util.delete(spark, abs_p)
-            freed_files += 1
-        del retained[rel]
-    _write_retained_map(spark, path, retained)
-    return {
-        "dropped_versions": [m["version"] for m in drop],
-        "kept_versions": [m["version"] for m in manifests[len(drop):]],
-        "freed_files": freed_files,
-        "freed_bytes": freed_bytes,
-    }
+    from shaha_spark.pipeline import compact
+
+    with compact.writing(spark, path):
+        manifests = snapshot_list(spark, path)
+        drop = manifests[: max(0, len(manifests) - keep_latest)]
+        for m in drop:
+            snapshot_drop(spark, path, m["version"])
+        refs = referenced_rels(spark, path)
+        retained = _retained_map(spark, path)
+        freed_files = 0
+        freed_bytes = 0
+        for rel, disp in list(retained.items()):
+            if rel in refs:
+                continue
+            if not disp.startswith("@"):
+                abs_p = _retain_dir(path) + "/" + disp
+                # one getFileStatus on the exact path: re-listing the whole
+                # retained tree per entry was O(n^2) metadata calls, and a
+                # bare suffix match could attribute another file's size
+                freed_bytes += io_util.file_size(spark, abs_p)
+                io_util.delete(spark, abs_p)
+                freed_files += 1
+            del retained[rel]
+        _write_retained_map(spark, path, retained)
+        return {
+            "dropped_versions": [m["version"] for m in drop],
+            "kept_versions": [m["version"] for m in manifests[len(drop):]],
+            "freed_files": freed_files,
+            "freed_bytes": freed_bytes,
+        }
 
 
 def snapshot_row_diff(

@@ -142,6 +142,46 @@ def test_concurrent_append_lock(spark, tmp_path):
     assert not io_util.exists(spark, lock)
 
 
+def test_a_verb_started_during_an_append_finds_the_lock(spark, tmp_path, monkeypatch):
+    """Every writer takes the database's lock, not only append. A forget
+    started while an append sits between staging its files and writing
+    its manifest raises, and the append lands every row. Without the
+    lock, the forget's recovery drops the append's stage, the append
+    commits a manifest whose files are gone, and every later verb
+    raises on it."""
+    import re
+
+    from shaha_spark import io_util
+    from shaha_spark.pipeline.compact import MANIFEST_SUFFIX
+    from shaha_spark.pipeline.forget import forget_digests
+
+    path = str(tmp_path / "db")
+    w1 = spark.createDataFrame([(f"a{i:03d}",) for i in range(50)], "word string")
+    build_mod.build(spark, w1, ["sha256"], path, source_name="w1", num_files=2)
+    gone = hashlib.sha256(b"a007").digest()
+    real = io_util.write_text_atomic
+    nested = []
+
+    def forget_first(spark_, p, content):
+        if p.endswith(MANIFEST_SUFFIX) and not nested:
+            nested.append(None)
+            try:
+                forget_digests(spark, path, [gone])
+            except RuntimeError as err:
+                nested[0] = err
+        real(spark_, p, content)
+
+    monkeypatch.setattr(io_util, "write_text_atomic", forget_first)
+    w2 = spark.createDataFrame([(f"b{i:03d}",) for i in range(20)], "word string")
+    res = build_mod.build(spark, w2, ["sha256"], path, source_name="w2", append=True)
+    monkeypatch.undo()
+
+    assert re.search("append.*in progress", str(nested[0]))
+    assert res["total_records"] == 70
+    assert build_mod.read_hashdb(spark, path).count() == 70
+    assert forget_digests(spark, path, [gone])["live_rows_deleted"] == 1
+
+
 def test_append_keeps_the_file_index(spark, tmp_path):
     """The append's swap writes the index of the files it publishes."""
     from _hashdb_index import assert_index_exact, assert_lookups_match_directory

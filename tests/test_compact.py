@@ -25,6 +25,26 @@ def _fragmented_db(spark, tmp_path, words=200):
     return out
 
 
+def _assert_sorted_and_range_disjoint(spark, out):
+    """Every live file is internally hash-sorted and the files of each
+    directory are pairwise range-disjoint (the prefix-scan pruning
+    invariant)."""
+    import pyarrow.parquet as pq
+
+    from shaha_spark.pipeline.snapshot import live_files
+
+    ranges = []
+    for p, _ in live_files(spark, out):
+        lp = p[len("file:"):] if p.startswith("file:") else p
+        t = pq.read_table(lp, columns=["hash"])
+        h = [bytes(v) for v in t.column("hash").to_pylist()]
+        assert h == sorted(h), p
+        ranges.append((p.rpartition("/")[0], h[0], h[-1], p))
+    ranges.sort()
+    for (da, _, hi_a, pa), (db, lo_b, _, pb) in zip(ranges, ranges[1:]):
+        assert da != db or hi_a <= lo_b, (pa, pb)
+
+
 def test_compact_merges_files_and_preserves_content(spark, tmp_path):
     out = _fragmented_db(spark, tmp_path)
     before = read_hashdb(spark, out)
@@ -102,16 +122,15 @@ def test_compact_preserves_partitioned_layout(spark, tmp_path):
     # still hive-partitioned after the rewrite
     files = list_files(spark, out)
     assert files and all("/algorithm=" in p for p, _ in files)
+    _assert_sorted_and_range_disjoint(spark, out)
     back = read_hashdb(spark, out)
     assert back.count() == 200
     assert {r["algorithm"] for r in back.select("algorithm").distinct().collect()} == {"md5", "sha256"}
 
 
 def test_slice_plan_groups_contiguous_small_files(spark, tmp_path):
-    from shaha_spark.pipeline.compact import plan_slice_compaction
-
     out = _fragmented_db(spark, tmp_path)  # 16 small range-adjacent files
-    plan = plan_slice_compaction(spark, out, target_file_bytes=64 << 20)
+    plan = plan_compaction(spark, out, target_file_bytes=64 << 20)
     assert plan["needed"]
     # all 16 files are tiny vs the 1 MB target → batched into slices,
     # every slice has >= 2 files
@@ -121,15 +140,15 @@ def test_slice_plan_groups_contiguous_small_files(spark, tmp_path):
 
 def test_slice_compaction_rewrites_only_slices(spark, tmp_path):
     from shaha_spark.io_util import list_files
-    from shaha_spark.pipeline.compact import compact_slices
 
     out = _fragmented_db(spark, tmp_path)
     before = read_hashdb(spark, out)
     before_hashes = sorted(r["hash"] for r in before.select("hash").collect())
     meta_before = read_sidecar(spark, out)
 
-    result = compact_slices(spark, out, target_file_bytes=64 << 20)
-    assert result["compacted"] == result["n_slices"] > 0
+    result = compact_hashdb(spark, out, target_file_bytes=64 << 20)
+    assert result["compacted"]
+    assert result["slices_compacted"] == result["n_slices"] > 0
 
     files = [p for p, _ in list_files(spark, out)]
     assert len(files) < 16
@@ -145,27 +164,11 @@ def test_slice_compaction_rewrites_only_slices(spark, tmp_path):
 def test_slice_compaction_preserves_per_file_sort_and_queries(spark, tmp_path):
     import hashlib
 
-    from shaha_spark.io_util import list_files
-    from shaha_spark.pipeline.compact import compact_slices
     from shaha_spark.query import query
 
     out = _fragmented_db(spark, tmp_path)
-    compact_slices(spark, out, target_file_bytes=64 << 20)
-
-    # every remaining file is internally hash-sorted and files are
-    # pairwise range-disjoint (the prefix-scan pruning invariant)
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for p, _ in list_files(spark, out):
-        lp = p[len("file:"):] if p.startswith("file:") else p
-        t = pq.read_table(lp, columns=["hash"])
-        h = [bytes(v) for v in t.column("hash").to_pylist()]
-        assert h == sorted(h), p
-        ranges.append((h[0], h[-1], p))
-    ranges.sort()
-    for (lo_a, hi_a, pa), (lo_b, hi_b, pb) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b, (pa, pb)
+    compact_hashdb(spark, out, target_file_bytes=64 << 20)
+    _assert_sorted_and_range_disjoint(spark, out)
 
     target = hashlib.sha256(b"word0042").hexdigest()
     rows = query(spark, out, target).collect()
@@ -173,22 +176,19 @@ def test_slice_compaction_preserves_per_file_sort_and_queries(spark, tmp_path):
 
 
 def test_slice_compaction_respects_max_slices(spark, tmp_path):
-    from shaha_spark.pipeline.compact import compact_slices, plan_slice_compaction
-
     out = _fragmented_db(spark, tmp_path)
     # ~66 KB/file (adaptive bloom, round 4) x 16; a 512 KB target caps
     # each slice at 768 KB, so the 16 files split across >= 2 slices
-    plan = plan_slice_compaction(spark, out, target_file_bytes=512 << 10)
+    plan = plan_compaction(spark, out, target_file_bytes=512 << 10)
     assert plan["n_slices"] >= 2
-    result = compact_slices(spark, out, target_file_bytes=512 << 10, max_slices=1)
-    assert result["compacted"] == 1
-    again = plan_slice_compaction(spark, out, target_file_bytes=512 << 10)
+    result = compact_hashdb(spark, out, target_file_bytes=512 << 10, max_slices=1)
+    assert result["slices_compacted"] == 1
+    again = plan_compaction(spark, out, target_file_bytes=512 << 10)
     assert again["n_slices"] < plan["n_slices"]
 
 
 def test_slice_compaction_partitioned_never_merges_across_partitions(spark, tmp_path):
     from shaha_spark.io_util import list_files
-    from shaha_spark.pipeline.compact import compact_slices
 
     wdf = spark.createDataFrame(
         [(f"word{i:04d}",) for i in range(100)], "word string"
@@ -198,10 +198,11 @@ def test_slice_compaction_partitioned_never_merges_across_partitions(spark, tmp_
         spark, wdf, ["sha256", "md5"], out,
         num_files=8, partition_by_algorithm=True,
     )
-    result = compact_slices(spark, out, target_file_bytes=64 << 20)
-    assert result["compacted"] > 0
+    result = compact_hashdb(spark, out, target_file_bytes=64 << 20)
+    assert result["slices_compacted"] > 0
     files = list_files(spark, out)
     assert files and all("/algorithm=" in p for p, _ in files)
+    _assert_sorted_and_range_disjoint(spark, out)
     back = read_hashdb(spark, out)
     assert back.count() == 200
     by_algo = {
@@ -209,6 +210,39 @@ def test_slice_compaction_partitioned_never_merges_across_partitions(spark, tmp_
         for r in back.groupBy("algorithm").agg(F.count("*").alias("n")).collect()
     }
     assert by_algo == {"md5": 100, "sha256": 100}
+
+
+def test_compaction_commits_every_run_in_one_swap(spark, tmp_path, monkeypatch):
+    """A compaction of several runs writes one swap manifest, merges each
+    run into one file and leaves every file hash-sorted and range-disjoint."""
+    from shaha_spark import io_util
+    from shaha_spark.pipeline.compact import MANIFEST_SUFFIX
+
+    out = _fragmented_db(spark, tmp_path)
+    before = sorted(r["hash"] for r in read_hashdb(spark, out).select("hash").collect())
+    # a 512 KB target caps a run at 768 KB: the 16 files form >= 2 runs
+    plan = plan_compaction(spark, out, target_file_bytes=512 << 10)
+    assert plan["n_slices"] >= 2
+    manifests = []
+    real = io_util.write_text_atomic
+
+    def counting(spark_, path, content):
+        if path.endswith(MANIFEST_SUFFIX):
+            manifests.append(path)
+        real(spark_, path, content)
+
+    monkeypatch.setattr(io_util, "write_text_atomic", counting)
+    result = compact_hashdb(spark, out, target_file_bytes=512 << 10)
+    monkeypatch.undo()
+
+    assert len(manifests) == 1
+    assert result["slices_compacted"] == plan["n_slices"]
+    assert result["files_after"] == 16 - plan["slice_files"] + plan["n_slices"]
+    assert result["files_after"] == plan_compaction(spark, out)["n_files"]
+    _assert_sorted_and_range_disjoint(spark, out)
+    after = sorted(r["hash"] for r in read_hashdb(spark, out).select("hash").collect())
+    assert after == before
+    assert read_sidecar(spark, out)["total_records"] == len(before)
 
 
 @pytest.mark.slow  # heavy lifecycle tier -> `make test-slow` (VERDICT r12 #2)
@@ -219,7 +253,7 @@ def test_compact_cli_slices_verb(spark, tmp_path):
 
     out = _fragmented_db(spark, tmp_path)
     base = [sys.executable, "-m", "shaha_spark", "compact", "-d", out,
-            "--target-file-mb", "64", "--slices"]
+            "--target-file-mb", "64"]
     dry = subprocess.run(
         base + ["--dry-run"], capture_output=True, text=True,
         cwd="/root/repo", timeout=300,
@@ -233,7 +267,7 @@ def test_compact_cli_slices_verb(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     result = json.loads(proc.stdout)
-    assert result["compacted"] >= 1
+    assert result["slices_compacted"] >= 1
 
 
 def test_recover_drops_uncommitted_stage(spark, tmp_path):
@@ -241,7 +275,7 @@ def test_recover_drops_uncommitted_stage(spark, tmp_path):
     redundant — recovery drops it and data is unchanged."""
     import shutil
 
-    from shaha_spark.pipeline.compact import compact_slices, recover_slices
+    from shaha_spark.pipeline.compact import recover_slices
 
     out = _fragmented_db(spark, tmp_path)
     n_before = read_hashdb(spark, out).count()
@@ -253,8 +287,8 @@ def test_recover_drops_uncommitted_stage(spark, tmp_path):
     rec = recover_slices(spark, out)
     assert rec == {"rolled_forward": 0, "dropped_stages": 1}
     assert read_hashdb(spark, out).count() == n_before
-    # and compact_slices sweeps it implicitly too (idempotent)
-    result = compact_slices(spark, out, target_file_bytes=64 << 20)
+    # and compaction sweeps it implicitly too (idempotent)
+    result = compact_hashdb(spark, out, target_file_bytes=64 << 20)
     assert result["recovered"]["dropped_stages"] == 0
 
 
@@ -294,11 +328,10 @@ def test_recover_rolls_forward_committed_swap(spark, tmp_path):
 @pytest.mark.parametrize("how", ["slices", "whole"])
 def test_compaction_keeps_the_file_index(spark, tmp_path, how):
     from _hashdb_index import assert_index_exact, assert_lookups_match_directory
-    from shaha_spark.pipeline.compact import compact_slices
 
     out = _fragmented_db(spark, tmp_path)
     if how == "slices":
-        assert compact_slices(spark, out, target_file_bytes=64 << 20)["compacted"] >= 1
+        assert compact_hashdb(spark, out, target_file_bytes=64 << 20)["slices_compacted"] >= 1
     else:
         assert compact_hashdb(spark, out, force=True)["files_after"] == 1
     assert_index_exact(spark, out)

@@ -129,17 +129,37 @@ def test_cli_forget_subcommand(spark, tmp_path):
     assert db.where(F.col("preimage") == "word0003").count() == 0
 
 
+def test_cli_forget_of_digests_and_words_is_one_forget(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``forget -x D -w W`` erases the union in one forget: a file both
+    sets touch is rewritten once."""
+    import json
+
+    from shaha_spark import cli, session
+
+    out = _db(spark, tmp_path, words=20, num_files=1, algos=("sha256",))
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    digest = hashlib.sha256(b"word0003").hexdigest()
+    assert cli.main(["forget", "-d", out, "-x", digest, "-w", "word0005"]) == 0
+    report = json.loads(capsys.readouterr().out)
+    assert report["rows_deleted"] == 2
+    assert report["files_rewritten"] == 1
+    assert read_hashdb(spark, out).count() == 18
+
+
 def test_forget_then_compact_roundtrip(spark, tmp_path):
-    """Maintenance ops compose: forget leaves shrunken files, slice
+    """Maintenance ops compose: forget leaves shrunken files,
     compaction merges them, and lookups stay correct throughout."""
-    from shaha_spark.pipeline.compact import compact_slices
+    from shaha_spark.pipeline.compact import compact_hashdb
     from shaha_spark.query import query
 
     out = _db(spark, tmp_path, words=200, num_files=8, algos=("sha256",))
     gone = [f"word{i:04d}" for i in range(0, 50)]
     rep = forget_preimages(spark, out, gone)
     assert rep["rows_deleted"] == 50
-    compact_slices(spark, out, target_file_bytes=1 << 20)
+    compact_hashdb(spark, out, target_file_bytes=1 << 20)
     db = read_hashdb(spark, out)
     assert db.count() == 150
     assert db.where(F.col("preimage").isin(gone)).count() == 0
@@ -159,11 +179,11 @@ def test_forget_decrements_live_count_only(spark, tmp_path):
     algorithm, not 2+."""
     from shaha_spark.pipeline import snapshot as snap
     from shaha_spark.pipeline.build import read_sidecar
-    from shaha_spark.pipeline.compact import compact_slices
+    from shaha_spark.pipeline.compact import compact_hashdb
 
     out = _db(spark, tmp_path, words=300, num_files=8, algos=("sha256",))
     snap.snapshot_create(spark, out)
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     before = read_sidecar(spark, out)["total_records"]
     report = forget_preimages(spark, out, ["word0077"])
     # history copies were scrubbed too, so raw deletions exceed live

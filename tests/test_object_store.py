@@ -182,7 +182,7 @@ def test_swap_protocol_under_copy_delete_rename(spark, tmp_path, monkeypatch):
 
     from shaha_spark import io_util
     from shaha_spark.pipeline.build import build, read_hashdb, read_sidecar
-    from shaha_spark.pipeline.compact import compact_slices
+    from shaha_spark.pipeline.compact import compact_hashdb
     from shaha_spark.pipeline.forget import forget_preimages
     from shaha_spark.query import query
 
@@ -213,7 +213,7 @@ def test_swap_protocol_under_copy_delete_rename(spark, tmp_path, monkeypatch):
     assert read_sidecar(spark, out)["total_records"] == 81
 
     forget_preimages(spark, out, ["w007"])
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
 
     df = read_hashdb(spark, out)
     assert df.count() == 80

@@ -1,7 +1,7 @@
 """Snapshot log + time travel + vacuum (pipeline/snapshot.py):
 
-- a snapshot pins the exact row set across appends, whole compaction
-  and slice compaction (all one manifest swap) with RENAMES only;
+- a snapshot pins the exact row set across appends, forced compaction
+  and run compaction (all one manifest swap) with RENAMES only;
 - GDPR forget reaches history: erased rows leave every snapshot, the
   rest of the snapshot keeps reading; a fully-erased file becomes an
   explicit hole;
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from shaha_spark import io_util
 from shaha_spark.pipeline import snapshot as snap
 from shaha_spark.pipeline.build import build, read_hashdb, read_sidecar
-from shaha_spark.pipeline.compact import compact_hashdb, compact_slices, recover_slices
+from shaha_spark.pipeline.compact import compact_hashdb, recover_slices
 from shaha_spark.pipeline.forget import forget_preimages
 
 
@@ -73,8 +73,8 @@ def test_time_travel_across_slice_compaction(spark, tmp_path):
     out = _db(spark, tmp_path, words=400, num_files=12)
     before = _rows(read_hashdb(spark, out))
     snap.snapshot_create(spark, out)
-    report = compact_slices(spark, out, target_file_bytes=1 << 30)
-    assert report["compacted"] >= 1
+    report = compact_hashdb(spark, out, target_file_bytes=1 << 30)
+    assert report["slices_compacted"] >= 1
     assert _rows(read_hashdb(spark, out)) == before  # current unchanged
     assert _rows(snap.read_snapshot(spark, out, 1)) == before
     # the originals were renamed, not copied: retained dir holds them
@@ -90,6 +90,20 @@ def test_time_travel_across_whole_compaction(spark, tmp_path):
     assert report["compacted"]
     assert _rows(read_hashdb(spark, out)) == before
     assert _rows(snap.read_snapshot(spark, out, 1)) == before
+
+
+def test_snapshots_survive_a_rebuild(spark, tmp_path):
+    """A build without ``append`` over an existing database replaces its
+    files through the swap, so its snapshot history stays readable."""
+    out = _db(spark, tmp_path)
+    v1 = _rows(read_hashdb(spark, out))
+    snap.snapshot_create(spark, out)
+    other = spark.createDataFrame([(f"other{i:03d}",) for i in range(50)], "word string")
+    build(spark, other, ["sha256"], out, source_name="other", num_files=2)
+    now = _rows(read_hashdb(spark, out))
+    assert len(now) == 50 and {p for _, p, _ in now}.isdisjoint({p for _, p, _ in v1})
+    assert read_sidecar(spark, out)["sources"] == ["other"]
+    assert _rows(snap.read_snapshot(spark, out, 1)) == v1
 
 
 def test_forget_reaches_history(spark, tmp_path):
@@ -111,7 +125,7 @@ def test_forget_reaches_history(spark, tmp_path):
 def test_forget_after_retirement_scrubs_retained_files(spark, tmp_path):
     out = _db(spark, tmp_path, words=400, num_files=12)
     snap.snapshot_create(spark, out)
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     gone = "word0123"
     forget_preimages(spark, out, [gone])
     # the retained (pre-compaction) files were rewritten in place:
@@ -128,7 +142,7 @@ def test_forget_after_retirement_scrubs_retained_files(spark, tmp_path):
 def test_vacuum_reclaims_and_expires(spark, tmp_path):
     out = _db(spark, tmp_path, words=400, num_files=12)
     snap.snapshot_create(spark, out)
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     snap.snapshot_create(spark, out)
     retained_before = io_util.list_files(spark, out + "/_snapshots/retained")
     assert retained_before
@@ -147,18 +161,18 @@ def test_vacuum_reclaims_and_expires(spark, tmp_path):
 
 
 def test_snapshot_internals_invisible_to_stats_and_plans(spark, tmp_path):
-    from shaha_spark.pipeline.compact import plan_compaction, plan_slice_compaction
+    from shaha_spark.pipeline.compact import plan_compaction
 
     out = _db(spark, tmp_path, words=400, num_files=12)
     size_before = io_util.tree_size(spark, out)
     n_before = len(snap.live_files(spark, out))
     snap.snapshot_create(spark, out)
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     # retained bytes must not count as live database size
     assert io_util.tree_size(spark, out) <= size_before
     assert len(snap.live_files(spark, out)) < n_before
     # and must not be re-planned for compaction
-    plan = plan_slice_compaction(spark, out, target_file_bytes=1 << 30)
+    plan = plan_compaction(spark, out, target_file_bytes=1 << 30)
     for s in plan["slices"]:
         for p, _sz in s["files"]:
             assert "/_snapshots/" not in p
@@ -274,7 +288,7 @@ def test_alias_cycle_reads_as_hole(spark, tmp_path):
 def test_vacuum_idempotent(spark, tmp_path):
     out = _db(spark, tmp_path, words=400, num_files=12)
     snap.snapshot_create(spark, out)
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     snap.snapshot_create(spark, out)
     r1 = snap.vacuum(spark, out, keep_latest=1)
     r2 = snap.vacuum(spark, out, keep_latest=1)
@@ -353,7 +367,7 @@ def test_alias_target_survives_compaction_and_vacuum(spark, tmp_path):
     targets = {v[1:] for v in retained.values() if v.startswith("@")}
     assert targets <= refs, f"alias targets missing from refs: {targets - refs}"
     # compaction + vacuum must retire (not delete) the alias target
-    compact_slices(spark, out, target_file_bytes=1 << 30)
+    compact_hashdb(spark, out, target_file_bytes=1 << 30)
     snap.vacuum(spark, out)
     old = snap.read_snapshot(spark, out, 1)  # no allow_missing: holes raise
     assert old.count() == 199

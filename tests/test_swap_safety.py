@@ -1,5 +1,5 @@
 """Crash-safety of the one swap protocol (compact.replace_files) that
-append, whole and slice compaction and forget share: a swap committed
+a rebuild, append, compaction and forget share: a swap committed
 by one verb and interrupted is finished by the next verb, whichever it
 is, with its data, sidecar and snapshot history intact; recovery
 survives torn manifests; snapshots never pin Spark-invisible staging
@@ -33,6 +33,26 @@ def _db(spark, tmp_path, words, num_files=3, name="db"):
     )
     build(spark, df, ["sha256"], out, source_name="t", num_files=num_files)
     return out
+
+
+def test_a_failed_rebuild_leaves_the_database_readable(spark, tmp_path, monkeypatch):
+    """A build without ``append`` over an existing database writes its
+    files aside and swaps them in: a write that fails leaves the old
+    rows in place (an overwrite deleted the database before it wrote),
+    and releases the lock."""
+    import sys
+
+    out = _db(spark, tmp_path, words=40)
+    before = sorted(r.preimage for r in read_hashdb(spark, out).collect())
+    options = sys.modules["shaha_spark.pipeline.build"].WRITE_OPTIONS
+    monkeypatch.setitem(options, "compression", "no-such-codec")
+    again = spark.createDataFrame([("other",)], "word string")
+    with pytest.raises(Exception, match="no-such-codec"):
+        build(spark, again, ["sha256"], out, source_name="other")
+    monkeypatch.undo()
+    assert sorted(r.preimage for r in read_hashdb(spark, out).collect()) == before
+    assert read_sidecar(spark, out)["total_records"] == 40
+    assert build(spark, again, ["sha256"], out, append=True)["total_records"] == 41
 
 
 def test_recover_slices_tolerates_torn_manifest(spark, tmp_path):
