@@ -7,13 +7,18 @@ runs ``perfbench/run.py --seconds 1`` on both sides for every seed,
 alternating which side goes first (the base on even positions in the
 seed list, the working tree on odd ones). Then, per workload and
 metric, it prints each side's median and quartiles and the number of
-pairs the working tree won; ties count for neither side. A gain holds
-when the working tree wins at least nine pairs in ten and its median
-beats the base's by more than the base's interquartile range. For each
-end-to-end metric the last column says whether the working tree's
-median is within the metric's ``BENCHMARK.json`` bound of the base's:
-no worse, in the metric's ``better`` direction, than the bound times
-the base's median.
+pairs the working tree won; ties count for neither side. For each
+end-to-end metric the last column gives a verdict, in the metric's
+``better`` direction and with its ``BENCHMARK.json`` bound:
+
+* ``gain``: the working tree wins at least nine pairs in ten, and its
+  median beats the base's by more than the base's interquartile range;
+* ``unresolved``: the base's interquartile range exceeds the bound
+  times its median, so the runs spread too widely to tell, and not
+  every run of the working tree beats every run of the base;
+* otherwise ``within`` or ``OUTSIDE``: whether the working tree's median
+  is no worse than the base's by more than the bound times the base's
+  median.
 
     python3 scripts/perfbench_ab.py --base HEAD~1 --seeds 1-10
     make perfbench-ab BASE=HEAD~1 SEEDS=1-10
@@ -73,10 +78,32 @@ def run(tree: Path, workload: str, seed: int, trace: int) -> dict:
     return json.loads(lines[-1])
 
 
+def quartiles(values: list[float]) -> list[float]:
+    """First quartile, median, third quartile."""
+    return statistics.quantiles(values, n=4) if len(values) > 1 else values * 3
+
+
 def spread(values: list[float]) -> str:
     """``median [first quartile, third quartile]``."""
-    q1, med, q3 = statistics.quantiles(values, n=4) if len(values) > 1 else values * 3
+    q1, med, q3 = quartiles(values)
     return f"{med:.4g} [{q1:.4g}, {q3:.4g}]"
+
+
+def verdict(
+    base: list[float], change: list[float], wins: int, sign: int, bound: float
+) -> str:
+    """The verdict (see the module docstring) on paired runs of an
+    end-to-end metric, of which the change won ``wins``; ``sign`` is 1
+    where lower is better, else -1."""
+    q1, med, q3 = quartiles(base)
+    ahead = sign * (med - statistics.median(change))  # > 0: the change is better
+    if 10 * wins >= 9 * len(base) and ahead > q3 - q1:
+        return "gain"
+    if q3 - q1 > bound * abs(med) and not all(
+        sign * (y - x) < 0 for x in base for y in change
+    ):
+        return "unresolved"
+    return f"{'within' if -ahead <= bound * abs(med) else 'OUTSIDE'} {bound:g}"
 
 
 def declared() -> dict[str, tuple[bool, float | None]]:
@@ -95,7 +122,7 @@ def report(workload: str, pairs: list[tuple[dict, dict]]) -> None:
     print(f"\n== {workload}: {len(pairs)} pairs; failed base {failed[0]}, "
           f"change {failed[1]}")
     print(f"{'metric':40} {'base median [q1, q3]':>30} "
-          f"{'change median [q1, q3]':>30} {'ratio':>7} {'wins':>6} {'bound':>14}")
+          f"{'change median [q1, q3]':>30} {'ratio':>7} {'wins':>6} {'verdict':>14}")
     names = sorted(set.intersection(*(set(r["metrics"]) for p in pairs for r in p)))
     for name in names:
         a = [p[0]["metrics"][name]["value"] for p in pairs]
@@ -105,10 +132,7 @@ def report(workload: str, pairs: list[tuple[dict, dict]]) -> None:
         wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
         ma, mb = statistics.median(a), statistics.median(b)
         ratio = mb / ma if ma else float("nan")
-        held = ""
-        if bound is not None:  # how much worse the change is, against the bound
-            held = "within" if sign * (mb - ma) <= bound * abs(ma) else "OUTSIDE"
-            held = f"{held} {bound:g}"
+        held = "" if bound is None else verdict(a, b, wins, sign, bound)
         print(f"{name:40} {spread(a):>30} {spread(b):>30} {ratio:>7.3f} "
               f"{wins:>3}/{len(pairs)} {held:>14}")
 

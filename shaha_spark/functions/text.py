@@ -22,21 +22,6 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(col, TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
 
 
-def sql_tokens(text_expr: str) -> str:
-    """DuckDB twin of :func:`tokens`: same whitespace class, empties
-    dropped — interpolate into oracle SQL."""
-    return (
-        f"list_filter(regexp_split_to_array({text_expr}, "
-        f"'{TOKEN_SPLIT_RE}'), x -> x <> '')"
-    )
-
-
-def sql_split(text_expr: str) -> str:
-    """DuckDB twin of ``F.split(col, TOKEN_SPLIT_RE)`` — the RAW split
-    (empties kept), for oracles that mirror posexplode positions."""
-    return f"regexp_split_to_array({text_expr}, '{TOKEN_SPLIT_RE}')"
-
-
 def h_bits(col: Column, hex_digits: int) -> Column:
     """First ``hex_digits`` of md5(col) as a non-negative int64.
 

@@ -1663,13 +1663,6 @@ _POIS1_CUTS = [
 ]
 
 
-def _pois1_weight(u28):
-    w = F.lit(5)
-    for k in range(len(_POIS1_CUTS) - 1, -1, -1):
-        w = F.when(u28 < F.lit(_POIS1_CUTS[k]), F.lit(k)).otherwise(w)
-    return w
-
-
 def _pois1_weight_sql(u28_expr: str) -> str:
     branches = " ".join(
         f"WHEN {u28_expr} < {cut} THEN {k}"

@@ -265,15 +265,6 @@ def bucket_sql(key_col: str, salt: str = "") -> str:
     return f"{h28_sql(keyed)} % {_BUCKETS}"
 
 
-def hash_sample_sql(
-    table: str, fraction: float, key_col: str, salt: str = ""
-) -> str:
-    return (
-        f"SELECT * FROM {table} "
-        f"WHERE {bucket_sql(key_col, salt)} < {round(fraction * _BUCKETS)}"
-    )
-
-
 def weighted_hash_sample(
     df: DataFrame,
     weight_col: str,

@@ -198,6 +198,9 @@ WRITE_OPTIONS = {
     "parquet.enable.dictionary#preimage": "false",
     "parquet.bloom.filter.enabled#hash": "true",
     "parquet.bloom.filter.adaptive.enabled": "true",
+    # one file per task and directory, whatever the session's
+    # spark.sql.files.maxRecordsPerFile: a swap pairs files with frames
+    "maxRecordsPerFile": "0",
 }
 
 
@@ -217,14 +220,20 @@ def write_hashdb(
     ``partition_by="algorithm"`` lays the dataset out as Hive
     partitions ``algorithm=<name>/``, so algorithm-filtered queries
     prune whole directories (the reference keeps one mixed file and
-    filters row-by-row, parquet.rs:551-553). Files stay hash-sorted
-    within each partition: the range-repartition is hash-major, and the
-    per-task split by algorithm preserves row order. (The ANN index
-    writes its ``centroid_id=`` buckets through here too.)
+    filters row-by-row, parquet.rs:551-553). Each task is sorted by
+    ``(partition column, "hash")`` here, so files stay hash-sorted
+    within each partition: the write's own sort, by the partition
+    column alone, would otherwise replace the caller's. (The ANN index
+    writes its ``centroid_id=`` buckets through here too; they have no
+    ``hash``.)
 
     One file is written per input partition and directory; file-count
     sizing is the caller's (``sort_for_write(num_files=)``).
     """
+    if partition_by is not None:
+        df = df.sortWithinPartitions(
+            partition_by, *(["hash"] if "hash" in df.columns else [])
+        )
     writer = df.write.mode("overwrite").options(**WRITE_OPTIONS)
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)

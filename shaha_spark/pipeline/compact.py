@@ -161,20 +161,10 @@ def compact_hashdb(
                 DataFrame.unionByName,
                 [_run_frame(spark, root, s, target_file_bytes) for s in todo],
             )
-            layout = "algorithm" if is_algorithm_partitioned(live) else None
-            if layout:  # else the write re-sorts by its partition column alone
-                df = df.sortWithinPartitions(layout, "hash")
-            # a union of one-partition frames would otherwise run as one
-            # partition (spark.sql.unionOutputPartitioning), one file
-            zips = spark.conf.get("spark.sql.unionOutputPartitioning", "true")
-            spark.conf.set("spark.sql.unionOutputPartitioning", "false")
-            try:
-                manifest = replace_files(
-                    spark, root, gone, df, "compact", "retain", sidecar,
-                    rows=rows, partition_by=layout,
-                )
-            finally:
-                spark.conf.set("spark.sql.unionOutputPartitioning", zips)
+            manifest = replace_files(
+                spark, root, gone, df, "compact", "retain", sidecar, rows=rows,
+                partition_by="algorithm" if is_algorithm_partitioned(live) else None,
+            )
             files_after += len(manifest["staged"]) - len(gone)
     return {
         **plan,
@@ -317,12 +307,16 @@ def replace_files(
     compaction); the caller holds the lock (:func:`writing`):
 
     1. ``df`` is written to a hidden temp dir, one file per partition
-       and ``partition_by`` directory (:func:`one_sorted_file` for a
-       per-file replacement, :func:`sort_for_write` for a whole
-       rewrite, which may keep the ``algorithm=`` layout). Each file is
-       renamed to an ``_incoming-`` name beside the originals, or in
-       its partition directory; the partition index ends the stem, so
-       names sort in hash order. ``df=None`` publishes nothing.
+       and ``partition_by`` directory: :func:`sort_for_write` for a
+       whole rewrite, which may keep the ``algorithm=`` layout, or a
+       union of :func:`one_sorted_file` frames, one per file it writes
+       (``spark.sql.unionOutputPartitioning`` is off around the write,
+       so each frame stays one partition). Each file is renamed to an
+       ``_incoming-`` name in the tree of the originals (the root, or
+       the retained tree when they are history copies under
+       ``_snapshots/``), in its partition directory there; the
+       partition index ends the stem, so names sort in hash order.
+       ``df=None`` publishes nothing.
     2. Commit point: one manifest records the originals, the staged
        files, how the originals are disposed of (``dispose``, see
        :func:`snapshot.dispose`) and the sidecar after the swap:
@@ -331,9 +325,12 @@ def replace_files(
        ``rows`` is the row count of ``df`` when the caller knows it;
        otherwise the write job counts it. The sidecar's file index, if
        it has one, loses the originals and gains each published file's
-       entry, read from the staged file's footer. When ``expect_rows``
-       is given and the write counted other than that, the stage is
-       dropped and nothing commits.
+       entry, read from the staged file's footer. An ``"erase"``
+       manifest also maps each original to its replacement
+       (``replacements``): the i-th original is replaced by the file of
+       ``df``'s i-th partition, and an original past the last one by
+       nothing. When ``expect_rows`` is given and the write counted
+       other than that, the stage is dropped and nothing commits.
     3. :func:`_finish` disposes of the originals, publishes the staged
        files and writes the sidecar; the temp dir and manifest go last.
 
@@ -342,19 +339,25 @@ def replace_files(
     """
     root = path.rstrip("/")
     uid = uuid.uuid4().hex[:12]
-    d = root
-    if originals and partition_by is None:
-        d = originals[0][0].rsplit("/", 1)[0]  # beside the originals
+    gone = [snapshot.rel_of(root, p) for p, _ in originals]
+    history = bool(gone) and all(r.startswith(snapshot.RETAINED_PREFIX) for r in gone)
+    d = root + "/" + snapshot.RETAINED_PREFIX.rstrip("/") if history else root
     tmp = f"{d}/.__{stem_prefix}_{uid}__"
     indexed = sidecar is not None and sidecar.get("files") is not None
     staged: list[list[str]] = []
+    replacements: dict[str, str] = {}
     added = 0
     entries: list[dict[str, Any] | None] = []  # of the published files
     obs = Observation(f"{stem_prefix}_{uid}")
     if df is not None:
         if rows is None:
             df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_hashdb(df, tmp, partition_by=partition_by)
+        zips = spark.conf.get("spark.sql.unionOutputPartitioning", "true")
+        spark.conf.set("spark.sql.unionOutputPartitioning", "false")
+        try:
+            write_hashdb(df, tmp, partition_by=partition_by)
+        finally:
+            spark.conf.set("spark.sql.unionOutputPartitioning", zips)
         for i, (part, size) in enumerate(sorted(io_util.list_files(spark, tmp))):
             sub = snapshot.rel_of(tmp, part).rpartition("/")[0]
             where = f"{d}/{sub}" if sub else d
@@ -366,6 +369,9 @@ def replace_files(
                 raise IOError(f"{stem_prefix}: could not stage {incoming}")
             final = snapshot.rel_of(root, f"{where}/{name}")
             staged.append([snapshot.rel_of(root, incoming), final])
+            if dispose == "erase":  # Spark names a file by its task
+                task = re.match(r"part-(\d+)", part.rpartition("/")[2])
+                replacements[gone[int(task.group(1))]] = final
             if snapshot.is_visible(final):
                 added += size
                 if indexed:
@@ -383,7 +389,6 @@ def replace_files(
             f"{stem_prefix}: wrote {rows} rows where {expect_rows} were "
             "expected; nothing was replaced"
         )
-    gone = [snapshot.rel_of(root, p) for p, _ in originals]
     after = adjusted(sidecar, rows, added)
     if indexed:
         kept = [e for e in after["files"] if e["path"] not in gone]
@@ -397,6 +402,8 @@ def replace_files(
         "dispose": dispose,
         "sidecar": after,
     }
+    if dispose == "erase":
+        manifest["replacements"] = replacements
     manifest_path = f"{root}/{STAGE_PREFIX}{stem_prefix}-{uid}{MANIFEST_SUFFIX}"
     io_util.write_text_atomic(spark, manifest_path, json.dumps(manifest))
     _finish(spark, root, manifest)
@@ -407,14 +414,16 @@ def replace_files(
 
 def _finish(spark: SparkSession, root: str, manifest: dict[str, Any]) -> None:
     """Step 3 of :func:`replace_files`, for the live run and for
-    recovery: a staged file already published before a crash is done."""
+    recovery: a staged file already published before a crash is done.
+    A manifest without ``replacements`` (written before swaps recorded
+    them) pairs every original with its one staged file, if it has one."""
     staged = manifest["staged"]
+    replacements = manifest.get("replacements")
+    if replacements is None:
+        one = len(staged) == 1
+        replacements = dict.fromkeys(manifest["originals"], staged[0][1]) if one else {}
     snapshot.dispose(
-        spark,
-        root,
-        manifest["originals"],
-        manifest.get("dispose"),
-        staged[0][1] if len(staged) == 1 else None,
+        spark, root, manifest["originals"], manifest.get("dispose"), replacements
     )
     for incoming, final in staged:
         src, dst = f"{root}/{incoming}", f"{root}/{final}"

@@ -17,16 +17,17 @@ widen the range, so candidates are a superset); the rewrite then
 filters by EXACT digest equality, so over-selection costs a file scan,
 never a wrong delete.
 
-Each file is swapped by the protocol every rewrite shares
+A forget commits in one swap of every live file it erases from
 (:func:`shaha_spark.pipeline.compact.replace_files`, under the write
-lock and recovery of :func:`~shaha_spark.pipeline.compact.writing`): a
-crash mid-swap
-either leaves the original intact or rolls the replacement forward —
-never both, never neither — and the roll-forward also points history at
-the replacement and writes the sidecar. Unlike compaction, the original
-is always deleted ("erase"), never retained: erased rows may not
-survive in history. A file whose every row is forgotten is replaced by
-nothing.
+lock and recovery of :func:`~shaha_spark.pipeline.compact.writing`),
+and in a second only when it erases from the history copies retained
+for snapshots. A crash mid-swap either leaves every original intact or
+rolls every replacement forward, never a mix, and the roll-forward also
+points history at the replacements and writes the sidecar. Unlike
+compaction, the originals are always deleted ("erase"), never retained:
+erased rows may not survive in history. A file whose every row is
+forgotten is replaced by nothing; a candidate with nothing to erase is
+left alone.
 
 This is an extension beyond the reference CLI (which has no delete);
 a transactional table format would make the swap a metadata commit —
@@ -35,6 +36,8 @@ noted in SCALE.md as the production upgrade path.
 
 from __future__ import annotations
 
+from collections import defaultdict
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +54,7 @@ from shaha_spark.pipeline.compact import (
     replace_files,
     writing,
 )
+from shaha_spark.schema import HASH_DB_SCHEMA
 
 
 def plan_forget(
@@ -114,47 +118,61 @@ def forget_digests(
     with writing(spark, path) as (path, entries, recovered):
         plan = _plan_forget(path, entries, digests)
         meta = live_sidecar(spark, path, snapshot.visible_files(path, entries))
-        targets = [bytes(d) for d in sorted(set(digests))]
+        hit = F.col("hash").isin([bytes(d) for d in sorted(set(digests))])
+        retained = path + "/" + snapshot.RETAINED_PREFIX.rstrip("/")
+        cands = sorted(plan["candidates"], key=lambda c: c["file"])
+        for c in cands:
+            c["history"] = not snapshot.is_visible(snapshot.rel_of(path, c["file"]))
+            # one filtered read, checkpointed lazily: it feeds both the
+            # count below and the write
+            c["survivors"] = (
+                spark.read.schema(HASH_DB_SCHEMA)
+                .option("basePath", retained if c["history"] else path)
+                .parquet(c["file"])
+                .where(~hit)
+                .localCheckpoint(eager=False)
+            )
+        counts = dict(
+            reduce(
+                DataFrame.unionByName,
+                [c["survivors"].select(F.lit(i).alias("i")) for i, c in enumerate(cands)],
+            ).groupBy("i").count().collect()
+        ) if cands else {}
+        # one swap per tree (the database, its retained history) and
+        # layout; a candidate with nothing erased stays out of it
+        swaps: dict[tuple[bool, bool], list[dict[str, Any]]] = defaultdict(list)
+        for i, c in enumerate(cands):
+            c["left"] = counts.get(i, 0)
+            if c["left"] < c["rows"]:
+                swaps[c["history"], "/algorithm=" in c["file"]].append(c)
 
         rows_deleted = live_rows_deleted = rewritten = dropped = 0
-        for cand in plan["candidates"]:
-            p = cand["file"]
-            df: DataFrame = spark.read.parquet(p)
-            # lazy checkpoint: the survivor set is consumed twice (the
-            # count that decides drop-vs-rewrite, then the rewrite
-            # itself) — one filtered read of the candidate file, not two
-            remaining = df.where(~F.col("hash").isin(targets)).localCheckpoint(
-                eager=False
-            )
-            n_after = remaining.count()
-            n_delete = cand["rows"] - n_after
-            if n_delete == 0:
-                continue  # range false positive
-            rows_deleted += n_delete
-            # rows scrubbed from retained history copies under _snapshots/
-            # are not live rows: the sidecar's total_records counts the
-            # visible database only, so decrementing it by history-copy
-            # deletions would make info/stats drift permanently after any
-            # compaction+snapshot cycle
-            live = snapshot.is_visible(snapshot.rel_of(path, p))
-            # a file whose every row was an erasure target is replaced by
-            # nothing: it leaves history too (read_snapshot reports the hole)
+        for (history, partitioned), touched in sorted(swaps.items()):
+            # the rewritten files first, each paired with its frame, then
+            # the files left with no rows
+            touched.sort(key=lambda c: not c["left"])
+            frames = [one_sorted_file(c["survivors"]) for c in touched if c["left"]]
+            n_rows = sum(c["rows"] for c in touched)
+            n_after = sum(c["left"] for c in touched)
+            # history copies hold no live rows: the sidecar counts the
+            # visible database only
             meta = replace_files(
                 spark,
                 path,
-                [(p, cand["bytes"])],
-                one_sorted_file(remaining) if n_after else None,
+                [(c["file"], c["bytes"]) for c in touched],
+                reduce(DataFrame.unionByName, frames) if frames else None,
                 "forget",
                 "erase",
-                adjusted(meta, -cand["rows"], -cand["bytes"]) if live else meta,
+                meta if history else adjusted(
+                    meta, -n_rows, -sum(c["bytes"] for c in touched)
+                ),
                 rows=n_after,
+                partition_by="algorithm" if partitioned else None,
             )["sidecar"]
-            if live:
-                live_rows_deleted += n_delete
-            if n_after:
-                rewritten += 1
-            else:
-                dropped += 1
+            rows_deleted += n_rows - n_after
+            live_rows_deleted += 0 if history else n_rows - n_after
+            rewritten += len(frames)
+            dropped += len(touched) - len(frames)
         return {
             **{k: plan[k] for k in ("n_digests", "total_files", "candidate_files")},
             "rows_deleted": rows_deleted,

@@ -330,16 +330,17 @@ def dispose(
     db_path: str,
     rels: list[str],
     mode: str | None,
-    replacement: str | None = None,
+    replacements: dict[str, str],
 ) -> None:
     """Dispose of the db-relative files ``rels`` a swap replaced, as its
     manifest records (see the module docstring): ``"retain"`` renames a
     snapshot-referenced file into ``retained/`` and deletes the rest;
-    ``"erase"`` deletes every file and points history at ``replacement``
-    (a retained copy's mapping is repointed, a referenced visible file
-    aliased; with no replacement the file leaves history); ``None``, a
-    manifest from before dispositions were recorded, only deletes.
-    Idempotent, so recovery can replay it after a crash at any point."""
+    ``"erase"`` deletes every file and points history at its
+    replacement in ``replacements`` (a retained copy's mapping is
+    repointed, a referenced visible file aliased; a file with no
+    replacement leaves history); ``None``, a manifest from before
+    dispositions were recorded, only deletes. Idempotent, so recovery
+    can replay it after a crash at any point."""
     root = db_path.rstrip("/")
     history = bool(mode) and io_util.exists(spark, _snap_root(root))
     refs = referenced_rels(spark, root) if history else set()
@@ -360,6 +361,7 @@ def dispose(
         io_util.delete(spark, src)
         if mode != "erase":
             continue
+        replacement = replacements.get(rel)
         if rel.startswith(RETAINED_PREFIX):
             old = rel[len(RETAINED_PREFIX):]
             new = replacement[len(RETAINED_PREFIX):] if replacement else None

@@ -58,15 +58,3 @@ def hex_to_bytes(prefix_hex: str) -> bytes:
         return bytes.fromhex(prefix_hex)
     except ValueError as exc:
         raise ValueError(f"invalid hex prefix: {prefix_hex!r}") from exc
-
-
-def prefix_upper_bound(prefix: bytes, digest_len: int) -> bytes:
-    """Largest digest of ``digest_len`` bytes that starts with ``prefix``.
-
-    Used to rewrite a prefix predicate into a pushdown-friendly binary
-    range, mirroring the reference's own row-group range test
-    (ref src/storage/parquet.rs:262-272).
-    """
-    if len(prefix) > digest_len:
-        raise ValueError("prefix longer than digest")
-    return prefix + b"\xff" * (digest_len - len(prefix))

@@ -1,7 +1,7 @@
 """Targeted deletion (pipeline/forget.py): erase preimages by
-rewriting only range-matching files; untouched files stay
-byte-identical, the sidecar count tracks, queries stop answering, and
-the operation is idempotent.
+rewriting only range-matching files, all of them in one swap; untouched
+files stay byte-identical, the sidecar count tracks, queries stop
+answering, and the operation is idempotent.
 """
 
 from __future__ import annotations
@@ -217,11 +217,11 @@ def test_preimage_digests_scan_fallback_without_sidecar(spark, tmp_path):
 
 
 def test_forget_publish_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """A forget whose per-file swap fails at the publish rename, after
-    the manifest committed it and the original was deleted, is rolled
+    """A forget whose swap fails at its second publish rename, after
+    the manifest committed it and the originals were deleted, is rolled
     forward by the next run: erased digests gone, no original left, no
     stage left, and the sidecar count matches the data — including the
-    rows of the swap that completed before the failing one."""
+    rows of the file published before the failure."""
     import os
 
     from shaha_spark.pipeline.forget import preimage_digests
@@ -253,7 +253,7 @@ def test_forget_publish_crash_rolls_forward(spark, tmp_path, monkeypatch):
         forget_digests(spark, out, digests)
     monkeypatch.setattr(io_util, "rename", real_rename)
     staged = [p for p in _files(spark, out) if "_incoming-forget-" in p]
-    assert len(staged) == 1
+    assert len(staged) == len(hits) - 1
 
     report = forget_digests(spark, out, digests)
     assert report["recovered"]["rolled_forward"] == 1
@@ -276,9 +276,10 @@ def test_forget_publish_crash_rolls_forward(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("index", ["kept", "rebuilt"])
 def test_forget_keeps_the_file_index(spark, tmp_path, index):
-    """Each per-file swap of a forget replaces its file's index entry,
-    and a file whose every row is erased leaves the index. A sidecar
-    without an index (an older writer) gets one from the listing."""
+    """A forget's swap replaces the index entry of every file it
+    rewrites, and a file whose every row is erased leaves the index. A
+    sidecar without an index (an older writer) gets one from the
+    listing."""
     from _hashdb_index import assert_index_exact, assert_lookups_match_directory
     from shaha_spark.pipeline.build import put_sidecar
 
@@ -291,5 +292,41 @@ def test_forget_keeps_the_file_index(spark, tmp_path, index):
     digests += [hashlib.sha256(b"word0007").digest(), hashlib.md5(b"word0250").digest()]
     report = forget_digests(spark, out, digests)
     assert report["files_dropped"] == 1 and report["files_rewritten"] >= 1
+    assert_index_exact(spark, out)
+    assert_lookups_match_directory(spark, out)
+
+
+def test_forget_of_several_files_commits_one_swap(spark, tmp_path, monkeypatch):
+    """A forget whose targets sit in several live files writes one swap
+    manifest; every file stays hash-sorted and the index stays exact."""
+    from _hashdb_index import assert_index_exact, assert_lookups_match_directory
+    from shaha_spark.pipeline.compact import MANIFEST_SUFFIX
+    from shaha_spark.pipeline.forget import preimage_digests
+
+    out = _db(spark, tmp_path, words=300, num_files=8)
+    total0 = read_sidecar(spark, out)["total_records"]
+    digests = preimage_digests(spark, out, ["word0007", "word0123", "word0250"])
+    manifests = []
+    real = io_util.write_text_atomic
+
+    def counting(spark_, path, content):
+        if path.endswith(MANIFEST_SUFFIX):
+            manifests.append(path)
+        real(spark_, path, content)
+
+    monkeypatch.setattr(io_util, "write_text_atomic", counting)
+    report = forget_digests(spark, out, digests)
+    monkeypatch.undo()
+
+    assert report["files_rewritten"] >= 2
+    assert report["live_rows_deleted"] == len(digests)
+    assert len(manifests) == 1
+    assert read_sidecar(spark, out)["total_records"] == total0 - len(digests)
+    for p in _files(spark, out):
+        rows = [
+            (bytes(r.hash), r.algorithm)
+            for r in spark.read.parquet(p).select("hash", "algorithm").collect()
+        ]
+        assert rows == sorted(rows), p
     assert_index_exact(spark, out)
     assert_lookups_match_directory(spark, out)

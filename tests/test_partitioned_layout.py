@@ -44,3 +44,22 @@ def test_algorithm_filter_prunes_partitions(spark, tmp_path):
     # hash stays sorted within each partition directory
     hashes = [r.hash for r in query(spark, path, "", algorithm="md5").collect()]
     assert hashes == sorted(hashes)
+
+
+def test_partitioned_write_keeps_each_file_hash_sorted(spark, tmp_path):
+    """``write_hashdb(partition_by="algorithm")`` sorts each task by
+    ``(algorithm, hash)`` itself: the write's own sort by the partition
+    column alone must not undo the caller's range sort."""
+    import pyarrow.parquet as pq
+
+    from shaha_spark.pipeline.build import hash_fanout, sort_for_write, write_hashdb
+
+    words = spark.range(20_000).selectExpr("concat('w', id) AS word")
+    records = sort_for_write(hash_fanout(words, ["md5", "sha256"]), num_files=4)
+    path = tmp_path / "db"
+    write_hashdb(records, str(path), partition_by="algorithm")
+    files = sorted(path.glob("algorithm=*/*.parquet"))
+    assert len(files) == 8
+    for f in files:
+        h = [bytes(v) for v in pq.read_table(f, columns=["hash"]).column("hash").to_pylist()]
+        assert h == sorted(h), f

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from shaha_spark.functions.blake3_pure import blake3
 from shaha_spark.functions.keccak import keccak256
 from shaha_spark.query import prefix_successor
-from shaha_spark.schema import hex_to_bytes, prefix_upper_bound
+from shaha_spark.schema import hex_to_bytes
 
 
 @given(st.binary(min_size=1, max_size=8), st.binary(min_size=0, max_size=40))
@@ -30,15 +30,6 @@ def test_prefix_successor_is_least_upper_bound(prefix):
         # nothing strictly between the largest p-prefixed string of any
         # length L and succ(p): padding with 0xff stays inside
         assert (prefix + b"\xff" * 8) < upper
-
-
-@given(st.binary(min_size=0, max_size=16), st.integers(min_value=16, max_value=64))
-def test_prefix_upper_bound_padding(prefix, digest_len):
-    if len(prefix) > digest_len:
-        return
-    padded = prefix_upper_bound(prefix, digest_len)
-    assert len(padded) == digest_len
-    assert padded.startswith(prefix)
 
 
 @given(st.text(alphabet=st.characters(codec="utf-8"), max_size=64))

@@ -348,6 +348,22 @@ def test_forget_partitioned_retained_rewrite(spark, tmp_path):
     assert old.count() == 59
 
 
+def test_forget_across_partition_dirs_keeps_history_whole(spark, tmp_path):
+    """A forget that rewrites files in two ``algorithm=`` directories in
+    one swap points each snapshot-referenced original at its own
+    replacement: the snapshot reads with no hole, minus the erased rows."""
+    wdf = spark.createDataFrame([(f"w{i:03d}",) for i in range(120)], "word string")
+    out = str(tmp_path / "pdb")
+    build(spark, wdf, ["sha256", "md5"], out, num_files=3, partition_by_algorithm=True)
+    v1 = _rows(read_hashdb(spark, out))
+    snap.snapshot_create(spark, out)
+    report = forget_preimages(spark, out, ["w042"])
+    assert report["live_rows_deleted"] == 2 and report["files_rewritten"] == 2
+    old = _rows(snap.read_snapshot(spark, out, 1))  # no allow_missing: holes raise
+    assert old == [r for r in v1 if r[1] != "w042"]
+    assert len(old) == len(v1) - 2
+
+
 def test_alias_target_survives_compaction_and_vacuum(spark, tmp_path):
     """ADVICE r3: after forget aliases rel_old -> @rel_new in the
     retained map, rel_new appears in no manifest. referenced_rels must
