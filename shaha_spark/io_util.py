@@ -124,15 +124,6 @@ def human_bytes(n: int) -> str:
     raise AssertionError
 
 
-def file_size(spark: SparkSession, path: str) -> int:
-    """Size of ONE file via a single getFileStatus call — use instead
-    of scanning a directory listing when the exact path is known."""
-    fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return 0
-    return fs.getFileStatus(jpath).getLen()
-
-
 def qualify(spark: SparkSession, path: str) -> str:
     """``path`` fully qualified (scheme, absolute), as listings return
     paths, so a relative path compares equal to its listed children."""

@@ -32,8 +32,9 @@ from __future__ import annotations
 import json
 import time
 from contextlib import ExitStack
-from typing import Any
+from typing import Any, Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -286,9 +287,10 @@ def with_index(
     The index has one entry per live Parquet file, sorted by path:
     ``{"path", "rows", "bytes", "min", "max"}`` — the db-relative path,
     its row count and size, and the min and max of ``hash`` as hex
-    (null for a file without rows). ``query`` reads only the files
-    whose range meets its predicate. Every writer keeps it exact; where
-    footers cannot be read (a remote store) there is none."""
+    (null for a file without rows). Every live read reads the files it
+    names (:func:`read_committed`), ``query`` only those whose range
+    meets its predicate. Every writer keeps it exact; where footers
+    cannot be read (a remote store) there is none."""
     out = {k: v for k, v in meta.items() if k != "files"}
     if files is not None:
         out["files"] = files
@@ -333,7 +335,8 @@ def read_sidecar(spark: SparkSession, path: str) -> dict[str, Any] | None:
 
 
 def read_hashdb(spark: SparkSession, path: str, validate: bool = False) -> DataFrame:
-    """Schema-enforced read.
+    """Schema-enforced read of the files the committed file index names
+    (:func:`read_committed`).
 
     The reference errors on schema mismatch (parquet.rs:294-313). Spark
     with an explicit schema would instead silently null out missing
@@ -349,7 +352,39 @@ def read_hashdb(spark: SparkSession, path: str, validate: bool = False) -> DataF
                 f"Invalid schema: expected columns {expected_names}, "
                 f"found {[f.name for f in actual.fields]} at {path}"
             )
-    return spark.read.schema(HASH_DB_SCHEMA).parquet(path)
+    return read_committed(spark, path)[0]
+
+
+def read_committed(
+    spark: SparkSession,
+    path: str,
+    select: Callable[[dict[str, Any]], list[str]] | None = None,
+) -> tuple[DataFrame, dict[str, Any] | None]:
+    """A read of the database at ``path`` as its sidecar's file index
+    names it, and that sidecar: every indexed file, or the db-relative
+    files ``select(sidecar)`` picks. A swap writes the sidecar between
+    publishing its new files and disposing of the old ones
+    (``compact._finish``), so the index names one complete generation.
+
+    The directory is read only where the sidecar has no index (an
+    older writer, a remote store). A file disposed of between the
+    sidecar read and the read's build (``PATH_NOT_FOUND``) means a swap
+    committed meanwhile: the sidecar is read once more. One disposed of
+    after the build fails the job (``spark.sql.files.ignoreMissingFiles``
+    stays false): an error, never fewer rows."""
+    root = path.rstrip("/")
+    reader = spark.read.schema(HASH_DB_SCHEMA)
+    for last in (False, True):
+        meta = read_sidecar(spark, root)
+        if meta is None or meta.get("files") is None:
+            return reader.parquet(root), meta
+        rels = select(meta) if select else [e["path"] for e in meta["files"]]
+        try:
+            files = [f"{root}/{r}" for r in rels]
+            return reader.option("basePath", root).parquet(*files), meta
+        except AnalysisException as e:
+            if last or e.getCondition() != "PATH_NOT_FOUND":
+                raise
 
 
 def build(

@@ -326,13 +326,15 @@ def replace_files(
        otherwise the write job counts it. The sidecar's file index, if
        it has one, loses the originals and gains each published file's
        entry, read from the staged file's footer. An ``"erase"``
-       manifest also maps each original to its replacement
-       (``replacements``): the i-th original is replaced by the file of
-       ``df``'s i-th partition, and an original past the last one by
-       nothing. When ``expect_rows`` is given and the write counted
-       other than that, the stage is dropped and nothing commits.
-    3. :func:`_finish` disposes of the originals, publishes the staged
-       files and writes the sidecar; the temp dir and manifest go last.
+       manifest also maps each original to its replacement's entry,
+       read the same way (``replacements``): the i-th original is
+       replaced by the file of ``df``'s i-th partition, and an original
+       past the last one by nothing. When ``expect_rows`` is given and
+       the write counted other than that, the stage is dropped and
+       nothing commits.
+    3. :func:`_finish` publishes the staged files, writes the sidecar
+       (the commit readers see) and then disposes of the originals; the
+       temp dir and manifest go last.
 
     A crash before step 2 leaves the originals intact, and recovery
     drops the stage; after it, :func:`recover_and_list` replays step 3.
@@ -344,8 +346,9 @@ def replace_files(
     d = root + "/" + snapshot.RETAINED_PREFIX.rstrip("/") if history else root
     tmp = f"{d}/.__{stem_prefix}_{uid}__"
     indexed = sidecar is not None and sidecar.get("files") is not None
+    erase = dispose == "erase"
     staged: list[list[str]] = []
-    replacements: dict[str, str] = {}
+    replacements: dict[str, dict[str, Any] | None] = {}
     added = 0
     entries: list[dict[str, Any] | None] = []  # of the published files
     obs = Observation(f"{stem_prefix}_{uid}")
@@ -369,13 +372,13 @@ def replace_files(
                 raise IOError(f"{stem_prefix}: could not stage {incoming}")
             final = snapshot.rel_of(root, f"{where}/{name}")
             staged.append([snapshot.rel_of(root, incoming), final])
-            if dispose == "erase":  # Spark names a file by its task
+            entry = index_entry(incoming, final, size) if indexed or erase else None
+            if erase:  # Spark names a file by its task
                 task = re.match(r"part-(\d+)", part.rpartition("/")[2])
-                replacements[gone[int(task.group(1))]] = final
+                replacements[gone[int(task.group(1))]] = entry
             if snapshot.is_visible(final):
                 added += size
-                if indexed:
-                    entries.append(index_entry(incoming, final, size))
+                entries.append(entry)
     # a rewritten history copy adds no live rows
     if not (staged and snapshot.is_visible(staged[0][1])):
         rows = 0
@@ -402,7 +405,7 @@ def replace_files(
         "dispose": dispose,
         "sidecar": after,
     }
-    if dispose == "erase":
+    if erase:
         manifest["replacements"] = replacements
     manifest_path = f"{root}/{STAGE_PREFIX}{stem_prefix}-{uid}{MANIFEST_SUFFIX}"
     io_util.write_text_atomic(spark, manifest_path, json.dumps(manifest))
@@ -414,18 +417,12 @@ def replace_files(
 
 def _finish(spark: SparkSession, root: str, manifest: dict[str, Any]) -> None:
     """Step 3 of :func:`replace_files`, for the live run and for
-    recovery: a staged file already published before a crash is done.
-    A manifest without ``replacements`` (written before swaps recorded
-    them) pairs every original with its one staged file, if it has one."""
-    staged = manifest["staged"]
-    replacements = manifest.get("replacements")
-    if replacements is None:
-        one = len(staged) == 1
-        replacements = dict.fromkeys(manifest["originals"], staged[0][1]) if one else {}
-    snapshot.dispose(
-        spark, root, manifest["originals"], manifest.get("dispose"), replacements
-    )
-    for incoming, final in staged:
+    recovery, in three idempotent steps: publish the staged files (one
+    published before a crash is done), write the sidecar, whose index
+    is what readers read, then dispose of the originals. Until the
+    sidecar is written the old index names only originals, all still
+    present; after it the new one names only published files."""
+    for incoming, final in manifest["staged"]:
         src, dst = f"{root}/{incoming}", f"{root}/{final}"
         if not io_util.rename(spark, src, dst) and not io_util.exists(spark, dst):
             raise IOError(
@@ -434,6 +431,13 @@ def _finish(spark: SparkSession, root: str, manifest: dict[str, Any]) -> None:
             )
     if manifest.get("sidecar") is not None:
         put_sidecar(spark, root, manifest["sidecar"])
+    snapshot.dispose(
+        spark,
+        root,
+        manifest["originals"],
+        manifest.get("dispose"),
+        manifest.get("replacements") or {},
+    )
 
 
 def _settle_sidecar_write(spark: SparkSession, root: str, old_present: bool) -> None:
@@ -459,8 +463,10 @@ def writing(
     it, and yield :func:`recover_and_list`'s result. Every verb that
     changes either store's files enters here: recovery drops every stage
     no manifest names, so an unlocked verb could drop another's stage
-    between its write and its commit. The lock's name dates from when
-    only appends took it; a stale one is deleted by hand (README)."""
+    between its write and its commit. A snapshot log in an older layout
+    is refused before anything changes (:func:`snapshot.snapshot_list`).
+    The lock's name dates from when only appends took it; a stale one
+    is deleted by hand (README)."""
     lock = io_util.qualify(spark, path).rstrip("/") + ".__append_lock__"
     if not io_util.create_marker(spark, lock):
         raise RuntimeError(
@@ -469,6 +475,7 @@ def writing(
             "delete it and retry"
         )
     try:
+        snapshot.snapshot_list(spark, path)  # refuses an older snapshot log
         yield recover_and_list(spark, path)
     finally:
         io_util.delete(spark, lock)

@@ -5,17 +5,19 @@ contain them.
 
 Why this is cheap here: the build writes the dataset globally sorted
 by digest (range partitioning), so each parquet file covers a disjoint
-[min, max] hash slice and footer statistics locate the files a digest
-could live in without reading any data. A forget of k digests touches
-at most k files (usually far fewer), regardless of dataset size — at
+[min, max] hash slice, and the index entries that record it (the
+sidecar's file index for live files, the snapshot manifests for the
+history copies) locate the files a digest could live in without
+reading any data or footer. A forget of k digests touches at most k
+files (usually far fewer), regardless of dataset size — at
 100 TB that's the difference between rewriting gigabytes and running a
 full-dataset anti-join job.
 
 Pruning is conservative: a file is a candidate if any target digest
-falls inside its footer [min, max] (truncated parquet statistics only
-widen the range, so candidates are a superset); the rewrite then
-filters by EXACT digest equality, so over-selection costs a file scan,
-never a wrong delete.
+falls inside its entry's [min, max] (taken from footer statistics,
+which truncation only widens, so candidates are a superset); the
+rewrite then filters by EXACT digest equality, so over-selection costs
+a file scan, never a wrong delete.
 
 A forget commits in one swap of every live file it erases from
 (:func:`shaha_spark.pipeline.compact.replace_files`, under the write
@@ -27,7 +29,9 @@ points history at the replacements and writes the sidecar. Unlike
 compaction, the originals are always deleted ("erase"), never retained:
 erased rows may not survive in history. A file whose every row is
 forgotten is replaced by nothing; a candidate with nothing to erase is
-left alone.
+left alone. Each swap disposes of its originals before it returns, so
+once :func:`forget_digests` returns no live file, retained copy or
+snapshot entry holds an erased row.
 
 This is an extension beyond the reference CLI (which has no delete);
 a transactional table format would make the swap a metadata commit —
@@ -48,6 +52,7 @@ from shaha_spark.pipeline import snapshot
 from shaha_spark.pipeline.build import read_sidecar
 from shaha_spark.pipeline.compact import (
     adjusted,
+    file_index,
     hash_range,
     live_sidecar,
     one_sorted_file,
@@ -60,33 +65,57 @@ from shaha_spark.schema import HASH_DB_SCHEMA
 def plan_forget(
     spark: SparkSession, path: str, digests: list[bytes]
 ) -> dict[str, Any]:
-    """Driver-side footer-only planning: which files can contain any
-    of ``digests`` — live files and the history copies retained for
-    snapshots. Requires a local filesystem for footer reads (the same
-    constraint as the file index); a file without statistics stays a
-    candidate."""
+    """Driver-side planning from index entries, no data and no footers
+    read: which files can contain any of ``digests`` — the live files
+    the sidecar's index names and the history copies retained for
+    snapshots, which their manifest entries name. A database whose
+    sidecar has no index gets one from its footers, as a writer would
+    (``compact.live_sidecar``), which needs a local filesystem."""
     root = io_util.qualify(spark, path)
-    return _plan_forget(root, io_util.list_files(spark, root), digests)
+    live = snapshot.live_files(spark, root)
+    return _plan_forget(spark, root, live, live_sidecar(spark, root, live), digests)
 
 
 def _plan_forget(
-    path: str, entries: list[tuple[str, int]], digests: list[bytes]
+    spark: SparkSession,
+    root: str,
+    live: list[tuple[str, int]],
+    meta: dict[str, Any] | None,
+    digests: list[bytes],
 ) -> dict[str, Any]:
+    """The plan over the index of ``live``, the database's live files,
+    from their sidecar ``meta`` (``compact.live_sidecar``) or their
+    footers, and the entries of the snapshots' retained copies; one
+    candidate per file: an entry whose range holds a target, or that
+    has no range while it may hold rows (a snapshot of a store without
+    an index, whose rows the footer gives)."""
+    index = (meta or {}).get("files") or file_index(root, live)
+    if index is None:
+        raise ValueError(
+            f"forget needs the file index of {root}, or footers it can read "
+            "to build one (a local filesystem)"
+        )
     targets = sorted(set(digests))
-    candidates: list[dict[str, Any]] = []
-    total_files = 0
-    for p, sz in entries:
-        # erasure reaches live files and the history copies retained
-        rel = snapshot.rel_of(path, p).removeprefix(snapshot.RETAINED_PREFIX)
-        if not p.endswith(".parquet") or not snapshot.is_visible(rel):
-            continue
-        total_files += 1
-        lo, hi, n_rows = hash_range(p)
-        if lo is None or any(lo <= d <= hi for d in targets):
-            candidates.append({"file": p, "rows": n_rows, "bytes": sz})
+    entries = {e["path"]: e for e in index}
+    for m in snapshot.snapshot_list(spark, root):
+        for e in m["files"]:
+            if (e["path"] or "").startswith(snapshot.RETAINED_PREFIX):
+                entries.setdefault(e["path"], e)
+    candidates = [
+        {
+            "file": f"{root}/{rel}",
+            "rows": hash_range(f"{root}/{rel}")[2] if e["rows"] is None else e["rows"],
+            "bytes": e["bytes"],
+        }
+        for rel, e in sorted(entries.items())
+        if e["rows"] != 0 and (
+            e["min"] is None
+            or any(bytes.fromhex(e["min"]) <= d <= bytes.fromhex(e["max"]) for d in targets)
+        )
+    ]
     return {
         "n_digests": len(targets),
-        "total_files": total_files,
+        "total_files": len(entries),
         "candidate_files": len(candidates),
         "candidates": candidates,
     }
@@ -116,8 +145,9 @@ def forget_digests(
     if not digests:
         return _empty_forget_report()
     with writing(spark, path) as (path, entries, recovered):
-        plan = _plan_forget(path, entries, digests)
-        meta = live_sidecar(spark, path, snapshot.visible_files(path, entries))
+        live = snapshot.visible_files(path, entries)
+        meta = live_sidecar(spark, path, live)
+        plan = _plan_forget(spark, path, live, meta, digests)
         hit = F.col("hash").isin([bytes(d) for d in sorted(set(digests))])
         retained = path + "/" + snapshot.RETAINED_PREFIX.rstrip("/")
         cands = sorted(plan["candidates"], key=lambda c: c["file"])

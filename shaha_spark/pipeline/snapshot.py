@@ -6,51 +6,51 @@ Layout (all driver-side JSON, data files never copied):
 
     <db>/_snapshots/v<N>.json        one manifest per snapshot version:
                                      {"version", "note", "created_unix",
-                                      "files": [{"rel", "bytes"}, ...]}
-    <db>/_snapshots/retained.json    {rel_path: disposition} where
-                                     disposition is either a path under
-                                     retained/ (the file was moved there
-                                     when maintenance replaced it — its
-                                     rel SUBPATH is preserved so hive
-                                     partition dirs survive) or "@<rel>"
-                                     (an alias: the file's permissible
-                                     content now lives at another rel
-                                     path — see forget)
+                                      "files": [{"rel", "path", "rows",
+                                                 "bytes", "min", "max"}]}
     <db>/_snapshots/retained/...     parquet files maintenance RENAMED
                                      out of the visible dataset because
-                                     a snapshot still references them
+                                     a snapshot entry still names them
 
-Snapshots pin db-RELATIVE paths, so the database directory can be
-relocated wholesale. Underscore-prefixed paths are invisible to
-Spark's parquet reader, so retained history never leaks into normal
-queries.
+A manifest pins the entries of the sidecar's file index
+(``build.with_index``) as they were when it was taken. ``rel`` is the
+name the file was pinned under, and never changes; ``path`` is where
+its content lives now, db-relative (null: the content has left
+history), with the ``rows``, ``bytes`` and ``hash`` range of that file
+(null ranges where the store has no index: such an entry may match
+any digest). Paths are db-relative, so the database directory can be
+relocated wholesale. Underscore-prefixed paths are invisible to Spark's
+parquet reader, so retained history never leaks into a directory read.
 
 Interaction with maintenance (the whole point): every verb that
-replaces files (append, compaction, forget) goes
-through ``compact.replace_files``, whose manifest records how the
-originals are disposed of; :func:`dispose` carries that out, live or
-replayed by recovery, so a crash never costs retention.
+replaces files (append, compaction, forget) goes through
+``compact.replace_files``, whose manifest records how the originals
+are disposed of; :func:`dispose` carries that out after the swap has
+committed, live or replayed by recovery, so a crash never costs
+retention.
 
-* compaction and append ("retain") RENAME a replaced original into
-  ``retained/`` when any snapshot references it (O(1) metadata, no data
-  movement, exactly how Iceberg keeps superseded files for time
-  travel), and delete it otherwise.
+* compaction and append ("retain") RENAME a replaced original that an
+  entry names into ``retained/`` (its rel SUBPATH kept, so hive
+  partition dirs survive), then repoint those entries; every other
+  original is deleted.
 * ``forget`` ("erase", GDPR erasure) must reach HISTORY, not just the
-  current state: retained files are rewritten in place with the erased
-  rows removed (the mapping is repointed at the rewritten stem), and a
-  replaced visible original is aliased to its own replacement — whose
-  content is exactly the original minus the erased rows, the best
-  content erasure law permits history to keep. A file whose every row
-  was erased disappears from history entirely; ``read_snapshot``
-  raises on the hole unless ``allow_missing=True``.
+  current state: the entries naming a replaced original are repointed
+  at its replacement's entry (the original minus the erased rows, the
+  best content erasure law permits history to keep), then the
+  original is deleted. A file whose every row was erased leaves a
+  hole; ``read_snapshot`` raises on it unless ``allow_missing=True``.
 * :func:`vacuum` drops manifests beyond the retention count and
-  deletes retained files no surviving manifest references — the
-  storage-reclaim half of the contract.
+  deletes retained files no surviving entry names — the storage-reclaim
+  half of the contract.
+
+A log written by an older version (a ``retained.json`` map of renames
+and ``@`` aliases, or entries without ``path``) is refused, not
+converted: see the README, "An older snapshot log".
 
 100 TB notes: every operation here is driver-side metadata (file
 listings, renames, small JSON) — nothing scans data. Manifests list
 one entry per file; at the ~1 GB target file size that is ~10^5
-entries per 100 TB snapshot, trivially a few MB of JSON. One writer at
+entries per 100 TB snapshot, a few tens of MB of JSON. One writer at
 a time: build, append, compaction, forget, snapshot creation and
 vacuum all take the database's write lock (``compact.writing``).
 """
@@ -107,16 +107,6 @@ def _write_json(spark: SparkSession, p: str, obj: Any) -> None:
     io_util.write_text_atomic(spark, p, json.dumps(obj, sort_keys=True))
 
 
-def _retained_map(spark: SparkSession, path: str) -> dict[str, str]:
-    return _read_json(spark, _snap_root(path) + "/retained.json") or {}
-
-
-def _write_retained_map(
-    spark: SparkSession, path: str, m: dict[str, str]
-) -> None:
-    _write_json(spark, _snap_root(path) + "/retained.json", m)
-
-
 def is_visible(rel: str) -> bool:
     """Whether Spark's parquet reader sees the db-relative path ``rel``:
     no path segment starts with ``_`` or ``.``."""
@@ -142,21 +132,30 @@ def visible_files(
 
 
 def live_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """The CURRENT dataset's parquet files: everything maintenance and
-    stats should see — snapshot internals excluded, and so is anything
-    the parquet reader itself cannot see: staged ``_incoming-*`` swap
-    files and crash-leftover ``.__slice_*__`` temp dirs are NOT live
-    data, and pinning one into a snapshot manifest would break the
-    snapshot as soon as recovery renames it."""
+    """The CURRENT dataset's parquet files, from a listing: everything
+    the parquet reader itself can see. Snapshot internals are excluded,
+    and so are a swap's staged ``_incoming-*`` files and its hidden
+    ``.__<verb>_<id>__`` temp dir, which are not live data."""
     root = io_util.qualify(spark, path)
     return visible_files(root, io_util.list_files(spark, root))
 
 
+def _older_log(path: str) -> ValueError:
+    return ValueError(
+        f"{path}: its snapshot log was written by an older version (a "
+        "retained.json map, or manifest entries without a path) and is "
+        "not read; see the README, 'An older snapshot log'"
+    )
+
+
 def snapshot_list(spark: SparkSession, path: str) -> list[dict[str, Any]]:
-    """All snapshot manifests, oldest first."""
+    """All snapshot manifests, oldest first. Raises on a log in an
+    older layout (module docstring)."""
     out = []
     for p, _sz in io_util.list_files(spark, _snap_root(path), suffix=".json"):
         name = p.rsplit("/", 1)[-1]
+        if name == "retained.json":
+            raise _older_log(path)
         if name.startswith("v") and name.endswith(".json"):
             try:
                 version = int(name[1:-5])
@@ -164,6 +163,8 @@ def snapshot_list(spark: SparkSession, path: str) -> list[dict[str, Any]]:
                 continue
             m = _read_json(spark, p)
             if m is not None:
+                if any("path" not in e for e in m["files"]):
+                    raise _older_log(path)
                 m["version"] = version
                 out.append(m)
     return sorted(out, key=lambda m: m["version"])
@@ -172,83 +173,30 @@ def snapshot_list(spark: SparkSession, path: str) -> list[dict[str, Any]]:
 def snapshot_create(
     spark: SparkSession, path: str, note: str = ""
 ) -> dict[str, Any]:
-    """Record the current visible file set as the next snapshot
-    version, under the database's write lock, after recovery (see
+    """Record the current file index as the next snapshot version,
+    under the database's write lock, after recovery (see
     ``compact.writing``). Metadata-only; returns the manifest."""
     from shaha_spark.pipeline import compact
 
-    # rels as the maintenance verbs see them
     with compact.writing(spark, path) as (path, entries, _):
         existing = snapshot_list(spark, path)
         version = (existing[-1]["version"] + 1) if existing else 1
-        files = [
-            {"rel": rel_of(path, p), "bytes": sz}
-            for p, sz in visible_files(path, entries)
-        ]
+        live = visible_files(path, entries)
+        meta = compact.live_sidecar(spark, path, live)
+        index = (meta or {}).get("files") or compact.file_index(path, live)
+        if index is None:  # no ranges known: every entry may match
+            index = [
+                {"path": rel_of(path, p), "rows": None, "bytes": sz, "min": None, "max": None}
+                for p, sz in live
+            ]
         manifest = {
             "version": version,
             "note": note,
             "created_unix": int(time.time()),
-            "files": sorted(files, key=lambda f: f["rel"]),
+            "files": [{"rel": e["path"], **e} for e in index],
         }
         _write_json(spark, _manifest_path(path, version), manifest)
         return manifest
-
-
-def referenced_rels(spark: SparkSession, path: str) -> set[str]:
-    """Every rel path any snapshot manifest references, expanded
-    transitively through ``@`` alias chains in the retained map.
-
-    After ``forget`` rewrites a snapshot-referenced visible file, the
-    retained map holds ``rel_old -> @rel_new``: the snapshot is served
-    by ``rel_new``'s content from then on. ``rel_new`` appears in no
-    manifest, so without chain expansion a later compaction/vacuum
-    would see it as unreferenced and delete it, leaving the still-live
-    snapshot with a FileNotFoundError hole — losing more history than
-    erasure requires."""
-    refs: set[str] = set()
-    for m in snapshot_list(spark, path):
-        refs.update(f["rel"] for f in m["files"])
-    retained = _retained_map(spark, path)
-    frontier = set(refs)
-    while frontier:
-        nxt = set()
-        for rel in frontier:
-            disp = retained.get(rel)
-            if disp is not None and disp.startswith("@"):
-                target = disp[1:]
-                if target not in refs:
-                    refs.add(target)
-                    nxt.add(target)
-        frontier = nxt
-    return refs
-
-
-def resolve_rel(
-    spark: SparkSession,
-    path: str,
-    rel: str,
-    retained: dict[str, str] | None = None,
-) -> str | None:
-    """Absolute location of a snapshot-referenced rel path: the visible
-    file if it still exists, else its retained copy, else an alias
-    chain (a forget-rewritten file points at its replacement)."""
-    if retained is None:
-        retained = _retained_map(spark, path)
-    seen: set[str] = set()
-    cur = rel
-    while cur not in seen:
-        seen.add(cur)
-        visible = path.rstrip("/") + "/" + cur
-        disp = retained.get(cur)
-        if disp is None:
-            return visible if io_util.exists(spark, visible) else None
-        if disp.startswith("@"):
-            cur = disp[1:]
-            continue
-        kept = _retain_dir(path) + "/" + disp
-        return kept if io_util.exists(spark, kept) else None
-    return None  # alias cycle: treat as missing
 
 
 def read_snapshot(
@@ -259,11 +207,11 @@ def read_snapshot(
 ) -> DataFrame:
     """Time-travel read: the dataset exactly as captured by snapshot
     ``version`` (modulo rows later erased by ``forget``, which the law
-    requires history to lose too).
+    requires history to lose too), read from its entries' ``path``.
 
-    Raises on files that have left history (fully-erased by forget, or
-    vacuumed) unless ``allow_missing`` — a partial read must be an
-    explicit choice, never a silent one.
+    Raises on entries whose content has left history (fully erased by
+    forget) or whose file is missing, unless ``allow_missing`` — a
+    partial read must be an explicit choice, never a silent one.
     """
     manifests = {m["version"]: m for m in snapshot_list(spark, path)}
     if version not in manifests:
@@ -271,15 +219,15 @@ def read_snapshot(
             f"no snapshot v{version} under {path}; "
             f"have {sorted(manifests)}"
         )
-    retained = _retained_map(spark, path)
+    root = path.rstrip("/")
     paths, missing = [], []
-    for f in manifests[version]["files"]:
-        got = resolve_rel(spark, path, f["rel"], retained)
-        (paths if got else missing).append(got or f["rel"])
+    for e in manifests[version]["files"]:
+        p = e["path"] and f"{root}/{e['path']}"
+        (paths if p and io_util.exists(spark, p) else missing).append(p or e["rel"])
     if missing and not allow_missing:
         raise FileNotFoundError(
             f"snapshot v{version}: {len(missing)} file(s) have left "
-            f"history (forget erasure or vacuum): {missing[:5]}; pass "
+            f"history (forget erasure) or are missing: {missing[:5]}; pass "
             "allow_missing=True to read the surviving subset"
         )
     if not paths:
@@ -295,11 +243,11 @@ def read_snapshot(
     parts = []
     if visible:
         parts.append(
-            spark.read.option("basePath", path).parquet(*visible)
+            spark.read.option("basePath", root).parquet(*visible)
         )
     if kept:
         parts.append(
-            spark.read.option("basePath", _retain_dir(path)).parquet(*kept)
+            spark.read.option("basePath", _retain_dir(root)).parquet(*kept)
         )
     out = parts[0]
     for extra in parts[1:]:
@@ -310,7 +258,8 @@ def read_snapshot(
 def snapshot_diff(
     spark: SparkSession, path: str, v_old: int, v_new: int
 ) -> dict[str, Any]:
-    """File-level diff between two snapshot versions."""
+    """File-level diff between two snapshot versions, by the names
+    their files were pinned under."""
     ms = {m["version"]: m for m in snapshot_list(spark, path)}
     for v in (v_old, v_new):
         if v not in ms:
@@ -330,51 +279,41 @@ def dispose(
     db_path: str,
     rels: list[str],
     mode: str | None,
-    replacements: dict[str, str],
+    replacements: dict[str, dict[str, Any] | None],
 ) -> None:
-    """Dispose of the db-relative files ``rels`` a swap replaced, as its
-    manifest records (see the module docstring): ``"retain"`` renames a
-    snapshot-referenced file into ``retained/`` and deletes the rest;
-    ``"erase"`` deletes every file and points history at its
-    replacement in ``replacements`` (a retained copy's mapping is
-    repointed, a referenced visible file aliased; a file with no
-    replacement leaves history); ``None``, a manifest from before
-    dispositions were recorded, only deletes. Idempotent, so recovery
-    can replay it after a crash at any point."""
+    """Dispose of the db-relative files ``rels`` a committed swap
+    replaced, as its manifest records (see the module docstring):
+    ``"retain"`` renames a file a snapshot entry names into
+    ``retained/`` and repoints the entries, and deletes the rest;
+    ``"erase"`` repoints the entries naming a file at its replacement's
+    entry in ``replacements`` (none, or one whose footer was unread: a
+    hole), then deletes every file; ``None`` only deletes. Each
+    manifest that changes is rewritten once. Idempotent, so recovery can replay it after a crash at any
+    point: a rename already made is done, and an original no entry
+    names any more is only deleted."""
     root = db_path.rstrip("/")
     history = bool(mode) and io_util.exists(spark, _snap_root(root))
-    refs = referenced_rels(spark, root) if history else set()
-    retained = _retained_map(spark, root) if history else {}
-    before = dict(retained)
+    manifests = snapshot_list(spark, root) if history else []
+    named = {e["path"] for m in manifests for e in m["files"]}
+    moved: dict[str, dict[str, Any]] = {}  # original -> what entries now name
     for rel in rels:
-        src = f"{root}/{rel}"
-        if mode == "retain" and rel in refs:
-            # the rel SUBPATH is kept under retained/, so hive partition
-            # dirs (algorithm=...) survive and a basePath read of the
-            # retained tree recovers the partition column
-            dest = f"{_retain_dir(root)}/{rel}"
+        if rel not in named:
+            continue
+        if mode == "retain":
+            src, dest = f"{root}/{rel}", f"{root}/{RETAINED_PREFIX}{rel}"
             io_util.mkdirs(spark, dest.rsplit("/", 1)[0])
             if not io_util.rename(spark, src, dest) and not io_util.exists(spark, dest):
                 raise IOError(f"could not retire {src} to {dest}")
-            retained[rel] = rel
-            continue
-        io_util.delete(spark, src)
-        if mode != "erase":
-            continue
-        replacement = replacements.get(rel)
-        if rel.startswith(RETAINED_PREFIX):
-            old = rel[len(RETAINED_PREFIX):]
-            new = replacement[len(RETAINED_PREFIX):] if replacement else None
-            for k, disp in list(retained.items()):
-                if disp == old:
-                    if new is None:
-                        del retained[k]
-                    else:
-                        retained[k] = new
-        elif rel in refs and replacement is not None:
-            retained[rel] = "@" + replacement
-    if retained != before:
-        _write_retained_map(spark, root, retained)
+            moved[rel] = {"path": RETAINED_PREFIX + rel}
+        else:
+            moved[rel] = replacements.get(rel) or {"path": None}
+    for m in manifests:
+        files = [{**e, **moved.get(e["path"], {})} for e in m["files"]]
+        if files != m["files"]:
+            _write_json(spark, _manifest_path(root, m["version"]), {**m, "files": files})
+    for rel in rels:
+        if mode != "retain" or rel not in moved:
+            io_util.delete(spark, f"{root}/{rel}")
 
 
 def snapshot_drop(spark: SparkSession, path: str, version: int) -> None:
@@ -385,40 +324,31 @@ def vacuum(
     spark: SparkSession, path: str, keep_latest: int = 1
 ) -> dict[str, Any]:
     """Expire old snapshots and reclaim their storage: drop all but the
-    ``keep_latest`` newest manifests, then delete retained files (and
-    mapping entries) no surviving manifest references. Runs under the
-    database's write lock (``compact.writing``)."""
+    ``keep_latest`` newest manifests, then delete the retained files no
+    surviving entry names. Runs under the database's write lock
+    (``compact.writing``)."""
     if keep_latest < 0:
         raise ValueError("keep_latest must be >= 0")
     from shaha_spark.pipeline import compact
 
-    with compact.writing(spark, path):
+    with compact.writing(spark, path) as (path, _, _):
         manifests = snapshot_list(spark, path)
         drop = manifests[: max(0, len(manifests) - keep_latest)]
         for m in drop:
             snapshot_drop(spark, path, m["version"])
-        refs = referenced_rels(spark, path)
-        retained = _retained_map(spark, path)
-        freed_files = 0
-        freed_bytes = 0
-        for rel, disp in list(retained.items()):
-            if rel in refs:
-                continue
-            if not disp.startswith("@"):
-                abs_p = _retain_dir(path) + "/" + disp
-                # one getFileStatus on the exact path: re-listing the whole
-                # retained tree per entry was O(n^2) metadata calls, and a
-                # bare suffix match could attribute another file's size
-                freed_bytes += io_util.file_size(spark, abs_p)
-                io_util.delete(spark, abs_p)
-                freed_files += 1
-            del retained[rel]
-        _write_retained_map(spark, path, retained)
+        named = {e["path"] for m in manifests[len(drop):] for e in m["files"]}
+        freed = [
+            (p, sz)
+            for p, sz in io_util.list_files(spark, _retain_dir(path))
+            if rel_of(path, p) not in named
+        ]
+        for p, _ in freed:
+            io_util.delete(spark, p)
         return {
             "dropped_versions": [m["version"] for m in drop],
             "kept_versions": [m["version"] for m in manifests[len(drop):]],
-            "freed_files": freed_files,
-            "freed_bytes": freed_bytes,
+            "freed_files": len(freed),
+            "freed_bytes": sum(sz for _, sz in freed),
         }
 
 

@@ -22,19 +22,11 @@ as a single filtered DataFrame whose predicates are all pushdown-friendly:
 Which files are read: the reference prunes by the stats in its single
 file's footer; this store writes many files, so the sidecar carries a
 per-file index (``files``: path, rows, bytes, min and max ``hash``,
-see ``build.with_index``) and the scan names only the files whose
-[min, max] meets the predicate — a point lookup reads one file, not
-all of them. The directory is read instead when the index cannot be
-trusted:
-
-  1. the sidecar has no ``files`` (an older writer, a remote store);
-  2. its row and byte sums differ from the sidecar's ``total_records``
-     and ``file_size_bytes`` (an index a writer left stale);
-  3. a file it names is gone (``PATH_NOT_FOUND`` when the read is
-     built: a crashed swap before recovery ran).
-
-It is also read when the index selects every file: that is the same
-scan. No crash state gives a worse answer than the directory read.
+see ``build.with_index``), and a swap commits by writing it. A lookup
+reads the committed index and scans only the files whose [min, max]
+meets the predicate (``build.read_committed``): a point lookup reads
+one file, not all of them. Only a sidecar without an index (an older
+writer, a remote store) makes the lookup read the directory.
 """
 
 from __future__ import annotations
@@ -42,15 +34,13 @@ from __future__ import annotations
 import math
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shaha_spark.pipeline.build import read_hashdb, read_sidecar
+from shaha_spark.pipeline.build import read_committed, read_sidecar
 from shaha_spark.schema import (
     DIGEST_LENGTHS,
     FULL_HASH_LENGTHS,
-    HASH_DB_SCHEMA,
     hex_to_bytes,
 )
 
@@ -111,23 +101,15 @@ def prefix_predicate(
     return pred
 
 
-def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str] | None:
+def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str]:
     """Db-relative paths of the files whose ``hash`` range meets
     ``prefix`` (the half-open range of :func:`prefix_predicate`; an
-    equality is inside it), from the sidecar ``meta``'s file index.
-    None when there is no index or its sums disagree with the sidecar
-    (rules 1 and 2 of the module docstring). When no file matches, one
-    file is named anyway: the predicate empties it, at the cost of a
-    read that finds nothing, and the frame keeps its schema. A file of
-    an ``algorithm=`` directory whose digests are shorter than
-    ``prefix`` is skipped: none of them starts with it."""
-    files = meta.get("files")
-    if (
-        not files
-        or sum(e["rows"] for e in files) != meta.get("total_records")
-        or sum(e["bytes"] for e in files) != meta.get("file_size_bytes")
-    ):
-        return None
+    equality is inside it), from the sidecar ``meta``'s file index. When
+    no file matches, one file is named anyway: the predicate empties it,
+    at the cost of a read that finds nothing, and the frame keeps its
+    schema. A file of an ``algorithm=`` directory whose digests are
+    shorter than ``prefix`` is skipped: none of them starts with it."""
+    files = meta["files"]
     upper = prefix_successor(prefix) if prefix else None
     hit = [
         e["path"]
@@ -137,7 +119,7 @@ def indexed_files(meta: dict[str, Any], prefix: bytes) -> list[str] | None:
         and bytes.fromhex(e["max"]) >= prefix
         and (upper is None or bytes.fromhex(e["min"]) < upper)
     ]
-    return hit or [files[0]["path"]]
+    return hit or [e["path"] for e in files[:1]]
 
 
 def _digest_length(rel: str) -> float:
@@ -148,31 +130,6 @@ def _digest_length(rel: str) -> float:
         if key == "algorithm" and name in DIGEST_LENGTHS:
             return DIGEST_LENGTHS[name]
     return math.inf
-
-
-def _index_read(
-    spark: SparkSession, db_path: str, meta: dict[str, Any], prefix: bytes
-) -> DataFrame | None:
-    """A read of the files :func:`indexed_files` selects for ``prefix``;
-    None where the directory read is due (module docstring). Spark
-    checks that explicit paths exist when it builds the read, so rule 3
-    costs no extra call."""
-    rels = indexed_files(meta, prefix)
-    if rels is None:
-        return None
-    if len(rels) >= sum(1 for e in meta["files"] if e["rows"]):
-        return None  # every file: the directory read is the same scan
-    root = db_path.rstrip("/")
-    try:
-        return (
-            spark.read.schema(HASH_DB_SCHEMA)
-            .option("basePath", root)
-            .parquet(*[f"{root}/{r}" for r in rels])
-        )
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
 
 
 def query(
@@ -190,7 +147,7 @@ def query(
     caller side (the reference's plain/json/table renderers are
     driver-side presentation, ref query.rs:132-179).
 
-    The live read names only the files the sidecar's index selects
+    The live read names only the files the committed index selects
     (module docstring). ``at_version`` time-travels: the scan runs over
     the file set pinned by that snapshot (pipeline/snapshot.py) instead
     of the live dataset. The pruning predicates are identical — snapshot
@@ -198,36 +155,33 @@ def query(
     to history too.
     """
     prefix = hex_to_bytes(prefix_hex)
-    meta = None
-    if algorithm is None or at_version is None:
-        meta = read_sidecar(spark, db_path) or {}
-    # Longest digest the scan can contain: from the explicit algorithm
-    # filter, else the sidecar's algorithm list. Lets prefix_predicate
-    # use the bloom-eligible equality form when it is provably exact.
-    max_len: int | None = None
-    if algorithm is not None:
+    if algorithm is not None and algorithm not in DIGEST_LENGTHS:
         # validate up front: a typo'd name would otherwise just filter
         # to zero rows and report "No matches found" for a hash that IS
         # in the database (the reference's enum parse errors instead,
         # ref query.rs:69-70)
-        if algorithm not in DIGEST_LENGTHS:
-            raise ValueError(
-                f"unknown algorithm {algorithm!r} "
-                f"(available: {', '.join(sorted(DIGEST_LENGTHS))})"
-            )
-        max_len = DIGEST_LENGTHS.get(algorithm)
-    else:
-        algos = meta.get("algorithms") or []
-        lengths = [DIGEST_LENGTHS[a] for a in algos if a in DIGEST_LENGTHS]
-        max_len = max(lengths) if lengths and len(lengths) == len(algos) else None
+        raise ValueError(
+            f"unknown algorithm {algorithm!r} "
+            f"(available: {', '.join(sorted(DIGEST_LENGTHS))})"
+        )
     if at_version is not None:
         from shaha_spark.pipeline.snapshot import read_snapshot
 
         base = read_snapshot(spark, db_path, at_version)
+        meta = read_sidecar(spark, db_path) if algorithm is None else None
     else:
-        base = _index_read(spark, db_path, meta, prefix)
-        if base is None:
-            base = read_hashdb(spark, db_path)
+        base, meta = read_committed(
+            spark, db_path, lambda m: indexed_files(m, prefix)
+        )
+    # Longest digest the scan can contain: from the explicit algorithm
+    # filter, else the sidecar's algorithm list. Lets prefix_predicate
+    # use the bloom-eligible equality form when it is provably exact.
+    if algorithm is not None:
+        max_len = DIGEST_LENGTHS[algorithm]
+    else:
+        algos = (meta or {}).get("algorithms") or []
+        lengths = [DIGEST_LENGTHS[a] for a in algos if a in DIGEST_LENGTHS]
+        max_len = max(lengths) if lengths and len(lengths) == len(algos) else None
     df = base.filter(prefix_predicate(prefix, max_digest_len=max_len))
     if algorithm is not None:
         df = df.filter(F.col("algorithm") == F.lit(algorithm))

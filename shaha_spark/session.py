@@ -67,6 +67,9 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # a file a swap disposed of under a running read fails the job
+        # rather than dropping its rows from the answer
+        .config("spark.sql.files.ignoreMissingFiles", "false")
         .config("spark.driver.memory", os.environ.get("SHAHA_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

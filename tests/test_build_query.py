@@ -337,20 +337,14 @@ def _drop_files_key(meta):
     return {k: v for k, v in meta.items() if k != "files"}
 
 
-def _stale_by_one_row(meta):
-    files = [dict(e) for e in meta["files"]]
-    files[0]["rows"] += 1
-    return {**meta, "files": files}
-
-
 @pytest.mark.parametrize(
-    "spoil", [_drop_files_key, _stale_by_one_row, "delete-file"],
-    ids=["no-index", "stale-index", "file-deleted"],
+    "spoil", [_drop_files_key, "delete-file"], ids=["no-index", "file-deleted"],
 )
 def test_untrusted_index_reads_every_file(spark, tmp_path, db16, spoil):
-    """No index, an index whose sums are off, or an index naming a file
-    that is gone: the lookup reads the whole directory, and answers as a
-    directory read does."""
+    """Without an index the lookup reads the whole directory, and
+    answers as a directory read does. An index naming a file that is
+    gone makes the lookup raise: the index is the table, and a reader
+    never answers from what is left of it."""
     import shutil
 
     db = str(tmp_path / "db")
@@ -363,14 +357,37 @@ def test_untrusted_index_reads_every_file(spark, tmp_path, db16, spoil):
             if bytes.fromhex(e["min"]) <= digest <= bytes.fromhex(e["max"])
         )
         os.remove(f"{db}/{holder}")
-    else:
-        build_mod.put_sidecar(spark, db, spoil(meta))
-    live = build_mod.read_hashdb(spark, db)
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            query(spark, db, digest.hex()).collect()
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            build_mod.read_hashdb(spark, db).count()
+        return
+    build_mod.put_sidecar(spark, db, spoil(meta))
+    live = spark.read.parquet(db)
     df = query(spark, db, digest.hex())
     assert sorted(df.inputFiles()) == sorted(live.inputFiles())
-    assert len(df.inputFiles()) == (15 if spoil == "delete-file" else 16)
-    want = live.where(F.col("hash") == digest).count()
-    assert df.count() == want == (0 if spoil == "delete-file" else 1)
+    assert len(df.inputFiles()) == 16
+    assert df.count() == live.where(F.col("hash") == digest).count() == 1
+
+
+def test_a_file_disposed_of_under_a_read_fails_it(spark, tmp_path, db16):
+    """A file the committed index names, deleted after ``query()`` or
+    ``read_hashdb()`` built its read, fails the job: the session keeps
+    ``spark.sql.files.ignoreMissingFiles`` false, so a reader racing a
+    swap's disposal gets an error, never fewer rows."""
+    import shutil
+
+    assert spark.conf.get("spark.sql.files.ignoreMissingFiles") == "false"
+    db = str(tmp_path / "db")
+    shutil.copytree(db16, db)
+    digest = hashlib.sha256(b"w0123").digest()
+    lookup = query(spark, db, digest.hex())
+    every = build_mod.read_hashdb(spark, db)
+    for p in lookup.inputFiles():
+        os.remove(p.removeprefix("file:"))
+    for df in (lookup, every):
+        with pytest.raises(Exception, match="FileNotFound|does not exist"):
+            df.collect()
 
 
 def test_sidecar_rewrite_never_shows_a_reader_a_torn_file(spark, tmp_path):

@@ -12,6 +12,7 @@
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -116,7 +117,7 @@ def test_forget_reaches_history(spark, tmp_path):
         F.col("preimage") == gone
     ).count() == 0
     # AND from history: the snapshot reads its surviving rows, minus
-    # the erased one, via the alias to the rewritten file
+    # the erased one, through its entry repointed at the rewritten file
     old = snap.read_snapshot(spark, out, 1)
     assert old.where(F.col("preimage") == gone).count() == 0
     assert old.count() == 199
@@ -224,32 +225,30 @@ def test_recovery_rollforward_loses_retention_not_correctness(spark, tmp_path):
     assert 0 < surviving.count() < len(before)
 
 
-def test_resolve_tolerates_corrupt_mapping(spark, tmp_path):
-    """A retained-map entry pointing at a missing file (manual damage,
-    partial vacuum) reads as a hole — never a crash, never wrong rows."""
+def test_an_entry_naming_a_missing_file_raises(spark, tmp_path):
+    """An entry whose file is missing (manual damage) makes the read
+    raise — never a crash elsewhere, never wrong rows; ``allow_missing``
+    reads the other entries."""
     out = _db(spark, tmp_path)
     snap.snapshot_create(spark, out)
-    rel = snap.snapshot_list(spark, out)[0]["files"][0]["rel"]
-    io_util.write_text(
-        spark, out + "/_snapshots/retained.json",
-        '{"%s": "no-such-file.parquet"}' % rel,
-    )
-    assert snap.resolve_rel(spark, out, rel) is None
-    try:
+    entry = snap.snapshot_list(spark, out)[0]["files"][0]
+    os.remove(f"{out}/{entry['path']}")
+    with pytest.raises(FileNotFoundError, match="1 file"):
         snap.read_snapshot(spark, out, 1)
-        raise AssertionError("expected FileNotFoundError")
-    except FileNotFoundError:
-        pass
+    rest = snap.read_snapshot(spark, out, 1, allow_missing=True)
+    assert rest.count() == 200 - entry["rows"]
 
 
-def test_torn_retained_map_write_keeps_history_readable(
+def test_torn_manifest_rewrite_keeps_history_readable(
     spark, tmp_path, monkeypatch
 ):
-    """A crash in the middle of writing ``retained.json`` leaves the
-    snapshot log readable: the map is replaced whole, so the old one
-    stands until the new one is complete (a torn map would make every
-    snapshot read raise ``JSONDecodeError``). Recovery then finishes
-    the interrupted swap."""
+    """A crash in the middle of rewriting ``v<N>.json`` during a swap's
+    disposal leaves the snapshot log readable: the manifest is replaced
+    whole, so the old one stands until the new one is complete (a torn
+    one would make every snapshot read raise ``JSONDecodeError``).
+    Recovery then finishes the interrupted disposal."""
+    import re
+
     out = _db(spark, tmp_path, words=300, num_files=10)
     before = _rows(read_hashdb(spark, out))
     snap.snapshot_create(spark, out)
@@ -258,7 +257,7 @@ def test_torn_retained_map_write_keeps_history_readable(
     real = io_util.write_text
 
     def torn(spark_, path, content):
-        if "retained.json" in path:
+        if re.search(r"/_snapshots/v\d+\.json", path):
             real(spark_, path, content[: len(content) // 2])
             raise IOError("crash mid-write")
         real(spark_, path, content)
@@ -268,21 +267,42 @@ def test_torn_retained_map_write_keeps_history_readable(
         compact_hashdb(spark, out, target_file_bytes=1 << 30, force=True)
     monkeypatch.undo()
 
+    assert [m["version"] for m in snap.snapshot_list(spark, out)] == [1, 2]
     assert _rows(snap.read_snapshot(spark, out, 1)) == before
+    assert _rows(read_hashdb(spark, out)) == before
     recover_slices(spark, out)
     assert _rows(snap.read_snapshot(spark, out, 2)) == before
     assert _rows(read_hashdb(spark, out)) == before
 
 
-def test_alias_cycle_reads_as_hole(spark, tmp_path):
-    out = _db(spark, tmp_path)
-    snap.snapshot_create(spark, out)
-    rel = snap.snapshot_list(spark, out)[0]["files"][0]["rel"]
-    io_util.write_text(
-        spark, out + "/_snapshots/retained.json",
-        '{"%s": "@%s"}' % (rel, rel),
-    )
-    assert snap.resolve_rel(spark, out, rel) is None
+@pytest.mark.parametrize("older", ["retained-map", "entry-without-path"])
+def test_an_older_snapshot_log_is_refused(spark, tmp_path, older):
+    """A log an older version wrote (its ``retained.json`` map, or
+    entries that name no ``path``) is refused by the snapshot verbs and
+    the writers alike, before anything changes."""
+    import json
+
+    out = _db(spark, tmp_path, words=40, num_files=2)
+    m = snap.snapshot_create(spark, out)
+    if older == "retained-map":
+        io_util.write_text(spark, out + "/_snapshots/retained.json", "{}")
+    else:
+        files = [{"rel": e["rel"], "bytes": e["bytes"]} for e in m["files"]]
+        io_util.write_text(
+            spark, out + "/_snapshots/v1.json", json.dumps({**m, "files": files})
+        )
+    before = sorted(os.listdir(out))
+    for verb in (
+        lambda: snap.read_snapshot(spark, out, 1),
+        lambda: snap.snapshot_create(spark, out),
+        lambda: snap.vacuum(spark, out),
+        lambda: compact_hashdb(spark, out, force=True),
+        lambda: forget_preimages(spark, out, ["word0001"]),
+    ):
+        with pytest.raises(ValueError, match="An older snapshot log"):
+            verb()
+    assert sorted(os.listdir(out)) == before
+    assert read_hashdb(spark, out).count() == 40
 
 
 def test_vacuum_idempotent(spark, tmp_path):
@@ -325,7 +345,7 @@ def test_time_travel_partitioned_layout(spark, tmp_path):
 
 
 def test_forget_partitioned_retained_rewrite(spark, tmp_path):
-    """Erasure inside a PARTITIONED retained tree repoints the mapping
+    """Erasure inside a PARTITIONED retained tree repoints the entry
     at the rewritten stem in the same partition dir."""
     wdf = spark.createDataFrame(
         [(f"w{i:03d}",) for i in range(60)], "word string"
@@ -365,24 +385,13 @@ def test_forget_across_partition_dirs_keeps_history_whole(spark, tmp_path):
 
 
 def test_alias_target_survives_compaction_and_vacuum(spark, tmp_path):
-    """ADVICE r3: after forget aliases rel_old -> @rel_new in the
-    retained map, rel_new appears in no manifest. referenced_rels must
-    expand the alias chain, or a later compaction/vacuum deletes
-    rel_new as 'unreferenced' and the still-live snapshot reads a
-    FileNotFoundError hole."""
+    """A forget repoints a snapshot's entry at the live file that
+    replaced its original; a later compaction must retire that file
+    (the entry names it), not delete it, and vacuum must keep it, or
+    the still-live snapshot reads a hole."""
     out = _db(spark, tmp_path, words=200, num_files=4)
     snap.snapshot_create(spark, out)
-    # forget rewrites a snapshot-referenced VISIBLE file -> alias
     forget_preimages(spark, out, ["word0042"])
-    retained = snap._retained_map(spark, out)
-    assert any(v.startswith("@") for v in retained.values()), (
-        "precondition: forget should have aliased a visible file"
-    )
-    # the alias target must now be a referenced rel
-    refs = snap.referenced_rels(spark, out)
-    targets = {v[1:] for v in retained.values() if v.startswith("@")}
-    assert targets <= refs, f"alias targets missing from refs: {targets - refs}"
-    # compaction + vacuum must retire (not delete) the alias target
     compact_hashdb(spark, out, target_file_bytes=1 << 30)
     snap.vacuum(spark, out)
     old = snap.read_snapshot(spark, out, 1)  # no allow_missing: holes raise

@@ -350,3 +350,94 @@ def test_a_row_count_mismatch_commits_nothing(spark, tmp_path):
         os.path.basename(p).startswith("_incoming-") or "/.__" in p
         for p, _ in io_util.list_files(spark, out, suffix=None)
     )
+
+
+def _verbs():
+    """(name, run(db, spark), digest) of each verb a reader races: the
+    digest is one whose lookup the verb changes, where it changes one."""
+    more = [("extra01",), ("word0001",)]
+    other = [(f"other{i:03d}",) for i in range(40)]
+    words = [b"word0042", b"word0199"]
+
+    def forget(db, spark):
+        forget_digests(spark, db, [hashlib.sha256(w).digest() for w in words])
+
+    return [
+        ("append", lambda db, spark: build(
+            spark, spark.createDataFrame(more, "word string"), ["md5", "sha256"],
+            db, source_name="more", append=True,
+        ), b"extra01"),
+        ("rebuild", lambda db, spark: build(
+            spark, spark.createDataFrame(other, "word string"), ["md5", "sha256"],
+            db, source_name="other", num_files=3,
+        ), b"word0042"),
+        ("compact-forced", lambda db, spark: compact_hashdb(spark, db, force=True),
+         b"word0042"),
+        ("compact-runs", lambda db, spark: compact_hashdb(
+            spark, db, target_file_bytes=1 << 30
+        ), b"word0042"),
+        ("forget-live", forget, words[0]),
+        ("forget-retained", forget, words[0]),
+    ]
+
+
+@pytest.mark.parametrize("verb", _verbs(), ids=[v[0] for v in _verbs()])
+def test_a_reader_racing_a_swap_sees_the_old_or_the_new_state(
+    spark, tmp_path, monkeypatch, verb
+):
+    """Before every rename, delete and atomic write a swap's finish
+    step makes (publish, sidecar, disposal), a live read and a lookup
+    return exactly what they return before the verb or after it, never
+    a mix or a part; a snapshot read too, for the forget that rewrites
+    retained history copies."""
+    from shaha_spark.pipeline import compact
+    from shaha_spark.query import query
+
+    name, run, word = verb
+    out = str(tmp_path / "db")
+    words = spark.createDataFrame([(f"word{i:04d}",) for i in range(300)], "word string")
+    build(spark, words, ["md5", "sha256"], out, source_name="t", num_files=6)
+    history = name == "forget-retained"
+    if history:
+        snap.snapshot_create(spark, out)
+        more = spark.createDataFrame([("extra",)], "word string")
+        build(spark, more, ["md5", "sha256"], out, source_name="more", append=True)
+    digest = hashlib.sha256(word).hexdigest()
+
+    def state():
+        return (
+            read_hashdb(spark, out).count(),
+            sorted(r.preimage for r in query(spark, out, digest).collect()),
+            snap.read_snapshot(spark, out, 1).count() if history else None,
+        )
+
+    old = state()
+    seen = []
+    inside = []
+    real_finish = compact._finish
+
+    def finish(*args):
+        inside.append(True)
+        try:
+            return real_finish(*args)
+        finally:
+            inside.pop()
+
+    def hook(real):
+        def hooked(*args):
+            if inside:
+                seen.append(state())
+            return real(*args)
+        return hooked
+
+    monkeypatch.setattr(compact, "_finish", finish)
+    for fn in ("rename", "delete", "write_text_atomic"):
+        monkeypatch.setattr(io_util, fn, hook(getattr(io_util, fn)))
+    run(out, spark)
+    monkeypatch.undo()
+
+    new = state()
+    assert old != new or name.startswith("compact")
+    assert len(seen) >= 3
+    for i, what in enumerate(("read_hashdb count", "lookup", "snapshot count")):
+        assert [s[i] for s in seen if s[i] not in (old[i], new[i])] == [], what
