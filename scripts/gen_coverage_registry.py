@@ -3,7 +3,7 @@
 COVERAGE.md's prose inventory went stale in round 2 ("74 driver
 queries" while the registry held 101). This script derives the
 registry facts — counts, oracle coverage, driver-verification status
-per query — directly from ``__spark_entry__.queries()`` /
+per query — directly from ``shaha_spark.catalog``'s ``queries()`` /
 ``oracle_sql()`` and the shipped ``CORRECTNESS_r*.json`` files, and
 rewrites everything between the AUTOGEN markers. A pytest guard
 (tests/test_coverage_guard.py::test_coverage_md_in_sync) fails when
@@ -29,10 +29,15 @@ DRIVER_WINDOW = 50
 
 
 def generate() -> str:
-    import __spark_entry__ as entry_mod
+    from shaha_spark.catalog import (
+        ORACLE_CONTRACT_NOTES,
+        local_oracle_sql,
+        oracle_sql,
+        queries,
+    )
 
-    keys = list(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
+    keys = list(queries())
+    oracles = set(oracle_sql())
 
     rounds: dict[str, set[str]] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
@@ -60,8 +65,8 @@ def generate() -> str:
         "| # | query | oracle | driver rows |",
         "|---|---|---|---|",
     ]
-    notes = getattr(entry_mod, "ORACLE_CONTRACT_NOTES", {})
-    local = set(getattr(entry_mod, "local_oracle_sql", dict)())
+    notes = ORACLE_CONTRACT_NOTES
+    local = set(local_oracle_sql())
     for i, k in enumerate(keys, 1):
         window = " (windowed)" if i <= DRIVER_WINDOW else ""
         flag = "yes" if k in oracles else "rows-only"
@@ -74,32 +79,14 @@ def generate() -> str:
         lines += [
             "",
             "`local-udf`: full value oracle in the LOCAL suite via DuckDB "
-            "`create_function` (tests/test_oracle.py + "
-            "`__spark_entry__.local_oracle_sql`); the driver gate runs "
-            "plain SQL, so its row for these stays rows-only.",
+            "`create_function` (tests/test_oracle.py); the driver gate "
+            "runs plain SQL, so its row for these stays rows-only.",
         ]
     if notes:
         lines += ["", "Weaker-contract oracles (`yes-weak` above):", ""]
         for k, note in sorted(notes.items()):
             lines.append(f"- `{k}` — {note}")
 
-    skeys = [k for k in entry_mod.queries_r4() if k not in set(keys[:DRIVER_WINDOW])]
-    lines += [
-        "",
-        "### Round-4 merge spill-over (front of the round-5 window)",
-        "",
-        f"The former `_r4_staging.py` backlog (72 operators) merged into "
-        f"the main registry this round; {len(skeys)} of them did not fit "
-        f"the {DRIVER_WINDOW}-slot round-4 window and sit immediately "
-        "after it, so they lead the round-5 window mechanically. All are "
-        "locally oracle-verified (tests/test_oracle_r4.py runs the "
-        "driver's exact comparison, type-strict since round 4).",
-        "",
-        "| query | oracle |",
-        "|---|---|",
-    ]
-    for k in skeys:
-        lines.append(f"| `{k}` | {'yes' if k in oracles else 'rows-only'} |")
     lines += ["", END]
     return "\n".join(lines)
 

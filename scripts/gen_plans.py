@@ -17,6 +17,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from shaha_spark.catalog import queries  # noqa: E402
+from shaha_spark.catalog._tables import _events, _words  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
 
 #: query name → what the plan demonstrates (rendered above each plan)
@@ -383,7 +386,7 @@ EXTRA = {
         lambda spark, sf: __import__(
             "shaha_spark.operators.timeseries", fromlist=["timeseries"]
         ).gapfill(
-            __import__("__spark_entry__")._events(spark, sf)
+            _events(spark, sf)
         ),
     ),
     "scd2_intervals": (
@@ -393,7 +396,7 @@ EXTRA = {
         lambda spark, sf: __import__(
             "shaha_spark.operators.timeseries", fromlist=["timeseries"]
         ).scd2_intervals(
-            __import__("__spark_entry__")._events(spark, sf)
+            _events(spark, sf)
         ),
     ),
     "incremental_rollup": (
@@ -406,7 +409,7 @@ EXTRA = {
                 t.rollup_increment(ev.where("event_id % 2 = 0")),
                 t.rollup_increment(ev.where("event_id % 2 = 1")),
             )
-        ))(__import__("__spark_entry__")._events(spark, sf)))(
+        ))(_events(spark, sf)))(
             __import__("shaha_spark.operators.incremental", fromlist=["incremental"])
         ),
     ),
@@ -427,22 +430,20 @@ EXTRA = {
         "vectors (they rejoin via two BroadcastHashJoins after candidate "
         "selection). The code arrays and the centered integer ADC fold "
         "are codegen'd JVM expressions; the corpus scan is shuffle-free.",
-        lambda spark, sf: __import__("__spark_entry__").q_emb_sq_topk(spark, sf),
+        lambda spark, sf: queries()["emb_sq_topk"](spark, sf),
     ),
     "prefix_topk": (
         "Matryoshka two-stage: stage A scores an 8/64 slice (stored "
         "column-separate at scale, slicing in-plan here for oracle "
         "replay), top-m window moves (query_id, id, score) only; "
         "full-dim re-rank joins m·|queries| candidate rows broadcast.",
-        lambda spark, sf: __import__("__spark_entry__").q_emb_prefix_topk(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["emb_prefix_topk"](spark, sf),
     ),
     "events_cube": (
         "Full grouping-sets CUBE compiles to ONE Expand + one "
         "map-side-combining hash aggregate over the 4 grouping "
         "combinations — no per-set rescans, one shuffle.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cube(spark, sf),
+        lambda spark, sf: queries()["events_cube"](spark, sf),
     ),
     "events_nearest_join": (
         "Bidirectional as-of with zero joins: union-tagged sides, ONE "
@@ -451,48 +452,40 @@ EXTRA = {
         "(an unbounded-FOLLOWING first() re-scans to partition end per "
         "row: O(n²) on a hot key, measured 57× in test_skew before the "
         "fix). Nearest/tolerance choice is a codegen'd projection.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_nearest_join(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["events_nearest_join"](spark, sf),
     ),
     "events_cdc_snapshot": (
         "MERGE compaction: one shuffle on the key, one row_number "
         "window (WindowGroupLimit prunes to the per-key head), delete "
         "filter folded into the same stage.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cdc_snapshot(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["events_cdc_snapshot"](spark, sf),
     ),
     "docs_bm25": (
         "BM25: the token explode is filtered to the |Q| query terms "
         "BEFORE aggregation (candidate rows only), the |Q|-row idf "
         "table and corpus stats ride as broadcasts, and contributions "
         "sum decimal-exact in one doc-keyed hash-agg.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_bm25(spark, sf),
+        lambda spark, sf: queries()["docs_bm25"](spark, sf),
     ),
     "orders_basket_rules": (
         "Market basket WITHOUT a self-join: baskets aggregate once, "
         "pairs explode from a bounded in-row expression (b(b-1)/2 per "
         "basket), per-item counts broadcast, top-20 via "
         "TakeOrderedAndProject.",
-        lambda spark, sf: __import__("__spark_entry__").q_orders_basket_rules(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["orders_basket_rules"](spark, sf),
     ),
     "events_cumulative_users": (
         "Running distinct count with NO expanding distinct: per-key "
         "first-bucket agg, per-bucket counts, and the only global "
         "window runs over the calendar-sized bucket table.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cumulative_users(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["events_cumulative_users"](spark, sf),
     ),
     "docs_auc": (
         "Exact ROC-AUC with NO one-partition rank window: distinct-"
         "score bucket aggregation first (bounded by the 6-decimal "
         "score grid), cumulative-negative window over buckets only, "
         "integer-exact numerator.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_auc(spark, sf),
+        lambda spark, sf: queries()["docs_auc"](spark, sf),
     ),
     "curate_corpus": (
         "The whole curation chain is ONE plan: redaction folds into the "
@@ -520,7 +513,7 @@ EXTRA = {
             __import__(
                 "shaha_spark.pipeline.build", fromlist=["x"]
             ).hash_fanout(
-                __import__("__spark_entry__")._words(spark, sf),
+                _words(spark, sf),
                 ["sha256", "md5"],
             ),
             num_files=8,
@@ -531,17 +524,13 @@ EXTRA = {
         "Exact phrase matching via positional postings: per-term "
         "filtered projections of ONE postings lineage, equi-joined on "
         "(doc, aligned position) — no text rescan, no cross join.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_phrase_search(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["docs_phrase_search"](spark, sf),
     ),
     "docs_winnowing": (
         "Winnowing fingerprints: per-document windowed min over shingle "
         "hashes — the min window partitions by doc (never global), one "
         "hash aggregation for the distinct.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_winnowing(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["docs_winnowing"](spark, sf),
     ),
     "docs_token_budget": (
         "Value-bucketed distributed prefix sum: per-bucket running sums "
@@ -551,9 +540,7 @@ EXTRA = {
         "totals aggregate the WINDOW output, so at runtime AQE plans a "
         "ReusedExchange and the corpus is scanned + tokenized once "
         "(round 4 review fix; the static render predates stage reuse).",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_token_budget(
-            spark, sf
-        ),
+        lambda spark, sf: queries()["docs_token_budget"](spark, sf),
     ),
 }
 
@@ -561,11 +548,9 @@ EXTRA = {
 def main() -> None:
     from shaha_spark.session import get_spark
 
-    import __spark_entry__ as entry
-
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entry.queries()
+    registry = queries()
 
     out = io.StringIO()
     out.write(
@@ -584,7 +569,7 @@ def main() -> None:
     notes.update({name: n for name, (n, _) in EXTRA.items()})
     for name, note in notes.items():
         builder = builders[name]
-        df = builder(spark, SF_DIR) if builder else queries[name](spark, SF_DIR)
+        df = builder(spark, SF_DIR) if builder else registry[name](spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

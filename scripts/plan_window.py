@@ -32,10 +32,10 @@ WINDOW = 50
 
 
 def main() -> None:
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import oracle_sql, queries
 
-    registry = list(entry.queries())
-    oracled = set(entry.oracle_sql())
+    registry = list(queries())
+    oracled = set(oracle_sql())
 
     latest_round: dict[str, str] = {}
     latest_green: dict[str, bool] = {}

@@ -9,7 +9,8 @@ test_plan_lint.py's plan checks (plans can't distinguish a justified
 model-sized broadcast from an unjustified data-sized one; source can).
 
 Mechanics mirror GLOBAL_WINDOW_OK: every ``broadcast(...)`` call in
-the package and the driver entry is discovered by AST walk and keyed
+the package (the query catalog included) and the driver entry is
+discovered by AST walk and keyed
 ``(file, enclosing function, first-arg snippet)``; the key must map to
 a boundedness rationale here, and stale entries fail symmetrically.
 A new broadcast needs a design argument, not an allowlist reflex —
@@ -38,54 +39,56 @@ _AGG = "aggregation output with bounded key cardinality"
 
 #: (file, function, first-arg snippet ≤60 chars) -> boundedness argument
 BROADCAST_OK: dict[tuple[str, str, str], str] = {
-    # --- driver entry: TPC-H dimension broadcasts -------------------
-    ("__spark_entry__.py", "q_tpch_q7", "supp"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q7", "n1"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q7", "n2"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q8", "reg"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q8", "part"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q8", "supp"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q8", "sn"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q8", "cn"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q9", "part"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q9", "supp"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q9", "nat"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q15", "best"): _SCALAR,
-    ("__spark_entry__.py", "q_tpch_q17", "part.select('p_partkey')"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q19", "part"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q22", "thr"): _SCALAR,
-    ("__spark_entry__.py", "q_tpch_q2", "reg"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q2", "nat"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q2", "part"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q2",
+    # --- query catalog: TPC-H dimension broadcasts ------------------
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q7", "supp"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q7", "n1"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q7", "n2"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q8", "reg"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q8", "part"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q8", "supp"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q8", "sn"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q8", "cn"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q9", "part"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q9", "supp"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q9", "nat"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q15", "best"): _SCALAR,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q17", "part.select('p_partkey')"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q19", "part"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q22", "thr"): _SCALAR,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q2", "reg"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q2", "nat"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q2", "part"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q2",
      "supp.select('s_suppkey', 's_name', 'n_name')"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q11", "nat"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q11", "supp.select('s_suppkey')"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q11", "total"): _SCALAR,
-    ("__spark_entry__.py", "q_tpch_q16", "bad_supp"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q16", "part"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q20", "part.select('p_partkey')"): _DIM,
-    ("__spark_entry__.py", "q_tpch_q20", "nat"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q20", "dominant"):
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q11", "nat"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q11", "supp.select('s_suppkey')"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q11", "total"): _SCALAR,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q16", "bad_supp"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q16", "part"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q20", "part.select('p_partkey')"): _DIM,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q20", "nat"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q20", "dominant"):
         "distinct supplier keys — bounded by the supplier dimension "
         "(one column, ≤|supplier| rows)",
-    ("__spark_entry__.py", "q_tpch_q21", "nat"): _DIM_FIXED,
-    ("__spark_entry__.py", "q_tpch_q21",
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q21", "nat"): _DIM_FIXED,
+    ("shaha_spark/catalog/tpch.py", "q_tpch_q21",
      "supp.select('s_suppkey', 's_name')"): _DIM,
-    # --- driver entry: analytics ------------------------------------
-    ("__spark_entry__.py", "q_events_hll", "exact"): _AGG + " (per event_type)",
-    ("__spark_entry__.py", "q_docs_overview", "dup_docs"): _SCALAR,
-    ("__spark_entry__.py", "q_docs_hapax_ratio",
+    # --- query catalog: analytics -----------------------------------
+    ("shaha_spark/catalog/events.py", "q_events_hll", "exact"): _AGG + " (per event_type)",
+    ("shaha_spark/catalog/docs.py", "q_docs_overview", "dup_docs"): _SCALAR,
+    ("shaha_spark/catalog/docs.py", "q_docs_hapax_ratio",
      "hapax.withColumn('__h', F.lit(1))"):
         "hapax vocabulary subset — vocab-sized, ≪ token stream; joined "
         "as a semi-join marker",
-    ("__spark_entry__.py", "q_emb_silhouette",
+    ("shaha_spark/catalog/embeddings.py", "q_emb_silhouette",
      "cents.select(F.col('centroid_id').alias('cid'), F.col('centr"): _MODEL,
-    ("__spark_entry__.py", "q_docs_freshness", "mx"): _SCALAR,
-    ("__spark_entry__.py", "q_events_benford", "total"): _SCALAR,
-    ("__spark_entry__.py", "q_words_collocations", "ua"): _AGG + " (unigram counts of the collocation candidates)",
-    ("__spark_entry__.py", "q_words_collocations", "ub"): _AGG + " (unigram counts of the collocation candidates)",
-    ("__spark_entry__.py", "q_words_collocations", "n_tok"): _SCALAR,
+    ("shaha_spark/catalog/docs.py", "q_docs_freshness", "mx"): _SCALAR,
+    ("shaha_spark/catalog/events.py", "q_events_benford", "total"): _SCALAR,
+    ("shaha_spark/catalog/docs.py", "q_words_collocations", "ua"):
+        _AGG + " (unigram counts of the collocation candidates)",
+    ("shaha_spark/catalog/docs.py", "q_words_collocations", "ub"):
+        _AGG + " (unigram counts of the collocation candidates)",
+    ("shaha_spark/catalog/docs.py", "q_words_collocations", "n_tok"): _SCALAR,
     # --- operators --------------------------------------------------
     ("shaha_spark/operators/ann_index.py", "ivf_index_topk",
      "load_ivf_centroids(spark, path)"): _MODEL,

@@ -22,6 +22,7 @@ import json
 import os
 
 import __spark_entry__ as entry_mod
+from shaha_spark.catalog import WINDOW_ANCHORS
 
 REPO = os.path.dirname(os.path.abspath(entry_mod.__file__))
 
@@ -34,7 +35,7 @@ NO_ORACLE_OK = {
     "build_hash256",     # DuckDB SQL lacks sha256(BLOB) so the DRIVER
                          # row stays rows-only; locally it carries a
                          # full value oracle via create_function
-                         # (__spark_entry__.local_oracle_sql), plus the
+                         # (shaha_spark.catalog.local_oracle_sql), plus the
                          # build_all_algos known-answer vectors
 }
 
@@ -65,9 +66,7 @@ def test_no_query_escapes_driver_verification():
     deeper in the registry would silently escape rotation."""
     keys = list(entry_mod.queries())
     verified = _verified_names()
-    anchors = set(getattr(entry_mod, "WINDOW_ANCHORS", [])) | set(
-        getattr(entry_mod, "R4_WINDOW_ANCHORS", [])
-    )
+    anchors = set(WINDOW_ANCHORS)
     never_idx = [i for i, k in enumerate(keys) if k not in verified]
     if not never_idx:
         return

@@ -145,44 +145,44 @@ def _plan(df) -> str:
 
 
 def test_mix_resample_plan_is_shuffle_free(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    plan = _plan(entry.queries()["docs_mix_resample"](spark, SF))
+    plan = _plan(queries()["docs_mix_resample"](spark, SF))
     assert "Exchange" not in plan
     assert "EvalPython" not in plan
 
 
 def test_gopher_plan_single_agg_no_sort_fallback(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    plan = _plan(entry.queries()["docs_gopher_filter"](spark, SF))
+    plan = _plan(queries()["docs_gopher_filter"](spark, SF))
     assert "SortAggregate" not in plan  # metrics stay in hash aggregation
     assert "EvalPython" not in plan
     assert plan.count("Scan parquet") == 1  # one corpus pass for all 5 rules
 
 
 def test_bpe_pairs_plan_uses_topk_not_global_sort(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    plan = _plan(entry.queries()["docs_bpe_pairs"](spark, SF))
+    plan = _plan(queries()["docs_bpe_pairs"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "EvalPython" not in plan
 
 
 def test_dup_grams_plan_single_corpus_scan(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
     # the df-count window rides the SAME lineage as the gram assembly —
     # a groupBy diamond would show up as a second scan
-    plan = _plan(entry.queries()["docs_dup_grams"](spark, SF))
+    plan = _plan(queries()["docs_dup_grams"](spark, SF))
     assert plan.count("Scan parquet") == 1
     assert "EvalPython" not in plan
 
 
 def test_bigram_plan_broadcasts_lm_table(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    plan = _plan(entry.queries()["docs_bigram_logprob"](spark, SF))
+    plan = _plan(queries()["docs_bigram_logprob"](spark, SF))
     assert "BroadcastHashJoin" in plan  # LM table joins broadcast-side
     assert "EvalPython" not in plan
     # pairs subtree feeds the LM build AND the scoring join: two corpus

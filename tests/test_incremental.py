@@ -2,7 +2,7 @@
 batching and merge order must reproduce the single-pass aggregation
 exactly — the decimal partial state makes the fold associative and
 commutative. Oracle parity at fixture scale runs in
-tests/test_oracle_r4.py.
+tests/test_oracle.py.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ def _as_map(rows):
 
 
 def test_incremental_matches_full_recompute_random_splits(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.catalog._tables import _events
 
     ev = _events(spark, sf_dir).limit(3000).localCheckpoint(eager=True)
     expected = _as_map(_full(ev).collect())
@@ -51,7 +51,7 @@ def test_incremental_matches_full_recompute_random_splits(spark, sf_dir):
 
 
 def test_merge_with_empty_increment_is_identity(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.catalog._tables import _events
 
     ev = _events(spark, sf_dir).limit(500)
     base = rollup_increment(ev)

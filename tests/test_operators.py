@@ -790,9 +790,9 @@ def test_tpch_q1_rollup_levels_consistent(spark):
     sum to their returnflag subtotal, subtotals to the grand total, and
     gid carries Spark's grouping_id bitmask (0 leaf, 1 subtotal, 3
     total)."""
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    rows = entry.q_tpch_q1_rollup(spark, "/root/testdata/sf0.001").collect()
+    rows = queries()["tpch_q1_rollup"](spark, "/root/testdata/sf0.001").collect()
     by_gid = {}
     for r in rows:
         by_gid.setdefault(r.gid, []).append(r)
@@ -815,9 +815,9 @@ def test_tpch_q1_rollup_levels_consistent(spark):
 
 def test_tpch_q1_rollup_plans_single_scan_expand(spark):
     """ROLLUP must plan ONE scan + Expand, not three aggregations."""
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
 
-    plan = entry.q_tpch_q1_rollup(
+    plan = queries()["tpch_q1_rollup"](
         spark, "/root/testdata/sf0.001"
     )._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan

@@ -92,7 +92,7 @@ def test_simhash_matches_legacy_column_form(spark, docs):
 
 
 def test_tpch_q1_two_level_matches_single_level(spark):
-    import __spark_entry__ as entry
+    from shaha_spark.catalog import queries
     from shaha_spark.operators.profile import split_cast_double as _sc
 
     _dec = lambda c, p="decimal(12,2)": F.col(c).cast(p)  # noqa: E731
@@ -110,7 +110,7 @@ def test_tpch_q1_two_level_matches_single_level(spark):
         (_sc(F.sum(_dec("l_quantity")), 2) / F.count(F.lit(1))).alias("avg_qty"),
         F.count(F.lit(1)).alias("count_order"),
     )
-    assert _rows(entry.q_tpch_q1(spark, SF_DIR)) == _rows(legacy)
+    assert _rows(queries()["tpch_q1"](spark, SF_DIR)) == _rows(legacy)
 
 
 def test_build_fresh_attaches_sources_after_sort(spark, tmp_path):

@@ -14,6 +14,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from shaha_spark.catalog import local_oracle_setup, local_oracle_sql
 from _oracle_typecheck import assert_types_compatible
 
 TABLES = [
@@ -31,7 +32,7 @@ def duck(sf_dir):
         )
     # local-only scalar UDFs (sha256_bin for build_hash256); the driver
     # gate runs plain SQL and cannot do this — see local_oracle_sql()
-    entry_mod.local_oracle_setup(con)
+    local_oracle_setup(con)
     yield con
     con.close()
 
@@ -58,7 +59,7 @@ def _sorted_rows(rows, cols):
 ORACLES = entry_mod.oracle_sql()
 #: driver oracles + local-UDF oracles; the comparison is identical,
 #: only the driver can't run the latter (no create_function there)
-ALL_ORACLES = {**ORACLES, **entry_mod.local_oracle_sql()}
+ALL_ORACLES = {**ORACLES, **local_oracle_sql()}
 QUERIES = entry_mod.queries()
 
 
@@ -67,7 +68,7 @@ def test_every_query_has_callable():
 
 
 def test_local_oracles_disjoint_from_driver_oracles():
-    overlap = set(ORACLES) & set(entry_mod.local_oracle_sql())
+    overlap = set(ORACLES) & set(local_oracle_sql())
     assert not overlap, (
         f"locally-oracled entries would shadow driver oracles: {overlap}"
     )

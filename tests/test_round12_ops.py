@@ -93,15 +93,9 @@ def test_index_cache_staged_commit_race(sf_dir, tmp_path, monkeypatch):
     must never build into the same directory. The staged protocol
     gives each process its own staging dir; the first atomic rename
     wins and the loser adopts the winner's completed index."""
-    import importlib.util
+    from shaha_spark.catalog import embeddings as se
 
     monkeypatch.setenv("SHAHA_INDEX_CACHE_DIR", str(tmp_path / "cache"))
-    spec = importlib.util.spec_from_file_location(
-        "se_r12", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
-    )
-    se = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(se)
-
     p1, nb1 = se._index_path("ivf", sf_dir, k=4, iters=2)
     p2, nb2 = se._index_path("ivf", sf_dir, k=4, iters=2)
     assert nb1 and nb2 and p1 != p2  # two racers, two staging dirs

@@ -364,9 +364,9 @@ def test_nearest_join_plan_no_join_no_following_frame(spark):
     UNBOUNDED FOLLOWING frame (Spark rescans to partition end per row
     for those — measured 57× on a 10% hot key), and the whole operator
     stays join-free with ONE hash shuffle."""
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["events_nearest_join"](spark, SF))
+    plan = _plan(queries()["events_nearest_join"](spark, SF))
     assert "UNBOUNDED FOLLOWING" not in plan.upper()
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -377,9 +377,9 @@ def test_sq_topk_plan_candidate_shuffle_is_narrow(spark):
     """Stage A's top-m exchange must move (query_id, id, adc) — never
     the raw vectors; re-rank joins are broadcast; WindowGroupLimit
     prunes per-partition before the shuffle."""
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["emb_sq_topk"](spark, SF))
+    plan = _plan(queries()["emb_sq_topk"](spark, SF))
     assert "WindowGroupLimit" in plan
     assert "BroadcastHashJoin" in plan
     assert "EvalPython" not in plan
@@ -392,13 +392,13 @@ def test_sq_topk_plan_candidate_shuffle_is_narrow(spark):
 
 
 def test_cdc_and_cube_plans_single_pass(spark):
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["events_cdc_snapshot"](spark, SF))
+    plan = _plan(queries()["events_cdc_snapshot"](spark, SF))
     assert "WindowGroupLimit" in plan  # argmax prunes to per-key head
     assert "EvalPython" not in plan
 
-    plan = _plan(staging.queries_r4()["events_cube"](spark, SF))
+    plan = _plan(queries()["events_cube"](spark, SF))
     assert "Expand" in plan  # grouping sets in one pass, no rescans
     assert plan.count("Scan parquet") == 1
 
@@ -407,9 +407,9 @@ def test_auc_plan_window_runs_over_buckets_not_rows(spark):
     """The single-partition window input must be the distinct-score
     bucket aggregate, never the raw scored rows: a hash-agg (with its
     exchange) sits BELOW the single-partition exchange."""
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["docs_auc"](spark, SF))
+    plan = _plan(queries()["docs_auc"](spark, SF))
     below = plan.split("Exchange SinglePartition")[-1]
     assert "HashAggregate" in below
     assert "Exchange hashpartitioning" in below

@@ -1,5 +1,5 @@
 """Randomized differential tests for nearest_join and cdc_apply: the
-EXACT oracle SQL the driver will run (now merged into __spark_entry__) against the
+EXACT oracle SQL the driver will run (registered in shaha_spark.catalog) against the
 Spark operators, over seeded random event frames with forced ties —
 simultaneous click+purchase, equidistant neighbours, same-timestamp
 changelog collisions, keys with no match.
@@ -15,7 +15,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as staging
+from shaha_spark.catalog import oracle_sql
 from shaha_spark.operators.joins import nearest_join
 from shaha_spark.operators.timeseries import cdc_apply
 
@@ -87,7 +87,7 @@ def _compare(sdf, con, sql):
     assert a == b
 
 
-ORACLES = staging.oracle_sql_r4()
+ORACLES = oracle_sql()
 
 
 @pytest.mark.parametrize("seed", [11, 12, 13, 14])
@@ -221,8 +221,6 @@ def test_welch_chi2_skew_random_differential(spark, seed):
     wild size imbalance and constant-value stretches."""
     from pyspark.sql import functions as FF
 
-    import __spark_entry__ as se
-
     rng = random.Random(seed)
     rows = []
     for i in range(600):
@@ -247,13 +245,13 @@ def test_welch_chi2_skew_random_differential(spark, seed):
         ev.select((F.col("user_id") % 2).alias("cohort"), "value"),
         "cohort", "value", 0, 1,
     )
-    _compare(w, con, staging.oracle_sql_r4()["events_ab_welch"])
+    _compare(w, con, oracle_sql()["events_ab_welch"])
 
     c = chi_square(
         ev.select("event_type", (F.col("user_id") % 2).alias("cohort")),
         "event_type", "cohort",
     )
-    _compare(c, con, staging.oracle_sql_r4()["events_chi_square"])
+    _compare(c, con, oracle_sql()["events_chi_square"])
 
     s = key_skew_report(ev.select("user_id"), "user_id", top=5).select(
         "n_rows", "n_keys", "max_count", "max_share", "hhi",
@@ -265,7 +263,7 @@ def test_welch_chi2_skew_random_differential(spark, seed):
             ",",
         ).alias("topk_shares_str"),
     )
-    _compare(s, con, staging.oracle_sql_r4()["events_key_skew"])
+    _compare(s, con, oracle_sql()["events_key_skew"])
 
 
 @pytest.mark.parametrize("seed", [33, 34])
@@ -292,7 +290,7 @@ def test_mad_and_mean_shift_random_differential(spark, seed):
         ev.select("event_type", "event_id", "value"),
         "event_type", "value", "event_id",
     )
-    _compare(m, con, staging.oracle_sql_r4()["events_mad_outliers"])
+    _compare(m, con, oracle_sql()["events_mad_outliers"])
 
     ms = mean_shift_points(
         ev.select("event_type", "tus", "value"),
@@ -300,4 +298,4 @@ def test_mad_and_mean_shift_random_differential(spark, seed):
         window_us=7_200_000_000, min_points=3, threshold=10.0,
     )
     assert ms.count() > 0, "regime change must be detected"
-    _compare(ms, con, staging.oracle_sql_r4()["events_mean_shift"])
+    _compare(ms, con, oracle_sql()["events_mean_shift"])

@@ -63,7 +63,7 @@ def test_retained_differs_from_lag_debounce(spark):
 
 
 def test_batch_twin_matches_reference_on_fixture(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.catalog._tables import _events
 
     ev = (
         _events(spark, sf_dir)

@@ -2,7 +2,7 @@
 (operators/timeseries.py) and the per-group cap / pacing-bucket
 additions, on small constructed inputs where the expected output is
 checkable by hand. Oracle parity at fixture scale is covered by
-tests/test_oracle_r4.py.
+tests/test_oracle.py.
 """
 
 from __future__ import annotations
@@ -98,7 +98,7 @@ def test_scd2_intervals_reconstruct_change_history(spark):
 
 
 def test_scd2_closed_open_intervals_tile_the_timeline(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.catalog._tables import _events
 
     out = scd2_intervals(_events(spark, sf_dir).limit(2000))
     rows = out.collect()
@@ -171,17 +171,17 @@ def test_source_cap_plan_uses_window_group_limit(spark):
     # rank filter should prune through WindowGroupLimit: only `cap`
     # rows per group materialize past the per-group sort, so a
     # mega-domain never fully sorts through the window operator
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["docs_source_cap"](spark, SF))
+    plan = _plan(queries()["docs_source_cap"](spark, SF))
     assert "WindowGroupLimit" in plan
     assert "EvalPython" not in plan
 
 
 def test_gapfill_plan_no_python_single_corpus_scan(spark):
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
-    plan = _plan(staging.queries_r4()["events_gapfill"](spark, SF))
+    plan = _plan(queries()["events_gapfill"](spark, SF))
     assert "EvalPython" not in plan
     # hourly agg feeds both the span (grid) side and the join-back side:
     # two scans of the events table by design, never more
@@ -189,10 +189,10 @@ def test_gapfill_plan_no_python_single_corpus_scan(spark):
 
 
 def test_debounce_and_scd2_plans_single_shuffle_no_python(spark):
-    import __spark_entry__ as staging
+    from shaha_spark.catalog import queries
 
     for name in ["events_debounce", "users_scd2"]:
-        plan = _plan(staging.queries_r4()[name](spark, SF))
+        plan = _plan(queries()[name](spark, SF))
         assert "EvalPython" not in plan, name
         # one hash shuffle on the partition key; scd2's second window
         # shares the sort (same keys), its LEAD pass rides the grouped
