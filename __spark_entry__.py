@@ -1,4 +1,4 @@
-"""Driver contract: ``entry`` / ``queries`` / ``oracle_sql``.
+"""Entry-point contract: ``entry`` / ``queries`` / ``oracle_sql``.
 
 The queries and their DuckDB twins live in :mod:`shaha_spark.catalog`;
 this file puts the repository on ``sys.path`` and re-exports the

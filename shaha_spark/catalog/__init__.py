@@ -1,10 +1,10 @@
-"""The query catalog: every driver query, registered beside its DuckDB twin.
+"""The query catalog: every query, registered beside its DuckDB twin.
 
 Each family module (``hashdb``, ``tpch``, ``events``, ``docs``,
 ``embeddings``; grouped by the table a query reads) registers its
 ``(spark, sf_dir) -> DataFrame`` functions with :func:`query`, each
-with the DuckDB SQL that must return the same rows. The driver reads
-:func:`queries` and :func:`oracle_sql` through ``__spark_entry__.py``.
+with the DuckDB SQL that must return the same rows. ``__spark_entry__.py``
+re-exports :func:`queries` and :func:`oracle_sql`.
 
 Both sides are generated from the same constants
 (shaha_spark/operators/constants.py), and all floating-point outputs
@@ -35,7 +35,7 @@ def query(
     name: str, *, oracle: str | None = None, local_oracle: str | None = None
 ) -> Callable[[Query], Query]:
     """Register the decorated function as query ``name`` with its twin:
-    ``oracle`` is plain DuckDB SQL (what the driver runs);
+    ``oracle`` is plain DuckDB SQL that runs on a bare connection;
     ``local_oracle`` needs :func:`local_oracle_setup` on the
     connection first, so only the local suite can run it."""
 
@@ -55,14 +55,15 @@ def query(
 
 
 #: Re-verification anchors: queries whose derivation, or whose SQL twin,
-#: changed after their newest green driver row. They lead the driver
-#: window so the driver re-proves the pairing (tests/test_coverage_guard.py
-#: lets only these precede never-driver-verified entries). Current set:
+#: changed after their newest green end-to-end check. They lead the
+#: checked window so the next end-to-end run re-proves the pairing
+#: (tests/test_coverage_guard.py lets only these precede never-verified
+#: entries). Current set:
 #: tpch_q2/q20/q21 were restructured (window over the agg's
 #: partitioning, 570f1b5); events_bootstrap_ci's uniform derivation
 #: changed (conv halving, bit-identity pinned); docs_split_balance's
 #: SQL TWIN was rewritten (NULL-group fix, e5919f3 — the oracle side
-#: itself changed, so the driver row re-proves the pairing);
+#: itself changed, so the next end-to-end run re-proves the pairing);
 #: dedup_minhash_cc / dedup_cluster_sizes / docs_cluster_split consume
 #: connected_components, which gained pointer doubling (bf2c21d);
 #: events_rollup_incremental's merge became union+re-agg (8e53ab4);
@@ -77,7 +78,7 @@ WINDOW_ANCHORS: list[str] = [
     "dedup_cluster_sizes", "docs_cluster_split",
 ]
 
-#: The driver's correctness harness checks the FIRST 50 queries()
+#: The end-to-end value check compares the FIRST 50 queries()
 #: entries only: the anchors, then the least-recently-verified backfill
 #: from scripts/plan_window.py.
 WINDOW_ORDER = [
@@ -125,7 +126,8 @@ def queries() -> dict[str, Query]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """The DuckDB twin of every query the driver can check by value."""
+    """The DuckDB twin of every query checkable by value on a plain
+    DuckDB connection."""
     return dict(_ORACLES)
 
 
@@ -133,10 +135,10 @@ def local_oracle_sql() -> dict[str, str]:
     """Oracles that require :func:`local_oracle_setup` on the DuckDB
     connection first (Python-API scalar UDFs via ``create_function``).
 
-    NOT merged into :func:`oracle_sql`: the driver's gate runs the
-    oracle strings on a plain connection and cannot register custom
+    NOT merged into :func:`oracle_sql`: the end-to-end value check runs
+    the oracle strings on a plain connection and cannot register custom
     functions, so these entries stay rows-only there. The local suite
-    (tests/test_oracle.py) runs them through the driver's exact
+    (tests/test_oracle.py) runs them through the same exact
     comparison (columns + rows + full-precision values), closing the
     "DuckDB lacks sha256(BLOB)" gap at the component level."""
     return dict(_LOCAL_ORACLES)

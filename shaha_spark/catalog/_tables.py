@@ -45,8 +45,8 @@ def _ensure_pkg(spark: SparkSession) -> None:
 #: (sf_dir, table) -> inferred StructType. Schema METADATA only — never
 #: rows, never results: every query still scans the parquet afresh.
 #: Each spark.read.parquet() call re-infers the schema from the file
-#: footer (~80 ms per table on this driver); a 6-table join paid ~0.5 s
-#: of its wall time re-reading footers it had already read (guide §7.3
+#: footer (~80 ms per table); a 6-table join paid ~0.5 s
+#: of its wall time re-reading footers it had already read (a
 #: driver-side planning cost; same spirit as Spark's own session-wide
 #: FileStatusCache for listings). `events` is deliberately NOT cached:
 #: its physical ts type is sniffed under the nanosAsLong session conf

@@ -502,7 +502,7 @@ def q_dedup_incremental(spark, sf_dir):
     )
 
 
-#: CMS probe words for the sketch driver query (fixed literals so the
+#: CMS probe words for the sketch query (fixed literals so the
 #: Spark and oracle sides are generated from the same list)
 CMS_PROBE_WORDS = ["the", "a", "and", "data", "of", "zzz-absent"]
 
@@ -685,7 +685,7 @@ FROM ({_SUB_BASE})"""
 
 @query("docs_substr_decontaminate", oracle=DOCS_SUBSTR_DECONTAMINATE_SQL)
 def q_docs_substr_decontaminate(spark, sf_dir):
-    """Exact-substring decontamination (round 10, VERDICT r9 #6;
+    """Exact-substring decontamination (round 10;
     operators.terms.exact_substring_decontaminate): train docs sharing
     any exact 32-char substring with the eval split — the
     suffix-array-class check (Lee et al. 2021) that catches verbatim
@@ -848,7 +848,7 @@ FROM g"""
 @query("docs_url_dedup", oracle=DOCS_URL_DEDUP_SQL)
 def q_docs_url_dedup(spark, sf_dir):
     """URL-level dedup on the canonical URL with registered-domain
-    (eTLD+1) attribution (round 10, VERDICT r9 #6;
+    (eTLD+1) attribution (round 10;
     operators.dedup.url_dedup + functions/url.py): crawl variants of
     the same page — casing, www., default port, trailing slash,
     tracking params, param order — collapse to one survivor per
@@ -2822,8 +2822,8 @@ DOCS_CONTAMINATION_REPORT_SQL = contamination_report_sql(
 
 @query("docs_contamination_report", oracle=DOCS_CONTAMINATION_REPORT_SQL)
 def q_docs_contamination_report(spark, sf_dir):
-    """Per-eval-doc contamination provenance (round 11, VERDICT r10
-    #8; operators.terms.contamination_report): which train docs share
+    """Per-eval-doc contamination provenance (round 11;
+    operators.terms.contamination_report): which train docs share
     an exact >=32-char substring with WHICH eval doc, and how many
     distinct windows — the audit artifact behind the flag-only
     docs_substr_decontaminate (same r2-salted split, so its
@@ -2865,7 +2865,7 @@ GROUP BY 1"""
 
 @query("docs_domain_importance", oracle=DOCS_DOMAIN_IMPORTANCE_SQL)
 def q_docs_domain_importance(spark, sf_dir):
-    """Domain-level DSIR mixture weights (round 11, VERDICT r10 #8;
+    """Domain-level DSIR mixture weights (round 11;
     operators.sampling.domain_importance): the per-doc importance
     log-weights of docs_dsir_weights aggregated decimal-exactly to the
     registered domain of each doc's (synthetic) URL — the per-SOURCE
@@ -2887,7 +2887,7 @@ FROM ({license_scan_sql(_LICENSE_FIXTURE_SQL)})"""
 
 @query("docs_license_scan", oracle=DOCS_LICENSE_SCAN_SQL)
 def q_docs_license_scan(spark, sf_dir):
-    """In-text licence-signal detection (round 11, VERDICT r10 #8;
+    """In-text licence-signal detection (round 11;
     operators.textops.license_scan): first-match-wins over the
     most-restrictive-first pattern table, deterministic licence
     markers injected per doc_id % 6 (the testdata carries none)."""
@@ -2961,7 +2961,7 @@ def q_docs_cluster_split(spark, sf_dir):
     return out.select("doc_id", "cluster_rep", "split")
 
 
-# split-composition audit (r12, VERDICT r11 #3): aggregate the
+# split-composition audit (r12): aggregate the
 # verified cluster-split assignment — the SAME recursive-CTE chain,
 # nested as the twin's src — into per-split counts, observed vs
 # target fractions, skew, and max component size per split
@@ -2972,7 +2972,7 @@ DOCS_SPLIT_BALANCE_SQL = split_balance_sql(
 
 @query("docs_split_balance", oracle=DOCS_SPLIT_BALANCE_SQL)
 def q_docs_split_balance(spark, sf_dir):
-    """Split-composition audit (round 12, VERDICT r11 #3;
+    """Split-composition audit (round 12;
     operators.sampling.split_balance): cluster-level split assignment
     preserves leakage-safety by moving whole near-dup components
     between splits, which distorts split proportions when components
@@ -3017,7 +3017,7 @@ SELECT 'post_decontaminate' AS phase, * FROM (
 
 @query("docs_cross_split_contamination", oracle=DOCS_CROSS_SPLIT_CONTAMINATION_SQL)
 def q_docs_cross_split_contamination(spark, sf_dir):
-    """Cross-split contamination invariant (round 12, VERDICT r11 #6a;
+    """Cross-split contamination invariant (round 12;
     operators.terms.cross_split_contamination): the end-to-end audit
     the r11 split/provenance operators enable — the leakage-safe
     cluster split's train half is audited against every held-out
@@ -3045,7 +3045,7 @@ def q_docs_cross_split_contamination(spark, sf_dir):
     train = dd.where(F.col("split") == "train")
     held = dd.where(F.col("split") != "train")
     # ONE contamination_report feeds both the pre-phase aggregation and
-    # the decontamination flag set (optimization r12, guide §1.2-1):
+    # the decontamination flag set (optimization r12):
     # the flag operator's contaminated set is exactly the report's
     # distinct train ids (pinned in contamination_report's docstring
     # and test_round11_ops), so the separate exact_substring_
@@ -3087,8 +3087,8 @@ DOCS_BPE_FERTILITY_SQL = _bpe_fertility_sql()
 
 @query("docs_bpe_fertility", oracle=DOCS_BPE_FERTILITY_SQL)
 def q_docs_bpe_fertility(spark, sf_dir):
-    """Tokenizer fertility / compression-ratio signal (round 12,
-    VERDICT r11 #6b; operators.terms.bpe_fertility): pieces-per-token
+    """Tokenizer fertility / compression-ratio signal (round 12;
+    operators.terms.bpe_fertility): pieces-per-token
     and chars-per-piece under the 8-merge BPE of docs_bpe_encode, with
     the RefinedWeb-style low-compression flag. The oracle runs the
     FULL training chain in SQL (8 chained pair-count/argmax/merge-fold
@@ -3136,7 +3136,7 @@ JOIN qb_u u USING (doc_id)"""
 
 @query("docs_quality_bundle", oracle=DOCS_QUALITY_BUNDLE_SQL)
 def q_docs_quality_bundle(spark, sf_dir):
-    """Per-doc quality-signal bundle (round 12, VERDICT r11 #6c;
+    """Per-doc quality-signal bundle (round 12;
     operators.textops.quality_signal_bundle): the RedPajama-v2
     artifact shape — one wide row per document joining the verified
     quality_score, lang_id, gopher_rules, license_scan, and
@@ -3283,8 +3283,8 @@ FROM ({_POLICY_BASE})"""
 
 @query("docs_url_policy", oracle=DOCS_URL_POLICY_SQL)
 def q_docs_url_policy(spark, sf_dir):
-    """URL policy screening with auditable reason codes (round 11,
-    VERDICT r10 #8; operators.dedup.url_policy_scan): registered-
+    """URL policy screening with auditable reason codes (round 11;
+    operators.dedup.url_policy_scan): registered-
     domain blocklist (shop.co.uk — the multi-label-suffix hosts of the
     synthetic crawl) plus a URL-shape pattern (/p/3[0-9] — the
     template-noise page class), domain rule first. One verdict row

@@ -539,8 +539,8 @@ PQ_TOPK = 5
 
 
 def _index_cache_root() -> str:
-    """USER-OWNED cache root for driver-entry index builds (r10
-    ADVICE: the old predictable shared-tmp ``shaha_idx_*`` dirs could
+    """USER-OWNED cache root for query-time index builds (the
+    old predictable shared-tmp ``shaha_idx_*`` dirs could
     be pre-created/poisoned by another user on a multi-tenant host).
     ``$SHAHA_INDEX_CACHE_DIR`` overrides; the default bakes the UID
     into the name AND the directory is created 0700 + ownership-
@@ -561,8 +561,8 @@ def _index_cache_root() -> str:
 
 def _index_path(kind: str, sf_dir: str, **params) -> tuple[str, bool]:
     """Deterministic per-(sf_dir, params) on-disk location for a
-    persisted ANN index built by a driver entry, plus whether a build
-    is still needed (r9 ADVICE: the old ``tempfile.mkdtemp()`` pattern
+    persisted ANN index built by a query, plus whether a build
+    is still needed (the old ``tempfile.mkdtemp()`` pattern
     leaked one index directory — and re-ran kmeans/PQ training and a
     parquet write — on EVERY invocation, including plan-lint
     renderings). The key hashes the resolved sf_dir, the parameter
@@ -576,7 +576,7 @@ def _index_path(kind: str, sf_dir: str, **params) -> tuple[str, bool]:
     there, then :func:`_index_built` stamps ``_complete`` inside the
     staging dir and atomically renames the WHOLE directory into the
     final name — first rename wins, the loser discards its staging
-    tree and adopts the winner's index (r11 ADVICE: two drivers
+    tree and adopts the winner's index (two processes
     racing the same key used to build into the SAME directory, the
     second overwrite deleting files the first was already probing).
     Stale staging dirs from dead processes are swept opportunistically.
@@ -866,7 +866,7 @@ def q_emb_ivf_pq_index_topk(spark, sf_dir):
     sidecar round trips) changes nothing but the scan shape.
 
     The index lives at a deterministic per-(sf_dir, params) path and
-    is built only when absent (r9 ADVICE: mkdtemp leaked a directory
+    is built only when absent (mkdtemp leaked a directory
     and re-ran training per invocation); staleness is keyed on the
     source parquet mtimes inside :func:`_index_path`."""
     corpus = _t(spark, sf_dir, "embeddings")
@@ -994,8 +994,8 @@ FROM (
 @query("emb_ivf_pq_index_append_topk", oracle=EMB_IVF_PQ_INDEX_APPEND_TOPK_SQL)
 def q_emb_ivf_pq_index_append_topk(spark, sf_dir):
     """Incremental-append round trip for the persisted IVF-PQ index
-    (round 10, operators.ann_index.append_to_ivf_pq_index; r9 VERDICT
-    #1): coarse centroids AND PQ codebooks train on the 90% base
+    (round 10, operators.ann_index.append_to_ivf_pq_index):
+    coarse centroids AND PQ codebooks train on the 90% base
     split (vec_id % 10 != 7); the held-out batch is encoded+assigned
     with the frozen sidecar artifacts and appended into the matching
     centroid_id partitions — no retrain, batch-sized work only. The
@@ -1330,7 +1330,7 @@ def q_emb_ivf_index_topk(spark, sf_dir):
     the disk round trip changes nothing but the scan shape.
 
     Deterministic per-(sf_dir, params) index path, built only when
-    absent — see :func:`_index_path` (r9 ADVICE)."""
+    absent — see :func:`_index_path`."""
     embs = _t(spark, sf_dir, "embeddings")
     queries = embs.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1357,8 +1357,8 @@ EMB_IVF_INDEX_APPEND_TOPK_SQL = _ivf_kmeans_append_sql(
 @query("emb_ivf_index_append_topk", oracle=EMB_IVF_INDEX_APPEND_TOPK_SQL)
 def q_emb_ivf_index_append_topk(spark, sf_dir):
     """Incremental-append round trip for the persisted IVF index
-    (round 10, operators.ann_index.append_to_ivf_index; r9 VERDICT
-    #1): build the index on the 90% base split (vec_id % 10 != 7),
+    (round 10, operators.ann_index.append_to_ivf_index):
+    build the index on the 90% base split (vec_id % 10 != 7),
     APPEND the held-out 10% batch with the frozen sidecar centroids —
     no retrain, batch-sized work only — then probe over everything.
     The oracle (`_ivf_kmeans_append_sql`) trains kmeans on the base

@@ -1,7 +1,7 @@
 """The hash-database queries: the reference tool's own operations.
 
 Wordlist scan, build (one to nine digest algorithms), point and prefix
-lookup, append and stats, and the driver's flagship :func:`entry`.
+lookup, append and stats, and the flagship :func:`entry`.
 """
 
 from __future__ import annotations

@@ -70,8 +70,8 @@ def q_tpch_q1(spark, sf_dir):
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
     one = F.lit(1).cast("decimal(4,2)")
-    # Two-level aggregation (optimization round 12, guide §2.3
-    # "aggregate before you shuffle" applied to per-row CPU): the
+    # Two-level aggregation (optimization round 12, "aggregate
+    # before you shuffle" applied to per-row CPU): the
     # double→decimal casts and the decimal multiplications are the
     # dominant per-row cost of this query (measured sf0.1: the same
     # aggregation over plain double sums runs 0.26 s vs 1.03 s — the
@@ -100,8 +100,8 @@ def q_tpch_q1(spark, sf_dir):
     # Level-2 sums are aggregated under plain aliases and the
     # split-casts applied in a projection ON TOP, rendered as SQL text
     # (one parser call each instead of ~25 py4j Column round trips —
-    # each Column-built split-cast cost ~40 ms of plan construction;
-    # guide §7.3). split_cast_double_spark_sql parses to the IDENTICAL
+    # each Column-built split-cast cost ~40 ms of plan construction).
+    # split_cast_double_spark_sql parses to the IDENTICAL
     # expression tree (pinned by test_optimization_r12), and Catalyst
     # splits complex agg result expressions into Aggregate+Project
     # anyway, so the physical plan is unchanged. avg_qty re-renders the
@@ -1000,8 +1000,8 @@ def q_tpch_q2(spark, sf_dir):
     exchanged twice (once raw for the SMJ, once partially aggregated).
     A window MIN over the same p_partkey partitioning computes the
     identical per-part minimum on ONE scan and ONE exchange, and the
-    final groupBy(p_partkey, ...) reuses that partitioning (guide
-    §2.4). Decimal MIN is order-free, so values are bit-identical."""
+    final groupBy(p_partkey, ...) reuses that partitioning.
+    Decimal MIN is order-free, so values are bit-identical."""
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     nat = _t(spark, sf_dir, "nation").join(
@@ -1170,9 +1170,9 @@ def q_tpch_q20(spark, sf_dir):
     # three exchanges of it. Decimal addition is exact and associative,
     # so part_qty == SUM of the per-supplier sums: a window SUM over
     # the already-aggregated per_sp rows computes the identical totals
-    # on ONE lineitem scan, exchanging only model-sized aggregate rows
-    # (guide §2.3/§2.4). The semi-join side is bounded by the supplier
-    # dimension, so it broadcasts (guide §3.1).
+    # on ONE lineitem scan, exchanging only model-sized aggregate rows.
+    # The semi-join side is bounded by the supplier dimension, so it
+    # broadcasts.
     from pyspark.sql import Window
 
     per_sp = li.groupBy("l_suppkey", "l_partkey").agg(F.sum(qty).alias("supp_qty"))
@@ -1245,7 +1245,7 @@ def q_tpch_q21(spark, sf_dir):
     # order are now window collect_sets over ONE exchange of lo by
     # l_orderkey; collect_set drops NULLs exactly as COUNT(DISTINCT ...)
     # does, and the following distinct on (l_orderkey, l_suppkey) and
-    # the is_late filter reuse the same partitioning (guide §2.4) — one
+    # the is_late filter reuse the same partitioning — one
     # lineitem scan and one full-table exchange instead of two of each.
     from pyspark.sql import Window
 
